@@ -113,6 +113,17 @@ def _await_idle_box(max_load: float, max_wait_s: int = 120) -> float | None:
     return load
 
 
+def cold_anchor(p: dict, rnd: int | None) -> float | None:
+    """A recorded payload's COLD calibration anchor: its
+    ``calibration_cold_sec``, else ``calibration_sec`` only for rounds
+    <= 14 (recorded before any warm-up existed; r15's is warm). An
+    unknown round gets no fallback."""
+    c = p.get("calibration_cold_sec")
+    if c is None and rnd is not None and rnd <= 14:
+        c = p.get("calibration_sec")
+    return c
+
+
 def recorded_floor(here: str, max_load: float) -> dict:
     """Scan recorded BENCH_r*.json files for the per-query minimum floor.
 
@@ -154,10 +165,7 @@ def recorded_floor(here: str, max_load: float) -> dict:
             # the codegen warm-up loop (warm — skipped here, it would
             # poison the cold floor); r16+ record the pre-warm-up
             # anchor explicitly as calibration_cold_sec.
-            rnd = int(re.search(r"\d+", f).group())
-            c = p.get("calibration_cold_sec")
-            if c is None and rnd <= 14:
-                c = p.get("calibration_sec")
+            c = cold_anchor(p, int(re.search(r"\d+", f).group()))
             if c and (calib_floor is None or c < calib_floor):
                 calib_floor = c
             used.append(f)
@@ -353,7 +361,8 @@ def main() -> None:
             # `get("parsed", floor)` is not enough: use `or floor`.
             p = floor.get("parsed") or floor
             fq = p.get("queries", {})
-            calib_floor = p.get("calibration_cold_sec") or p.get("calibration_sec")
+            m = re.search(r"r(\d+)", os.path.basename(floor_path))
+            calib_floor = cold_anchor(p, int(m.group(1)) if m else None)
             payload["floor"] = os.path.basename(floor_path)
         except (OSError, ValueError, KeyError, AttributeError, TypeError):
             fq = {}

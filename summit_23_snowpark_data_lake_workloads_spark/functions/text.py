@@ -234,11 +234,3 @@ def char_bigrams(c: Column | str) -> Column:
     return F.zip_with(
         F.slice(chars, 1, n), F.slice(chars, 2, n), lambda a, b: F.concat(a, b)
     )
-
-
-def doc_fingerprint(c: Column | str, n: int = 3) -> Column:
-    """Document fingerprint: min of the hashed n-gram shingles (a 1-hash
-    MinHash / winnowing-style signature). Equal fingerprints are strong
-    near-dup candidates; cheap enough to compute on every document at
-    ingest."""
-    return F.array_min(shingle_hashes(c, n))

@@ -180,11 +180,6 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> 
     return reader.load(path)
 
 
-def overwrite_table(df: DataFrame, name: str) -> None:
-    """S9: ``df.write.mode("overwrite").save_as_table`` equivalent."""
-    df.write.mode("overwrite").saveAsTable(name)
-
-
 def validation_counts(spark: SparkSession, tables: list[str]) -> DataFrame:
     """Row-count validation report (SURVEY §2.10 X5; A2/O4 union of counts).
 

@@ -373,6 +373,35 @@ def _balanced_or(conds: list) -> "F.Column":
     return conds[0]
 
 
+def _key_match(keys: DataFrame, key_cols: list[str]):
+    """The key-set verbs' matching step: a broadcast ``left_semi`` on
+    ``key_cols`` (the key side is source-sized by contract)."""
+    return lambda d: d.join(F.broadcast(keys), key_cols, "left_semi")
+
+
+def _dv_delete_commutes(mine: frozenset):
+    """The commute rule for deletion-vector DELETEs (``mine`` = the files
+    the delete retracts from). Logical-conflict granularity (Delta's
+    check, not a blanket abort): two DV deletes whose touched FILES are
+    disjoint commute — the final live set is identical in either order
+    — so a concurrent DV delete on other files rebases instead of
+    raising. Anything else intervening (appends the predicate never
+    saw, COW rewrites, compaction) still aborts. Verbs that ADD files
+    (MoR merge/update) never pass it: they abort on any intervening
+    commit."""
+
+    def commutes(intervening) -> bool:
+        return all(
+            op == "delete_mor"
+            and not added
+            and mine.isdisjoint(removed)
+            and mine.isdisjoint(dvd)
+            for _v, op, added, removed, dvd in intervening
+        )
+
+    return commutes
+
+
 def _dv_not_deleted_expr(
     dvs_abs: dict, fp_col: str = "_metadata.file_path",
     ri_col: str = "_metadata.row_index",
@@ -2100,19 +2129,32 @@ class SnapshotTable:
             replace_all=True, txn=txn,
         )
 
-    def _touched_files(self, current: DataFrame, row_filter) -> list[str]:
-        """Absolute paths of data files containing rows where
-        ``row_filter`` holds — a file-count-bounded collect (metadata
-        scale, not data scale)."""
-        return [
-            r.f
-            for r in row_filter(
-                current.withColumn("_lh_file", F.col("_metadata.file_path"))
-            )
-            .select(F.col("_lh_file").alias("f"))
-            .distinct()
-            .collect()
-        ]
+    # ---------------------------------------------------- row-level DML
+    # Every verb is LOCATE (the rows or files a matching step hits) +
+    # RETRACT (copy-on-write rewrite of the touched files, or deletion
+    # vectors over the located positions) + one commit. A matching step
+    # is ``DataFrame -> DataFrame``: a predicate filter, a broadcast
+    # key semi-join (:func:`_key_match`) or merge_when's clause join.
+
+    @staticmethod
+    def _locate(current: DataFrame, match) -> DataFrame:
+        """LOCATE: ``(fp, ri)`` positions of the rows ``match`` keeps.
+        The two ``_metadata`` fields are extracted BEFORE the match so a
+        join keeps them addressable."""
+        return match(
+            current.withColumn("_lh_fp", F.col("_metadata.file_path"))
+            .withColumn("_lh_ri", F.col("_metadata.row_index"))
+        ).select(F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri"))
+
+    def _touched_files(self, current: DataFrame, match) -> frozenset[str]:
+        """LOCATE at file granularity: relative paths of the data files
+        holding rows ``match`` keeps — a file-count-bounded collect
+        (metadata scale, not data scale); no row index is needed."""
+        located = match(current.withColumn("_lh_fp", F.col("_metadata.file_path")))
+        return frozenset(
+            self._relativize(r.fp)
+            for r in located.select(F.col("_lh_fp").alias("fp")).distinct().collect()
+        )
 
     def _relativize(self, abs_path: str) -> str:
         # _metadata.file_path is a file: URI or plain path; strip both.
@@ -2123,23 +2165,97 @@ class SnapshotTable:
         rel = os.path.relpath(p, self.path)
         return p if rel.startswith("..") else rel
 
+    def _rewrite(
+        self,
+        op: str,
+        prev: Snapshot,
+        touched: frozenset[str],
+        transform,
+        txn: dict | None = None,
+        merge_keys: list[str] | None = None,
+        untouched: DataFrame | None = None,
+        skip_empty: bool = False,
+    ) -> Snapshot:
+        """RETRACT by copy-on-write: replace the ``touched`` files with
+        ``transform(scan)`` of their DV-filtered scan; every other file
+        carries over untouched. Rewritten files PURGE their deletion
+        vectors (survivors come from the DV-filtered scan, and the
+        removed file's DV dies with it). With nothing touched
+        ``untouched`` is written instead, and with nothing to write the
+        commit is empty. ``skip_empty`` skips the write of an empty
+        rewrite (one ``limit(1).count()``)."""
+        out = (
+            transform(self._scan(sorted(touched), prev.dvs))
+            if touched
+            else untouched
+        )
+        if out is None:
+            return self._commit(op, prev.version, [], txn=txn)
+        add = self._write_batch(out) if not skip_empty or out.limit(1).count() else []
+        return self._commit(
+            op, prev.version, add, remove=touched, txn=txn, merge_keys=merge_keys
+        )
+
+    def _dv_retract(self, prev: Snapshot, positions: DataFrame, budget: int):
+        """RETRACT by deletion vectors: collect at most ``budget`` located
+        ``(fp, ri)`` positions (one ``limit(budget + 1)`` collect) and
+        return ``(dv_add, fully_gone)``. Honesty bounds, enforced not
+        documented:
+
+        - a file whose live rows ALL matched is in ``fully_gone`` —
+          removed from the manifest outright (cheaper than a DV
+          covering the file);
+        - more than ``budget`` positions returns None and the caller
+          falls back to copy-on-write — DV runs live in the manifest
+          JSON, so a table-sized retraction through DVs would turn the
+          metadata into the table; COW is the right tool there."""
+        rows = positions.limit(budget + 1).collect()
+        if len(rows) > budget:
+            return None
+        by_file: dict[str, list[int]] = {}
+        for r in rows:
+            by_file.setdefault(self._relativize(r.fp), []).append(r.ri)
+        dv_add: dict = {}
+        fully_gone: set[str] = set()
+        stats, dvs = prev.stats or {}, prev.dvs or {}
+        for f, idx in by_file.items():
+            nrows = stats.get(f, {}).get("_nrows")
+            if nrows and len(idx) >= nrows[0] - _ranges_count(dvs.get(f, [])):
+                fully_gone.add(f)  # last live row retracted: drop the file
+            else:
+                dv_add[f] = _ranges_from_indices(idx)
+        return dv_add, frozenset(fully_gone)
+
+    def _delete_dv(self, match, budget: int, fallback, txn=None) -> Snapshot:
+        """The DV deletes' shared body: locate over the DV-filtered head
+        (already-deleted rows can't re-match), :meth:`_dv_retract`, one
+        metadata-only ``delete_mor`` commit that rebases under
+        :func:`_dv_delete_commutes`; ``fallback()`` past the budget."""
+        prev = self.snapshot()
+        retract = self._dv_retract(prev, self._locate(self.read(), match), budget)
+        if retract is None:
+            return fallback()
+        dv_add, gone = retract
+        return self._commit(
+            "delete_mor",
+            prev.version,
+            [],
+            remove=gone,
+            dv_add=dv_add,
+            txn=txn,
+            commute_ok=_dv_delete_commutes(frozenset(dv_add) | gone),
+        )
+
     def delete(self, predicate) -> Snapshot:
         """Row-level DELETE: rewrite only files that contain matching
         rows; every other file carries over untouched (copy-on-write at
-        file granularity — Delta's exact DELETE strategy). Rewritten
-        files PURGE their deletion vectors (survivors come from the
-        DV-filtered scan, and the removed file's DV dies with it)."""
+        file granularity — Delta's exact DELETE strategy, through
+        :meth:`_rewrite`)."""
         prev = self.snapshot()
-        cur = self.read()
-        touched_abs = self._touched_files(cur, lambda d: d.filter(predicate))
-        if not touched_abs:
-            return self._commit("delete", prev.version, [])
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        survivors = self._scan(sorted(touched_rel), prev.dvs).filter(
-            ~predicate
+        touched = self._touched_files(self.read(), lambda d: d.filter(predicate))
+        return self._rewrite(
+            "delete", prev, touched, lambda t: t.filter(~predicate), skip_empty=True
         )
-        new_files = self._write_batch(survivors) if survivors.limit(1).count() else []
-        return self._commit("delete", prev.version, new_files, remove=touched_rel)
 
     def delete_mor(
         self, predicate, max_deleted_rows: int = 100_000
@@ -2155,65 +2271,15 @@ class SnapshotTable:
         :meth:`compact` PURGE them (the accumulated-DV maintenance
         story is exactly Delta's: OPTIMIZE re-materializes).
 
-        Honesty bounds, enforced not documented:
-
-        - a file whose live rows ALL match is removed from the
-          manifest outright (cheaper than a DV covering the file);
-        - more than ``max_deleted_rows`` matches falls back to
-          :meth:`delete` — DV runs live in the manifest JSON, so a
-          table-sized delete through DVs would turn the metadata into
-          the table; COW is the right tool there."""
-        prev = self.snapshot()
-        cur = self.read()  # DV-filtered: already-deleted rows can't re-match
-        matched = cur.filter(predicate).select(
-            F.col("_metadata.file_path").alias("fp"),
-            F.col("_metadata.row_index").alias("ri"),
-        )
-        rows = matched.limit(max_deleted_rows + 1).collect()
-        if len(rows) > max_deleted_rows:
-            return self.delete(predicate)
-        if not rows:
-            return self._commit("delete_mor", prev.version, [])
-        by_file: dict[str, list[int]] = {}
-        for r in rows:
-            by_file.setdefault(self._relativize(r.fp), []).append(r.ri)
-        dv_add: dict = {}
-        fully_gone: set[str] = set()
-        prev_dvs = prev.dvs or {}
-        for f, idx in by_file.items():
-            nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-            live_rows = (
-                nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                if nrows_stat
-                else None
-            )
-            if live_rows is not None and len(idx) >= live_rows:
-                fully_gone.add(f)  # last live row gone: drop the file
-            else:
-                dv_add[f] = _ranges_from_indices(idx)
-        # Logical-conflict granularity (Delta's check, not a blanket
-        # abort): two DV deletes whose touched FILES are disjoint
-        # commute — the final live set is identical in either order —
-        # so a concurrent delete_mor on other files rebases instead of
-        # raising. Anything else intervening (appends the predicate
-        # never saw, COW rewrites, compaction) still aborts.
-        mine = frozenset(dv_add) | fully_gone
-
-        def _dv_commutes(intervening) -> bool:
-            for _v, op, added, removed, dvd in intervening:
-                if op != "delete_mor" or added:
-                    return False
-                if (set(removed) | set(dvd)) & mine:
-                    return False
-            return True
-
-        return self._commit(
-            "delete_mor",
-            prev.version,
-            [],
-            remove=frozenset(fully_gone),
-            dv_add=dv_add,
-            commute_ok=_dv_commutes,
+        Retracts through :meth:`_dv_retract` with its honesty bounds
+        (fully-matched files dropped outright; more than
+        ``max_deleted_rows`` matches falls back to :meth:`delete`). A
+        concurrent DV delete on disjoint files rebases instead of
+        aborting (:func:`_dv_delete_commutes`)."""
+        return self._delete_dv(
+            lambda d: d.filter(predicate),
+            max_deleted_rows,
+            lambda: self.delete(predicate),
         )
 
     def delete_keys(
@@ -2229,22 +2295,15 @@ class SnapshotTable:
         stays distributed). Same COW file granularity as
         :meth:`merge`; deleting keys that do not exist is a no-op."""
         prev = self.snapshot()
-        cur = self.read()
         kdf = keys.select(*key_cols)
-        touched_abs = self._touched_files(
-            cur, lambda d: d.join(F.broadcast(kdf), key_cols, "left_semi")
-        )
-        if not touched_abs:
-            return self._commit("delete", prev.version, [], txn=txn)
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        survivors = self._scan(sorted(touched_rel), prev.dvs).join(
-            kdf, key_cols, "left_anti"
-        )
-        new_files = (
-            self._write_batch(survivors) if survivors.limit(1).count() else []
-        )
-        return self._commit(
-            "delete", prev.version, new_files, remove=touched_rel, txn=txn
+        touched = self._touched_files(self.read(), _key_match(kdf, key_cols))
+        return self._rewrite(
+            "delete",
+            prev,
+            touched,
+            lambda t: t.join(kdf, key_cols, "left_anti"),
+            txn=txn,
+            skip_empty=True,
         )
 
     def delete_keys_mor(
@@ -2260,62 +2319,18 @@ class SnapshotTable:
         vectors in one JSON commit instead of COW-rewriting every file
         that holds a matched key. The natural retraction shape for a
         dedup-maintenance or GDPR pass over a 100 TB corpus: the loser
-        keys arrive as a DataFrame (never a collected-in predicate),
-        the matched positions are bounded by the actual match count,
-        and more than ``max_deleted_rows`` matches falls back to the
-        COW :meth:`delete_keys` (a table-sized delete through DVs
-        would turn the metadata into the table). Deleting absent keys
-        is a no-op. Same commute rule as :meth:`delete_mor`: a
-        concurrent DV delete on disjoint files rebases."""
-        prev = self.snapshot()
-        cur = self.read()  # DV-filtered: dead rows can't re-match
+        keys arrive as a DataFrame (never a collected-in predicate) and
+        the matched positions are bounded by the actual match count.
+        Same retract step, bounds and commute rule as
+        :meth:`delete_mor`, falling back to the COW
+        :meth:`delete_keys` past ``max_deleted_rows``. Deleting absent
+        keys is a no-op."""
         kdf = keys.select(*key_cols)
-        matched = (
-            cur.withColumn("_lh_fp", F.col("_metadata.file_path"))
-            .withColumn("_lh_ri", F.col("_metadata.row_index"))
-            .join(F.broadcast(kdf), key_cols, "left_semi")
-            .select(F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri"))
-        )
-        rows = matched.limit(max_deleted_rows + 1).collect()
-        if len(rows) > max_deleted_rows:
-            return self.delete_keys(keys, key_cols, txn=txn)
-        if not rows:
-            return self._commit("delete_mor", prev.version, [], txn=txn)
-        by_file: dict[str, list[int]] = {}
-        for r in rows:
-            by_file.setdefault(self._relativize(r.fp), []).append(r.ri)
-        dv_add: dict = {}
-        fully_gone: set[str] = set()
-        prev_dvs = prev.dvs or {}
-        for f, idx in by_file.items():
-            nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-            live_rows = (
-                nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                if nrows_stat
-                else None
-            )
-            if live_rows is not None and len(idx) >= live_rows:
-                fully_gone.add(f)
-            else:
-                dv_add[f] = _ranges_from_indices(idx)
-        mine = frozenset(dv_add) | fully_gone
-
-        def _dv_commutes(intervening) -> bool:
-            for _v, op, added, removed, dvd in intervening:
-                if op != "delete_mor" or added:
-                    return False
-                if (set(removed) | set(dvd)) & mine:
-                    return False
-            return True
-
-        return self._commit(
-            "delete_mor",
-            prev.version,
-            [],
-            remove=frozenset(fully_gone),
-            dv_add=dv_add,
+        return self._delete_dv(
+            _key_match(kdf, key_cols),
+            max_deleted_rows,
+            lambda: self.delete_keys(keys, key_cols, txn=txn),
             txn=txn,
-            commute_ok=_dv_commutes,
         )
 
     def merge(
@@ -2333,26 +2348,18 @@ class SnapshotTable:
         the read path's ``mergeSchema``)."""
         prev = self.snapshot()
         self._validate_write_schema(source, schema_evolution)
-        cur = self.read()
         keys = source.select(*key_cols)
-        touched_abs = self._touched_files(
-            cur, lambda d: d.join(F.broadcast(keys), key_cols, "left_semi")
-        )
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        if touched_abs:
-            survivors = self._scan(sorted(touched_rel), prev.dvs).join(
-                keys, key_cols, "left_anti"
-            )
-            rewrite = survivors.unionByName(source, allowMissingColumns=True)
-        else:
-            rewrite = source
-        return self._commit(
+        touched = self._touched_files(self.read(), _key_match(keys, key_cols))
+        return self._rewrite(
             "merge",
-            prev.version,
-            self._write_batch(rewrite),
-            remove=touched_rel,
+            prev,
+            touched,
+            lambda t: t.join(keys, key_cols, "left_anti").unionByName(
+                source, allowMissingColumns=True
+            ),
             txn=txn,
             merge_keys=[self._physical_name(c) for c in key_cols],
+            untouched=source,
         )
 
     def merge_mor(
@@ -2375,14 +2382,11 @@ class SnapshotTable:
         the shape of the reference's continuously-upserted enrichment
         feed (``04_sales_enrich_sp.sql:22``).
 
-        Honesty bounds, enforced not documented (same as delete_mor):
-
-        - a file whose live rows ALL matched is removed from the
-          manifest outright (cheaper than a DV covering the file);
-        - more than ``max_updated_rows`` matches falls back to
-          :meth:`merge` — DV runs live in the manifest JSON, so a
-          table-sized update through DVs would turn the metadata into
-          the table; COW is the right tool there.
+        Retracts through :meth:`_dv_retract` with its honesty bounds
+        (fully-matched files dropped outright; more than
+        ``max_updated_rows`` matches falls back to :meth:`merge`). It
+        adds files, so unlike the DV deletes it aborts on any
+        intervening commit.
 
         Change-feed semantics: the commit surfaces as delete(old image)
         rows (from the DV delta / removed files) plus insert(new image)
@@ -2395,43 +2399,21 @@ class SnapshotTable:
         emits nothing."""
         prev = self.snapshot()
         self._validate_write_schema(source, schema_evolution)
-        cur = self.read()  # DV-filtered: dead rows can't re-match
-        keys = source.select(*key_cols)
-        # extract the metadata fields BEFORE the semi-join so the plan
-        # keeps them addressable (same discipline as _touched_files)
-        matched = (
-            cur.withColumn("_lh_fp", F.col("_metadata.file_path"))
-            .withColumn("_lh_ri", F.col("_metadata.row_index"))
-            .join(F.broadcast(keys), key_cols, "left_semi")
-            .select(F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri"))
+        # DV-filtered read: dead rows can't re-match
+        located = self._locate(
+            self.read(), _key_match(source.select(*key_cols), key_cols)
         )
-        rows = matched.limit(max_updated_rows + 1).collect()
-        if len(rows) > max_updated_rows:
+        retract = self._dv_retract(prev, located, max_updated_rows)
+        if retract is None:
             return self.merge(
                 source, key_cols, txn=txn, schema_evolution=schema_evolution
             )
-        by_file: dict[str, list[int]] = {}
-        for r in rows:
-            by_file.setdefault(self._relativize(r.fp), []).append(r.ri)
-        dv_add: dict = {}
-        fully_gone: set[str] = set()
-        prev_dvs = prev.dvs or {}
-        for f, idx in by_file.items():
-            nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-            live_rows = (
-                nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                if nrows_stat
-                else None
-            )
-            if live_rows is not None and len(idx) >= live_rows:
-                fully_gone.add(f)  # last live row replaced: drop the file
-            else:
-                dv_add[f] = _ranges_from_indices(idx)
+        dv_add, gone = retract
         return self._commit(
             "merge_mor",
             prev.version,
             self._write_batch(source),
-            remove=frozenset(fully_gone),
+            remove=gone,
             dv_add=dv_add,
             txn=txn,
             merge_keys=[self._physical_name(c) for c in key_cols],
@@ -2487,12 +2469,13 @@ class SnapshotTable:
 
         ``strategy="mor"`` — the conditional twin of
         :meth:`merge_mor`: rows a clause AFFECTS (updated or deleted)
-        become deletion-vector positions, updated images + unmatched
-        inserts land as new files, carried rows never move — one JSON
-        commit for a business-rule CDC batch scattered over a 100 TB
-        table. Same honesty bounds (fully-affected files removed
+        are retracted through :meth:`_dv_retract`, updated images +
+        unmatched inserts land as new files, carried rows never move —
+        one JSON commit for a business-rule CDC batch scattered over a
+        100 TB table. Same honesty bounds (fully-affected files removed
         outright; more than ``max_updated_rows`` affected rows falls
-        back to COW)."""
+        back to COW); a merge touching no target file commits through
+        the COW path."""
         if matched_update is None and matched_delete_cond is None and not insert_unmatched:
             raise ValueError("merge_when with no clauses does nothing")
         if strategy not in ("cow", "mor"):
@@ -2520,12 +2503,9 @@ class SnapshotTable:
                 c: (e if isinstance(e, Column) else F.lit(e)).cast(fields[c])
                 for c, e in matched_update.items()
             }
-        cur = self.read()
         keys = source.select(*key_cols)
-        touched_abs = self._touched_files(
-            cur, lambda d: d.join(F.broadcast(keys), key_cols, "left_semi")
-        )
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
+        touched = self._touched_files(self.read(), _key_match(keys, key_cols))
+        merge_keys = [self._physical_name(c) for c in key_cols]
 
         # clause expressions over the t/s aliases, shared by both
         # strategies. NULL conditions mean "clause not satisfied" (the
@@ -2549,126 +2529,84 @@ class SnapshotTable:
             lambda a, b: a & b,
             [F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in key_cols],
         )
+        # update wins, else the target row carries (delete is each
+        # strategy's filter)
+        updated = [
+            F.when(
+                has_match & upd_cond,
+                matched_update[c]
+                if matched_update and c in matched_update
+                else F.col(f"t.{c}"),
+            )
+            .otherwise(F.col(f"t.{c}"))
+            .alias(c)
+            for c in data_cols
+        ]
 
-        def updated_projection(joined):
-            # update wins, else the target row carries (delete handled
-            # by the caller's filter)
-            return [
-                F.when(
-                    has_match & upd_cond,
-                    matched_update[c]
-                    if matched_update and c in matched_update
-                    else F.col(f"t.{c}"),
-                )
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-                for c in data_cols
-            ]
+        def clause_join(target):
+            return target.alias("t").join(source.alias("s"), on, "left")
 
-        def unmatched_inserts(matched_keys):
+        def with_inserts(df, matched_keys):
             if not insert_unmatched:
-                return None
+                return df
             src = source.alias("s")
             if insert_cond is not None:
                 # NULL = not satisfied, same as the matched clauses
                 src = src.filter(F.coalesce(insert_cond, F.lit(False)))
-            return (
-                src.join(matched_keys, key_cols, "left_anti")
-                if matched_keys is not None
-                else src
+            if matched_keys is not None:
+                src = src.join(matched_keys, key_cols, "left_anti")
+            return src if df is None else df.unionByName(
+                src, allowMissingColumns=True
             )
 
-        if strategy == "mor" and touched_abs:
-            t = (
-                self._scan(sorted(touched_rel), prev.dvs)
-                .withColumn("_lh_fp", F.col("_metadata.file_path"))
-                .withColumn("_lh_ri", F.col("_metadata.row_index"))
-                .alias("t")
+        if strategy == "mor" and touched:
+            t = self._scan(sorted(touched), prev.dvs)
+            affected = self._locate(
+                t,
+                lambda d: clause_join(d).filter(
+                    has_match & (upd_cond | del_cond)
+                ),
             )
-            joined = t.join(source.alias("s"), on, "left")
-            affected = joined.filter(
-                has_match & (upd_cond | del_cond)
-            ).select(
-                F.col("t._lh_fp").alias("fp"), F.col("t._lh_ri").alias("ri")
-            )
-            rows = affected.limit(max_updated_rows + 1).collect()
-            if len(rows) <= max_updated_rows:
-                by_file: dict[str, list[int]] = {}
-                for r in rows:
-                    by_file.setdefault(self._relativize(r.fp), []).append(
-                        r.ri
-                    )
-                dv_add: dict = {}
-                fully_gone: set[str] = set()
-                prev_dvs = prev.dvs or {}
-                for f, idx in by_file.items():
-                    nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-                    live = (
-                        nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                        if nrows_stat
-                        else None
-                    )
-                    if live is not None and len(idx) >= live:
-                        fully_gone.add(f)
-                    else:
-                        dv_add[f] = _ranges_from_indices(idx)
-                updated = joined.filter(has_match & upd_cond).select(
-                    *updated_projection(joined)
-                )
-                matched_keys = joined.filter(has_match).select(
-                    *[F.col(f"t.{c}").alias(c) for c in key_cols]
-                )
-                adds = updated
-                ins = unmatched_inserts(matched_keys)
-                if ins is not None:
-                    adds = adds.unionByName(ins, allowMissingColumns=True)
-                new_files = (
-                    self._write_batch(adds)
-                    if adds.limit(1).count()
-                    else []
+            retract = self._dv_retract(prev, affected, max_updated_rows)
+            if retract is not None:
+                dv_add, gone = retract
+                joined = clause_join(t)
+                adds = with_inserts(
+                    joined.filter(has_match & upd_cond).select(*updated),
+                    joined.filter(has_match).select(
+                        *[F.col(f"t.{c}").alias(c) for c in key_cols]
+                    ),
                 )
                 return self._commit(
                     "merge_mor",
                     prev.version,
-                    new_files,
-                    remove=frozenset(fully_gone),
+                    self._write_batch(adds) if adds.limit(1).count() else [],
+                    remove=gone,
                     dv_add=dv_add,
                     txn=txn,
-                    merge_keys=[self._physical_name(c) for c in key_cols],
+                    merge_keys=merge_keys,
                 )
             # fall through to COW past the run budget
 
-        pieces = []
-        matched_keys = None
-        if touched_abs:
-            t = self._scan(sorted(touched_rel), prev.dvs).alias("t")
-            joined = t.join(source.alias("s"), on, "left")
+        def transform(t):
             # one projection arbitrates every clause per row: update
             # wins, else delete drops, else the target row carries
-            survivors = joined.filter(
+            survivors = clause_join(t).filter(
                 ~has_match | upd_cond | ~del_cond
-            ).select(*updated_projection(joined))
-            pieces.append(survivors)
-            matched_keys = (
-                self._scan(sorted(touched_rel), prev.dvs)
-                .join(F.broadcast(keys), key_cols, "left_semi")
-                .select(*key_cols)
-            )
-        ins = unmatched_inserts(matched_keys)
-        if ins is not None:
-            pieces.append(ins)
-        if not pieces:
-            return self._commit("merge", prev.version, [], txn=txn)
-        rewrite = pieces[0]
-        for p in pieces[1:]:
-            rewrite = rewrite.unionByName(p, allowMissingColumns=True)
-        return self._commit(
+            ).select(*updated)
+            matched_keys = _key_match(keys, key_cols)(
+                self._scan(sorted(touched), prev.dvs)
+            ).select(*key_cols)
+            return with_inserts(survivors, matched_keys)
+
+        return self._rewrite(
             "merge",
-            prev.version,
-            self._write_batch(rewrite),
-            remove=touched_rel,
+            prev,
+            touched,
+            transform,
             txn=txn,
-            merge_keys=[self._physical_name(c) for c in key_cols],
+            merge_keys=merge_keys,
+            untouched=with_inserts(None, None),
         )
 
     def update(
@@ -2689,7 +2627,7 @@ class SnapshotTable:
         ``strategy="cow"`` (default) rewrites only the files holding
         matching rows — matched rows transformed, their file-mates
         carried through the same write (Delta's UPDATE). ``"mor"``
-        soft-deletes the matched positions via DELETION VECTORS and
+        retracts the matched positions through :meth:`_dv_retract` and
         appends the transformed rows — one JSON commit for an update
         scattered across a 100 TB table, with the same honesty bounds
         as :meth:`delete_mor`/:meth:`merge_mor` (fully-updated files
@@ -2720,64 +2658,37 @@ class SnapshotTable:
         prev = self.snapshot()
         cur = self.read()  # DV-filtered: dead rows can't match
 
+        def match(d):
+            return d.filter(predicate)
+
         if strategy == "mor":
-            matched = (
-                cur.withColumn("_lh_fp", F.col("_metadata.file_path"))
-                .withColumn("_lh_ri", F.col("_metadata.row_index"))
-                .filter(predicate)
-                .select(
-                    F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri")
-                )
+            retract = self._dv_retract(
+                prev, self._locate(cur, match), max_updated_rows
             )
-            rows = matched.limit(max_updated_rows + 1).collect()
-            if len(rows) <= max_updated_rows:
-                if not rows:
+            if retract is not None:
+                dv_add, gone = retract
+                if not (dv_add or gone):
                     return self._commit("update", prev.version, [], txn=txn)
-                by_file: dict[str, list[int]] = {}
-                for r in rows:
-                    by_file.setdefault(self._relativize(r.fp), []).append(
-                        r.ri
-                    )
-                dv_add: dict = {}
-                fully_gone: set[str] = set()
-                prev_dvs = prev.dvs or {}
-                for f, idx in by_file.items():
-                    nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-                    live = (
-                        nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                        if nrows_stat
-                        else None
-                    )
-                    if live is not None and len(idx) >= live:
-                        fully_gone.add(f)
-                    else:
-                        dv_add[f] = _ranges_from_indices(idx)
-                new_rows = cur.filter(predicate).withColumns(set_exprs)
                 return self._commit(
                     "update_mor",
                     prev.version,
-                    self._write_batch(new_rows),
-                    remove=frozenset(fully_gone),
+                    self._write_batch(match(cur).withColumns(set_exprs)),
+                    remove=gone,
                     dv_add=dv_add,
                     txn=txn,
                 )
             # fall through to COW past the run budget
 
-        touched_abs = self._touched_files(cur, lambda d: d.filter(predicate))
-        if not touched_abs:
-            return self._commit("update", prev.version, [], txn=txn)
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        rewritten = self._scan(sorted(touched_rel), prev.dvs).withColumns(
-            {
-                c: F.when(predicate, e).otherwise(F.col(c))
-                for c, e in set_exprs.items()
-            }
-        )
-        return self._commit(
+        return self._rewrite(
             "update",
-            prev.version,
-            self._write_batch(rewritten),
-            remove=touched_rel,
+            prev,
+            self._touched_files(cur, match),
+            lambda t: t.withColumns(
+                {
+                    c: F.when(predicate, e).otherwise(F.col(c))
+                    for c, e in set_exprs.items()
+                }
+            ),
             txn=txn,
         )
 
@@ -4183,34 +4094,25 @@ class SnapshotTable:
         # RAW scan: deletion vectors ignored, so DV-hidden pre-images
         # of the subject locate their files too
         raw = self._scan(sorted(prev.files), None)
-        touched_abs = self._touched_files(
-            raw, lambda d: d.filter(predicate)
-        )
-        if touched_abs:
-            touched_rel = frozenset(
-                self._relativize(p) for p in touched_abs
-            )
+        touched_rel = self._touched_files(raw, lambda d: d.filter(predicate))
+        if touched_rel:
             # survivors: live (DV-respected) non-subject rows of the
             # touched files — the rewrite folds the DV in, so neither
             # the subject nor unrelated soft-deleted rows resurrect
-            survivors = self._scan(sorted(touched_rel), prev.dvs).filter(
-                ~predicate
-            )
-            new_files = (
-                self._write_batch(survivors)
-                if survivors.limit(1).count()
-                else []
-            )
-            self._commit(
-                "erase", prev.version, new_files, remove=touched_rel
+            self._rewrite(
+                "erase",
+                prev,
+                touched_rel,
+                lambda t: t.filter(~predicate),
+                skip_empty=True,
             )
         removed = self.vacuum(retain_last=1, orphan_grace_ms=0)
         redacted = self._redact_change_files(predicate)
         return {
-            "files_rewritten": len(touched_abs),
+            "files_rewritten": len(touched_rel),
             "versions_expired": len(versions_before)
             - len(self._versions())
-            + (1 if touched_abs else 0),
+            + (1 if touched_rel else 0),
             "data_files_deleted": len(removed),
             "sidecars_redacted": redacted,
         }

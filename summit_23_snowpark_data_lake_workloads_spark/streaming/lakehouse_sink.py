@@ -18,6 +18,26 @@ from pyspark.sql import DataFrame
 from ..sources.lakehouse import SnapshotTable
 
 
+def _start(
+    stream_df: DataFrame,
+    write,
+    checkpoint: str,
+    processing_time: str | None,
+    output_mode: str = "append",
+):
+    """Start ``stream_df`` through ``write(batch_df, batch_id)`` as a
+    ``foreachBatch`` sink: ``processing_time=None`` -> ``availableNow``
+    (drain pending, stop), a duration string -> that cadence."""
+    writer = (
+        stream_df.writeStream.foreachBatch(write)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+    )
+    if processing_time:
+        return writer.trigger(processingTime=processing_time).start()
+    return writer.trigger(availableNow=True).start()
+
+
 def write_stream_to_snapshot_table(
     stream_df: DataFrame,
     table: SnapshotTable,
@@ -66,16 +86,7 @@ def write_stream_to_snapshot_table(
         else:
             table.append(batch_df, txn=txn)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _write, checkpoint, processing_time)
 
 
 def merge_stream_into_snapshot_table(
@@ -158,16 +169,7 @@ def merge_stream_into_snapshot_table(
             dv_fraction=0.3 if strategy == "mor" else None,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _write, checkpoint, processing_time, "update")
 
 
 def _maybe_compact(
@@ -324,16 +326,7 @@ def dedup_ingest_stream(
         _maybe_compact([table], batch_id, compact_every,
                        vacuum_retain_last=vacuum_retain_last)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _write, checkpoint, processing_time)
 
 
 def _files_added_by_batch(
@@ -545,16 +538,7 @@ def near_dedup_ingest_stream(
         _maybe_compact([table, index], batch_id, compact_every,
                        vacuum_retain_last=vacuum_retain_last)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _write, checkpoint, processing_time)
 
 
 def _intra_batch_semantic_dedup(
@@ -843,13 +827,4 @@ def semantic_dedup_ingest_stream(
         _maybe_compact([table, cells], batch_id, compact_every,
                        vacuum_retain_last=vacuum_retain_last)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _write, checkpoint, processing_time)

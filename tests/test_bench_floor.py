@@ -62,3 +62,15 @@ def test_recorded_floor_on_real_history():
     assert "q1_pricing_summary" in scan["fq"]
     # r11 is tail-truncated: it must never appear in `used`
     assert "BENCH_r11.json" not in scan["used"]
+
+
+def test_cold_anchor_falls_back_to_warm_anchor_only_through_r14():
+    """The SPARK_GRAFT_BENCH_FLOOR override and the recorded-floor scan
+    share one rule: ``calibration_sec`` stands in for the cold anchor
+    only for rounds <= 14 (r15 recorded it after the warm-up)."""
+    warm_only = {"calibration_sec": 0.3}
+    assert bench.cold_anchor(warm_only, 14) == 0.3
+    assert bench.cold_anchor(warm_only, 15) is None
+    assert bench.cold_anchor(warm_only, None) is None
+    both = {"calibration_sec": 0.3, "calibration_cold_sec": 0.5}
+    assert bench.cold_anchor(both, 16) == 0.5

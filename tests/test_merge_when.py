@@ -14,14 +14,12 @@ from summit_23_snowpark_data_lake_workloads_spark.sources.lakehouse import (
     SnapshotTable,
 )
 
-# r16: transactional-chain / merge-matrix model tier — heavy multi-commit
-# fixtures per test; gated behind SPARK_GRAFT_SLOW=1 so the default
-# profile fits the grading driver's verify window (judge item #1). The
-# same machinery stays default-covered by the gated audit queries'
-# oracle differentials (lakehouse_txn_medallion/streaming_txn_chain/
-# dv_merge/cdc audits in test_queries_oracle.py).
-pytestmark = pytest.mark.slow
-
+# The clause, mor and budget tests run in the default profile; the
+# composition (DVs/labels, constraints, rename, partitions), streaming
+# and sidecar tests are marked slow (SPARK_GRAFT_SLOW=1). Those stay
+# default-covered by the gated audit queries' oracle differentials
+# (lakehouse_txn_medallion/streaming_txn_chain/dv_merge/cdc audits in
+# test_queries_oracle.py).
 
 
 def _target(spark, tmp_path, name="t"):
@@ -151,6 +149,7 @@ def test_insert_only_and_update_only_forms(spark, tmp_path):
         )
 
 
+@pytest.mark.slow
 def test_merge_when_composes_with_dvs_and_labels(spark, tmp_path):
     """Soft-deleted rows cannot re-match, and the commit's labeled
     feed splits the conditional update into preimage/postimage pairs
@@ -213,6 +212,7 @@ def test_merge_when_mor_budget_falls_back_to_cow(spark, tmp_path):
     assert {r.qty for r in t.read().collect()} == {100.0 + i for i in range(6)}
 
 
+@pytest.mark.slow
 def test_merge_when_respects_check_constraints(spark, tmp_path):
     """The conditional rewrite goes through the same one-aggregate
     write-side enforcement as every other path: a clause that would
@@ -232,6 +232,7 @@ def test_merge_when_respects_check_constraints(spark, tmp_path):
     assert _state(t) == {(i, float(i), "old") for i in range(6)}
 
 
+@pytest.mark.slow
 def test_merge_when_after_rename(spark, tmp_path):
     """Column mapping composes: clauses and SET expressions speak the
     LOGICAL names, the commit's merge_keys record physical ones, and
@@ -254,6 +255,7 @@ def test_merge_when_after_rename(spark, tmp_path):
     assert (1, "update_postimage") in labels and (9, "insert") in labels
 
 
+@pytest.mark.slow
 def test_merge_when_update_migrates_partitions(spark, tmp_path):
     """An update clause that changes a partition-source value must
     migrate the row: the rewrite re-derives partition tuples, and
@@ -302,6 +304,7 @@ def test_insert_cond_tombstone_guard(spark, tmp_path):
     assert got == {0, 1, 3, 4, 5, 8}
 
 
+@pytest.mark.slow
 def test_streaming_debezium_apply(spark, tmp_path):
     """The one-sink CDC apply: a stream of upserts AND tombstones,
     matched_delete_cond + insert_cond routing each micro-batch through
@@ -358,6 +361,7 @@ def test_streaming_debezium_apply(spark, tmp_path):
     assert t.snapshot().version == v
 
 
+@pytest.mark.slow
 def test_merge_when_persisted_cdf_survives_preimage_vacuum(spark, tmp_path):
     """cdf=True: the conditional merge's retraction rows persist as
     sidecars at commit time, so the feed still answers after the

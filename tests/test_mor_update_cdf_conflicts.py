@@ -23,11 +23,10 @@ from summit_23_snowpark_data_lake_workloads_spark.sources.lakehouse import (
     SnapshotTable,
 )
 
-# r16: model-based tier — ~1.1 min of heavy fixture/model work per full run;
-# gated behind SPARK_GRAFT_SLOW=1 so the default profile fits the
-# grading driver's verify window (judge item #1, OPTIMIZATION_r16.md)
-pytestmark = pytest.mark.slow
-
+# Tests that call a row-level DML verb directly (merge_mor, update,
+# delete_keys_mor, the DV-delete conflict cases) run in the default
+# profile; the rollup, sidecar, vacuum, metadata-conflict and streaming
+# tiers are marked slow (SPARK_GRAFT_SLOW=1).
 
 
 def _df(spark, lo, hi, grp=0):
@@ -136,6 +135,7 @@ def test_merge_mor_changes_emit_retraction_pairs(spark, table):
     assert ins == [18, 19, 20, 21]  # every source row
 
 
+@pytest.mark.slow
 def test_merge_mor_feeds_rollup_incrementally(spark, tmp_path):
     fact = SnapshotTable(spark, str(tmp_path / "fact"))
     rollup = SnapshotTable(spark, str(tmp_path / "roll"))
@@ -172,6 +172,7 @@ def _change_state(chg):
     )
 
 
+@pytest.mark.slow
 def test_persisted_cdf_survives_preimage_vacuum(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), cdf=True)
     t.create(_df(spark, 0, 12))
@@ -193,6 +194,7 @@ def test_persisted_cdf_survives_preimage_vacuum(spark, tmp_path):
         u.changes(1, 3).collect()
 
 
+@pytest.mark.slow
 def test_persisted_cdf_equals_compute_on_read(spark, tmp_path):
     a = SnapshotTable(spark, str(tmp_path / "a"), cdf=True)
     b = SnapshotTable(spark, str(tmp_path / "b"))
@@ -206,6 +208,7 @@ def test_persisted_cdf_equals_compute_on_read(spark, tmp_path):
     assert not b._raw(2).get("change_files")
 
 
+@pytest.mark.slow
 def test_enable_cdf_is_table_state_and_starts_at_enabling_version(
     spark, tmp_path
 ):
@@ -225,6 +228,7 @@ def test_enable_cdf_is_table_state_and_starts_at_enabling_version(
         t2.enable_cdf()
 
 
+@pytest.mark.slow
 def test_persisted_cdf_rollup_stays_incremental_past_vacuum(
     spark, tmp_path
 ):
@@ -253,6 +257,7 @@ def test_persisted_cdf_rollup_stays_incremental_past_vacuum(
     assert got == expect
 
 
+@pytest.mark.slow
 def test_vacuum_sweeps_expired_cdf_sidecars_keeps_retained(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), cdf=True)
     t.create(_df(spark, 0, 12))
@@ -270,6 +275,7 @@ def test_vacuum_sweeps_expired_cdf_sidecars_keeps_retained(spark, tmp_path):
     assert _change_state(t.changes(3, 5))  # retained range still serves
 
 
+@pytest.mark.slow
 def test_unreferenced_cdf_sidecar_respects_orphan_grace(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), cdf=True)
     t.create(_df(spark, 0, 8))
@@ -289,48 +295,56 @@ def test_unreferenced_cdf_sidecar_respects_orphan_grace(spark, tmp_path):
 # ------------------------------------------------- conflict granularity
 
 
-def test_disjoint_dv_deletes_both_land(spark, tmp_path):
+def _race_next_read(t, racer_op):
+    """Run ``racer_op`` on a second handle right after ``t``'s next
+    read, i.e. between the verb's snapshot and its commit."""
+    racer = SnapshotTable(t.spark, t.path)
+    orig_read = t.read
+
+    def racy_read(*a, **kw):
+        out = orig_read(*a, **kw)
+        t.read = orig_read
+        racer_op(racer)
+        return out
+
+    t.read = racy_read
+
+
+def _two_file_table(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     # two single-file batches: predicates touch disjoint files
     t.create(_df(spark, 0, 10).coalesce(1))
     t.append(_df(spark, 10, 20, grp=1).coalesce(1))
-    racer = SnapshotTable(spark, t.path)
-    orig_read = t.read
-    fired = {"done": False}
+    return t
 
-    def racy_read(*a, **kw):
-        out = orig_read(*a, **kw)
-        if not fired["done"]:
-            fired["done"] = True
-            racer.delete_mor(F.col("id") == 15)  # grp=1 file only
-        return out
 
-    t.read = racy_read
+def test_disjoint_dv_deletes_both_land(spark, tmp_path):
+    t = _two_file_table(spark, tmp_path)
+    _race_next_read(t, lambda r: r.delete_mor(F.col("id") == 15))  # grp=1
     t.delete_mor(F.col("id") == 3)  # grp=0 file only — must REBASE
-    t.read = orig_read
     assert sorted(r.id for r in t.read().collect()) == [
         i for i in range(20) if i not in (3, 15)
+    ]
+
+
+def test_merge_mor_racing_disjoint_dv_delete_aborts(spark, tmp_path):
+    # the DV-delete commute rule must not widen to merge_mor: it adds
+    # files, so even a racing delete_mor on ANOTHER file aborts it
+    t = _two_file_table(spark, tmp_path)
+    _race_next_read(t, lambda r: r.delete_mor(F.col("id") == 15))  # grp=1
+    with pytest.raises(ConcurrentWriteError):
+        t.merge_mor(_df(spark, 3, 4, grp=7), ["id"])  # grp=0 file only
+    assert _rows(t) == [
+        (i, 1 if i >= 10 else 0, i * 2.0) for i in range(20) if i != 15
     ]
 
 
 def test_overlapping_dv_deletes_abort(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10).coalesce(1))  # ONE file: must conflict
-    racer = SnapshotTable(spark, t.path)
-    orig_read = t.read
-    fired = {"done": False}
-
-    def racy_read(*a, **kw):
-        out = orig_read(*a, **kw)
-        if not fired["done"]:
-            fired["done"] = True
-            racer.delete_mor(F.col("id") == 7)
-        return out
-
-    t.read = racy_read
+    _race_next_read(t, lambda r: r.delete_mor(F.col("id") == 7))
     with pytest.raises(ConcurrentWriteError):
         t.delete_mor(F.col("id") == 3)
-    t.read = orig_read
     # retry on fresh state succeeds
     t.delete_mor(F.col("id") == 3)
     assert sorted(r.id for r in t.read().collect()) == [
@@ -341,21 +355,9 @@ def test_overlapping_dv_deletes_abort(spark, tmp_path):
 def test_dv_delete_racing_append_still_aborts(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10).coalesce(1))
-    racer = SnapshotTable(spark, t.path)
-    orig_read = t.read
-    fired = {"done": False}
-
-    def racy_read(*a, **kw):
-        out = orig_read(*a, **kw)
-        if not fired["done"]:
-            fired["done"] = True
-            racer.append(_df(spark, 10, 15, grp=1))
-        return out
-
-    t.read = racy_read
+    _race_next_read(t, lambda r: r.append(_df(spark, 10, 15, grp=1)))
     with pytest.raises(ConcurrentWriteError):
         t.delete_mor(F.col("id") == 3)
-    t.read = orig_read
     assert t.read().count() == 15  # the append survived
 
 
@@ -366,6 +368,7 @@ def _day_df(spark, day, lo, hi):
     )
 
 
+@pytest.mark.slow
 def test_partition_disjoint_overwrites_both_land(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), partition_by=["d"])
     t.create(
@@ -390,6 +393,7 @@ def test_partition_disjoint_overwrites_both_land(spark, tmp_path):
     assert got == list(range(5)) + [100, 101, 102] + [200, 201, 202, 203]
 
 
+@pytest.mark.slow
 def test_same_partition_overwrites_abort(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), partition_by=["d"])
     t.create(_day_df(spark, 1, 0, 5).unionAll(_day_df(spark, 2, 5, 10)))
@@ -411,6 +415,7 @@ def test_same_partition_overwrites_abort(spark, tmp_path):
     assert got == list(range(5)) + [100, 101, 102]  # racer's backfill won
 
 
+@pytest.mark.slow
 def test_append_into_overwritten_partition_aborts(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), partition_by=["d"])
     t.create(_day_df(spark, 1, 0, 5).unionAll(_day_df(spark, 2, 5, 10)))
@@ -434,6 +439,7 @@ def test_append_into_overwritten_partition_aborts(spark, tmp_path):
 # ------------------------------------------------ metadata lost-update
 
 
+@pytest.mark.slow
 def test_stale_handle_append_cannot_erase_constraint(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10))
@@ -448,6 +454,7 @@ def test_stale_handle_append_cannot_erase_constraint(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_stale_handle_append_cannot_revert_rename(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10))
@@ -462,6 +469,7 @@ def test_stale_handle_append_cannot_revert_rename(spark, tmp_path):
     assert "amount" in SnapshotTable(spark, t.path).read().columns
 
 
+@pytest.mark.slow
 def test_concurrent_metadata_commits_conflict(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10))
@@ -471,6 +479,7 @@ def test_concurrent_metadata_commits_conflict(spark, tmp_path):
         other.add_constraint("v_nonneg", "v >= 0")
 
 
+@pytest.mark.slow
 def test_metadata_ops_on_empty_table_raise_cleanly(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     with pytest.raises(ValueError, match="no committed version"):
@@ -483,6 +492,7 @@ def test_metadata_ops_on_empty_table_raise_cleanly(spark, tmp_path):
         t.enable_cdf()
 
 
+@pytest.mark.slow
 def test_rename_guard_is_case_and_backtick_insensitive(spark, tmp_path):
     t = SnapshotTable(
         spark,
@@ -603,6 +613,7 @@ def test_update_feeds_cdf_and_rollup(spark, tmp_path):
     assert (row.n_rows, row.sum_v) == (20, want)
 
 
+@pytest.mark.slow
 def test_scoped_compact_racing_append_both_land(spark, tmp_path):
     """Delta's OPTIMIZE rule: bin-packing a fixed set of small files
     commutes with a concurrent append (the whole-table replace-all
@@ -628,6 +639,7 @@ def test_scoped_compact_racing_append_both_land(spark, tmp_path):
     assert got == list(range(16)) + list(range(100, 105))
 
 
+@pytest.mark.slow
 def test_streaming_merge_sink_mor_strategy(spark, tmp_path):
     from summit_23_snowpark_data_lake_workloads_spark.streaming.lakehouse_sink import (
         merge_stream_into_snapshot_table,
@@ -671,6 +683,7 @@ def test_update_casts_set_exprs_to_existing_type(spark, tmp_path):
     assert got == [(1, 10), (2, 99)]  # 10.9 cast back to int -> 10
 
 
+@pytest.mark.slow
 def test_compact_dv_fraction_purges_heavy_files_only(spark, tmp_path):
     """OPTIMIZE's heavily-deleted-file policy: dv_fraction selects
     files whose soft-deleted row share crosses the threshold — a
@@ -698,6 +711,7 @@ def test_compact_dv_fraction_purges_heavy_files_only(spark, tmp_path):
     assert t.snapshot().version == v
 
 
+@pytest.mark.slow
 def test_rollback_dv_delta_reports_only_newly_dead_rows(spark, tmp_path):
     """A rollback restores files WITH their vectors; its recorded dv
     delta must be relative to the PRIOR version, or changes()/
@@ -722,6 +736,7 @@ def test_rollback_dv_delta_reports_only_newly_dead_rows(spark, tmp_path):
     ) == 1  # row 5 newly dead vs v4
 
 
+@pytest.mark.slow
 def test_threaded_disjoint_dv_deletes_all_land(spark, tmp_path):
     """REAL concurrency (not a staged interleave): four threads fire
     delete_mor at four disjoint single-file batches simultaneously.
@@ -756,6 +771,7 @@ def test_threaded_disjoint_dv_deletes_all_land(spark, tmp_path):
     assert t.row_count() == 36  # metadata counts agree
 
 
+@pytest.mark.slow
 def test_stale_handle_append_cannot_revert_spec_evolution(spark, tmp_path):
     """The metadata divergence check covers the partition spec too: a
     stale handle's append after a concurrent evolve_partition_spec
@@ -787,6 +803,7 @@ def test_stale_handle_append_cannot_revert_spec_evolution(spark, tmp_path):
     assert t.read().count() == 10
 
 
+@pytest.mark.slow
 def test_stale_handle_append_cannot_disable_cdf(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10))
@@ -828,6 +845,7 @@ def test_delete_keys_mor_falls_back_to_cow_past_budget(spark, table):
     assert sorted(r.id for r in table.read().collect()) == list(range(15, 20))
 
 
+@pytest.mark.slow
 def test_cdc_replication_mor_strategy(spark, tmp_path):
     from summit_23_snowpark_data_lake_workloads_spark.operators.cdc import (
         replicate_changes,
@@ -850,6 +868,7 @@ def test_cdc_replication_mor_strategy(spark, tmp_path):
     assert rows(dst) == rows(src)
 
 
+@pytest.mark.slow
 def test_streaming_mor_sink_maintenance_purges_vectors(spark, tmp_path):
     """The MoR sink's compaction cadence: with compact_every set, the
     maintenance pass purges accumulated vectors (dv_fraction) so a
@@ -918,6 +937,7 @@ def test_merge_mor_and_changes_compose_with_rename(spark, tmp_path):
     assert v4_ins == [8, 9, 10, 11]
 
 
+@pytest.mark.slow
 def test_persisted_sidecars_survive_later_rename(spark, tmp_path):
     """Sidecars store PHYSICAL names: a rename AFTER the sidecar was
     written must not strand it — the feed translates through the
@@ -936,6 +956,7 @@ def test_persisted_sidecars_survive_later_rename(spark, tmp_path):
 # ------------------------------------------------------------ ops surfaces
 
 
+@pytest.mark.slow
 def test_vacuum_dry_run_changes_nothing(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), cdf=True)
     t.create(_df(spark, 0, 12))
@@ -956,6 +977,7 @@ def test_vacuum_dry_run_changes_nothing(spark, tmp_path):
     assert sorted(t.vacuum(retain_last=2, orphan_grace_ms=0)) == sorted(would)
 
 
+@pytest.mark.slow
 def test_describe_detail(spark, tmp_path):
     t = SnapshotTable(
         spark,

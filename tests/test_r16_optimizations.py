@@ -7,8 +7,6 @@ output byte-identical; these tests pin that equivalence.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -22,12 +20,12 @@ def _docs(spark):
     return read_table(spark, SF, "documents")
 
 
-def test_hash_shingle_keys_flag_default_off():
+def test_hash_shingle_keys_flag_default_off(monkeypatch):
     from summit_23_snowpark_data_lake_workloads_spark.operators.dedup import (
         hash_shingle_keys_enabled,
     )
 
-    assert "SPARK_GRAFT_HASH_SHINGLE_KEYS" not in os.environ
+    monkeypatch.delenv("SPARK_GRAFT_HASH_SHINGLE_KEYS", raising=False)
     assert hash_shingle_keys_enabled() is False
 
 
@@ -48,8 +46,6 @@ def test_hash_shingle_keys_flag_matches_exact(spark, monkeypatch):
     exact = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
     monkeypatch.setenv("SPARK_GRAFT_HASH_SHINGLE_KEYS", "1")
     hashed = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    # the flagged plan really does join on a LONG key
-    assert dict(hashed.select("id_a").limit(0).dtypes)  # plan analyzes
     assert hashed.exceptAll(exact).count() == 0
     assert exact.exceptAll(hashed).count() == 0
 
