@@ -52,18 +52,8 @@ def shingle_table(
     text_col: str,
     n: int = 3,
     max_df: int | None = None,
-    hash_keys: bool = False,
 ) -> DataFrame:
     """Exploded distinct word-n-gram shingles: (id, shingle).
-
-    ``hash_keys`` (r16 scale flag, §2.3): project each shingle to its
-    ``xxhash64`` BEFORE the distinct, so the distinct's exchange — the
-    largest string shuffle in the similarity tier — carries 8-byte
-    longs instead of shingle strings. Explicit parameter, NOT the env
-    flag: a hashed table must never reach :func:`minhash_signatures`
-    (its md5-based universal-hash family is oracle-pinned over shingle
-    STRINGS). Only the similarity self-join callers pass
-    ``hash_shingle_keys_enabled()`` here.
 
     Built from the shuffle-free :func:`token_ngram_base` (arrays_zip
     over slice-shifted token arrays — native codegen expressions). NOT
@@ -77,10 +67,7 @@ def shingle_table(
     (stop-shingles): they contribute little discrimination but dominate
     self-join cost and create shuffle skew.
     """
-    sh = _all_shingles(df, id_col, text_col, n)
-    if hash_keys:
-        sh = sh.select("id", F.xxhash64("shingle").alias("shingle"))
-    sh = sh.distinct()
+    sh = _all_shingles(df, id_col, text_col, n).distinct()
     if max_df is not None:
         w2 = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
         sh = sh.join(F.broadcast(w2.filter(F.col("df_count") <= max_df)), "shingle").drop(
@@ -135,63 +122,10 @@ def _all_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     return ngrams_from_base(token_ngram_base(df, id_col, text_col, n), n)
 
 
-def hash_shingle_keys_enabled() -> bool:
-    """Scale flag (r16, guide §2.3 "narrower types"): when
-    ``SPARK_GRAFT_HASH_SHINGLE_KEYS`` is set (non-empty, not "0"), the
-    similarity tier's intersection self-joins carry ``xxhash64(shingle)``
-    (8 bytes) across the exchange instead of the shingle STRING (tens of
-    bytes) — measured ~2-4x fewer shuffle bytes on the join stages.
-
-    OFF by default, deliberately: a 64-bit hash collides around the
-    birthday bound (~2^32 distinct shingles — REAL at 100 TB corpus
-    scale), and a collision can inflate an intersection count, so the
-    oracle-gated default keeps exact string keys. A scale deployment
-    enabling this must pair it with :func:`shingle_hash_collision_audit`
-    over its corpus; zero collisions means results are provably
-    identical to the string-key plan.
-    """
-    import os
-
-    return os.environ.get("SPARK_GRAFT_HASH_SHINGLE_KEYS", "") not in ("", "0")
-
-
-def _narrow_shingle_keys(sh: DataFrame) -> DataFrame:
-    """Project shingle strings to 64-bit join keys when the flag is on
-    (see :func:`hash_shingle_keys_enabled`); identity otherwise. Applied
-    at the similarity-join boundary only — minhash signatures keep their
-    own md5-based hashing, so the flag never changes LSH candidates."""
-    if hash_shingle_keys_enabled():
-        return sh.select("id", F.xxhash64("shingle").alias("shingle"))
-    return sh
-
-
-def shingle_hash_collision_audit(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """One-row audit for the hashed-key flag: corpus-wide distinct
-    shingle strings vs distinct 64-bit hashes. ``collisions`` == 0
-    proves the flagged plan computes results identical to the exact
-    string-key plan on THIS corpus (two equal strings always hash
-    equal; with zero collisions two distinct strings never do, so every
-    equi-join/count over keys is preserved)."""
-    sh = shingle_table(df, id_col, text_col, n).select("shingle").distinct()
-    return sh.agg(
-        F.count(F.lit(1)).alias("n_distinct_shingles"),
-        F.countDistinct(F.xxhash64("shingle")).alias("n_distinct_hashes"),
-    ).select(
-        "n_distinct_shingles",
-        "n_distinct_hashes",
-        (F.col("n_distinct_shingles") - F.col("n_distinct_hashes")).alias(
-            "collisions"
-        ),
-    )
-
-
 def _jaccard_for_pairs(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard restricted to given candidate (id_a, id_b) pairs —
     the verify stage shared by the LSH tiers. Never touches non-candidate
     pairs: cost is O(candidates x shingles-per-doc)."""
-    sh = _narrow_shingle_keys(sh)  # flagged 8-byte join keys (§2.3)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.withColumnsRenamed({"id": "id_a", "shingle": "sh_a"})
     b = sh.withColumnsRenamed({"id": "b_id", "shingle": "sh_b"})
@@ -233,15 +167,7 @@ def ngram_jaccard_pairs(
     shingle table — this plan reads it three times (both self-join sides
     plus the per-doc sizes).
     """
-    if shingles is not None:
-        # shared (string) table from an LSH caller: narrow post-distinct
-        sh = _narrow_shingle_keys(shingles)
-    else:
-        # own table: hash BEFORE the distinct when flagged, so the
-        # distinct's exchange already carries 8-byte keys (§2.3)
-        sh = shingle_table(
-            df, id_col, text_col, n, hash_keys=hash_shingle_keys_enabled()
-        )
+    sh = shingles if shingles is not None else shingle_table(df, id_col, text_col, n)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")

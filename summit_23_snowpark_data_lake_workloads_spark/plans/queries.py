@@ -5,6 +5,8 @@ Each query is registered with ``@query(name, oracle=...)``:
   with the DataFrame / Spark SQL API (Catalyst owns the physical plan);
 - ``oracle`` is the equivalent ANSI SQL that DuckDB runs on the same
   parquet tables for the differential-correctness gate.
+Lifecycle audits over a throwaway table or index register with
+``@audit`` instead, which owns their scratch directory.
 
 Determinism rules (both engines must agree bit-for-bit after the driver's
 order-insensitive hash):
@@ -23,6 +25,9 @@ aggregation, and no query collects to the driver.
 
 from __future__ import annotations
 
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +49,29 @@ def query(name: str, oracle: str | None = None, headline: bool = False):
         if headline:
             HEADLINE.append(name)
         return fn
+
+    return deco
+
+
+def audit(name: str, oracle: str | None = None):
+    """``@query`` for a lifecycle audit: a query that builds a throwaway
+    table, index or stream, runs its commits and time travel, and returns
+    facts the oracle recomputes. The body takes ``(spark, sf_dir, tmp)``
+    and may return a lazy plan over files under ``tmp``. The registered
+    ``(spark, sf_dir)`` callable owns ``tmp``: it pins the body's result
+    with ``localCheckpoint(eager=True)``, then deletes the directory, so
+    the caller never holds lineage into files that are gone."""
+
+    def deco(body: Callable[[SparkSession, str, str], DataFrame]):
+        @functools.wraps(body)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tmp = tempfile.mkdtemp(prefix=f"{name}_")
+            try:
+                return body(spark, sf_dir, tmp).localCheckpoint(eager=True)
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+
+        return query(name, oracle)(run)
 
     return deco
 

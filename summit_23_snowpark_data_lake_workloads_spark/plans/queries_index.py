@@ -20,10 +20,8 @@ from constant payloads to real testdata):
   folding, version resolution, frozen-codebook encoding, or banded
   probe generation breaks the hash.
 
-The result DataFrame is ``localCheckpoint(eager=True)``-ed so the temp
-directory can be deleted before returning — the caller gets a bounded
-materialized result (hundreds of rows) with no lineage into files that
-no longer exist. Reference analog: versioned permanent vs transient
+Each is registered with ``queries.audit``, which owns the temp
+directory and pins the result (hundreds of rows). Reference analog: versioned permanent vs transient
 table tiers in the reference's medallion layout
 (``3B2_load_pdf_to_text.sql:1``, ``1_env_setup.sql:7-14``).
 """
@@ -32,12 +30,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _t, query
+from .queries import _t, audit
 from .queries_ml import _DUCK_HASH
 
 #: DuckDB mirror of ``operators.dedup.minhash_signatures`` over the
@@ -96,8 +93,8 @@ def _minhash_probe_oracle() -> str:
     return f"WITH {_SIG_CTE} " + " UNION ALL ".join(parts)
 
 
-@query("minhash_index_probe_audit", oracle=_minhash_probe_oracle())
-def minhash_index_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("minhash_index_probe_audit", oracle=_minhash_probe_oracle())
+def minhash_index_probe_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The persisted-MinHash-index lifecycle under the driver gate:
     build the signature index from the base corpus (doc_id%4 in (0,1)),
     APPEND a second batch (doc_id%4 = 2) under an exactly-once txn
@@ -123,25 +120,21 @@ def minhash_index_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") % 4 < 2)
     second = docs.filter(F.col("doc_id") % 4 == 2)
     batch = docs.filter(F.col("doc_id") % 4 == 3)
-    tmp = tempfile.mkdtemp(prefix="mh_index_audit_")
-    try:
-        table = build_minhash_index(spark, base, tmp)
-        extend_minhash_index(
-            table, second, txn={"app_id": "gate_audit", "batch_id": 1}
+    table = build_minhash_index(spark, base, tmp)
+    extend_minhash_index(
+        table, second, txn={"app_id": "gate_audit", "batch_id": 1}
+    )
+    out = None
+    for v in (1, 2):
+        r = probe_minhash_index(table, batch, version=v).select(
+            F.lit(v).alias("idx_version"),
+            "batch_id",
+            "corpus_id",
+            "n_match",
+            "est_jaccard",
         )
-        out = None
-        for v in (1, 2):
-            r = probe_minhash_index(table, batch, version=v).select(
-                F.lit(v).alias("idx_version"),
-                "batch_id",
-                "corpus_id",
-                "n_match",
-                "est_jaccard",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _pq_probe_oracle() -> str:
@@ -193,8 +186,8 @@ def _pq_probe_oracle() -> str:
     )
 
 
-@query("pq_index_probe_audit", oracle=_pq_probe_oracle())
-def pq_index_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("pq_index_probe_audit", oracle=_pq_probe_oracle())
+def pq_index_probe_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The persisted-PQ-index lifecycle under the driver gate: build
     codebook + code tables from the base corpus (vec_id%4 in (0,1)),
     APPEND a second batch's codes (vec_id%4 = 2) encoded against the
@@ -222,25 +215,21 @@ def pq_index_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(
         (F.col("vec_id") % 4 == 3) & (F.col("vec_id") < 80)
     )
-    tmp = tempfile.mkdtemp(prefix="pq_index_audit_")
-    try:
-        idx = build_pq_index(spark, base, tmp, train_iters=0)
-        extend_pq_index(
-            idx, second, txn={"app_id": "gate_audit", "batch_id": 1}
+    idx = build_pq_index(spark, base, tmp, train_iters=0)
+    extend_pq_index(
+        idx, second, txn={"app_id": "gate_audit", "batch_id": 1}
+    )
+    out = None
+    for v in (1, 2):
+        r = probe_pq_index(idx, queries_df, topk=5, version=v).select(
+            F.lit(v).alias("idx_version"),
+            "query_id",
+            "neighbor_id",
+            "adc_d2",
+            "rk",
         )
-        out = None
-        for v in (1, 2):
-            r = probe_pq_index(idx, queries_df, topk=5, version=v).select(
-                F.lit(v).alias("idx_version"),
-                "query_id",
-                "neighbor_id",
-                "adc_d2",
-                "rk",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _ivf_probe_oracle() -> str:
@@ -309,8 +298,8 @@ def _ivf_probe_oracle() -> str:
     )
 
 
-@query("ivf_index_probe_audit", oracle=_ivf_probe_oracle())
-def ivf_index_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("ivf_index_probe_audit", oracle=_ivf_probe_oracle())
+def ivf_index_probe_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The persisted-IVF-index lifecycle under the driver gate
     (completing the index family: MinHash text near-dup, PQ compressed
     distance, IVF cell-probed search): build centroid + inverted-file
@@ -340,33 +329,29 @@ def ivf_index_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(
         (F.col("vec_id") % 4 == 3) & (F.col("vec_id") < 80)
     )
-    tmp = tempfile.mkdtemp(prefix="ivf_index_audit_")
-    try:
-        idx = build_ivf_index(
-            spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    idx = build_ivf_index(
+        spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    )
+    extend_ivf_index(
+        idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
+    )
+    out = None
+    for v in (1, 2):
+        r = probe_ivf_index(
+            idx, emb, queries_df, k=5, n_probe=2, version=v
+        ).select(
+            F.lit(v).alias("idx_version"),
+            "query_id",
+            "neighbor_id",
+            "cos_sim",
+            "rk",
         )
-        extend_ivf_index(
-            idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
-        )
-        out = None
-        for v in (1, 2):
-            r = probe_ivf_index(
-                idx, emb, queries_df, k=5, n_probe=2, version=v
-            ).select(
-                F.lit(v).alias("idx_version"),
-                "query_id",
-                "neighbor_id",
-                "cos_sim",
-                "rk",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
-@query("ivf_index_compaction_audit", oracle=_ivf_probe_oracle())
-def ivf_index_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("ivf_index_compaction_audit", oracle=_ivf_probe_oracle())
+def ivf_index_compaction_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Compaction invisibility under the hash gate: the exact
     ``ivf_index_probe_audit`` lifecycle with a ``compact_ivf_index``
     between the append and the probes — version 1 is still the
@@ -394,32 +379,28 @@ def ivf_index_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(
         (F.col("vec_id") % 4 == 3) & (F.col("vec_id") < 80)
     )
-    tmp = tempfile.mkdtemp(prefix="ivf_compact_audit_")
-    try:
-        idx = build_ivf_index(
-            spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    idx = build_ivf_index(
+        spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    )
+    extend_ivf_index(
+        idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
+    )
+    compact_ivf_index(idx, target_files=1)
+    out = None
+    # label 1 = time travel past BOTH the compact and the append;
+    # label 2 = the live post-compaction index (version=None)
+    for label, v in ((1, 1), (2, None)):
+        r = probe_ivf_index(
+            idx, emb, queries_df, k=5, n_probe=2, version=v
+        ).select(
+            F.lit(label).alias("idx_version"),
+            "query_id",
+            "neighbor_id",
+            "cos_sim",
+            "rk",
         )
-        extend_ivf_index(
-            idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
-        )
-        compact_ivf_index(idx, target_files=1)
-        out = None
-        # label 1 = time travel past BOTH the compact and the append;
-        # label 2 = the live post-compaction index (version=None)
-        for label, v in ((1, 1), (2, None)):
-            r = probe_ivf_index(
-                idx, emb, queries_df, k=5, n_probe=2, version=v
-            ).select(
-                F.lit(label).alias("idx_version"),
-                "query_id",
-                "neighbor_id",
-                "cos_sim",
-                "rk",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _ivf_drift_oracle() -> str:
@@ -468,8 +449,8 @@ def _ivf_drift_oracle() -> str:
     """
 
 
-@query("ivf_cell_drift_profile", oracle=_ivf_drift_oracle())
-def ivf_cell_drift_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("ivf_cell_drift_profile", oracle=_ivf_drift_oracle())
+def ivf_cell_drift_profile(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The retrain/drift signal a 100 TB IVF operator watches: after a
     build (vec_id%4 in (0,1)) + frozen-centroid append (vec_id%4 = 2),
     profile the inverted file per cell — base vs appended membership,
@@ -490,49 +471,45 @@ def ivf_cell_drift_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 4 < 2)
     second = emb.filter(F.col("vec_id") % 4 == 2)
-    tmp = tempfile.mkdtemp(prefix="ivf_drift_audit_")
-    try:
-        idx = build_ivf_index(
-            spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    idx = build_ivf_index(
+        spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    )
+    extend_ivf_index(
+        idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
+    )
+    base_ct = (
+        idx.cells.read(version=1)
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n_base"))
+    )
+    cur_ct = (
+        idx.cells.read()
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n_total"))
+    )
+    out = (
+        cur_ct.join(base_ct, "cell", "left")
+        .select(
+            "cell",
+            F.coalesce("n_base", F.lit(0)).alias("n_base"),
+            (F.col("n_total") - F.coalesce("n_base", F.lit(0))).alias(
+                "n_appended"
+            ),
+            "n_total",
         )
-        extend_ivf_index(
-            idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
+        .withColumn(
+            "appended_frac",
+            F.round(F.col("n_appended") / F.col("n_total"), 6),
         )
-        base_ct = (
-            idx.cells.read(version=1)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n_base"))
+        .withColumn(
+            "load_ratio",
+            F.round(
+                F.col("n_total") / F.avg("n_total").over(W.partitionBy()),
+                6,
+            ),
         )
-        cur_ct = (
-            idx.cells.read()
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n_total"))
-        )
-        out = (
-            cur_ct.join(base_ct, "cell", "left")
-            .select(
-                "cell",
-                F.coalesce("n_base", F.lit(0)).alias("n_base"),
-                (F.col("n_total") - F.coalesce("n_base", F.lit(0))).alias(
-                    "n_appended"
-                ),
-                "n_total",
-            )
-            .withColumn(
-                "appended_frac",
-                F.round(F.col("n_appended") / F.col("n_total"), 6),
-            )
-            .withColumn(
-                "load_ratio",
-                F.round(
-                    F.col("n_total") / F.avg("n_total").over(W.partitionBy()),
-                    6,
-                ),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    return out
 
 
 def _ivfpq_probe_oracle() -> str:
@@ -608,8 +585,8 @@ def _ivfpq_probe_oracle() -> str:
     )
 
 
-@query("ivfpq_probe_audit", oracle=_ivfpq_probe_oracle())
-def ivfpq_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("ivfpq_probe_audit", oracle=_ivfpq_probe_oracle())
+def ivfpq_probe_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The FAISS-architecture composition under the driver gate: IVF
     cell pruning + PQ asymmetric-distance ranking from four persisted
     lakehouse tables (centroids, inverted file, codebook, codes) —
@@ -633,29 +610,25 @@ def ivfpq_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(
         (F.col("vec_id") % 4 == 3) & (F.col("vec_id") < 80)
     )
-    tmp = tempfile.mkdtemp(prefix="ivfpq_audit_")
-    try:
-        ivf, pq = build_ivfpq_index(
-            spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    ivf, pq = build_ivfpq_index(
+        spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    )
+    extend_ivfpq_index(
+        ivf, pq, second, txn={"app_id": "gate_audit", "batch_id": 1}
+    )
+    out = None
+    for v in (1, 2):
+        r = probe_ivfpq(
+            ivf, pq, queries_df, topk=5, n_probe=2, version=v
+        ).select(
+            F.lit(v).alias("idx_version"),
+            "query_id",
+            "neighbor_id",
+            "adc_d2",
+            "rk",
         )
-        extend_ivfpq_index(
-            ivf, pq, second, txn={"app_id": "gate_audit", "batch_id": 1}
-        )
-        out = None
-        for v in (1, 2):
-            r = probe_ivfpq(
-                ivf, pq, queries_df, topk=5, n_probe=2, version=v
-            ).select(
-                F.lit(v).alias("idx_version"),
-                "query_id",
-                "neighbor_id",
-                "adc_d2",
-                "rk",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _bpe_artifact_oracle() -> str:
@@ -664,8 +637,8 @@ def _bpe_artifact_oracle() -> str:
     return _bpe_encode_oracle(6, doc_pred="doc_id % 4 = 3")
 
 
-@query("bpe_artifact_encode_audit", oracle=_bpe_artifact_oracle())
-def bpe_artifact_encode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("bpe_artifact_encode_audit", oracle=_bpe_artifact_oracle())
+def bpe_artifact_encode_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The persisted-tokenizer lifecycle under the driver gate: train
     the 6-merge BPE on the FULL corpus, commit the merge table as a
     lakehouse artifact (``store_bpe_model``), then encode an arriving
@@ -690,23 +663,19 @@ def bpe_artifact_encode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 4 == 3)
-    tmp = tempfile.mkdtemp(prefix="bpe_artifact_audit_")
-    try:
-        # training goes through the session memo (shared with the other
-        # BPE queries — one corpus pass per session), committed as the
-        # artifact the one-shot trainer would produce
-        table = store_bpe_model(
-            spark,
-            docs,
-            tmp,
-            merges=spark.createDataFrame(
-                _bpe_merge_rows(spark, sf_dir, k=6), _BPE_MERGE_SCHEMA
-            ),
-        )
-        merges = load_bpe_merges(table)
-        return trained_token_counts(batch, merges).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # training goes through the session memo (shared with the other
+    # BPE queries — one corpus pass per session), committed as the
+    # artifact the one-shot trainer would produce
+    table = store_bpe_model(
+        spark,
+        docs,
+        tmp,
+        merges=spark.createDataFrame(
+            _bpe_merge_rows(spark, sf_dir, k=6), _BPE_MERGE_SCHEMA
+        ),
+    )
+    merges = load_bpe_merges(table)
+    return trained_token_counts(batch, merges)
 
 
 def _ivf_rebuild_oracle() -> str:
@@ -786,8 +755,8 @@ def _ivf_rebuild_oracle() -> str:
     )
 
 
-@query("ivf_rebuild_audit", oracle=_ivf_rebuild_oracle())
-def ivf_rebuild_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("ivf_rebuild_audit", oracle=_ivf_rebuild_oracle())
+def ivf_rebuild_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Retrain-as-rebuild under the driver gate: build from the base
     corpus, append a batch against the FROZEN original centroids, then
     ``rebuild_ivf_index`` over the full current corpus — the seed rule
@@ -818,33 +787,29 @@ def ivf_rebuild_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(
         (F.col("vec_id") % 4 == 3) & (F.col("vec_id") < 80)
     )
-    tmp = tempfile.mkdtemp(prefix="ivf_rebuild_audit_")
-    try:
-        idx = build_ivf_index(
-            spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    idx = build_ivf_index(
+        spark, base, tmp, n_cells=16, n_assign=2, train_iters=0
+    )
+    extend_ivf_index(
+        idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
+    )
+    rebuild_ivf_index(idx, corpus, n_cells=16, n_assign=2)
+    out = None
+    for label, kw in (
+        (1, {"version": 2, "centroid_version": 1}),
+        (2, {}),
+    ):
+        r = probe_ivf_index(
+            idx, emb, queries_df, k=5, n_probe=2, **kw
+        ).select(
+            F.lit(label).alias("idx_version"),
+            "query_id",
+            "neighbor_id",
+            "cos_sim",
+            "rk",
         )
-        extend_ivf_index(
-            idx, second, n_assign=2, txn={"app_id": "gate_audit", "batch_id": 1}
-        )
-        rebuild_ivf_index(idx, corpus, n_cells=16, n_assign=2)
-        out = None
-        for label, kw in (
-            (1, {"version": 2, "centroid_version": 1}),
-            (2, {}),
-        ):
-            r = probe_ivf_index(
-                idx, emb, queries_df, k=5, n_probe=2, **kw
-            ).select(
-                F.lit(label).alias("idx_version"),
-                "query_id",
-                "neighbor_id",
-                "cos_sim",
-                "rk",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _schema_evolution_oracle() -> str:
@@ -865,9 +830,9 @@ def _schema_evolution_oracle() -> str:
     """
 
 
-@query("lakehouse_schema_evolution_audit", oracle=_schema_evolution_oracle())
+@audit("lakehouse_schema_evolution_audit", oracle=_schema_evolution_oracle())
 def lakehouse_schema_evolution_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Schema evolution under the driver gate: CREATE the table with
     (doc_id, source) from the even documents, APPEND the odd documents
@@ -886,43 +851,39 @@ def lakehouse_schema_evolution_audit(
     from ..sources.lakehouse import SnapshotTable
 
     docs = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="lh_schema_audit_")
-    try:
-        table = SnapshotTable(spark, tmp)
-        table.create(
-            docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source")
-        )
-        table.append(
-            docs.filter(F.col("doc_id") % 2 == 1).select(
-                "doc_id", "source", "n_chars"
-            ),
-            schema_evolution=True,
-        )
-        out = None
-        for v in (1, 2):
-            fields = table.table_schema(version=v).fieldNames()
-            r = table.read(version=v)
-            if "n_chars" in fields:
-                agg = r.agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.count_if(F.col("n_chars").isNull()).alias(
-                        "n_null_extra"
-                    ),
-                    F.sum("n_chars").alias("sum_extra"),
-                )
-            else:
-                agg = r.agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.lit(-1).cast("long").alias("n_null_extra"),
-                    F.lit(0).cast("long").alias("sum_extra"),
-                )
-            row = agg.select(
-                F.lit(v).alias("version"), "n_rows", "n_null_extra", "sum_extra"
+    table = SnapshotTable(spark, tmp)
+    table.create(
+        docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source")
+    )
+    table.append(
+        docs.filter(F.col("doc_id") % 2 == 1).select(
+            "doc_id", "source", "n_chars"
+        ),
+        schema_evolution=True,
+    )
+    out = None
+    for v in (1, 2):
+        fields = table.table_schema(version=v).fieldNames()
+        r = table.read(version=v)
+        if "n_chars" in fields:
+            agg = r.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count_if(F.col("n_chars").isNull()).alias(
+                    "n_null_extra"
+                ),
+                F.sum("n_chars").alias("sum_extra"),
             )
-            out = row if out is None else out.unionByName(row)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            agg = r.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.lit(-1).cast("long").alias("n_null_extra"),
+                F.lit(0).cast("long").alias("sum_extra"),
+            )
+        row = agg.select(
+            F.lit(v).alias("version"), "n_rows", "n_null_extra", "sum_extra"
+        )
+        out = row if out is None else out.unionByName(row)
+    return out
 
 
 def _lakehouse_audit_oracle() -> str:
@@ -957,8 +918,10 @@ def _lakehouse_audit_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@query("lakehouse_time_travel_audit", oracle=_lakehouse_audit_oracle())
-def lakehouse_time_travel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_time_travel_audit", oracle=_lakehouse_audit_oracle())
+def lakehouse_time_travel_audit(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """The lakehouse table format under the driver gate: CREATE a table
     from documents with doc_id%3 = 0, APPEND doc_id%3 = 1 (txn-stamped),
     row-level DELETE doc_id%7 = 0 (copy-on-write file rewrite), then
@@ -978,42 +941,38 @@ def lakehouse_time_travel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="lakehouse_audit_")
-    try:
-        table = SnapshotTable(spark, tmp)
-        table.create(docs.filter(F.col("doc_id") % 3 == 0))
-        table.append(
-            docs.filter(F.col("doc_id") % 3 == 1),
-            txn={"app_id": "gate_audit", "batch_id": 1},
+    table = SnapshotTable(spark, tmp)
+    table.create(docs.filter(F.col("doc_id") % 3 == 0))
+    table.append(
+        docs.filter(F.col("doc_id") % 3 == 1),
+        txn={"app_id": "gate_audit", "batch_id": 1},
+    )
+    table.delete(F.col("doc_id") % 7 == 0)
+    table.merge(
+        docs.filter(F.col("doc_id") % 5 == 0).withColumn(
+            "source", F.lit("merged")
+        ),
+        key_cols=["doc_id"],
+        txn={"app_id": "gate_audit", "batch_id": 2},
+    )
+    ops = {s.version: s.operation for s in table.history()}
+    out = None
+    for v in sorted(ops):
+        r = table.read(version=v).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count_distinct("source").alias("n_sources"),
+            F.sum("doc_id").alias("sum_doc_id"),
+            F.sum("n_chars").alias("sum_n_chars"),
+        ).select(
+            F.lit(v).alias("version"),
+            F.lit(ops[v]).alias("operation"),
+            "n_rows",
+            "n_sources",
+            "sum_doc_id",
+            "sum_n_chars",
         )
-        table.delete(F.col("doc_id") % 7 == 0)
-        table.merge(
-            docs.filter(F.col("doc_id") % 5 == 0).withColumn(
-                "source", F.lit("merged")
-            ),
-            key_cols=["doc_id"],
-            txn={"app_id": "gate_audit", "batch_id": 2},
-        )
-        ops = {s.version: s.operation for s in table.history()}
-        out = None
-        for v in sorted(ops):
-            r = table.read(version=v).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count_distinct("source").alias("n_sources"),
-                F.sum("doc_id").alias("sum_doc_id"),
-                F.sum("n_chars").alias("sum_n_chars"),
-            ).select(
-                F.lit(v).alias("version"),
-                F.lit(ops[v]).alias("operation"),
-                "n_rows",
-                "n_sources",
-                "sum_doc_id",
-                "sum_n_chars",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _partition_audit_oracle() -> str:
@@ -1047,8 +1006,8 @@ def _partition_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_partition_audit", oracle=_partition_audit_oracle())
-def lakehouse_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_partition_audit", oracle=_partition_audit_oracle())
+def lakehouse_partition_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Partitioned tables under the driver gate: CREATE a table
     partitioned by ``bucket = doc_id % 5``, dynamic-partition-OVERWRITE
     bucket 2 with its even-doc_id rows at doubled ``n_chars``
@@ -1075,49 +1034,45 @@ def lakehouse_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars", (F.col("doc_id") % 5).alias("bucket"))
     )
-    tmp = tempfile.mkdtemp(prefix="lh_partition_audit_")
-    try:
-        table = SnapshotTable(spark, tmp, partition_by=["bucket"])
-        # force the SHARDED checkpoint layout at gate scale (production
-        # threshold is 64 files — sf0.01 stays under it), so the
-        # shard-index write, per-shard pruned resolution, and delta
-        # folding over shards are all inside the hash gate, not just
-        # pytest (the hot-shingle low-cap trick)
-        table.shard_checkpoint_files = 4
-        table.create(docs)
-        table.overwrite_partitions(
-            docs.filter((F.col("bucket") == 2) & (F.col("doc_id") % 2 == 0))
-            .withColumn("n_chars", F.col("n_chars") * 2)
-        )
-        table.drop_partitions([("bucket", "=", 0)])
-        out = None
-        for v in (1, 2, 3):
-            for p in table.partitions(version=v):
-                b = int(p["bucket"])
-                # metadata-only COUNT(*) — gated against the oracle's
-                # real count(*): the _nrows bookkeeping must survive
-                # create/overwrite/drop COW exactly
-                n_meta = table.row_count(
-                    version=v, partition_where=[("bucket", "=", b)]
-                )
-                r = table.read(
-                    version=v, partition_where=[("bucket", "=", b)]
-                ).agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("doc_id").alias("sum_doc_id"),
-                    F.sum("n_chars").alias("sum_n_chars"),
-                ).select(
-                    F.lit(v).cast("long").alias("version"),
-                    F.lit(b).cast("long").alias("bucket"),
-                    "n_rows",
-                    F.lit(n_meta).cast("long").alias("n_meta"),
-                    "sum_doc_id",
-                    "sum_n_chars",
-                )
-                out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    table = SnapshotTable(spark, tmp, partition_by=["bucket"])
+    # force the SHARDED checkpoint layout at gate scale (production
+    # threshold is 64 files — sf0.01 stays under it), so the
+    # shard-index write, per-shard pruned resolution, and delta
+    # folding over shards are all inside the hash gate, not just
+    # pytest (the hot-shingle low-cap trick)
+    table.shard_checkpoint_files = 4
+    table.create(docs)
+    table.overwrite_partitions(
+        docs.filter((F.col("bucket") == 2) & (F.col("doc_id") % 2 == 0))
+        .withColumn("n_chars", F.col("n_chars") * 2)
+    )
+    table.drop_partitions([("bucket", "=", 0)])
+    out = None
+    for v in (1, 2, 3):
+        for p in table.partitions(version=v):
+            b = int(p["bucket"])
+            # metadata-only COUNT(*) — gated against the oracle's
+            # real count(*): the _nrows bookkeeping must survive
+            # create/overwrite/drop COW exactly
+            n_meta = table.row_count(
+                version=v, partition_where=[("bucket", "=", b)]
+            )
+            r = table.read(
+                version=v, partition_where=[("bucket", "=", b)]
+            ).agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum("doc_id").alias("sum_doc_id"),
+                F.sum("n_chars").alias("sum_n_chars"),
+            ).select(
+                F.lit(v).cast("long").alias("version"),
+                F.lit(b).cast("long").alias("bucket"),
+                "n_rows",
+                F.lit(n_meta).cast("long").alias("n_meta"),
+                "sum_doc_id",
+                "sum_n_chars",
+            )
+            out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _bucket_audit_oracle() -> str:
@@ -1153,8 +1108,8 @@ def _bucket_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_bucket_audit", oracle=_bucket_audit_oracle())
-def lakehouse_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_bucket_audit", oracle=_bucket_audit_oracle())
+def lakehouse_bucket_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Hash-bucketed table layout under the driver gate: CREATE a
     ``BucketedTable`` (bucket_col=doc_id, 8 buckets) from doc_id%3=0,
     APPEND doc_id%3=1, MERGE an upsert batch (doc_id%5=2 →
@@ -1183,62 +1138,58 @@ def lakehouse_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import BucketedTable
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="lakehouse_bucket_audit_")
-    try:
-        table = BucketedTable(
-            spark, os.path.join(tmp, "tbl"), bucket_col="doc_id", n_buckets=8
+    table = BucketedTable(
+        spark, os.path.join(tmp, "tbl"), bucket_col="doc_id", n_buckets=8
+    )
+    table.create(docs.filter(F.col("doc_id") % 3 == 0))
+    table.append(
+        docs.filter(F.col("doc_id") % 3 == 1),
+        txn={"app_id": "bucket_audit", "batch_id": 1},
+    )
+    table.merge(
+        docs.filter(F.col("doc_id") % 5 == 2)
+        .withColumn("source", F.lit("merged"))
+        .withColumn("n_chars", F.col("n_chars") * 10),
+        key_cols=["doc_id"],
+        txn={"app_id": "bucket_audit", "batch_id": 2},
+    )
+    meta = spark.createDataFrame(
+        [
+            (b, table.row_count(partition_where=[("_bucket", "=", b)]))
+            for b in range(table.n_buckets)
+        ],
+        "key long, n_meta long",
+    )
+    per_bucket = (
+        table.read()
+        .groupBy(F.col("_bucket").cast("long").alias("key"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("n_chars").alias("sum_n_chars"),
         )
-        table.create(docs.filter(F.col("doc_id") % 3 == 0))
-        table.append(
-            docs.filter(F.col("doc_id") % 3 == 1),
-            txn={"app_id": "bucket_audit", "batch_id": 1},
+        .join(meta, "key")
+        .select(
+            F.lit("bucket").alias("kind"),
+            "key",
+            "n_rows",
+            "n_meta",
+            "sum_n_chars",
         )
-        table.merge(
-            docs.filter(F.col("doc_id") % 5 == 2)
-            .withColumn("source", F.lit("merged"))
-            .withColumn("n_chars", F.col("n_chars") * 10),
-            key_cols=["doc_id"],
-            txn={"app_id": "bucket_audit", "batch_id": 2},
-        )
-        meta = spark.createDataFrame(
-            [
-                (b, table.row_count(partition_where=[("_bucket", "=", b)]))
-                for b in range(table.n_buckets)
-            ],
-            "key long, n_meta long",
-        )
-        per_bucket = (
-            table.read()
-            .groupBy(F.col("_bucket").cast("long").alias("key"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("n_chars").alias("sum_n_chars"),
-            )
-            .join(meta, "key")
-            .select(
-                F.lit("bucket").alias("kind"),
-                "key",
-                "n_rows",
-                "n_meta",
-                "sum_n_chars",
-            )
-        )
-        probe_ids = [
-            r.doc_id
-            for r in docs.filter(F.col("doc_id") % 7 == 3)
-            .select("doc_id")
-            .collect()
-        ]
-        found = table.lookup(probe_ids).select(
-            F.lit("lookup").alias("kind"),
-            F.col("doc_id").alias("key"),
-            F.lit(1).cast("long").alias("n_rows"),
-            F.lit(-1).cast("long").alias("n_meta"),
-            F.col("n_chars").cast("long").alias("sum_n_chars"),
-        )
-        return per_bucket.unionByName(found).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    probe_ids = [
+        r.doc_id
+        for r in docs.filter(F.col("doc_id") % 7 == 3)
+        .select("doc_id")
+        .collect()
+    ]
+    found = table.lookup(probe_ids).select(
+        F.lit("lookup").alias("kind"),
+        F.col("doc_id").alias("key"),
+        F.lit(1).cast("long").alias("n_rows"),
+        F.lit(-1).cast("long").alias("n_meta"),
+        F.col("n_chars").cast("long").alias("sum_n_chars"),
+    )
+    return per_bucket.unionByName(found)
 
 
 def _partition_transform_oracle() -> str:
@@ -1295,12 +1246,12 @@ def _partition_transform_oracle() -> str:
     """
 
 
-@query(
+@audit(
     "lakehouse_partition_transform_audit",
     oracle=_partition_transform_oracle(),
 )
 def lakehouse_partition_transform_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """HIDDEN (transform) partitioning under the driver gate — the
     canonical 100 TB fact layout: events partitioned by ``day(ts)``
@@ -1335,68 +1286,64 @@ def lakehouse_partition_transform_audit(
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_transform_audit_")
-    try:
-        table = SnapshotTable(spark, tmp, partition_by=["day(ts)"])
-        table.shard_checkpoint_files = 8  # force the sharded-manifest path
-        table.create(ev)
-        late = (
-            ev.filter(F.date_format("ts", "yyyy-MM-dd") == "2024-01-05")
-            .select(
-                (F.col("event_id") + F.lit(10000000)).alias("event_id"),
-                (F.col("ts") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-                "value",
-            )
+    table = SnapshotTable(spark, tmp, partition_by=["day(ts)"])
+    table.shard_checkpoint_files = 8  # force the sharded-manifest path
+    table.create(ev)
+    late = (
+        ev.filter(F.date_format("ts", "yyyy-MM-dd") == "2024-01-05")
+        .select(
+            (F.col("event_id") + F.lit(10000000)).alias("event_id"),
+            (F.col("ts") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
+            "value",
         )
-        table.append(late, txn={"app_id": "transform_audit", "batch_id": 1})
-        table.overwrite_partitions(
-            ev.filter(
-                (F.date_format("ts", "yyyy-MM-dd") == "2024-01-10")
-                & (F.col("event_id") % 2 == 0)
-            ).withColumn("value", F.col("value") * 2)
-        )
-        table.drop_partitions([("ts_day", "<", "2024-01-04")])
+    )
+    table.append(late, txn={"app_id": "transform_audit", "batch_id": 1})
+    table.overwrite_partitions(
+        ev.filter(
+            (F.date_format("ts", "yyyy-MM-dd") == "2024-01-10")
+            & (F.col("event_id") % 2 == 0)
+        ).withColumn("value", F.col("value") * 2)
+    )
+    table.drop_partitions([("ts_day", "<", "2024-01-04")])
 
-        rng_lit = "2024-01-27 12:00:00"
-        probes = [
-            ("day_eq", [("ts_day", "=", "2024-01-10")], None),
-            ("early_day", [("ts_day", "=", "2024-01-02")], None),
-            ("late_day", [("ts_day", "=", "2024-02-04")], None),
-            ("ts_range", [("ts", ">=", rng_lit)], F.col("ts") >= rng_lit),
-        ]
-        out = None
-        for v in (1, 2, 3, 4):
-            for name, where, row_filter in probes:
-                df = table.read(version=v, partition_where=where)
-                if row_filter is not None:
-                    df = df.filter(row_filter)
-                    n_meta = -1
-                else:
-                    n_meta = table.row_count(version=v, partition_where=where)
-                r = df.agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.coalesce(F.sum("event_id"), F.lit(0))
-                    .cast("long")
-                    .alias("sum_event_id"),
-                    F.round(
-                        F.coalesce(
-                            F.sum(F.col("value").cast("decimal(28,9)")),
-                            F.lit(0),
-                        ).cast("double"),
-                        4,
-                    ).alias("sum_value"),
-                ).select(
-                    F.lit(v).cast("long").alias("version"),
-                    F.lit(name).alias("probe"),
-                    "n_rows",
-                    F.lit(n_meta).cast("long").alias("n_meta"),
-                    "sum_event_id",
-                    "sum_value",
-                )
-                out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    rng_lit = "2024-01-27 12:00:00"
+    probes = [
+        ("day_eq", [("ts_day", "=", "2024-01-10")], None),
+        ("early_day", [("ts_day", "=", "2024-01-02")], None),
+        ("late_day", [("ts_day", "=", "2024-02-04")], None),
+        ("ts_range", [("ts", ">=", rng_lit)], F.col("ts") >= rng_lit),
+    ]
+    out = None
+    for v in (1, 2, 3, 4):
+        for name, where, row_filter in probes:
+            df = table.read(version=v, partition_where=where)
+            if row_filter is not None:
+                df = df.filter(row_filter)
+                n_meta = -1
+            else:
+                n_meta = table.row_count(version=v, partition_where=where)
+            r = df.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.coalesce(F.sum("event_id"), F.lit(0))
+                .cast("long")
+                .alias("sum_event_id"),
+                F.round(
+                    F.coalesce(
+                        F.sum(F.col("value").cast("decimal(28,9)")),
+                        F.lit(0),
+                    ).cast("double"),
+                    4,
+                ).alias("sum_value"),
+            ).select(
+                F.lit(v).cast("long").alias("version"),
+                F.lit(name).alias("probe"),
+                "n_rows",
+                F.lit(n_meta).cast("long").alias("n_meta"),
+                "sum_event_id",
+                "sum_value",
+            )
+            out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _vacuum_audit_oracle() -> str:
@@ -1430,8 +1377,8 @@ def _vacuum_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_vacuum_audit", oracle=_vacuum_audit_oracle())
-def lakehouse_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_vacuum_audit", oracle=_vacuum_audit_oracle())
+def lakehouse_vacuum_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The vacuum/retention lifecycle under the driver gate — the one
     lakehouse surface that was pytest-only, and the site of a real r8
     bug (ce03c95: vacuum silently disarming streaming replay
@@ -1470,70 +1417,66 @@ def lakehouse_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", (F.col("doc_id") % 4).alias("bucket")
     )
-    tmp = tempfile.mkdtemp(prefix="lh_vacuum_audit_")
-    try:
-        table = SnapshotTable(spark, tmp, partition_by=["bucket"])
-        table.create(docs.filter(F.col("doc_id") % 3 == 0))
-        table.append(
-            docs.filter(F.col("doc_id") % 3 == 1),
-            txn={"app_id": "vac_audit", "batch_id": 1},
-        )
-        table.drop_partitions([("bucket", "=", 0)])
-        table.compact(target_files=2)
-        orphan = _os.path.join(tmp, "data", "b-orphancrash", "part-0.parquet")
-        _os.makedirs(_os.path.dirname(orphan), exist_ok=True)
-        docs.limit(5).coalesce(1).toPandas().to_parquet(orphan)
-        # backdate past the in-flight grace: a crashed write is OLD by
-        # the time vacuum runs; a FRESH unreferenced file is treated as
-        # a possibly-in-flight commit and spared (r10 orphan grace)
-        _old = __import__("time").time() - 7200
-        _os.utime(orphan, (_old, _old))
-        table.vacuum(retain_last=2)
+    table = SnapshotTable(spark, tmp, partition_by=["bucket"])
+    table.create(docs.filter(F.col("doc_id") % 3 == 0))
+    table.append(
+        docs.filter(F.col("doc_id") % 3 == 1),
+        txn={"app_id": "vac_audit", "batch_id": 1},
+    )
+    table.drop_partitions([("bucket", "=", 0)])
+    table.compact(target_files=2)
+    orphan = _os.path.join(tmp, "data", "b-orphancrash", "part-0.parquet")
+    _os.makedirs(_os.path.dirname(orphan), exist_ok=True)
+    docs.limit(5).coalesce(1).toPandas().to_parquet(orphan)
+    # backdate past the in-flight grace: a crashed write is OLD by
+    # the time vacuum runs; a FRESH unreferenced file is treated as
+    # a possibly-in-flight commit and spared (r10 orphan grace)
+    _old = __import__("time").time() - 7200
+    _os.utime(orphan, (_old, _old))
+    table.vacuum(retain_last=2)
 
-        expired_gone = 1
-        for v in (1, 2):
-            try:
-                table.read(version=v)
-                expired_gone = 0
-            except (LookupError, FileNotFoundError, ValueError):
-                pass
-        on_disk = set()
-        for root, _dirs, names in _os.walk(_os.path.join(tmp, "data")):
-            for n in names:
-                if n.endswith(".parquet"):
-                    on_disk.add(
-                        _os.path.normpath(
-                            _os.path.relpath(_os.path.join(root, n), tmp)
-                        )
+    expired_gone = 1
+    for v in (1, 2):
+        try:
+            table.read(version=v)
+            expired_gone = 0
+        except (LookupError, FileNotFoundError, ValueError):
+            pass
+    on_disk = set()
+    for root, _dirs, names in _os.walk(_os.path.join(tmp, "data")):
+        for n in names:
+            if n.endswith(".parquet"):
+                on_disk.add(
+                    _os.path.normpath(
+                        _os.path.relpath(_os.path.join(root, n), tmp)
                     )
-        retained = {
-            f for v in table._versions() for f in table._load(v).files
-        }
-        disk_ok = 1 if on_disk == retained else 0
-        orphan_ok = 0 if _os.path.exists(orphan) else 1
-        hwm_ok = 1 if table.last_committed_batch("vac_audit") == 1 else 0
+                )
+    retained = {
+        f for v in table._versions() for f in table._load(v).files
+    }
+    disk_ok = 1 if on_disk == retained else 0
+    orphan_ok = 0 if _os.path.exists(orphan) else 1
+    hwm_ok = 1 if table.last_committed_batch("vac_audit") == 1 else 0
 
-        vs = table._versions()
-        out = None
-        for label, v in (("v3_after_vacuum", vs[0]), ("v4_after_vacuum", vs[1])):
-            r = table.read(version=v).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-                F.sum("n_chars").cast("long").alias("sum_n_chars"),
-            ).select(F.lit(label).alias("probe"), "n_rows", "sum_doc_id", "sum_n_chars")
-            out = r if out is None else out.unionByName(r)
-        flags = spark.createDataFrame(
-            [
-                ("expired_gone", expired_gone, 0, 0),
-                ("disk_matches_manifests", disk_ok, 0, 0),
-                ("orphan_swept", orphan_ok, 0, 0),
-                ("replay_hwm_preserved", hwm_ok, 0, 0),
-            ],
-            "probe string, n_rows long, sum_doc_id long, sum_n_chars long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    vs = table._versions()
+    out = None
+    for label, v in (("v3_after_vacuum", vs[0]), ("v4_after_vacuum", vs[1])):
+        r = table.read(version=v).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+            F.sum("n_chars").cast("long").alias("sum_n_chars"),
+        ).select(F.lit(label).alias("probe"), "n_rows", "sum_doc_id", "sum_n_chars")
+        out = r if out is None else out.unionByName(r)
+    flags = spark.createDataFrame(
+        [
+            ("expired_gone", expired_gone, 0, 0),
+            ("disk_matches_manifests", disk_ok, 0, 0),
+            ("orphan_swept", orphan_ok, 0, 0),
+            ("replay_hwm_preserved", hwm_ok, 0, 0),
+        ],
+        "probe string, n_rows long, sum_doc_id long, sum_n_chars long",
+    )
+    return out.unionByName(flags)
 
 
 def _spec_evolution_oracle() -> str:
@@ -1585,12 +1528,12 @@ def _spec_evolution_oracle() -> str:
     """
 
 
-@query(
+@audit(
     "lakehouse_partition_spec_evolution_audit",
     oracle=_spec_evolution_oracle(),
 )
 def lakehouse_partition_spec_evolution_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Partition-SPEC evolution under the driver gate (Iceberg's
     evolve-without-rewrite): CREATE events partitioned by
@@ -1622,69 +1565,65 @@ def lakehouse_partition_spec_evolution_audit(
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    tmp = tempfile.mkdtemp(prefix="lh_spec_evo_audit_")
+    table = SnapshotTable(spark, tmp, partition_by=["event_type"])
+    table.create(ev)
+    table.evolve_partition_spec(["event_type", "day(ts)"])
+    late = ev.filter(
+        F.date_format("ts", "yyyy-MM-dd") == "2024-01-05"
+    ).select(
+        (F.col("event_id") + F.lit(10000000)).alias("event_id"),
+        (F.col("ts") + F.expr("INTERVAL 31 DAYS")).alias("ts"),
+        "event_type",
+    )
+    table.append(late)
+    refusal = 0
     try:
-        table = SnapshotTable(spark, tmp, partition_by=["event_type"])
-        table.create(ev)
-        table.evolve_partition_spec(["event_type", "day(ts)"])
-        late = ev.filter(
-            F.date_format("ts", "yyyy-MM-dd") == "2024-01-05"
-        ).select(
-            (F.col("event_id") + F.lit(10000000)).alias("event_id"),
-            (F.col("ts") + F.expr("INTERVAL 31 DAYS")).alias("ts"),
-            "event_type",
-        )
-        table.append(late)
-        refusal = 0
-        try:
-            table.drop_partitions([("ts_day", "<", "2024-01-04")])
-        except ValueError:
-            refusal = 1
-        table.compact(target_files=4)
         table.drop_partitions([("ts_day", "<", "2024-01-04")])
+    except ValueError:
+        refusal = 1
+    table.compact(target_files=4)
+    table.drop_partitions([("ts_day", "<", "2024-01-04")])
 
-        probes = [
-            ("type_eq", [("event_type", "=", "purchase")],
-             F.col("event_type") == "purchase", False),
-            ("day_eq", [("ts_day", "=", "2024-01-10")],
-             F.date_format("ts", "yyyy-MM-dd") == "2024-01-10", True),
-            ("late_day", [("ts_day", "=", "2024-02-05")],
-             F.date_format("ts", "yyyy-MM-dd") == "2024-02-05", True),
-        ]
-        out = None
-        for v in (1, 2, 3, 4, 5):
-            for name, where, row_filter, meta_able in probes:
-                n_meta = (
-                    table.row_count(version=v, partition_where=where)
-                    if meta_able and v >= 4
-                    else -1
+    probes = [
+        ("type_eq", [("event_type", "=", "purchase")],
+         F.col("event_type") == "purchase", False),
+        ("day_eq", [("ts_day", "=", "2024-01-10")],
+         F.date_format("ts", "yyyy-MM-dd") == "2024-01-10", True),
+        ("late_day", [("ts_day", "=", "2024-02-05")],
+         F.date_format("ts", "yyyy-MM-dd") == "2024-02-05", True),
+    ]
+    out = None
+    for v in (1, 2, 3, 4, 5):
+        for name, where, row_filter, meta_able in probes:
+            n_meta = (
+                table.row_count(version=v, partition_where=where)
+                if meta_able and v >= 4
+                else -1
+            )
+            r = (
+                table.read(version=v, partition_where=where)
+                .filter(row_filter)
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.coalesce(F.sum("event_id"), F.lit(0))
+                    .cast("long")
+                    .alias("sum_event_id"),
                 )
-                r = (
-                    table.read(version=v, partition_where=where)
-                    .filter(row_filter)
-                    .agg(
-                        F.count(F.lit(1)).alias("n_rows"),
-                        F.coalesce(F.sum("event_id"), F.lit(0))
-                        .cast("long")
-                        .alias("sum_event_id"),
-                    )
-                    .select(
-                        F.lit(v).cast("long").alias("version"),
-                        F.lit(name).alias("probe"),
-                        "n_rows",
-                        F.lit(n_meta).cast("long").alias("n_meta"),
-                        "sum_event_id",
-                    )
+                .select(
+                    F.lit(v).cast("long").alias("version"),
+                    F.lit(name).alias("probe"),
+                    "n_rows",
+                    F.lit(n_meta).cast("long").alias("n_meta"),
+                    "sum_event_id",
                 )
-                out = r if out is None else out.unionByName(r)
-        flag = spark.createDataFrame(
-            [(0, "pre_compact_refusal", refusal, -1, 0)],
-            "version long, probe string, n_rows long, n_meta long,"
-            " sum_event_id long",
-        )
-        return out.unionByName(flag).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            )
+            out = r if out is None else out.unionByName(r)
+    flag = spark.createDataFrame(
+        [(0, "pre_compact_refusal", refusal, -1, 0)],
+        "version long, probe string, n_rows long, n_meta long,"
+        " sum_event_id long",
+    )
+    return out.unionByName(flag)
 
 
 def _rollup_audit_oracle() -> str:
@@ -1714,12 +1653,12 @@ def _rollup_audit_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@query(
+@audit(
     "lakehouse_incremental_rollup_audit",
     oracle=_rollup_audit_oracle(),
 )
 def lakehouse_incremental_rollup_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Incrementally-maintained rollups under the driver gate — the
     BATCH twin of the reference's Processed-layer dynamic table
@@ -1761,38 +1700,34 @@ def lakehouse_incremental_rollup_audit(
             F.col("value").cast("decimal(28,9)").alias("value"),
         )
 
-    tmp = tempfile.mkdtemp(prefix="lh_rollup_audit_")
-    try:
-        fact = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        rollup = SnapshotTable(
-            spark, os.path.join(tmp, "roll"), partition_by=["day"]
+    fact = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    rollup = SnapshotTable(
+        spark, os.path.join(tmp, "roll"), partition_by=["day"]
+    )
+    steps = [
+        lambda: fact.create(ev.filter(F.col("event_id") % 3 == 0)),
+        lambda: fact.append(ev.filter(F.col("event_id") % 3 == 1)),
+        lambda: fact.append(ev.filter(F.col("event_id") % 3 == 2)),
+        lambda: fact.delete(F.col("event_id") % 7 == 0),
+        lambda: fact.overwrite(ev.filter(F.col("event_id") % 2 == 0)),
+    ]
+    out = None
+    for i, step in enumerate(steps, start=1):
+        step()
+        mode = refresh_rollup(
+            fact, rollup, prepare, ["day"], ["value"], app_id="gate"
         )
-        steps = [
-            lambda: fact.create(ev.filter(F.col("event_id") % 3 == 0)),
-            lambda: fact.append(ev.filter(F.col("event_id") % 3 == 1)),
-            lambda: fact.append(ev.filter(F.col("event_id") % 3 == 2)),
-            lambda: fact.delete(F.col("event_id") % 7 == 0),
-            lambda: fact.overwrite(ev.filter(F.col("event_id") % 2 == 0)),
-        ]
-        out = None
-        for i, step in enumerate(steps, start=1):
-            step()
-            mode = refresh_rollup(
-                fact, rollup, prepare, ["day"], ["value"], app_id="gate"
-            )
-            r = rollup.read().select(
-                F.lit(i).cast("long").alias("refresh"),
-                "day",
-                "n_rows",
-                F.round(F.col("sum_value").cast("double"), 4).alias(
-                    "sum_value"
-                ),
-                F.lit(mode).alias("mode"),
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        r = rollup.read().select(
+            F.lit(i).cast("long").alias("refresh"),
+            "day",
+            "n_rows",
+            F.round(F.col("sum_value").cast("double"), 4).alias(
+                "sum_value"
+            ),
+            F.lit(mode).alias("mode"),
+        )
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _clone_audit_oracle() -> str:
@@ -1819,8 +1754,8 @@ def _clone_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_clone_audit", oracle=_clone_audit_oracle())
-def lakehouse_clone_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_clone_audit", oracle=_clone_audit_oracle())
+def lakehouse_clone_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Zero-copy shallow clone under the driver gate: CREATE a source
     table (doc_id%2==0), CLONE it (one JSON write — the ``zero_copy``
     probe asserts the clone dir holds NO parquet at clone time), then
@@ -1839,38 +1774,34 @@ def lakehouse_clone_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="lh_clone_audit_")
-    try:
-        src = SnapshotTable(spark, os.path.join(tmp, "src"))
-        src.create(docs.filter(F.col("doc_id") % 2 == 0))
-        clone = src.clone_to(os.path.join(tmp, "branch"))
-        zero_copy = 1
-        bdata = os.path.join(clone.path, "data")
-        if os.path.isdir(bdata):
-            for _r, _d, fs in os.walk(bdata):
-                if any(f.endswith(".parquet") for f in fs):
-                    zero_copy = 0
-        clone.append(docs.filter(F.col("doc_id") % 2 == 1))
-        clone.delete(F.col("doc_id") % 5 == 0)
+    src = SnapshotTable(spark, os.path.join(tmp, "src"))
+    src.create(docs.filter(F.col("doc_id") % 2 == 0))
+    clone = src.clone_to(os.path.join(tmp, "branch"))
+    zero_copy = 1
+    bdata = os.path.join(clone.path, "data")
+    if os.path.isdir(bdata):
+        for _r, _d, fs in os.walk(bdata):
+            if any(f.endswith(".parquet") for f in fs):
+                zero_copy = 0
+    clone.append(docs.filter(F.col("doc_id") % 2 == 1))
+    clone.delete(F.col("doc_id") % 5 == 0)
 
-        def agg(df, probe):
-            return df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-                F.sum("n_chars").cast("long").alias("sum_n_chars"),
-            ).select(F.lit(probe).alias("probe"), "n_rows", "sum_doc_id",
-                     "sum_n_chars")
+    def agg(df, probe):
+        return df.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+            F.sum("n_chars").cast("long").alias("sum_n_chars"),
+        ).select(F.lit(probe).alias("probe"), "n_rows", "sum_doc_id",
+                 "sum_n_chars")
 
-        out = agg(src.read(), "source_final")
-        for v in (1, 2, 3):
-            out = out.unionByName(agg(clone.read(version=v), f"clone_v{v}"))
-        flag = spark.createDataFrame(
-            [("zero_copy", zero_copy, 0, 0)],
-            "probe string, n_rows long, sum_doc_id long, sum_n_chars long",
-        )
-        return out.unionByName(flag).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    out = agg(src.read(), "source_final")
+    for v in (1, 2, 3):
+        out = out.unionByName(agg(clone.read(version=v), f"clone_v{v}"))
+    flag = spark.createDataFrame(
+        [("zero_copy", zero_copy, 0, 0)],
+        "probe string, n_rows long, sum_doc_id long, sum_n_chars long",
+    )
+    return out.unionByName(flag)
 
 def _cdf_audit_oracle() -> str:
     """Expected change feed per commit, recomputed from the raw events
@@ -1936,8 +1867,8 @@ def _cdf_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_cdf_audit", oracle=_cdf_audit_oracle())
-def lakehouse_cdf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_cdf_audit", oracle=_cdf_audit_oracle())
+def lakehouse_cdf_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """CHANGE DATA FEED under the driver gate — the r10 headline: the
     remaining gap to the reference's dynamic-table semantics was a
     surface that EMITS row-level changes of delete/merge commits
@@ -1977,58 +1908,53 @@ def lakehouse_cdf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="lh_cdf_audit_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        t.create(ev.filter(F.col("event_id") % 3 == 0))
-        t.append(ev.filter(F.col("event_id") % 3 == 1))
-        t.merge(
-            ev.filter(F.col("event_id") % 5 == 0).withColumn(
-                "value", F.col("value") + F.lit(1000.0)
-            ),
-            ["event_id"],
-        )
-        t.delete(F.col("event_id") % 7 == 0)
-        t.compact(target_files=2)
+    t = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    t.create(ev.filter(F.col("event_id") % 3 == 0))
+    t.append(ev.filter(F.col("event_id") % 3 == 1))
+    t.merge(
+        ev.filter(F.col("event_id") % 5 == 0).withColumn(
+            "value", F.col("value") + F.lit(1000.0)
+        ),
+        ["event_id"],
+    )
+    t.delete(F.col("event_id") % 7 == 0)
+    t.compact(target_files=2)
 
-        def agg(chg, mode):
-            return (
-                chg.groupBy("_commit_version", "_change_type", "event_type")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n"),
-                    F.sum("event_id").cast("long").alias("sum_event_id"),
-                    F.round(
-                        F.sum(F.col("value").cast("decimal(28,9)")).cast(
-                            "double"
-                        ),
-                        4,
-                    ).alias("sum_value"),
-                )
-                .select(
-                    F.lit(mode).alias("mode"),
-                    F.col("_commit_version").alias("version"),
-                    F.col("_change_type").alias("change"),
-                    "event_type",
-                    "n",
-                    "sum_event_id",
-                    "sum_value",
-                )
-            )
-
-        n_compact = t.changes(4, 5).count()  # layout-only: must be 0
-        flag = spark.createDataFrame(
-            [("plain", 5, "layout_only", "all", n_compact, 0, 0.0)],
-            "mode string, version long, change string, event_type string,"
-            " n long, sum_event_id long, sum_value double",
-        )
+    def agg(chg, mode):
         return (
-            agg(t.changes(1, 5), "plain")
-            .unionByName(agg(t.changes(1, 5, update_labels=True), "labeled"))
-            .unionByName(flag)
-            .localCheckpoint(eager=True)
+            chg.groupBy("_commit_version", "_change_type", "event_type")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.sum("event_id").cast("long").alias("sum_event_id"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(28,9)")).cast(
+                        "double"
+                    ),
+                    4,
+                ).alias("sum_value"),
+            )
+            .select(
+                F.lit(mode).alias("mode"),
+                F.col("_commit_version").alias("version"),
+                F.col("_change_type").alias("change"),
+                "event_type",
+                "n",
+                "sum_event_id",
+                "sum_value",
+            )
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    n_compact = t.changes(4, 5).count()  # layout-only: must be 0
+    flag = spark.createDataFrame(
+        [("plain", 5, "layout_only", "all", n_compact, 0, 0.0)],
+        "mode string, version long, change string, event_type string,"
+        " n long, sum_event_id long, sum_value double",
+    )
+    return (
+        agg(t.changes(1, 5), "plain")
+        .unionByName(agg(t.changes(1, 5, update_labels=True), "labeled"))
+        .unionByName(flag)
+    )
 
 def _clone_retention_oracle() -> str:
     """Clone/source states around a SOURCE vacuum that expires
@@ -2050,9 +1976,9 @@ def _clone_retention_oracle() -> str:
     """
 
 
-@query("lakehouse_clone_retention_audit", oracle=_clone_retention_oracle())
+@audit("lakehouse_clone_retention_audit", oracle=_clone_retention_oracle())
 def lakehouse_clone_retention_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """The clone<->vacuum retention hazard, ASSERTED under the gate
     (r10 — it was previously only documented on
@@ -2081,40 +2007,36 @@ def lakehouse_clone_retention_audit(
     from ..sources.lakehouse import SnapshotTable
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="lh_clone_ret_audit_")
+    src = SnapshotTable(spark, os.path.join(tmp, "src"))
+    src.create(docs.filter(F.col("doc_id") % 3 == 0))
+    src.append(docs.filter(F.col("doc_id") % 3 == 1))
+    clone = src.clone_to(os.path.join(tmp, "branch"))
+    clone.compact(target_files=2)  # now self-contained (v2)
+    src.overwrite(docs.filter(F.col("doc_id") % 3 == 2))
+    src.vacuum(retain_last=1)  # expires the cloned-from files
+
+    refused = 0
     try:
-        src = SnapshotTable(spark, os.path.join(tmp, "src"))
-        src.create(docs.filter(F.col("doc_id") % 3 == 0))
-        src.append(docs.filter(F.col("doc_id") % 3 == 1))
-        clone = src.clone_to(os.path.join(tmp, "branch"))
-        clone.compact(target_files=2)  # now self-contained (v2)
-        src.overwrite(docs.filter(F.col("doc_id") % 3 == 2))
-        src.vacuum(retain_last=1)  # expires the cloned-from files
+        clone.read(version=1).count()
+    except Exception:
+        refused = 1
 
-        refused = 0
-        try:
-            clone.read(version=1).count()
-        except Exception:
-            refused = 1
+    def agg(df, probe):
+        return df.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+            F.sum("n_chars").cast("long").alias("sum_n_chars"),
+        ).select(F.lit(probe).alias("probe"), "n_rows", "sum_doc_id",
+                 "sum_n_chars")
 
-        def agg(df, probe):
-            return df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-                F.sum("n_chars").cast("long").alias("sum_n_chars"),
-            ).select(F.lit(probe).alias("probe"), "n_rows", "sum_doc_id",
-                     "sum_n_chars")
-
-        out = agg(clone.read(), "clone_latest").unionByName(
-            agg(src.read(), "source_final")
-        )
-        flag = spark.createDataFrame(
-            [("pinned_read_refused", refused, 0, 0)],
-            "probe string, n_rows long, sum_doc_id long, sum_n_chars long",
-        )
-        return out.unionByName(flag).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    out = agg(clone.read(), "clone_latest").unionByName(
+        agg(src.read(), "source_final")
+    )
+    flag = spark.createDataFrame(
+        [("pinned_read_refused", refused, 0, 0)],
+        "probe string, n_rows long, sum_doc_id long, sum_n_chars long",
+    )
+    return out.unionByName(flag)
 
 def _cdc_replication_oracle() -> str:
     """Replica state after each sync: k=1 full-syncs the created source
@@ -2146,9 +2068,9 @@ def _cdc_replication_oracle() -> str:
     """
 
 
-@query("lakehouse_cdc_replication_audit", oracle=_cdc_replication_oracle())
+@audit("lakehouse_cdc_replication_audit", oracle=_cdc_replication_oracle())
 def lakehouse_cdc_replication_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """CDC APPLY under the driver gate (operators/cdc.py — the Delta
     Live Tables ``APPLY CHANGES INTO`` shape): a downstream replica is
@@ -2176,54 +2098,50 @@ def lakehouse_cdc_replication_audit(
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="lh_cdc_repl_audit_")
-    try:
-        src = SnapshotTable(spark, os.path.join(tmp, "src"))
-        dst = SnapshotTable(spark, os.path.join(tmp, "replica"))
-        stages = [
-            lambda: src.create(ev.filter(F.col("event_id") % 3 == 0)),
-            lambda: (
-                src.append(ev.filter(F.col("event_id") % 3 == 1)),
-                src.merge(
-                    ev.filter(F.col("event_id") % 5 == 0).withColumn(
-                        "value", F.col("value") + F.lit(1000.0)
-                    ),
-                    ["event_id"],
+    src = SnapshotTable(spark, os.path.join(tmp, "src"))
+    dst = SnapshotTable(spark, os.path.join(tmp, "replica"))
+    stages = [
+        lambda: src.create(ev.filter(F.col("event_id") % 3 == 0)),
+        lambda: (
+            src.append(ev.filter(F.col("event_id") % 3 == 1)),
+            src.merge(
+                ev.filter(F.col("event_id") % 5 == 0).withColumn(
+                    "value", F.col("value") + F.lit(1000.0)
                 ),
-                src.delete(F.col("event_id") % 7 == 0),
+                ["event_id"],
             ),
-            lambda: src.compact(target_files=2),
-        ]
-        out = None
-        for k, stage in enumerate(stages, start=1):
-            stage()
-            mode = replicate_changes(src, dst, ["event_id"], app_id="gate")
-            r = (
-                dst.read()
-                .groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n"),
-                    F.sum("event_id").cast("long").alias("sum_event_id"),
-                    F.round(
-                        F.sum(F.col("value").cast("decimal(28,9)")).cast(
-                            "double"
-                        ),
-                        4,
-                    ).alias("sum_value"),
-                )
-                .select(
-                    F.lit(k).cast("long").alias("sync"),
-                    F.lit(mode).alias("mode"),
-                    "event_type",
-                    "n",
-                    "sum_event_id",
-                    "sum_value",
-                )
+            src.delete(F.col("event_id") % 7 == 0),
+        ),
+        lambda: src.compact(target_files=2),
+    ]
+    out = None
+    for k, stage in enumerate(stages, start=1):
+        stage()
+        mode = replicate_changes(src, dst, ["event_id"], app_id="gate")
+        r = (
+            dst.read()
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.sum("event_id").cast("long").alias("sum_event_id"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(28,9)")).cast(
+                        "double"
+                    ),
+                    4,
+                ).alias("sum_value"),
             )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            .select(
+                F.lit(k).cast("long").alias("sync"),
+                F.lit(mode).alias("mode"),
+                "event_type",
+                "n",
+                "sum_event_id",
+                "sum_value",
+            )
+        )
+        out = r if out is None else out.unionByName(r)
+    return out
 
 def _dv_audit_oracle() -> str:
     """Table state per version around merge-on-read deletes: v1 all
@@ -2257,8 +2175,8 @@ def _dv_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_dv_audit", oracle=_dv_audit_oracle())
-def lakehouse_dv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_dv_audit", oracle=_dv_audit_oracle())
+def lakehouse_dv_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """MERGE-ON-READ deletes via DELETION VECTORS under the driver
     gate (r10 — Delta DVs / Iceberg v2 position deletes):
     ``delete_mor`` records the matched rows' row-index runs in the
@@ -2283,72 +2201,66 @@ def lakehouse_dv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_dv_audit_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        t.create(ev)
+    t = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    t.create(ev)
 
-        def live_parquet():
-            n = 0
-            for root, _d, names in os.walk(os.path.join(t.path, "data")):
-                n += sum(1 for f in names if f.endswith(".parquet"))
-            return n
+    def live_parquet():
+        n = 0
+        for root, _d, names in os.walk(os.path.join(t.path, "data")):
+            n += sum(1 for f in names if f.endswith(".parquet"))
+        return n
 
-        files_before = live_parquet()
-        t.delete_mor(F.col("event_id") % 5 == 0)
-        metadata_only = int(
-            live_parquet() == files_before
-            and set(t.snapshot().files) == set(t.snapshot(version=1).files)
-        )
-        t.delete_mor(F.col("event_id") % 7 == 0)
-        t.compact(target_files=4)
-        dv_purged = int(not t.snapshot().dvs)
+    files_before = live_parquet()
+    t.delete_mor(F.col("event_id") % 5 == 0)
+    metadata_only = int(
+        live_parquet() == files_before
+        and set(t.snapshot().files) == set(t.snapshot(version=1).files)
+    )
+    t.delete_mor(F.col("event_id") % 7 == 0)
+    t.compact(target_files=4)
+    dv_purged = int(not t.snapshot().dvs)
 
-        out = None
-        for v in (1, 2, 3, 4):
-            n_meta = t.row_count(version=v)
-            r = (
-                t.read(version=v)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("event_id").cast("long").alias("sum_event_id"),
-                )
-                .select(
-                    F.lit(v).cast("long").alias("version"),
-                    F.lit("state").alias("probe"),
-                    "n_rows",
-                    F.lit(n_meta).cast("long").alias("n_meta"),
-                    "sum_event_id",
-                )
-            )
-            out = r if out is None else out.unionByName(r)
-        feed = (
-            t.changes(1, 2)
+    out = None
+    for v in (1, 2, 3, 4):
+        n_meta = t.row_count(version=v)
+        r = (
+            t.read(version=v)
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum("event_id").cast("long").alias("sum_event_id"),
             )
             .select(
-                F.lit(2).cast("long").alias("version"),
-                F.lit("dv_feed").alias("probe"),
+                F.lit(v).cast("long").alias("version"),
+                F.lit("state").alias("probe"),
                 "n_rows",
-                F.col("n_rows").alias("n_meta"),
+                F.lit(n_meta).cast("long").alias("n_meta"),
                 "sum_event_id",
             )
         )
-        flags = spark.createDataFrame(
-            [
-                (2, "metadata_only", metadata_only, metadata_only, 0),
-                (4, "dv_purged", dv_purged, dv_purged, 0),
-            ],
-            "version long, probe string, n_rows long, n_meta long,"
-            " sum_event_id long",
+        out = r if out is None else out.unionByName(r)
+    feed = (
+        t.changes(1, 2)
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("event_id").cast("long").alias("sum_event_id"),
         )
-        return out.unionByName(feed).unionByName(flags).localCheckpoint(
-            eager=True
+        .select(
+            F.lit(2).cast("long").alias("version"),
+            F.lit("dv_feed").alias("probe"),
+            "n_rows",
+            F.col("n_rows").alias("n_meta"),
+            "sum_event_id",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    flags = spark.createDataFrame(
+        [
+            (2, "metadata_only", metadata_only, metadata_only, 0),
+            (4, "dv_purged", dv_purged, dv_purged, 0),
+        ],
+        "version long, probe string, n_rows long, n_meta long,"
+        " sum_event_id long",
+    )
+    return out.unionByName(feed).unionByName(flags)
 
 def _constraints_audit_oracle() -> str:
     """Final state = the two good batches (all events); every rejection
@@ -2365,8 +2277,10 @@ def _constraints_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_constraints_audit", oracle=_constraints_audit_oracle())
-def lakehouse_constraints_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_constraints_audit", oracle=_constraints_audit_oracle())
+def lakehouse_constraints_audit(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """Write-side CHECK constraints under the driver gate (r10 —
     Delta's ``ALTER TABLE ADD CONSTRAINT`` / write-time enforcement;
     the write-side twin of the read-side Deequ suites in
@@ -2397,65 +2311,61 @@ def lakehouse_constraints_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_cc_audit_")
+    t = SnapshotTable(
+        spark,
+        os.path.join(tmp, "fact"),
+        check_constraints={
+            "id_nn": "event_id IS NOT NULL",
+            "val_nn": "value IS NOT NULL",
+        },
+    )
+    t.create(ev.filter(F.col("event_id") % 2 == 0))
+    t.append(ev.filter(F.col("event_id") % 2 == 1))
+    v_before = t.snapshot().version
+
+    bad_rejected = 0
     try:
-        t = SnapshotTable(
-            spark,
-            os.path.join(tmp, "fact"),
-            check_constraints={
-                "id_nn": "event_id IS NOT NULL",
-                "val_nn": "value IS NOT NULL",
-            },
-        )
-        t.create(ev.filter(F.col("event_id") % 2 == 0))
-        t.append(ev.filter(F.col("event_id") % 2 == 1))
-        v_before = t.snapshot().version
-
-        bad_rejected = 0
-        try:
-            t.append(
-                ev.limit(10).select(
-                    F.lit(None).cast("long").alias("event_id"), "ts", "value"
-                )
+        t.append(
+            ev.limit(10).select(
+                F.lit(None).cast("long").alias("event_id"), "ts", "value"
             )
-        except ConstraintViolationError:
-            bad_rejected = 1
-        version_unchanged = int(t.snapshot().version == v_before)
-
-        invalid_add_rejected = 0
-        try:
-            t.add_constraint("ids_are_even", "event_id % 2 = 0")
-        except ConstraintViolationError:
-            invalid_add_rejected = 1
-        t.add_constraint("id_nonneg", "event_id >= 0")
-
-        fresh = SnapshotTable(spark, t.path)  # constraints from manifest
-        new_enforced = 0
-        try:
-            fresh.append(
-                ev.limit(10).select(
-                    (-F.col("event_id") - 1).alias("event_id"), "ts", "value"
-                )
-            )
-        except ConstraintViolationError:
-            new_enforced = 1
-
-        state = t.read().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("event_id").cast("long").alias("sum_event_id"),
-        ).select(F.lit("state").alias("probe"), "n", "sum_event_id")
-        flags = spark.createDataFrame(
-            [
-                ("bad_append_rejected", bad_rejected, 0),
-                ("version_unchanged_after_reject", version_unchanged, 0),
-                ("invalid_add_constraint_rejected", invalid_add_rejected, 0),
-                ("new_constraint_enforced", new_enforced, 0),
-            ],
-            "probe string, n long, sum_event_id long",
         )
-        return state.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    except ConstraintViolationError:
+        bad_rejected = 1
+    version_unchanged = int(t.snapshot().version == v_before)
+
+    invalid_add_rejected = 0
+    try:
+        t.add_constraint("ids_are_even", "event_id % 2 = 0")
+    except ConstraintViolationError:
+        invalid_add_rejected = 1
+    t.add_constraint("id_nonneg", "event_id >= 0")
+
+    fresh = SnapshotTable(spark, t.path)  # constraints from manifest
+    new_enforced = 0
+    try:
+        fresh.append(
+            ev.limit(10).select(
+                (-F.col("event_id") - 1).alias("event_id"), "ts", "value"
+            )
+        )
+    except ConstraintViolationError:
+        new_enforced = 1
+
+    state = t.read().agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("event_id").cast("long").alias("sum_event_id"),
+    ).select(F.lit("state").alias("probe"), "n", "sum_event_id")
+    flags = spark.createDataFrame(
+        [
+            ("bad_append_rejected", bad_rejected, 0),
+            ("version_unchanged_after_reject", version_unchanged, 0),
+            ("invalid_add_constraint_rejected", invalid_add_rejected, 0),
+            ("new_constraint_enforced", new_enforced, 0),
+        ],
+        "probe string, n long, sum_event_id long",
+    )
+    return state.unionByName(flags)
 
 def _rename_audit_oracle() -> str:
     """Logical state per version around a rename: v1 create (%3==0),
@@ -2499,8 +2409,8 @@ def _rename_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_rename_audit", oracle=_rename_audit_oracle())
-def lakehouse_rename_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_rename_audit", oracle=_rename_audit_oracle())
+def lakehouse_rename_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """RENAME COLUMN without rewrite under the driver gate (r10 —
     Delta column mapping, one level: data files keep the physical
     creation-time name forever; the manifest's logical->physical map
@@ -2527,83 +2437,79 @@ def lakehouse_rename_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_rename_audit_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        t.create(ev.filter(F.col("event_id") % 3 == 0))
-        files_before = set(t.snapshot().files)
-        snap = t.rename_column("value", "amount")
-        metadata_only = int(set(snap.files) == files_before)
-        t.append(
-            ev.filter(F.col("event_id") % 3 == 1).withColumnRenamed(
-                "value", "amount"
-            )
+    t = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    t.create(ev.filter(F.col("event_id") % 3 == 0))
+    files_before = set(t.snapshot().files)
+    snap = t.rename_column("value", "amount")
+    metadata_only = int(set(snap.files) == files_before)
+    t.append(
+        ev.filter(F.col("event_id") % 3 == 1).withColumnRenamed(
+            "value", "amount"
         )
-        t.delete(F.col("event_id") % 7 == 0)
-        t.drop_column("ts")
-        ts_dropped = int("ts" not in t.read().columns)
-        t.append(
-            ev.filter(F.col("event_id") % 3 == 2).select(
-                "event_id", F.col("value").alias("amount")
-            )
+    )
+    t.delete(F.col("event_id") % 7 == 0)
+    t.drop_column("ts")
+    ts_dropped = int("ts" not in t.read().columns)
+    t.append(
+        ev.filter(F.col("event_id") % 3 == 2).select(
+            "event_id", F.col("value").alias("amount")
         )
-        files_pre_readd = set(t.snapshot().files)
-        readd_snap = t.readd_column("ts")
-        readd_meta_only = int(set(readd_snap.files) == files_pre_readd)
-        n_prev = t.read().count()
-        new_rows = ev.filter(F.col("event_id") % 21 == 5).select(
-            "event_id", "ts", F.col("value").alias("amount")
-        )
-        n_new = new_rows.count()
-        t.append(new_rows, schema_evolution=True)
-        final = t.read()
-        fresh_identity = int(
-            final.filter(F.col("ts").isNotNull()).count() == n_new
-            and final.filter(F.col("ts").isNull()).count() == n_prev
-        )
+    )
+    files_pre_readd = set(t.snapshot().files)
+    readd_snap = t.readd_column("ts")
+    readd_meta_only = int(set(readd_snap.files) == files_pre_readd)
+    n_prev = t.read().count()
+    new_rows = ev.filter(F.col("event_id") % 21 == 5).select(
+        "event_id", "ts", F.col("value").alias("amount")
+    )
+    n_new = new_rows.count()
+    t.append(new_rows, schema_evolution=True)
+    final = t.read()
+    fresh_identity = int(
+        final.filter(F.col("ts").isNotNull()).count() == n_new
+        and final.filter(F.col("ts").isNull()).count() == n_prev
+    )
 
-        out = None
-        for v in (1, 2, 3, 4, 6, 8):
-            r = (
-                t.read(version=v)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("event_id").cast("long").alias("sum_event_id"),
-                    F.round(
-                        F.sum(F.col("amount").cast("decimal(28,9)")).cast(
-                            "double"
-                        ),
-                        4,
-                    ).alias("sum_amount"),
-                )
-                .select(
-                    F.lit(v).cast("long").alias("version"),
-                    F.lit("state").alias("probe"),
-                    "n",
-                    "sum_event_id",
-                    "sum_amount",
-                )
+    out = None
+    for v in (1, 2, 3, 4, 6, 8):
+        r = (
+            t.read(version=v)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("event_id").cast("long").alias("sum_event_id"),
+                F.round(
+                    F.sum(F.col("amount").cast("decimal(28,9)")).cast(
+                        "double"
+                    ),
+                    4,
+                ).alias("sum_amount"),
             )
-            out = r if out is None else out.unionByName(r)
-        flag = spark.createDataFrame(
-            [
-                (2, "metadata_only", metadata_only, metadata_only, 0.0),
-                (5, "ts_dropped", ts_dropped, ts_dropped, 0.0),
-                (
-                    7,
-                    "ts_readded_meta_only",
-                    readd_meta_only,
-                    readd_meta_only,
-                    0.0,
-                ),
-                (8, "ts_fresh_identity", fresh_identity, fresh_identity, 0.0),
-            ],
-            "version long, probe string, n long, sum_event_id long,"
-            " sum_amount double",
+            .select(
+                F.lit(v).cast("long").alias("version"),
+                F.lit("state").alias("probe"),
+                "n",
+                "sum_event_id",
+                "sum_amount",
+            )
         )
-        return out.unionByName(flag).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    flag = spark.createDataFrame(
+        [
+            (2, "metadata_only", metadata_only, metadata_only, 0.0),
+            (5, "ts_dropped", ts_dropped, ts_dropped, 0.0),
+            (
+                7,
+                "ts_readded_meta_only",
+                readd_meta_only,
+                readd_meta_only,
+                0.0,
+            ),
+            (8, "ts_fresh_identity", fresh_identity, fresh_identity, 0.0),
+        ],
+        "version long, probe string, n long, sum_event_id long,"
+        " sum_amount double",
+    )
+    return out.unionByName(flag)
 
 
 def _dv_merge_audit_oracle() -> str:
@@ -2656,8 +2562,8 @@ def _dv_merge_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_dv_merge_audit", oracle=_dv_merge_audit_oracle())
-def lakehouse_dv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_dv_merge_audit", oracle=_dv_merge_audit_oracle())
+def lakehouse_dv_merge_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """MERGE-ON-READ upserts via DELETION VECTORS under the driver
     gate (r11 — Delta's DV-backed MERGE, the upsert twin of
     ``lakehouse_dv_audit``'s deletes): ``merge_mor`` soft-deletes the
@@ -2681,72 +2587,68 @@ def lakehouse_dv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_dv_merge_audit_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        t.create(ev.filter(F.col("event_id") % 3 < 2))
-        files_v1 = set(t.snapshot().files)
-        t.merge_mor(
-            ev.filter(F.col("event_id") % 5 == 0).withColumn(
-                "value", F.col("value") + F.lit(1000.0)
-            ),
-            ["event_id"],
-        )
-        snap2 = t.snapshot()
-        mor_no_rewrite = int(
-            files_v1 <= set(snap2.files) and bool(snap2.dvs)
-        )
-        t.delete_mor(F.col("event_id") % 7 == 0)
-        t.compact(target_files=4)
-        dv_purged = int(not t.snapshot().dvs)
+    t = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    t.create(ev.filter(F.col("event_id") % 3 < 2))
+    files_v1 = set(t.snapshot().files)
+    t.merge_mor(
+        ev.filter(F.col("event_id") % 5 == 0).withColumn(
+            "value", F.col("value") + F.lit(1000.0)
+        ),
+        ["event_id"],
+    )
+    snap2 = t.snapshot()
+    mor_no_rewrite = int(
+        files_v1 <= set(snap2.files) and bool(snap2.dvs)
+    )
+    t.delete_mor(F.col("event_id") % 7 == 0)
+    t.compact(target_files=4)
+    dv_purged = int(not t.snapshot().dvs)
 
-        def agg(df, v, probe, n_meta=None):
-            r = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("event_id").cast("long").alias("sum_event_id"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(28,9)")).cast(
-                        "double"
-                    ),
-                    4,
-                ).alias("sum_value"),
-            )
-            return r.select(
-                F.lit(v).cast("long").alias("version"),
-                F.lit(probe).alias("probe"),
-                "n",
-                (
-                    F.lit(n_meta).cast("long")
-                    if n_meta is not None
-                    else F.col("n")
-                ).alias("n_meta"),
-                "sum_event_id",
-                "sum_value",
-            )
-
-        out = None
-        for v in (1, 2, 3, 4):
-            r = agg(t.read(version=v), v, "state", n_meta=t.row_count(version=v))
-            out = r if out is None else out.unionByName(r)
-        chg = t.changes(1, 2)
-        for ctype in ("delete", "insert"):
-            r = agg(
-                chg.filter(F.col("_change_type") == ctype),
-                2,
-                f"feed_{ctype}",
-            )
-            out = out.unionByName(r)
-        flags = spark.createDataFrame(
-            [
-                (2, "mor_no_rewrite", mor_no_rewrite, mor_no_rewrite, 0, 0.0),
-                (4, "dv_purged", dv_purged, dv_purged, 0, 0.0),
-            ],
-            "version long, probe string, n long, n_meta long,"
-            " sum_event_id long, sum_value double",
+    def agg(df, v, probe, n_meta=None):
+        r = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("event_id").cast("long").alias("sum_event_id"),
+            F.round(
+                F.sum(F.col("value").cast("decimal(28,9)")).cast(
+                    "double"
+                ),
+                4,
+            ).alias("sum_value"),
         )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return r.select(
+            F.lit(v).cast("long").alias("version"),
+            F.lit(probe).alias("probe"),
+            "n",
+            (
+                F.lit(n_meta).cast("long")
+                if n_meta is not None
+                else F.col("n")
+            ).alias("n_meta"),
+            "sum_event_id",
+            "sum_value",
+        )
+
+    out = None
+    for v in (1, 2, 3, 4):
+        r = agg(t.read(version=v), v, "state", n_meta=t.row_count(version=v))
+        out = r if out is None else out.unionByName(r)
+    chg = t.changes(1, 2)
+    for ctype in ("delete", "insert"):
+        r = agg(
+            chg.filter(F.col("_change_type") == ctype),
+            2,
+            f"feed_{ctype}",
+        )
+        out = out.unionByName(r)
+    flags = spark.createDataFrame(
+        [
+            (2, "mor_no_rewrite", mor_no_rewrite, mor_no_rewrite, 0, 0.0),
+            (4, "dv_purged", dv_purged, dv_purged, 0, 0.0),
+        ],
+        "version long, probe string, n long, n_meta long,"
+        " sum_event_id long, sum_value double",
+    )
+    return out.unionByName(flags)
 
 
 def _cdf_persisted_audit_oracle() -> str:
@@ -2786,9 +2688,9 @@ def _cdf_persisted_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_cdf_persisted_audit", oracle=_cdf_persisted_audit_oracle())
+@audit("lakehouse_cdf_persisted_audit", oracle=_cdf_persisted_audit_oracle())
 def lakehouse_cdf_persisted_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """PERSISTED change-data-feed mode under the driver gate (r11 —
     Delta's ``delta.enableChangeDataFeed`` / ``_change_data``
@@ -2815,72 +2717,66 @@ def lakehouse_cdf_persisted_audit(
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_cdf_persist_audit_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "fact"), cdf=True)
-        t.create(ev.filter(F.col("event_id") % 2 == 0))
-        t.delete(F.col("event_id") % 6 == 0)
-        t.append(ev.filter(F.col("event_id") % 2 == 1))
-        t.merge_mor(
-            ev.filter(F.col("event_id") % 9 == 0).withColumn(
-                "value", F.col("value") + F.lit(500.0)
-            ),
-            ["event_id"],
-        )
-        swept = t.vacuum(retain_last=3, orphan_grace_ms=0)
-        preimages_swept = int(bool(swept))
-        served_from_sidecars = int(
-            bool(t._raw(2).get("change_files"))
-            and bool(t._raw(4).get("change_files"))
-        )
-        chg = t.changes(1, 4)
-        agg = (
-            chg.groupBy("_commit_version", "_change_type")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("event_id").cast("long").alias("sum_event_id"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(28,9)")).cast(
-                        "double"
-                    ),
-                    4,
-                ).alias("sum_value"),
-            )
-            .select(
-                F.col("_commit_version").alias("version"),
-                F.col("_change_type").alias("change"),
-                "n",
-                "sum_event_id",
-                "sum_value",
-            )
-        )
-        final = t.read().agg(
+    t = SnapshotTable(spark, os.path.join(tmp, "fact"), cdf=True)
+    t.create(ev.filter(F.col("event_id") % 2 == 0))
+    t.delete(F.col("event_id") % 6 == 0)
+    t.append(ev.filter(F.col("event_id") % 2 == 1))
+    t.merge_mor(
+        ev.filter(F.col("event_id") % 9 == 0).withColumn(
+            "value", F.col("value") + F.lit(500.0)
+        ),
+        ["event_id"],
+    )
+    swept = t.vacuum(retain_last=3, orphan_grace_ms=0)
+    preimages_swept = int(bool(swept))
+    served_from_sidecars = int(
+        bool(t._raw(2).get("change_files"))
+        and bool(t._raw(4).get("change_files"))
+    )
+    chg = t.changes(1, 4)
+    agg = (
+        chg.groupBy("_commit_version", "_change_type")
+        .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("event_id").cast("long").alias("sum_event_id"),
             F.round(
-                F.sum(F.col("value").cast("decimal(28,9)")).cast("double"),
+                F.sum(F.col("value").cast("decimal(28,9)")).cast(
+                    "double"
+                ),
                 4,
             ).alias("sum_value"),
-        ).select(
-            F.lit(0).cast("long").alias("version"),
-            F.lit("state_final").alias("change"),
+        )
+        .select(
+            F.col("_commit_version").alias("version"),
+            F.col("_change_type").alias("change"),
             "n",
             "sum_event_id",
             "sum_value",
         )
-        flags = spark.createDataFrame(
-            [
-                (0, "preimages_swept", preimages_swept, 0, 0.0),
-                (0, "served_from_sidecars", served_from_sidecars, 0, 0.0),
-            ],
-            "version long, change string, n long, sum_event_id long,"
-            " sum_value double",
-        )
-        return agg.unionByName(final).unionByName(flags).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    final = t.read().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("event_id").cast("long").alias("sum_event_id"),
+        F.round(
+            F.sum(F.col("value").cast("decimal(28,9)")).cast("double"),
+            4,
+        ).alias("sum_value"),
+    ).select(
+        F.lit(0).cast("long").alias("version"),
+        F.lit("state_final").alias("change"),
+        "n",
+        "sum_event_id",
+        "sum_value",
+    )
+    flags = spark.createDataFrame(
+        [
+            (0, "preimages_swept", preimages_swept, 0, 0.0),
+            (0, "served_from_sidecars", served_from_sidecars, 0, 0.0),
+        ],
+        "version long, change string, n long, sum_event_id long,"
+        " sum_value double",
+    )
+    return agg.unionByName(final).unionByName(flags)
 
 
 def _cdf_stream_audit_oracle() -> str:
@@ -2907,8 +2803,8 @@ def _cdf_stream_audit_oracle() -> str:
     """
 
 
-@query("streaming_cdf_silver_audit", oracle=_cdf_stream_audit_oracle())
-def streaming_cdf_silver_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("streaming_cdf_silver_audit", oracle=_cdf_stream_audit_oracle())
+def streaming_cdf_silver_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Streaming CHANGE-FEED source under the driver gate (r11 —
     ``streaming/cdf_source.py``): silver is maintained by DRAINING the
     fact's change stream (micro-batch per commit, checkpointed
@@ -2939,49 +2835,45 @@ def streaming_cdf_silver_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("decimal(28,9)").alias("value"),
         )
 
-    tmp = tempfile.mkdtemp(prefix="lh_cdf_stream_audit_")
-    try:
-        fact = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        silver = SnapshotTable(spark, os.path.join(tmp, "silver"))
-        ckpt = os.path.join(tmp, "ckpt")
-        fact.create(ev.filter(F.col("event_id") % 3 == 0))
-        maintain_rollup_stream(
-            fact, silver, prepare, ["event_type"], ["value"], ckpt
+    fact = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    silver = SnapshotTable(spark, os.path.join(tmp, "silver"))
+    ckpt = os.path.join(tmp, "ckpt")
+    fact.create(ev.filter(F.col("event_id") % 3 == 0))
+    maintain_rollup_stream(
+        fact, silver, prepare, ["event_type"], ["value"], ckpt
+    )
+
+    def state(drain):
+        return silver.read().select(
+            F.lit(drain).cast("long").alias("drain"),
+            F.col("event_type").alias("probe"),
+            "n_rows",
+            F.round(F.col("sum_value").cast("double"), 4).alias(
+                "sum_value"
+            ),
         )
 
-        def state(drain):
-            return silver.read().select(
-                F.lit(drain).cast("long").alias("drain"),
-                F.col("event_type").alias("probe"),
-                "n_rows",
-                F.round(F.col("sum_value").cast("double"), 4).alias(
-                    "sum_value"
-                ),
-            )
-
-        out = state(1)
-        fact.delete(F.col("event_id") % 7 == 0)
-        fact.append(ev.filter(F.col("event_id") % 3 == 1))
-        ranges = maintain_rollup_stream(
-            fact, silver, prepare, ["event_type"], ["value"], ckpt
-        )
-        out = out.unionByName(state(2))
-        v_before = silver.snapshot().version
-        os.unlink(os.path.join(ckpt, "offset.json"))  # lose the checkpoint
-        maintain_rollup_stream(
-            fact, silver, prepare, ["event_type"], ["value"], ckpt
-        )
-        replay_noop = int(silver.snapshot().version == v_before)
-        flags = spark.createDataFrame(
-            [
-                (0, "micro_batches_drain2", len(ranges), 0.0),
-                (0, "replay_noop", replay_noop, 0.0),
-            ],
-            "drain long, probe string, n_rows long, sum_value double",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    out = state(1)
+    fact.delete(F.col("event_id") % 7 == 0)
+    fact.append(ev.filter(F.col("event_id") % 3 == 1))
+    ranges = maintain_rollup_stream(
+        fact, silver, prepare, ["event_type"], ["value"], ckpt
+    )
+    out = out.unionByName(state(2))
+    v_before = silver.snapshot().version
+    os.unlink(os.path.join(ckpt, "offset.json"))  # lose the checkpoint
+    maintain_rollup_stream(
+        fact, silver, prepare, ["event_type"], ["value"], ckpt
+    )
+    replay_noop = int(silver.snapshot().version == v_before)
+    flags = spark.createDataFrame(
+        [
+            (0, "micro_batches_drain2", len(ranges), 0.0),
+            (0, "replay_noop", replay_noop, 0.0),
+        ],
+        "drain long, probe string, n_rows long, sum_value double",
+    )
+    return out.unionByName(flags)
 
 
 def _update_audit_oracle() -> str:
@@ -3018,8 +2910,8 @@ def _update_audit_oracle() -> str:
     """
 
 
-@query("lakehouse_update_audit", oracle=_update_audit_oracle())
-def lakehouse_update_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_update_audit", oracle=_update_audit_oracle())
+def lakehouse_update_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Row-level UPDATE under the driver gate (r11 — the remaining DML
     verb: delete/merge landed r7-r10): ``UPDATE ... SET col = expr
     WHERE pred`` in both strategies. COW rewrites only the files
@@ -3041,66 +2933,62 @@ def lakehouse_update_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_update_audit_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        t.create(ev)
-        t.update(F.col("event_id") % 4 == 0, {"value": F.col("value") + 100.0})
-        files_v2 = set(t.snapshot().files)
-        t.update(
-            F.col("event_id") % 6 == 0,
-            {"value": F.col("value") * 2.0},
-            strategy="mor",
-        )
-        snap3 = t.snapshot()
-        mor_no_rewrite = int(files_v2 <= set(snap3.files) and bool(snap3.dvs))
+    t = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    t.create(ev)
+    t.update(F.col("event_id") % 4 == 0, {"value": F.col("value") + 100.0})
+    files_v2 = set(t.snapshot().files)
+    t.update(
+        F.col("event_id") % 6 == 0,
+        {"value": F.col("value") * 2.0},
+        strategy="mor",
+    )
+    snap3 = t.snapshot()
+    mor_no_rewrite = int(files_v2 <= set(snap3.files) and bool(snap3.dvs))
 
-        def agg(df, v, probe, n_meta=None):
-            return df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("event_id").cast("long").alias("sum_event_id"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(28,9)")).cast(
-                        "double"
-                    ),
-                    4,
-                ).alias("sum_value"),
-            ).select(
-                F.lit(v).cast("long").alias("version"),
-                F.lit(probe).alias("probe"),
-                "n",
-                (
-                    F.lit(n_meta).cast("long")
-                    if n_meta is not None
-                    else F.col("n")
-                ).alias("n_meta"),
-                "sum_event_id",
-                "sum_value",
-            )
-
-        out = None
-        for v in (1, 2, 3):
-            r = agg(
-                t.read(version=v), v, "state", n_meta=t.row_count(version=v)
-            )
-            out = r if out is None else out.unionByName(r)
-        chg = t.changes(2, 3)
-        for ctype in ("delete", "insert"):
-            out = out.unionByName(
-                agg(
-                    chg.filter(F.col("_change_type") == ctype),
-                    3,
-                    f"feed_{ctype}",
-                )
-            )
-        flag = spark.createDataFrame(
-            [(3, "mor_no_rewrite", mor_no_rewrite, mor_no_rewrite, 0, 0.0)],
-            "version long, probe string, n long, n_meta long,"
-            " sum_event_id long, sum_value double",
+    def agg(df, v, probe, n_meta=None):
+        return df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("event_id").cast("long").alias("sum_event_id"),
+            F.round(
+                F.sum(F.col("value").cast("decimal(28,9)")).cast(
+                    "double"
+                ),
+                4,
+            ).alias("sum_value"),
+        ).select(
+            F.lit(v).cast("long").alias("version"),
+            F.lit(probe).alias("probe"),
+            "n",
+            (
+                F.lit(n_meta).cast("long")
+                if n_meta is not None
+                else F.col("n")
+            ).alias("n_meta"),
+            "sum_event_id",
+            "sum_value",
         )
-        return out.unionByName(flag).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    out = None
+    for v in (1, 2, 3):
+        r = agg(
+            t.read(version=v), v, "state", n_meta=t.row_count(version=v)
+        )
+        out = r if out is None else out.unionByName(r)
+    chg = t.changes(2, 3)
+    for ctype in ("delete", "insert"):
+        out = out.unionByName(
+            agg(
+                chg.filter(F.col("_change_type") == ctype),
+                3,
+                f"feed_{ctype}",
+            )
+        )
+    flag = spark.createDataFrame(
+        [(3, "mor_no_rewrite", mor_no_rewrite, mor_no_rewrite, 0, 0.0)],
+        "version long, probe string, n long, n_meta long,"
+        " sum_event_id long, sum_value double",
+    )
+    return out.unionByName(flag)
 
 
 def _cdc_stream_audit_oracle() -> str:
@@ -3129,8 +3017,10 @@ def _cdc_stream_audit_oracle() -> str:
     """
 
 
-@query("streaming_cdc_replica_audit", oracle=_cdc_stream_audit_oracle())
-def streaming_cdc_replica_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("streaming_cdc_replica_audit", oracle=_cdc_stream_audit_oracle())
+def streaming_cdc_replica_audit(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """Streaming ROW-LEVEL replication under the driver gate (r11 —
     ``maintain_replica_stream``, the stream form of
     ``lakehouse_cdc_replication_audit``'s batch sync): a downstream
@@ -3154,57 +3044,53 @@ def streaming_cdc_replica_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="lh_cdc_stream_audit_")
-    try:
-        src = SnapshotTable(spark, os.path.join(tmp, "src"))
-        dst = SnapshotTable(spark, os.path.join(tmp, "dst"))
-        ckpt = os.path.join(tmp, "ckpt")
-        src.create(ev.filter(F.col("event_id") % 3 < 2))
-        maintain_replica_stream(src, dst, ["event_id"], ckpt)
+    src = SnapshotTable(spark, os.path.join(tmp, "src"))
+    dst = SnapshotTable(spark, os.path.join(tmp, "dst"))
+    ckpt = os.path.join(tmp, "ckpt")
+    src.create(ev.filter(F.col("event_id") % 3 < 2))
+    maintain_replica_stream(src, dst, ["event_id"], ckpt)
 
-        def state(drain):
-            return dst.read().agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("event_id").cast("long").alias("sum_event_id"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(28,9)")).cast(
-                        "double"
-                    ),
-                    4,
-                ).alias("sum_value"),
-            ).select(
-                F.lit(drain).cast("long").alias("drain"),
-                F.lit("state").alias("probe"),
-                "n",
-                "sum_event_id",
-                "sum_value",
-            )
+    def state(drain):
+        return dst.read().agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("event_id").cast("long").alias("sum_event_id"),
+            F.round(
+                F.sum(F.col("value").cast("decimal(28,9)")).cast(
+                    "double"
+                ),
+                4,
+            ).alias("sum_value"),
+        ).select(
+            F.lit(drain).cast("long").alias("drain"),
+            F.lit("state").alias("probe"),
+            "n",
+            "sum_event_id",
+            "sum_value",
+        )
 
-        out = state(1)
-        src.delete(F.col("event_id") % 7 == 0)
-        src.merge_mor(
-            ev.filter(F.col("event_id") % 5 == 0).withColumn(
-                "value", F.col("value") + F.lit(1000.0)
-            ),
-            ["event_id"],
-        )
-        ranges = maintain_replica_stream(src, dst, ["event_id"], ckpt)
-        out = out.unionByName(state(2))
-        v_before = dst.snapshot().version
-        os.unlink(os.path.join(ckpt, "offset.json"))
-        maintain_replica_stream(src, dst, ["event_id"], ckpt)
-        replay_noop = int(dst.snapshot().version == v_before)
-        flags = spark.createDataFrame(
-            [
-                (0, "micro_batches_drain2", len(ranges), 0, 0.0),
-                (0, "replay_noop", replay_noop, 0, 0.0),
-            ],
-            "drain long, probe string, n long, sum_event_id long,"
-            " sum_value double",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    out = state(1)
+    src.delete(F.col("event_id") % 7 == 0)
+    src.merge_mor(
+        ev.filter(F.col("event_id") % 5 == 0).withColumn(
+            "value", F.col("value") + F.lit(1000.0)
+        ),
+        ["event_id"],
+    )
+    ranges = maintain_replica_stream(src, dst, ["event_id"], ckpt)
+    out = out.unionByName(state(2))
+    v_before = dst.snapshot().version
+    os.unlink(os.path.join(ckpt, "offset.json"))
+    maintain_replica_stream(src, dst, ["event_id"], ckpt)
+    replay_noop = int(dst.snapshot().version == v_before)
+    flags = spark.createDataFrame(
+        [
+            (0, "micro_batches_drain2", len(ranges), 0, 0.0),
+            (0, "replay_noop", replay_noop, 0, 0.0),
+        ],
+        "drain long, probe string, n long, sum_event_id long,"
+        " sum_value double",
+    )
+    return out.unionByName(flags)
 
 
 def _dedup_retention_oracle() -> str:
@@ -3235,9 +3121,9 @@ def _dedup_retention_oracle() -> str:
     """
 
 
-@query("lakehouse_dedup_retention_audit", oracle=_dedup_retention_oracle())
+@audit("lakehouse_dedup_retention_audit", oracle=_dedup_retention_oracle())
 def lakehouse_dedup_retention_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Dedup-MAINTENANCE over the lakehouse under the driver gate (r11
     — the composition that makes the LLM-pipeline dedup tier
@@ -3270,76 +3156,72 @@ def lakehouse_dedup_retention_audit(
             "doc_id", F.col("doc_id") + F.lit(100000)
         )
     )
-    tmp = tempfile.mkdtemp(prefix="lh_dedup_retention_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "corpus"))
-        silver = SnapshotTable(spark, os.path.join(tmp, "silver"))
-        t.create(corpus)
+    t = SnapshotTable(spark, os.path.join(tmp, "corpus"))
+    silver = SnapshotTable(spark, os.path.join(tmp, "silver"))
+    t.create(corpus)
 
-        def prepare(df):
-            return df.select("lang", F.col("n_chars").cast("long"))
+    def prepare(df):
+        return df.select("lang", F.col("n_chars").cast("long"))
 
-        refresh_rollup(t, silver, prepare, ["lang"], ["n_chars"], app_id="g")
+    refresh_rollup(t, silver, prepare, ["lang"], ["n_chars"], app_id="g")
 
-        def state(df, stage):
-            return (
-                df.groupBy("lang")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n"),
-                    F.sum("n_chars").cast("long").alias("sum_n_chars"),
-                )
-                .select(
-                    F.lit(stage).alias("stage"), "lang", "n", "sum_n_chars"
-                )
+    def state(df, stage):
+        return (
+            df.groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.sum("n_chars").cast("long").alias("sum_n_chars"),
             )
-
-        out = state(t.read(), "pre_dedup")
-        cur = t.read()
-        keepers = cur.groupBy("content_md5").agg(
-            F.min("doc_id").alias("_keep_id")
-        )
-        losers = (
-            cur.join(keepers, "content_md5")
-            .filter(F.col("doc_id") != F.col("_keep_id"))
-            .select("doc_id")
-        )
-        files_before = set(t.snapshot().files)
-        t.delete_keys_mor(losers, ["doc_id"])
-        snap = t.snapshot()
-        # merge-on-read = the commit WROTE no parquet: losers became
-        # vectors, and a file whose live rows ALL lost is removed
-        # outright (also metadata-only — cheaper than a full-file DV)
-        mor_no_rewrite = int(
-            not (set(snap.files) - files_before)
-            and bool(snap.dvs or (files_before - set(snap.files)))
-        )
-        out = out.unionByName(state(t.read(), "post_dedup"))
-        mode = refresh_rollup(
-            t, silver, prepare, ["lang"], ["n_chars"], app_id="g"
-        )
-        out = out.unionByName(
-            silver.read().select(
-                F.lit("silver").alias("stage"),
-                "lang",
-                F.col("n_rows").alias("n"),
-                F.col("sum_n_chars").cast("long").alias("sum_n_chars"),
+            .select(
+                F.lit(stage).alias("stage"), "lang", "n", "sum_n_chars"
             )
         )
-        flags = spark.createDataFrame(
-            [
-                ("flags", "mor_no_rewrite", mor_no_rewrite, 0),
-                (
-                    "flags",
-                    "mode_incremental_cdf",
-                    int(mode == "incremental_cdf"),
-                    0,
-                ),
-            ],
-            "stage string, lang string, n long, sum_n_chars long",
+
+    out = state(t.read(), "pre_dedup")
+    cur = t.read()
+    keepers = cur.groupBy("content_md5").agg(
+        F.min("doc_id").alias("_keep_id")
+    )
+    losers = (
+        cur.join(keepers, "content_md5")
+        .filter(F.col("doc_id") != F.col("_keep_id"))
+        .select("doc_id")
+    )
+    files_before = set(t.snapshot().files)
+    t.delete_keys_mor(losers, ["doc_id"])
+    snap = t.snapshot()
+    # merge-on-read = the commit WROTE no parquet: losers became
+    # vectors, and a file whose live rows ALL lost is removed
+    # outright (also metadata-only — cheaper than a full-file DV)
+    mor_no_rewrite = int(
+        not (set(snap.files) - files_before)
+        and bool(snap.dvs or (files_before - set(snap.files)))
+    )
+    out = out.unionByName(state(t.read(), "post_dedup"))
+    mode = refresh_rollup(
+        t, silver, prepare, ["lang"], ["n_chars"], app_id="g"
+    )
+    out = out.unionByName(
+        silver.read().select(
+            F.lit("silver").alias("stage"),
+            "lang",
+            F.col("n_rows").alias("n"),
+            F.col("sum_n_chars").cast("long").alias("sum_n_chars"),
         )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    flags = spark.createDataFrame(
+        [
+            ("flags", "mor_no_rewrite", mor_no_rewrite, 0),
+            (
+                "flags",
+                "mode_incremental_cdf",
+                int(mode == "incremental_cdf"),
+                0,
+            ),
+        ],
+        "stage string, lang string, n long, sum_n_chars long",
+    )
+    return out.unionByName(flags)
 
 
 def _auto_maintenance_oracle() -> str:
@@ -3359,9 +3241,9 @@ def _auto_maintenance_oracle() -> str:
     """
 
 
-@query("lakehouse_auto_maintenance_audit", oracle=_auto_maintenance_oracle())
+@audit("lakehouse_auto_maintenance_audit", oracle=_auto_maintenance_oracle())
 def lakehouse_auto_maintenance_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Threshold-driven AUTO-MAINTENANCE under the driver gate
     (``operators/maintenance.py``): the policy engine inspects a
@@ -3395,51 +3277,47 @@ def lakehouse_auto_maintenance_audit(
     from ..sources.lakehouse import SnapshotTable
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="lh_auto_maint_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "t"))
-        t.create(docs.filter(F.col("doc_id") % 16 == 0).coalesce(1))
-        for i in range(1, 16):
-            t.append(docs.filter(F.col("doc_id") % 16 == i).coalesce(1))
-        t.delete_mor(F.col("doc_id") % 5 == 0)
+    t = SnapshotTable(spark, os.path.join(tmp, "t"))
+    t.create(docs.filter(F.col("doc_id") % 16 == 0).coalesce(1))
+    for i in range(1, 16):
+        t.append(docs.filter(F.col("doc_id") % 16 == i).coalesce(1))
+    t.delete_mor(F.col("doc_id") % 5 == 0)
 
-        policy = MaintenancePolicy(
-            small_file_bytes=32 << 20,
-            min_small_files=8,
-            dv_fraction=0.15,
-            max_history=3,
-            vacuum_retain_last=1,
-            orphan_grace_ms=0,
-        )
-        plan = plan_maintenance(t, policy)
-        plan_flags = (
-            int(plan["compact"] is not None),
-            int(any("dv burden" in r for r in plan["reasons"])),
-            int(plan["vacuum"] is not None),
-        )
-        files_before = len(t.snapshot().files)
-        report = auto_maintain(t, policy)
-        snap = t.snapshot()
-        post_flags = (
-            int(not snap.dvs),  # vectors purged by the rewrite
-            int(len(snap.files) < files_before),
-            int(report.get("vacuumed_files", 0) > 0),
-        )
-        out = t.read().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doc_id").cast("long").alias("sum_doc_id"),
-            F.sum("n_chars").cast("long").alias("sum_n_chars"),
-        ).select(
-            F.lit("post_maintenance").alias("probe"),
-            "n", "sum_doc_id", "sum_n_chars",
-        )
-        flags = spark.createDataFrame(
-            [("plan_flags", *plan_flags), ("post_flags", *post_flags)],
-            "probe string, n long, sum_doc_id long, sum_n_chars long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    policy = MaintenancePolicy(
+        small_file_bytes=32 << 20,
+        min_small_files=8,
+        dv_fraction=0.15,
+        max_history=3,
+        vacuum_retain_last=1,
+        orphan_grace_ms=0,
+    )
+    plan = plan_maintenance(t, policy)
+    plan_flags = (
+        int(plan["compact"] is not None),
+        int(any("dv burden" in r for r in plan["reasons"])),
+        int(plan["vacuum"] is not None),
+    )
+    files_before = len(t.snapshot().files)
+    report = auto_maintain(t, policy)
+    snap = t.snapshot()
+    post_flags = (
+        int(not snap.dvs),  # vectors purged by the rewrite
+        int(len(snap.files) < files_before),
+        int(report.get("vacuumed_files", 0) > 0),
+    )
+    out = t.read().agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("doc_id").cast("long").alias("sum_doc_id"),
+        F.sum("n_chars").cast("long").alias("sum_n_chars"),
+    ).select(
+        F.lit("post_maintenance").alias("probe"),
+        "n", "sum_doc_id", "sum_n_chars",
+    )
+    flags = spark.createDataFrame(
+        [("plan_flags", *plan_flags), ("post_flags", *post_flags)],
+        "probe string, n long, sum_doc_id long, sum_n_chars long",
+    )
+    return out.unionByName(flags)
 
 
 def _multi_table_txn_oracle() -> str:
@@ -3469,9 +3347,9 @@ def _multi_table_txn_oracle() -> str:
     """
 
 
-@query("lakehouse_multi_table_txn_audit", oracle=_multi_table_txn_oracle())
+@audit("lakehouse_multi_table_txn_audit", oracle=_multi_table_txn_oracle())
 def lakehouse_multi_table_txn_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """MULTI-TABLE TRANSACTIONS under the driver gate
     (``sources/txn_catalog.py``): cross-table atomicity via a pinned
@@ -3505,69 +3383,65 @@ def lakehouse_multi_table_txn_audit(
     rollup = lambda df: df.groupBy("event_type").agg(  # noqa: E731
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    tmp = tempfile.mkdtemp(prefix="lh_txn_audit_")
+    cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
+    fact = SnapshotTable(spark, os.path.join(tmp, "fact"))
+    fact.create(ev.filter(F.col("event_id") % 2 == 0))
+    summ = SnapshotTable(spark, os.path.join(tmp, "summary"))
+    summ.create(rollup(ev.filter(F.col("event_id") % 2 == 0)))
+    cat.register("fact", fact.path)
+    cat.register("summary", summ.path)
+
+    def fact_stats(df, probe):
+        return df.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("event_id").cast("long").alias("agg"),
+        ).select(F.lit(probe).alias("probe"), "n", "agg")
+
+    def summ_stats(df, probe):
+        return df.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("cnt").cast("long").alias("agg"),
+        ).select(F.lit(probe).alias("probe"), "n", "agg")
+
+    out = fact_stats(cat.read("fact"), "pre_fact").unionByName(
+        summ_stats(cat.read("summary"), "pre_summary")
+    )
+
+    pre_n_fact = cat.read("fact").count()
+    pre_total = (
+        cat.read("summary").agg(F.sum("cnt")).collect()[0][0]
+    )
+    txn = cat.transaction()
+    txn.table("fact").append(ev.filter(F.col("event_id") % 2 == 1))
+    txn.table("summary").overwrite(rollup(ev))
+    staged_invisible = int(
+        cat.read("fact").count() == pre_n_fact
+        and cat.read("summary").agg(F.sum("cnt")).collect()[0][0]
+        == pre_total
+    )
+    # a rival stages on fact while txn holds the old pins
+    rival = cat.transaction()
+    txn.commit()
+    rival.table("fact").append(ev.limit(1))
+    conflict_refused = 0
     try:
-        cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
-        fact = SnapshotTable(spark, os.path.join(tmp, "fact"))
-        fact.create(ev.filter(F.col("event_id") % 2 == 0))
-        summ = SnapshotTable(spark, os.path.join(tmp, "summary"))
-        summ.create(rollup(ev.filter(F.col("event_id") % 2 == 0)))
-        cat.register("fact", fact.path)
-        cat.register("summary", summ.path)
+        rival.commit()
+    except TransactionConflict:
+        conflict_refused = int(
+            cat.read("fact").count() == ev.count()
+        )  # and the committed state did not move
 
-        def fact_stats(df, probe):
-            return df.agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("event_id").cast("long").alias("agg"),
-            ).select(F.lit(probe).alias("probe"), "n", "agg")
-
-        def summ_stats(df, probe):
-            return df.agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("cnt").cast("long").alias("agg"),
-            ).select(F.lit(probe).alias("probe"), "n", "agg")
-
-        out = fact_stats(cat.read("fact"), "pre_fact").unionByName(
-            summ_stats(cat.read("summary"), "pre_summary")
-        )
-
-        pre_n_fact = cat.read("fact").count()
-        pre_total = (
-            cat.read("summary").agg(F.sum("cnt")).collect()[0][0]
-        )
-        txn = cat.transaction()
-        txn.table("fact").append(ev.filter(F.col("event_id") % 2 == 1))
-        txn.table("summary").overwrite(rollup(ev))
-        staged_invisible = int(
-            cat.read("fact").count() == pre_n_fact
-            and cat.read("summary").agg(F.sum("cnt")).collect()[0][0]
-            == pre_total
-        )
-        # a rival stages on fact while txn holds the old pins
-        rival = cat.transaction()
-        txn.commit()
-        rival.table("fact").append(ev.limit(1))
-        conflict_refused = 0
-        try:
-            rival.commit()
-        except TransactionConflict:
-            conflict_refused = int(
-                cat.read("fact").count() == ev.count()
-            )  # and the committed state did not move
-
-        out = out.unionByName(
-            fact_stats(cat.read("fact"), "post_fact")
-        ).unionByName(summ_stats(cat.read("summary"), "post_summary"))
-        flags = spark.createDataFrame(
-            [
-                ("staged_invisible", staged_invisible, staged_invisible),
-                ("conflict_refused", conflict_refused, conflict_refused),
-            ],
-            "probe string, n long, agg long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    out = out.unionByName(
+        fact_stats(cat.read("fact"), "post_fact")
+    ).unionByName(summ_stats(cat.read("summary"), "post_summary"))
+    flags = spark.createDataFrame(
+        [
+            ("staged_invisible", staged_invisible, staged_invisible),
+            ("conflict_refused", conflict_refused, conflict_refused),
+        ],
+        "probe string, n long, agg long",
+    )
+    return out.unionByName(flags)
 
 
 def _tag_retention_oracle() -> str:
@@ -3591,9 +3465,9 @@ def _tag_retention_oracle() -> str:
     """
 
 
-@query("lakehouse_tag_retention_audit", oracle=_tag_retention_oracle())
+@audit("lakehouse_tag_retention_audit", oracle=_tag_retention_oracle())
 def lakehouse_tag_retention_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Named TAGS (Iceberg-style refs) under the driver gate
     (``sources/lakehouse.py:create_tag`` / ``vacuum(keep_versions)``):
@@ -3618,55 +3492,51 @@ def lakehouse_tag_retention_audit(
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id")
-    tmp = tempfile.mkdtemp(prefix="lh_tag_audit_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "t"))
-        t.create(ev.filter(F.col("event_id") % 3 == 0))
-        t.append(ev.filter(F.col("event_id") % 3 == 1))   # v2 (delta)
-        t.append(ev.filter(F.col("event_id") % 3 == 2))   # v3
-        t.overwrite(ev.filter(F.col("event_id") % 5 == 0))  # v4
-        t.create_tag("audit-hold", version=2)
-        t.vacuum(retain_last=1, orphan_grace_ms=0)
+    t = SnapshotTable(spark, os.path.join(tmp, "t"))
+    t.create(ev.filter(F.col("event_id") % 3 == 0))
+    t.append(ev.filter(F.col("event_id") % 3 == 1))   # v2 (delta)
+    t.append(ev.filter(F.col("event_id") % 3 == 2))   # v3
+    t.overwrite(ev.filter(F.col("event_id") % 5 == 0))  # v4
+    t.create_tag("audit-hold", version=2)
+    t.vacuum(retain_last=1, orphan_grace_ms=0)
 
-        def agg(df, probe):
-            return df.agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("event_id").cast("long").alias("agg"),
-            ).select(F.lit(probe).alias("probe"), "n", "agg")
+    def agg(df, probe):
+        return df.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("event_id").cast("long").alias("agg"),
+        ).select(F.lit(probe).alias("probe"), "n", "agg")
 
-        # materialize the probes BEFORE the tag drop: the second vacuum
-        # deletes v2's files, and a lazy plan would re-read them
-        out = (
-            agg(t.read(tag="audit-hold"), "tag_read")
-            .unionByName(agg(t.read(), "head_read"))
-            .localCheckpoint(eager=True)
-        )
-        refused = 0
-        for v in (1, 3):
-            try:
-                t.read(version=v)
-            except LookupError:
-                refused += 1
-        raw2 = t._raw(2)
-        gap_ok = int(
-            "base_version" not in raw2
-            and bool(raw2.get("files"))
-            and bool(raw2.get("add"))  # commit delta survived the rewrite
-        )
-        t.drop_tag("audit-hold")
-        t.vacuum(retain_last=1, orphan_grace_ms=0)
-        released = int(t._versions() == [4])
-        flags = spark.createDataFrame(
-            [
-                ("expired_refused", refused, refused),
-                ("gap_materialized", gap_ok, gap_ok),
-                ("released_after_drop", released, released),
-            ],
-            "probe string, n long, agg long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # materialize the probes BEFORE the tag drop: the second vacuum
+    # deletes v2's files, and a lazy plan would re-read them
+    out = (
+        agg(t.read(tag="audit-hold"), "tag_read")
+        .unionByName(agg(t.read(), "head_read"))
+        .localCheckpoint(eager=True)
+    )
+    refused = 0
+    for v in (1, 3):
+        try:
+            t.read(version=v)
+        except LookupError:
+            refused += 1
+    raw2 = t._raw(2)
+    gap_ok = int(
+        "base_version" not in raw2
+        and bool(raw2.get("files"))
+        and bool(raw2.get("add"))  # commit delta survived the rewrite
+    )
+    t.drop_tag("audit-hold")
+    t.vacuum(retain_last=1, orphan_grace_ms=0)
+    released = int(t._versions() == [4])
+    flags = spark.createDataFrame(
+        [
+            ("expired_refused", refused, refused),
+            ("gap_materialized", gap_ok, gap_ok),
+            ("released_after_drop", released, released),
+        ],
+        "probe string, n long, agg long",
+    )
+    return out.unionByName(flags)
 
 
 def _txn_medallion_oracle() -> str:
@@ -3706,9 +3576,9 @@ def _txn_medallion_oracle() -> str:
     """
 
 
-@query("lakehouse_txn_medallion_audit", oracle=_txn_medallion_oracle())
+@audit("lakehouse_txn_medallion_audit", oracle=_txn_medallion_oracle())
 def lakehouse_txn_medallion_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """TRANSACTION-SCOPED medallion refresh under the driver gate
     (``plans/txn_refresh.py``): silver and gold move in ONE catalog
@@ -3752,84 +3622,80 @@ def lakehouse_txn_medallion_audit(
         group_cols=["g"],
         sum_cols=["sv"],
     )
-    tmp = tempfile.mkdtemp(prefix="lh_txn_med_")
-    try:
-        bronze = SnapshotTable(spark, os.path.join(tmp, "bronze"))
-        bronze.create(ev.filter(F.col("event_id") % 2 == 0))
-        cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
-        cat.register("silver", os.path.join(tmp, "silver"))
-        cat.register("gold", os.path.join(tmp, "gold"))
+    bronze = SnapshotTable(spark, os.path.join(tmp, "bronze"))
+    bronze.create(ev.filter(F.col("event_id") % 2 == 0))
+    cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
+    cat.register("silver", os.path.join(tmp, "silver"))
+    cat.register("gold", os.path.join(tmp, "gold"))
 
-        def silver_probe(probe, catalog_version=None):
-            return cat.read("silver", catalog_version).agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("sum_event_id").cast("long").alias("agg"),
-            ).select(F.lit(probe).alias("probe"), "n", "agg")
+    def silver_probe(probe, catalog_version=None):
+        return cat.read("silver", catalog_version).agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("sum_event_id").cast("long").alias("agg"),
+        ).select(F.lit(probe).alias("probe"), "n", "agg")
 
-        def gold_probe(probe):
-            return cat.read("gold").agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("sum_sv").cast("long").alias("agg"),
-            ).select(F.lit(probe).alias("probe"), "n", "agg")
+    def gold_probe(probe):
+        return cat.read("gold").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("sum_sv").cast("long").alias("agg"),
+        ).select(F.lit(probe).alias("probe"), "n", "agg")
 
-        r1 = refresh_medallion_txn(
-            cat, bronze, "silver", "gold", silver_spec, gold_spec
-        )
-        out = silver_probe("t1_silver").unionByName(gold_probe("t1_gold"))
-        t1_total = cat.read("gold").collect()[0].sum_sv
+    r1 = refresh_medallion_txn(
+        cat, bronze, "silver", "gold", silver_spec, gold_spec
+    )
+    out = silver_probe("t1_silver").unionByName(gold_probe("t1_gold"))
+    t1_total = cat.read("gold").collect()[0].sum_sv
 
-        bronze.append(ev.filter(F.col("event_id") % 2 == 1))
-        ghost = cat.transaction()
-        from ..operators.rollup import refresh_rollup
+    bronze.append(ev.filter(F.col("event_id") % 2 == 1))
+    ghost = cat.transaction()
+    from ..operators.rollup import refresh_rollup
 
-        refresh_rollup(
-            bronze,
-            ghost.table("silver"),
-            silver_spec.prepare,
-            silver_spec.group_cols,
-            silver_spec.sum_cols,
-            app_id="medallion_txn:silver",
-            since=cat.last_committed_batch("medallion_txn:silver"),
-        )
-        staged_invisible = int(
-            cat.read("gold").collect()[0].sum_sv == t1_total
-        )
-        ghost.abandon()
-        r2 = refresh_medallion_txn(
-            cat, bronze, "silver", "gold", silver_spec, gold_spec
-        )
-        out = out.unionByName(silver_probe("t2_silver")).unionByName(
-            gold_probe("t2_gold")
-        )
-        cat_v2 = cat.state()["version"]
+    refresh_rollup(
+        bronze,
+        ghost.table("silver"),
+        silver_spec.prepare,
+        silver_spec.group_cols,
+        silver_spec.sum_cols,
+        app_id="medallion_txn:silver",
+        since=cat.last_committed_batch("medallion_txn:silver"),
+    )
+    staged_invisible = int(
+        cat.read("gold").collect()[0].sum_sv == t1_total
+    )
+    ghost.abandon()
+    r2 = refresh_medallion_txn(
+        cat, bronze, "silver", "gold", silver_spec, gold_spec
+    )
+    out = out.unionByName(silver_probe("t2_silver")).unionByName(
+        gold_probe("t2_gold")
+    )
+    cat_v2 = cat.state()["version"]
 
-        bronze.delete_mor(F.col("user_id") % 7 == 3)
-        r3 = refresh_medallion_txn(
-            cat, bronze, "silver", "gold", silver_spec, gold_spec
+    bronze.delete_mor(F.col("user_id") % 7 == 3)
+    r3 = refresh_medallion_txn(
+        cat, bronze, "silver", "gold", silver_spec, gold_spec
+    )
+    out = (
+        out.unionByName(silver_probe("t3_silver"))
+        .unionByName(gold_probe("t3_gold"))
+        .unionByName(
+            silver_probe("history_silver", catalog_version=cat_v2)
         )
-        out = (
-            out.unionByName(silver_probe("t3_silver"))
-            .unionByName(gold_probe("t3_gold"))
-            .unionByName(
-                silver_probe("history_silver", catalog_version=cat_v2)
-            )
-        )
-        modes_ok = int(
-            (r1["silver"], r1["gold"]) == ("full", "full")
-            and r2["silver"] == "incremental"
-            and r3["silver"] == "incremental_cdf"
-            and r3["catalog_version"] is not None
-        )
-        flags = spark.createDataFrame(
-            [
-                ("staged_invisible", staged_invisible, staged_invisible),
-                ("modes_claimed", modes_ok, modes_ok),
-            ],
-            "probe string, n long, agg long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    modes_ok = int(
+        (r1["silver"], r1["gold"]) == ("full", "full")
+        and r2["silver"] == "incremental"
+        and r3["silver"] == "incremental_cdf"
+        and r3["catalog_version"] is not None
+    )
+    flags = spark.createDataFrame(
+        [
+            ("staged_invisible", staged_invisible, staged_invisible),
+            ("modes_claimed", modes_ok, modes_ok),
+        ],
+        "probe string, n long, agg long",
+    )
+    return out.unionByName(flags)
 
 
 def _merge_when_oracle() -> str:
@@ -3868,9 +3734,9 @@ def _merge_when_oracle() -> str:
     """
 
 
-@query("lakehouse_merge_when_audit", oracle=_merge_when_oracle())
+@audit("lakehouse_merge_when_audit", oracle=_merge_when_oracle())
 def lakehouse_merge_when_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """CONDITIONAL MERGE under the driver gate
     (``sources/lakehouse.py:merge_when``): the full MERGE INTO clause
@@ -3889,33 +3755,29 @@ def lakehouse_merge_when_audit(
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    tmp = tempfile.mkdtemp(prefix="lh_merge_when_")
-    try:
-        t = SnapshotTable(spark, os.path.join(tmp, "t"))
-        t.create(ev.filter(F.col("event_id") % 3 == 0))
-        src = ev.filter(F.col("event_id") % 4 == 0).select(
-            "event_id", (F.col("user_id") + 1000).alias("user_id")
-        )
-        t.merge_when(
-            src,
-            ["event_id"],
-            matched_update={
-                "user_id": F.col("t.user_id") + F.col("s.user_id")
-            },
-            matched_update_cond=F.col("s.user_id") % 2 == 0,
-            matched_delete_cond=F.col("s.user_id") % 5 == 0,
-        )
-        out = t.read().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("user_id").cast("long").alias("agg"),
-        ).select(F.lit("final_users").alias("probe"), "n", "agg")
-        out2 = t.read().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("event_id").cast("long").alias("agg"),
-        ).select(F.lit("final_events").alias("probe"), "n", "agg")
-        return out.unionByName(out2).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    t = SnapshotTable(spark, os.path.join(tmp, "t"))
+    t.create(ev.filter(F.col("event_id") % 3 == 0))
+    src = ev.filter(F.col("event_id") % 4 == 0).select(
+        "event_id", (F.col("user_id") + 1000).alias("user_id")
+    )
+    t.merge_when(
+        src,
+        ["event_id"],
+        matched_update={
+            "user_id": F.col("t.user_id") + F.col("s.user_id")
+        },
+        matched_update_cond=F.col("s.user_id") % 2 == 0,
+        matched_delete_cond=F.col("s.user_id") % 5 == 0,
+    )
+    out = t.read().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("user_id").cast("long").alias("agg"),
+    ).select(F.lit("final_users").alias("probe"), "n", "agg")
+    out2 = t.read().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("event_id").cast("long").alias("agg"),
+    ).select(F.lit("final_events").alias("probe"), "n", "agg")
+    return out.unionByName(out2)
 
 
 def _branch_merge_oracle() -> str:
@@ -3944,9 +3806,9 @@ def _branch_merge_oracle() -> str:
     """
 
 
-@query("lakehouse_branch_merge_audit", oracle=_branch_merge_oracle())
+@audit("lakehouse_branch_merge_audit", oracle=_branch_merge_oracle())
 def lakehouse_branch_merge_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Writable BRANCH refs + squash merge-back under the driver gate
     (``sources/lakehouse.py:create_branch``/``merge_branch`` — the
@@ -3975,56 +3837,52 @@ def lakehouse_branch_merge_audit(
     from ..sources.lakehouse import BranchMergeConflict, SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id")
-    tmp = tempfile.mkdtemp(prefix="lh_branch_audit_")
+    t = SnapshotTable(spark, os.path.join(tmp, "t"))
+    t.create(ev.filter(F.col("event_id") % 3 == 0))
+    br = t.create_branch("exp")
+    br.delete(F.col("event_id") % 5 == 0)
+    br.append(ev.filter(F.col("event_id") % 3 == 1))
+    t.append(ev.filter(F.col("event_id") % 3 == 2))
+
+    def agg(df, probe):
+        return df.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("event_id").cast("long").alias("agg"),
+        ).select(F.lit(probe).alias("probe"), "n", "agg")
+
+    out = agg(t.read(), "main_pre_merge").unionByName(
+        agg(br.read(), "branch_pre_merge")
+    )
+    t.merge_branch("exp")
+    out = out.unionByName(agg(t.read(), "post_merge"))
+    ref_released = int("exp" not in t.branches())
+
+    # refusal path: ONE file, both sides rewrite it
+    c = SnapshotTable(spark, os.path.join(tmp, "c"))
+    c.create(
+        ev.filter(F.col("event_id") % 100 == 0).coalesce(1)
+    )
+    bad = c.create_branch("bad")
+    bad.delete(F.col("event_id") % 200 == 0)
+    c.delete(F.col("event_id") % 200 == 100)
+    pre = c.read().count()
+    conflict_refused = 0
     try:
-        t = SnapshotTable(spark, os.path.join(tmp, "t"))
-        t.create(ev.filter(F.col("event_id") % 3 == 0))
-        br = t.create_branch("exp")
-        br.delete(F.col("event_id") % 5 == 0)
-        br.append(ev.filter(F.col("event_id") % 3 == 1))
-        t.append(ev.filter(F.col("event_id") % 3 == 2))
-
-        def agg(df, probe):
-            return df.agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("event_id").cast("long").alias("agg"),
-            ).select(F.lit(probe).alias("probe"), "n", "agg")
-
-        out = agg(t.read(), "main_pre_merge").unionByName(
-            agg(br.read(), "branch_pre_merge")
+        c.merge_branch("bad")
+    except BranchMergeConflict:
+        conflict_refused = int(
+            c.read().count() == pre  # main unmoved
+            and "bad" in c.branches()  # ref intact for the rebase
+            and bad.read().count() > 0  # branch still readable
         )
-        t.merge_branch("exp")
-        out = out.unionByName(agg(t.read(), "post_merge"))
-        ref_released = int("exp" not in t.branches())
-
-        # refusal path: ONE file, both sides rewrite it
-        c = SnapshotTable(spark, os.path.join(tmp, "c"))
-        c.create(
-            ev.filter(F.col("event_id") % 100 == 0).coalesce(1)
-        )
-        bad = c.create_branch("bad")
-        bad.delete(F.col("event_id") % 200 == 0)
-        c.delete(F.col("event_id") % 200 == 100)
-        pre = c.read().count()
-        conflict_refused = 0
-        try:
-            c.merge_branch("bad")
-        except BranchMergeConflict:
-            conflict_refused = int(
-                c.read().count() == pre  # main unmoved
-                and "bad" in c.branches()  # ref intact for the rebase
-                and bad.read().count() > 0  # branch still readable
-            )
-        flags = spark.createDataFrame(
-            [
-                ("conflict_refused", conflict_refused, conflict_refused),
-                ("ref_released", ref_released, ref_released),
-            ],
-            "probe string, n long, agg long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    flags = spark.createDataFrame(
+        [
+            ("conflict_refused", conflict_refused, conflict_refused),
+            ("ref_released", ref_released, ref_released),
+        ],
+        "probe string, n long, agg long",
+    )
+    return out.unionByName(flags)
 
 
 def _txn_chain_stream_oracle() -> str:
@@ -4062,9 +3920,9 @@ def _txn_chain_stream_oracle() -> str:
     """
 
 
-@query("streaming_txn_chain_audit", oracle=_txn_chain_stream_oracle())
+@audit("streaming_txn_chain_audit", oracle=_txn_chain_stream_oracle())
 def streaming_txn_chain_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """STREAMING multi-table transactional chain under the driver gate
     (``plans/txn_refresh.py:maintain_chain_stream`` — the composition
@@ -4114,81 +3972,77 @@ def streaming_txn_chain_audit(
         sum_cols=["sv"],
     )
     layers = [("silver", silver_spec), ("gold", gold_spec)]
-    tmp = tempfile.mkdtemp(prefix="lh_txn_chain_stream_")
-    try:
-        cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
-        bronze = SnapshotTable(spark, os.path.join(tmp, "bronze"))
-        cat.register("silver", os.path.join(tmp, "silver"))
-        cat.register("gold", os.path.join(tmp, "gold"))
-        ckpt = os.path.join(tmp, "ckpt")
-        bronze.create(ev.filter(F.col("event_id") % 2 == 0))
-        ticks = []
+    cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
+    bronze = SnapshotTable(spark, os.path.join(tmp, "bronze"))
+    cat.register("silver", os.path.join(tmp, "silver"))
+    cat.register("gold", os.path.join(tmp, "gold"))
+    ckpt = os.path.join(tmp, "ckpt")
+    bronze.create(ev.filter(F.col("event_id") % 2 == 0))
+    ticks = []
 
-        def probes(tag):
-            s = cat.read("silver").agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("sum_event_id").cast("long").alias("agg"),
-            ).select(F.lit(f"{tag}_silver").alias("probe"), "n", "agg")
-            g = cat.read("gold").agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("sum_sv").cast("long").alias("agg"),
-            ).select(F.lit(f"{tag}_gold").alias("probe"), "n", "agg")
-            return s.unionByName(g).localCheckpoint(eager=True)
+    def probes(tag):
+        s = cat.read("silver").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("sum_event_id").cast("long").alias("agg"),
+        ).select(F.lit(f"{tag}_silver").alias("probe"), "n", "agg")
+        g = cat.read("gold").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("sum_sv").cast("long").alias("agg"),
+        ).select(F.lit(f"{tag}_gold").alias("probe"), "n", "agg")
+        return s.unionByName(g).localCheckpoint(eager=True)
 
-        ticks += maintain_chain_stream(cat, bronze, layers, ckpt)
-        out = probes("t1")
-        bronze.append(ev.filter(F.col("event_id") % 2 == 1))
-        ticks += maintain_chain_stream(cat, bronze, layers, ckpt)
-        out = out.unionByName(probes("t2"))
+    ticks += maintain_chain_stream(cat, bronze, layers, ckpt)
+    out = probes("t1")
+    bronze.append(ev.filter(F.col("event_id") % 2 == 1))
+    ticks += maintain_chain_stream(cat, bronze, layers, ckpt)
+    out = out.unionByName(probes("t2"))
 
-        # checkpoint loss: replayed ticks must spend NO catalog version
-        cat_head = cat._versions()[-1]
-        shutil.rmtree(ckpt)
-        replayed = maintain_chain_stream(cat, bronze, layers, ckpt)
-        replay_noop = int(
-            all(r["catalog_version"] is None for r in replayed)
-            and cat._versions()[-1] == cat_head
-        )
+    # checkpoint loss: replayed ticks must spend NO catalog version
+    cat_head = cat._versions()[-1]
+    shutil.rmtree(ckpt)
+    replayed = maintain_chain_stream(cat, bronze, layers, ckpt)
+    replay_noop = int(
+        all(r["catalog_version"] is None for r in replayed)
+        and cat._versions()[-1] == cat_head
+    )
 
-        bronze.delete_mor(F.col("user_id") % 7 == 3)
-        ticks += maintain_chain_stream(cat, bronze, layers, ckpt)
-        out = out.unionByName(probes("t3"))
+    bronze.delete_mor(F.col("user_id") % 7 == 3)
+    ticks += maintain_chain_stream(cat, bronze, layers, ckpt)
+    out = out.unionByName(probes("t3"))
 
-        cas_per_range = int(
-            all(r["catalog_version"] is not None for r in ticks)
-            and len({r["catalog_version"] for r in ticks}) == len(ticks)
-        )
-        # the composition's reason to exist: NO catalog state ever
-        # pairs one layer's new state with the other's stale one
-        torn = 0
-        for v in cat._versions():
-            try:
-                sv = (
-                    cat.read("silver", catalog_version=v)
-                    .agg(F.sum("sum_event_id"))
-                    .collect()[0][0]
-                )
-                gv = (
-                    cat.read("gold", catalog_version=v)
-                    .agg(F.sum("sum_sv"))
-                    .collect()[0][0]
-                )
-            except (KeyError, LookupError, FileNotFoundError, ValueError):
-                continue  # not registered / no committed pin at v
-            if sv != gv:
-                torn += 1
-        never_torn = int(torn == 0)
-        flags = spark.createDataFrame(
-            [
-                ("cas_per_range", cas_per_range, cas_per_range),
-                ("replay_noop", replay_noop, replay_noop),
-                ("never_torn", never_torn, never_torn),
-            ],
-            "probe string, n long, agg long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    cas_per_range = int(
+        all(r["catalog_version"] is not None for r in ticks)
+        and len({r["catalog_version"] for r in ticks}) == len(ticks)
+    )
+    # the composition's reason to exist: NO catalog state ever
+    # pairs one layer's new state with the other's stale one
+    torn = 0
+    for v in cat._versions():
+        try:
+            sv = (
+                cat.read("silver", catalog_version=v)
+                .agg(F.sum("sum_event_id"))
+                .collect()[0][0]
+            )
+            gv = (
+                cat.read("gold", catalog_version=v)
+                .agg(F.sum("sum_sv"))
+                .collect()[0][0]
+            )
+        except (KeyError, LookupError, FileNotFoundError, ValueError):
+            continue  # not registered / no committed pin at v
+        if sv != gv:
+            torn += 1
+    never_torn = int(torn == 0)
+    flags = spark.createDataFrame(
+        [
+            ("cas_per_range", cas_per_range, cas_per_range),
+            ("replay_noop", replay_noop, replay_noop),
+            ("never_torn", never_torn, never_torn),
+        ],
+        "probe string, n long, agg long",
+    )
+    return out.unionByName(flags)
 
 
 def _catalog_branch_oracle() -> str:
@@ -4223,9 +4077,9 @@ def _catalog_branch_oracle() -> str:
     """
 
 
-@query("lakehouse_catalog_branch_audit", oracle=_catalog_branch_oracle())
+@audit("lakehouse_catalog_branch_audit", oracle=_catalog_branch_oracle())
 def lakehouse_catalog_branch_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """WAREHOUSE-level branches under the driver gate
     (``sources/txn_catalog.py:PinnedCatalog.create_branch`` /
@@ -4282,127 +4136,123 @@ def lakehouse_catalog_branch_audit(
         sum_cols=["sv"],
     )
     layers = [("silver", silver_spec), ("gold", gold_spec)]
-    tmp = tempfile.mkdtemp(prefix="lh_cat_branch_")
+    cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
+    bronze = SnapshotTable(spark, os.path.join(tmp, "bronze"))
+    bronze.create(ev.filter(F.col("event_id") % 2 == 0))
+    cat.register("bronze", bronze.path)  # pins to bronze v1
+    cat.register("silver", os.path.join(tmp, "silver"))
+    cat.register("gold", os.path.join(tmp, "gold"))
+    refresh_chain_txn(cat, bronze, layers, app_id="main_tick")
+
+    def gold_probe(c, tag):
+        return c.read("gold").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("sum_sv").cast("long").alias("agg"),
+        ).select(F.lit(tag).alias("probe"), "n", "agg")
+
+    bcat = cat.create_branch("exp")
+    # the branch's OWN bronze gains the %2==1 slice, folded through
+    # a transactional tick against the BRANCH catalog
+    btxn = bcat.transaction()
+    btxn.table("bronze").append(ev.filter(F.col("event_id") % 2 == 1))
+    btxn.commit()
+    # the branch tick is the ALWAYS-ON form: the streaming chain
+    # drains the branch bronze's commit log (clone + append) as
+    # checkpointed micro-batches against the BRANCH catalog —
+    # every range spends a branch CAS, main's version never moves
+    main_v_pre_tick = cat.state()["version"]
+    ticks = maintain_chain_stream(
+        bcat,
+        bcat.table("bronze"),
+        layers,
+        os.path.join(tmp, "bckpt"),
+        app_id="branch_tick",
+    )
+    branch_stream_tick = int(
+        len(ticks) > 0
+        and all(r["catalog_version"] is not None for r in ticks)
+        and cat.state()["version"] == main_v_pre_tick
+    )
+    # main's bronze moves meanwhile (a plain append — commutes at
+    # file level, so the merge REBASES instead of refusing; no tick
+    # runs after it, so main's silver/gold probes are unaffected)
+    mtxn = cat.transaction()
+    mtxn.table("bronze").append(
+        ev.filter(F.col("event_id") % 100 == 7)
+    )
+    mtxn.commit()
+
+    out = gold_probe(cat, "main_pre_merge_gold").unionByName(
+        gold_probe(bcat, "branch_gold")
+    ).localCheckpoint(eager=True)
+
+    v_before = cat.state()["version"]
+    v = cat.merge_branch("exp")
+    merge_one_cas = int(v == v_before + 1)
+    refs_released = int(
+        "exp" not in cat.branches()
+        and "cat-exp" not in cat.table("silver").branches()
+    )
+    out = out.unionByName(
+        gold_probe(cat, "post_merge_gold")
+    ).unionByName(
+        cat.read("silver")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("sum_event_id").cast("long").alias("agg"),
+        )
+        .select(F.lit("post_merge_silver").alias("probe"), "n", "agg")
+    ).localCheckpoint(eager=True)
+
+    # conflict warehouse: dim merges cleanly, fact conflicts
+    c2 = PinnedCatalog(spark, os.path.join(tmp, "cat2"))
+    c2.register("dim", os.path.join(tmp, "dim"))
+    c2.register("fact", os.path.join(tmp, "fact"))
+    t2 = c2.transaction()
+    t2.table("dim").create(
+        ev.filter(F.col("event_id") % 100 == 0).coalesce(1)
+    )
+    t2.table("fact").create(
+        ev.filter(F.col("event_id") % 100 == 1).coalesce(1)
+    )
+    t2.commit()
+    b2 = c2.create_branch("bad")
+    bt2 = b2.transaction()
+    bt2.table("dim").append(ev.filter(F.col("event_id") % 100 == 2))
+    bt2.table("fact").delete(F.col("event_id") % 200 == 1)
+    bt2.commit()
+    m2 = c2.transaction()
+    m2.table("fact").delete(F.col("event_id") % 200 == 101)
+    m2.commit()
+    dim_pre = c2.read("dim").count()
+    fact_pre = c2.read("fact").count()
+    all_or_nothing = 0
     try:
-        cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
-        bronze = SnapshotTable(spark, os.path.join(tmp, "bronze"))
-        bronze.create(ev.filter(F.col("event_id") % 2 == 0))
-        cat.register("bronze", bronze.path)  # pins to bronze v1
-        cat.register("silver", os.path.join(tmp, "silver"))
-        cat.register("gold", os.path.join(tmp, "gold"))
-        refresh_chain_txn(cat, bronze, layers, app_id="main_tick")
-
-        def gold_probe(c, tag):
-            return c.read("gold").agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("sum_sv").cast("long").alias("agg"),
-            ).select(F.lit(tag).alias("probe"), "n", "agg")
-
-        bcat = cat.create_branch("exp")
-        # the branch's OWN bronze gains the %2==1 slice, folded through
-        # a transactional tick against the BRANCH catalog
-        btxn = bcat.transaction()
-        btxn.table("bronze").append(ev.filter(F.col("event_id") % 2 == 1))
-        btxn.commit()
-        # the branch tick is the ALWAYS-ON form: the streaming chain
-        # drains the branch bronze's commit log (clone + append) as
-        # checkpointed micro-batches against the BRANCH catalog —
-        # every range spends a branch CAS, main's version never moves
-        main_v_pre_tick = cat.state()["version"]
-        ticks = maintain_chain_stream(
-            bcat,
-            bcat.table("bronze"),
-            layers,
-            os.path.join(tmp, "bckpt"),
-            app_id="branch_tick",
+        c2.merge_branch("bad")
+    except BranchMergeConflict:
+        all_or_nothing = int(
+            c2.read("dim").count() == dim_pre  # clean merge rolled back
+            and c2.read("fact").count() == fact_pre
+            and "bad" in c2.branches()  # intact for the rebase
         )
-        branch_stream_tick = int(
-            len(ticks) > 0
-            and all(r["catalog_version"] is not None for r in ticks)
-            and cat.state()["version"] == main_v_pre_tick
-        )
-        # main's bronze moves meanwhile (a plain append — commutes at
-        # file level, so the merge REBASES instead of refusing; no tick
-        # runs after it, so main's silver/gold probes are unaffected)
-        mtxn = cat.transaction()
-        mtxn.table("bronze").append(
-            ev.filter(F.col("event_id") % 100 == 7)
-        )
-        mtxn.commit()
-
-        out = gold_probe(cat, "main_pre_merge_gold").unionByName(
-            gold_probe(bcat, "branch_gold")
-        ).localCheckpoint(eager=True)
-
-        v_before = cat.state()["version"]
-        v = cat.merge_branch("exp")
-        merge_one_cas = int(v == v_before + 1)
-        refs_released = int(
-            "exp" not in cat.branches()
-            and "cat-exp" not in cat.table("silver").branches()
-        )
-        out = out.unionByName(
-            gold_probe(cat, "post_merge_gold")
-        ).unionByName(
-            cat.read("silver")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("sum_event_id").cast("long").alias("agg"),
-            )
-            .select(F.lit("post_merge_silver").alias("probe"), "n", "agg")
-        ).localCheckpoint(eager=True)
-
-        # conflict warehouse: dim merges cleanly, fact conflicts
-        c2 = PinnedCatalog(spark, os.path.join(tmp, "cat2"))
-        c2.register("dim", os.path.join(tmp, "dim"))
-        c2.register("fact", os.path.join(tmp, "fact"))
-        t2 = c2.transaction()
-        t2.table("dim").create(
-            ev.filter(F.col("event_id") % 100 == 0).coalesce(1)
-        )
-        t2.table("fact").create(
-            ev.filter(F.col("event_id") % 100 == 1).coalesce(1)
-        )
-        t2.commit()
-        b2 = c2.create_branch("bad")
-        bt2 = b2.transaction()
-        bt2.table("dim").append(ev.filter(F.col("event_id") % 100 == 2))
-        bt2.table("fact").delete(F.col("event_id") % 200 == 1)
-        bt2.commit()
-        m2 = c2.transaction()
-        m2.table("fact").delete(F.col("event_id") % 200 == 101)
-        m2.commit()
-        dim_pre = c2.read("dim").count()
-        fact_pre = c2.read("fact").count()
-        all_or_nothing = 0
-        try:
-            c2.merge_branch("bad")
-        except BranchMergeConflict:
-            all_or_nothing = int(
-                c2.read("dim").count() == dim_pre  # clean merge rolled back
-                and c2.read("fact").count() == fact_pre
-                and "bad" in c2.branches()  # intact for the rebase
-            )
-        flags = spark.createDataFrame(
-            [
-                ("merge_one_cas", merge_one_cas, merge_one_cas),
-                (
-                    "conflict_all_or_nothing",
-                    all_or_nothing,
-                    all_or_nothing,
-                ),
-                ("refs_released", refs_released, refs_released),
-                (
-                    "branch_stream_tick",
-                    branch_stream_tick,
-                    branch_stream_tick,
-                ),
-            ],
-            "probe string, n long, agg long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    flags = spark.createDataFrame(
+        [
+            ("merge_one_cas", merge_one_cas, merge_one_cas),
+            (
+                "conflict_all_or_nothing",
+                all_or_nothing,
+                all_or_nothing,
+            ),
+            ("refs_released", refs_released, refs_released),
+            (
+                "branch_stream_tick",
+                branch_stream_tick,
+                branch_stream_tick,
+            ),
+        ],
+        "probe string, n long, agg long",
+    )
+    return out.unionByName(flags)
 
 
 def _erase_oracle() -> str:
@@ -4430,8 +4280,8 @@ def _erase_oracle() -> str:
     """
 
 
-@query("lakehouse_erase_audit", oracle=_erase_oracle())
-def lakehouse_erase_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_erase_audit", oracle=_erase_oracle())
+def lakehouse_erase_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """RIGHT-TO-BE-FORGOTTEN erasure under the driver gate
     (``sources/lakehouse.py:erase_rows``): every physical trace of the
     subject's rows leaves the table directory — live files, DV-hidden
@@ -4469,103 +4319,99 @@ def lakehouse_erase_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    tmp = tempfile.mkdtemp(prefix="lh_erase_audit_")
+    t = SnapshotTable(spark, os.path.join(tmp, "t"), cdf=True)
+    t.create(ev.filter(F.col("event_id") % 2 == 0))
+    t.append(ev.filter(F.col("event_id") % 2 == 1))
+    t.delete_mor(F.col("user_id") % 13 == 2)
+
+    # refs block the erase until dropped: a tag AND a live branch
+    # each pin history the erase would have to leave serving the
+    # subject — and an erase CANNOT be staged on the branch itself
+    # (erase_rows vacuums the branch to one version, expiring the
+    # v1 fork manifest merge_branch needs), so the only honest
+    # path is the one gated here: drop refs -> erase -> re-branch
+    t.create_tag("hold")
+    t.create_branch("exp")
+    refs_block = 0
     try:
-        t = SnapshotTable(spark, os.path.join(tmp, "t"), cdf=True)
-        t.create(ev.filter(F.col("event_id") % 2 == 0))
-        t.append(ev.filter(F.col("event_id") % 2 == 1))
-        t.delete_mor(F.col("user_id") % 13 == 2)
-
-        # refs block the erase until dropped: a tag AND a live branch
-        # each pin history the erase would have to leave serving the
-        # subject — and an erase CANNOT be staged on the branch itself
-        # (erase_rows vacuums the branch to one version, expiring the
-        # v1 fork manifest merge_branch needs), so the only honest
-        # path is the one gated here: drop refs -> erase -> re-branch
-        t.create_tag("hold")
-        t.create_branch("exp")
-        refs_block = 0
-        try:
-            t.erase_rows(F.col("user_id") % 11 == 5)
-        except ValueError:
-            refs_block = 1
-        t.drop_tag("hold")
-        t.drop_branch("exp")
-
         t.erase_rows(F.col("user_id") % 11 == 5)
-        out = t.read().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("event_id").cast("long").alias("agg"),
-        ).select(F.lit("final_state").alias("probe"), "n", "agg")
+    except ValueError:
+        refs_block = 1
+    t.drop_tag("hold")
+    t.drop_branch("exp")
 
-        files = _glob.glob(
-            os.path.join(t.path, "**", "*.parquet"), recursive=True
-        )
-        raw = spark.read.option("mergeSchema", "true").parquet(*files)
-        bytes_gone = int(
-            raw.filter(F.col("user_id") % 11 == 5).limit(1).count() == 0
-        )
-        history_expired = int(len(t._versions()) == 1)
-        head = t.snapshot().version
-        feed = t.changes(head - 1, head)
-        feed_redacted = int(
-            feed.filter(F.col("user_id") % 11 == 5).limit(1).count() == 0
-        )
-        # re-branch AFTER the erase: experiments resume once erasure
-        # lands, and the new fork must serve ONLY post-erase state —
-        # no subject row through the branch read, fork pinned at the
-        # erase head (the end-to-end unblock path, gated)
-        br = t.create_branch("resume")
-        erase_rebranch = int(
-            br.read()
-            .filter(F.col("user_id") % 11 == 5)
-            .limit(1)
-            .count()
-            == 0
-            and t.branches()["resume"]["fork_version"]
-            == t.snapshot().version
-        )
+    t.erase_rows(F.col("user_id") % 11 == 5)
+    out = t.read().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("event_id").cast("long").alias("agg"),
+    ).select(F.lit("final_state").alias("probe"), "n", "agg")
 
-        # catalog-level erase (PinnedCatalog.erase_rows): the same
-        # physical erasure with the PIN moved to the erase commit in
-        # one CAS — pinned reads serve post-erase truth immediately
-        from ..sources.txn_catalog import PinnedCatalog
+    files = _glob.glob(
+        os.path.join(t.path, "**", "*.parquet"), recursive=True
+    )
+    raw = spark.read.option("mergeSchema", "true").parquet(*files)
+    bytes_gone = int(
+        raw.filter(F.col("user_id") % 11 == 5).limit(1).count() == 0
+    )
+    history_expired = int(len(t._versions()) == 1)
+    head = t.snapshot().version
+    feed = t.changes(head - 1, head)
+    feed_redacted = int(
+        feed.filter(F.col("user_id") % 11 == 5).limit(1).count() == 0
+    )
+    # re-branch AFTER the erase: experiments resume once erasure
+    # lands, and the new fork must serve ONLY post-erase state —
+    # no subject row through the branch read, fork pinned at the
+    # erase head (the end-to-end unblock path, gated)
+    br = t.create_branch("resume")
+    erase_rebranch = int(
+        br.read()
+        .filter(F.col("user_id") % 11 == 5)
+        .limit(1)
+        .count()
+        == 0
+        and t.branches()["resume"]["fork_version"]
+        == t.snapshot().version
+    )
 
-        cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
-        cat.register("t2", os.path.join(tmp, "t2"))
-        ctxn = cat.transaction()
-        ctxn.table("t2").create(ev.filter(F.col("event_id") % 3 == 0))
-        ctxn.commit()
-        rpt = cat.erase_rows("t2", F.col("user_id") % 11 == 5)
-        t2 = cat.table("t2")
-        catalog_erase_repin = int(
-            rpt["catalog_version"] is not None
-            and cat.read("t2")
-            .filter(F.col("user_id") % 11 == 5)
-            .limit(1)
-            .count()
-            == 0
-            and cat.pin("t2") == t2.snapshot().version
-            and len(t2._versions()) == 1
-        )
-        flags = spark.createDataFrame(
-            [
-                ("bytes_gone", bytes_gone, bytes_gone),
-                ("history_expired", history_expired, history_expired),
-                ("feed_redacted", feed_redacted, feed_redacted),
-                ("refs_block", refs_block, refs_block),
-                ("erase_rebranch", erase_rebranch, erase_rebranch),
-                (
-                    "catalog_erase_repin",
-                    catalog_erase_repin,
-                    catalog_erase_repin,
-                ),
-            ],
-            "probe string, n long, agg long",
-        )
-        return out.unionByName(flags).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # catalog-level erase (PinnedCatalog.erase_rows): the same
+    # physical erasure with the PIN moved to the erase commit in
+    # one CAS — pinned reads serve post-erase truth immediately
+    from ..sources.txn_catalog import PinnedCatalog
+
+    cat = PinnedCatalog(spark, os.path.join(tmp, "cat"))
+    cat.register("t2", os.path.join(tmp, "t2"))
+    ctxn = cat.transaction()
+    ctxn.table("t2").create(ev.filter(F.col("event_id") % 3 == 0))
+    ctxn.commit()
+    rpt = cat.erase_rows("t2", F.col("user_id") % 11 == 5)
+    t2 = cat.table("t2")
+    catalog_erase_repin = int(
+        rpt["catalog_version"] is not None
+        and cat.read("t2")
+        .filter(F.col("user_id") % 11 == 5)
+        .limit(1)
+        .count()
+        == 0
+        and cat.pin("t2") == t2.snapshot().version
+        and len(t2._versions()) == 1
+    )
+    flags = spark.createDataFrame(
+        [
+            ("bytes_gone", bytes_gone, bytes_gone),
+            ("history_expired", history_expired, history_expired),
+            ("feed_redacted", feed_redacted, feed_redacted),
+            ("refs_block", refs_block, refs_block),
+            ("erase_rebranch", erase_rebranch, erase_rebranch),
+            (
+                "catalog_erase_repin",
+                catalog_erase_repin,
+                catalog_erase_repin,
+            ),
+        ],
+        "probe string, n long, agg long",
+    )
+    return out.unionByName(flags)
 
 
 def _delta_export_oracle() -> str:
@@ -4605,8 +4451,10 @@ def _delta_export_oracle() -> str:
     """
 
 
-@query("lakehouse_delta_export_audit", oracle=_delta_export_oracle())
-def lakehouse_delta_export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("lakehouse_delta_export_audit", oracle=_delta_export_oracle())
+def lakehouse_delta_export_audit(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """OPEN-FORMAT INTEROP under the driver gate
     (``sources/delta_export.py``): a SnapshotTable exports as a
     spec-faithful Delta Lake transaction log (public PROTOCOL.md:
@@ -4669,294 +4517,289 @@ def lakehouse_delta_export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lakehouse import SnapshotTable
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    tmp = tempfile.mkdtemp(prefix="lh_delta_export_audit_")
+    t = SnapshotTable(spark, os.path.join(tmp, "t"))
+    t.create(docs.filter(F.col("doc_id") % 4 == 0))
+    dst = os.path.join(tmp, "delta")
+    export_delta(t, dst)
+    t.append(docs.filter(F.col("doc_id") % 4 == 1))
+    t.delete(F.col("doc_id") % 10 == 3)  # COW
+    sync_delta(t, dst)
+
+    def fold(version=None):
+        live = {}
+        logdir = os.path.join(dst, "_delta_log")
+        for name in sorted(os.listdir(logdir)):
+            if not _re.fullmatch(r"\d{20}\.json", name):
+                continue
+            if version is not None and int(name[:-5]) > version:
+                continue
+            with open(os.path.join(logdir, name)) as fh:
+                for line in fh:
+                    a = _json.loads(line)
+                    if "add" in a:
+                        live[_unquote(a["add"]["path"])] = a["add"]
+                    if "remove" in a:
+                        live.pop(_unquote(a["remove"]["path"]), None)
+        return live
+
+    def agg_of(live, probe):
+        df = spark.read.parquet(
+            *[os.path.join(dst, p) for p in live]
+        )
+        return df.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("doc_id").cast("long").alias("agg"),
+        ).select(F.lit(probe).alias("probe"), "n", "agg")
+
+    # ONE job computes the head aggregate; the gated row and the
+    # vacuum_survival baseline both reuse the collected values
+    # (the old shape scanned the exported files twice)
+    head_live = fold()
+    head_rows = agg_of(head_live, "export_head").collect()
+    before = {r.probe: (r.n, r.agg) for r in head_rows}
+    out = spark.createDataFrame(
+        [(r.probe, r.n, r.agg) for r in head_rows],
+        "probe string, n long, agg long",
+    ).unionByName(agg_of(fold(version=0), "delta_v0_time_travel"))
+
+    stats_exact = int(
+        sum(
+            _json.loads(a["stats"])["numRecords"]
+            for a in head_live.values()
+        )
+        == t.row_count()
+    )
+    zero_copy = int(
+        all(
+            os.stat(os.path.join(dst, p)).st_nlink >= 2
+            for p in head_live
+        )
+    )
+
+    t2 = SnapshotTable(spark, os.path.join(tmp, "t2"))
+    t2.create(docs.filter(F.col("doc_id") % 7 == 0))
+    t2.delete_mor(F.col("doc_id") % 14 == 0)
+    dv_refusal = 0
     try:
-        t = SnapshotTable(spark, os.path.join(tmp, "t"))
-        t.create(docs.filter(F.col("doc_id") % 4 == 0))
-        dst = os.path.join(tmp, "delta")
-        export_delta(t, dst)
-        t.append(docs.filter(F.col("doc_id") % 4 == 1))
-        t.delete(F.col("doc_id") % 10 == 3)  # COW
-        sync_delta(t, dst)
+        export_delta(t2, os.path.join(tmp, "delta2"))
+    except ValueError:
+        dv_refusal = 1
 
-        def fold(version=None):
-            live = {}
-            logdir = os.path.join(dst, "_delta_log")
-            for name in sorted(os.listdir(logdir)):
-                if not _re.fullmatch(r"\d{20}\.json", name):
-                    continue
-                if version is not None and int(name[:-5]) > version:
-                    continue
-                with open(os.path.join(logdir, name)) as fh:
-                    for line in fh:
-                        a = _json.loads(line)
-                        if "add" in a:
-                            live[_unquote(a["add"]["path"])] = a["add"]
-                        if "remove" in a:
-                            live.pop(_unquote(a["remove"]["path"]), None)
-            return live
+    t.compact(target_files=1)
+    t.vacuum(retain_last=1, orphan_grace_ms=0)
+    after = {
+        r.probe: (r.n, r.agg)
+        for r in agg_of(fold(), "export_head").collect()
+    }
+    vacuum_survival = int(before == after)
 
-        def agg_of(live, probe):
-            df = spark.read.parquet(
-                *[os.path.join(dst, p) for p in live]
-            )
-            return df.agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("doc_id").cast("long").alias("agg"),
-            ).select(F.lit(probe).alias("probe"), "n", "agg")
-
-        # ONE job computes the head aggregate; the gated row and the
-        # vacuum_survival baseline both reuse the collected values
-        # (the old shape scanned the exported files twice)
-        head_live = fold()
-        head_rows = agg_of(head_live, "export_head").collect()
-        before = {r.probe: (r.n, r.agg) for r in head_rows}
-        out = spark.createDataFrame(
-            [(r.probe, r.n, r.agg) for r in head_rows],
-            "probe string, n long, agg long",
-        ).unionByName(agg_of(fold(version=0), "delta_v0_time_travel"))
-
-        stats_exact = int(
-            sum(
-                _json.loads(a["stats"])["numRecords"]
-                for a in head_live.values()
-            )
-            == t.row_count()
+    # rewrite-only sync: the source compact replays as ONE Delta
+    # commit whose add/remove actions all carry dataChange: false
+    # (OPTIMIZE semantics — a Delta streaming consumer must not
+    # reprocess the compacted rows), and the head fold still
+    # serves the same rows from the new layout
+    sync_rpt = sync_delta(t, dst)
+    dc_flags = []
+    with open(
+        os.path.join(
+            dst, "_delta_log", f"{sync_rpt['delta_version']:020d}.json"
         )
-        zero_copy = int(
-            all(
-                os.stat(os.path.join(dst, p)).st_nlink >= 2
-                for p in head_live
-            )
-        )
+    ) as fh:
+        for line in fh:
+            a = _json.loads(line)
+            for k in ("add", "remove"):
+                if k in a:
+                    dc_flags.append(a[k]["dataChange"])
+    post_compact = {
+        r.probe: (r.n, r.agg)
+        for r in agg_of(fold(), "export_head").collect()
+    }
+    compact_sync = int(
+        sync_rpt["synced_versions"] == 1
+        and len(dc_flags) >= 2
+        and not any(dc_flags)
+        and post_compact == before
+    )
 
-        t2 = SnapshotTable(spark, os.path.join(tmp, "t2"))
-        t2.create(docs.filter(F.col("doc_id") % 7 == 0))
-        t2.delete_mor(F.col("doc_id") % 14 == 0)
-        dv_refusal = 0
-        try:
-            export_delta(t2, os.path.join(tmp, "delta2"))
-        except ValueError:
-            dv_refusal = 1
+    # checkpoint + log expiry: the bounded-fold path a long-lived
+    # export lives on — after EVERY pre-checkpoint JSON commit is
+    # deleted, the checkpoint-seeded fold must still serve the head
+    from ..sources.delta_export import (
+        expire_delta_log,
+        write_delta_checkpoint,
+    )
 
-        t.compact(target_files=1)
-        t.vacuum(retain_last=1, orphan_grace_ms=0)
-        after = {
-            r.probe: (r.n, r.agg)
-            for r in agg_of(fold(), "export_head").collect()
-        }
-        vacuum_survival = int(before == after)
+    write_delta_checkpoint(dst)
+    expired = expire_delta_log(dst)
+    from ..sources.delta_export import _fold_state
 
-        # rewrite-only sync: the source compact replays as ONE Delta
-        # commit whose add/remove actions all carry dataChange: false
-        # (OPTIMIZE semantics — a Delta streaming consumer must not
-        # reprocess the compacted rows), and the head fold still
-        # serves the same rows from the new layout
-        sync_rpt = sync_delta(t, dst)
-        dc_flags = []
-        with open(
-            os.path.join(
-                dst, "_delta_log", f"{sync_rpt['delta_version']:020d}.json"
-            )
-        ) as fh:
-            for line in fh:
-                a = _json.loads(line)
-                for k in ("add", "remove"):
-                    if k in a:
-                        dc_flags.append(a[k]["dataChange"])
-        post_compact = {
-            r.probe: (r.n, r.agg)
-            for r in agg_of(fold(), "export_head").collect()
-        }
-        compact_sync = int(
-            sync_rpt["synced_versions"] == 1
-            and len(dc_flags) >= 2
-            and not any(dc_flags)
-            and post_compact == before
-        )
+    _, _, _, ck_live = _fold_state(dst)
+    ck_agg = {
+        r.probe: (r.n, r.agg)
+        for r in agg_of(
+            {_unquote(p): a for p, a in ck_live.items()}, "export_head"
+        ).collect()
+    }
+    checkpoint_fold = int(expired >= 1 and ck_agg == before)
 
-        # checkpoint + log expiry: the bounded-fold path a long-lived
-        # export lives on — after EVERY pre-checkpoint JSON commit is
-        # deleted, the checkpoint-seeded fold must still serve the head
-        from ..sources.delta_export import (
-            expire_delta_log,
-            write_delta_checkpoint,
-        )
+    # ROLLBACK sync, positive arm: a source rollback is a normal
+    # replace-all commit to the sync — it replays as one Delta
+    # commit re-adding the old files, and the Delta head then
+    # serves exactly the rolled-back state (gated as a VALUE row
+    # against DuckDB recomputing the original slice)
+    t3 = SnapshotTable(spark, os.path.join(tmp, "t3"))
+    t3.create(docs.filter(F.col("doc_id") % 4 == 2))  # v1
+    dst3 = os.path.join(tmp, "delta3")
+    export_delta(t3, dst3)
+    t3.append(docs.filter(F.col("doc_id") % 4 == 3))  # v2
+    sync_delta(t3, dst3)
+    t3.rollback(1)  # v3: replace-all back to the created slice
+    sync_delta(t3, dst3)
 
-        write_delta_checkpoint(dst)
-        expired = expire_delta_log(dst)
-        from ..sources.delta_export import _fold_state
+    def fold_of(dstp, version=None):
+        live = {}
+        logdir = os.path.join(dstp, "_delta_log")
+        for name in sorted(os.listdir(logdir)):
+            if not _re.fullmatch(r"\d{20}\.json", name):
+                continue
+            if version is not None and int(name[:-5]) > version:
+                continue
+            with open(os.path.join(logdir, name)) as fh:
+                for line in fh:
+                    a = _json.loads(line)
+                    if "add" in a:
+                        live[_unquote(a["add"]["path"])] = a["add"]
+                    if "remove" in a:
+                        live.pop(_unquote(a["remove"]["path"]), None)
+        return live
 
-        _, _, _, ck_live = _fold_state(dst)
-        ck_agg = {
-            r.probe: (r.n, r.agg)
-            for r in agg_of(
-                {_unquote(p): a for p, a in ck_live.items()}, "export_head"
-            ).collect()
-        }
-        checkpoint_fold = int(expired >= 1 and ck_agg == before)
+    rb_live = fold_of(dst3)
+    rollback_head = spark.read.parquet(
+        *[os.path.join(dst3, p) for p in rb_live]
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("doc_id").cast("long").alias("agg"),
+    ).select(F.lit("rollback_head").alias("probe"), "n", "agg")
 
-        # ROLLBACK sync, positive arm: a source rollback is a normal
-        # replace-all commit to the sync — it replays as one Delta
-        # commit re-adding the old files, and the Delta head then
-        # serves exactly the rolled-back state (gated as a VALUE row
-        # against DuckDB recomputing the original slice)
-        t3 = SnapshotTable(spark, os.path.join(tmp, "t3"))
-        t3.create(docs.filter(F.col("doc_id") % 4 == 2))  # v1
-        dst3 = os.path.join(tmp, "delta3")
-        export_delta(t3, dst3)
-        t3.append(docs.filter(F.col("doc_id") % 4 == 3))  # v2
-        sync_delta(t3, dst3)
-        t3.rollback(1)  # v3: replace-all back to the created slice
-        sync_delta(t3, dst3)
+    # ROLLBACK sync, refusal arm: a rollback that re-adds files
+    # WITH live deletion vectors refuses (reader-1 Delta would
+    # resurrect the soft-deleted rows — the DV delta excludes DVs
+    # riding on added files by design), and the prescribed remedy
+    # (compact to fold the vectors, re-export fresh) round-trips
+    t4 = SnapshotTable(spark, os.path.join(tmp, "t4"))
+    t4.create(docs.filter(F.col("doc_id") % 7 == 1))  # v1
+    t4.delete_mor(F.col("doc_id") % 14 == 1)  # v2: DVs
+    t4.compact(target_files=1)  # v3: folded, exportable
+    dst4 = os.path.join(tmp, "delta4")
+    export_delta(t4, dst4)
+    t4.rollback(2)  # v4: re-adds v2's files WITH their vectors
+    rb_refused = 0
+    try:
+        sync_delta(t4, dst4)
+    except ValueError:
+        rb_refused = 1
+    t4.compact(target_files=1)  # remedy: fold the vectors...
+    dst5 = os.path.join(tmp, "delta5")
+    export_delta(t4, dst5)  # ...and re-export fresh
+    r5 = fold_of(dst5)
+    remedy = spark.read.parquet(
+        *[os.path.join(dst5, p) for p in r5]
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("doc_id").cast("long").alias("agg"),
+    ).collect()[0]
+    direct = t4.read().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("doc_id").cast("long").alias("agg"),
+    ).collect()[0]
+    rollback_dv_refusal = int(
+        rb_refused == 1 and (remedy.n, remedy.agg) == (direct.n, direct.agg)
+    )
 
-        def fold_of(dstp, version=None):
-            live = {}
-            logdir = os.path.join(dstp, "_delta_log")
-            for name in sorted(os.listdir(logdir)):
-                if not _re.fullmatch(r"\d{20}\.json", name):
-                    continue
-                if version is not None and int(name[:-5]) > version:
-                    continue
-                with open(os.path.join(logdir, name)) as fh:
-                    for line in fh:
-                        a = _json.loads(line)
-                        if "add" in a:
-                            live[_unquote(a["add"]["path"])] = a["add"]
-                        if "remove" in a:
-                            live.pop(_unquote(a["remove"]["path"]), None)
-            return live
+    # NAME-mode column mapping: a renamed/dropped-column table
+    # exports reader 2 / writer 5 with per-field physicalName
+    # metadata instead of refusing — an independent mapped fold
+    # (bind by physical name, present logical) must reproduce the
+    # table's logical view exactly
+    t5 = SnapshotTable(spark, os.path.join(tmp, "t5"))
+    t5.create(docs.filter(F.col("doc_id") % 9 == 0))
+    t5.rename_column("doc_id", "document_id")
+    t5.drop_column("source")
+    dst6 = os.path.join(tmp, "delta6")
+    export_delta(t5, dst6)
+    md = None
+    with open(
+        os.path.join(dst6, "_delta_log", "0" * 20 + ".json")
+    ) as fh:
+        for line in fh:
+            a = _json.loads(line)
+            if "metaData" in a:
+                md = a["metaData"]
+            if "protocol" in a:
+                proto5 = a["protocol"]
+    sch5 = _json.loads(md["schemaString"])
+    phys_of = {
+        f["name"]: f["metadata"]["delta.columnMapping.physicalName"]
+        for f in sch5["fields"]
+    }
+    m_live = fold_of(dst6)
+    mapped = spark.read.parquet(
+        *[os.path.join(dst6, p) for p in m_live]
+    ).select(
+        *[
+            F.col(p).alias(l)
+            for l, p in phys_of.items()
+        ]
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("document_id").cast("long").alias("agg"),
+    ).collect()[0]
+    d5 = t5.read().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("document_id").cast("long").alias("agg"),
+    ).collect()[0]
+    column_map_export = int(
+        md["configuration"].get("delta.columnMapping.mode") == "name"
+        and proto5
+        == {"minReaderVersion": 2, "minWriterVersion": 5}
+        and sorted(f["name"] for f in sch5["fields"])
+        == ["document_id"]
+        and phys_of["document_id"] == "doc_id"
+        and (mapped.n, mapped.agg) == (d5.n, d5.agg)
+    )
 
-        rb_live = fold_of(dst3)
-        rollback_head = spark.read.parquet(
-            *[os.path.join(dst3, p) for p in rb_live]
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("doc_id").cast("long").alias("agg"),
-        ).select(F.lit("rollback_head").alias("probe"), "n", "agg")
+    # REVERSE direction: the mapped export imports back as a new
+    # SnapshotTable (zero-copy links, mapping folded into
+    # column_map) whose logical view matches the original exactly
+    from ..sources.delta_export import import_delta
 
-        # ROLLBACK sync, refusal arm: a rollback that re-adds files
-        # WITH live deletion vectors refuses (reader-1 Delta would
-        # resurrect the soft-deleted rows — the DV delta excludes DVs
-        # riding on added files by design), and the prescribed remedy
-        # (compact to fold the vectors, re-export fresh) round-trips
-        t4 = SnapshotTable(spark, os.path.join(tmp, "t4"))
-        t4.create(docs.filter(F.col("doc_id") % 7 == 1))  # v1
-        t4.delete_mor(F.col("doc_id") % 14 == 1)  # v2: DVs
-        t4.compact(target_files=1)  # v3: folded, exportable
-        dst4 = os.path.join(tmp, "delta4")
-        export_delta(t4, dst4)
-        t4.rollback(2)  # v4: re-adds v2's files WITH their vectors
-        rb_refused = 0
-        try:
-            sync_delta(t4, dst4)
-        except ValueError:
-            rb_refused = 1
-        t4.compact(target_files=1)  # remedy: fold the vectors...
-        dst5 = os.path.join(tmp, "delta5")
-        export_delta(t4, dst5)  # ...and re-export fresh
-        r5 = fold_of(dst5)
-        remedy = spark.read.parquet(
-            *[os.path.join(dst5, p) for p in r5]
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("doc_id").cast("long").alias("agg"),
-        ).collect()[0]
-        direct = t4.read().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("doc_id").cast("long").alias("agg"),
-        ).collect()[0]
-        rollback_dv_refusal = int(
-            rb_refused == 1 and (remedy.n, remedy.agg) == (direct.n, direct.agg)
-        )
+    import_delta(spark, dst6, os.path.join(tmp, "t6"))
+    t6 = SnapshotTable(spark, os.path.join(tmp, "t6"))
+    i6 = t6.read().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("document_id").cast("long").alias("agg"),
+    ).collect()[0]
+    delta_import_roundtrip = int(
+        t6.column_map == {"document_id": "doc_id"}
+        and t6.dropped_cols == ["source"]
+        and (i6.n, i6.agg) == (d5.n, d5.agg)
+    )
 
-        # NAME-mode column mapping: a renamed/dropped-column table
-        # exports reader 2 / writer 5 with per-field physicalName
-        # metadata instead of refusing — an independent mapped fold
-        # (bind by physical name, present logical) must reproduce the
-        # table's logical view exactly
-        t5 = SnapshotTable(spark, os.path.join(tmp, "t5"))
-        t5.create(docs.filter(F.col("doc_id") % 9 == 0))
-        t5.rename_column("doc_id", "document_id")
-        t5.drop_column("source")
-        dst6 = os.path.join(tmp, "delta6")
-        export_delta(t5, dst6)
-        md = None
-        with open(
-            os.path.join(dst6, "_delta_log", "0" * 20 + ".json")
-        ) as fh:
-            for line in fh:
-                a = _json.loads(line)
-                if "metaData" in a:
-                    md = a["metaData"]
-                if "protocol" in a:
-                    proto5 = a["protocol"]
-        sch5 = _json.loads(md["schemaString"])
-        phys_of = {
-            f["name"]: f["metadata"]["delta.columnMapping.physicalName"]
-            for f in sch5["fields"]
-        }
-        m_live = fold_of(dst6)
-        mapped = spark.read.parquet(
-            *[os.path.join(dst6, p) for p in m_live]
-        ).select(
-            *[
-                F.col(p).alias(l)
-                for l, p in phys_of.items()
-            ]
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("document_id").cast("long").alias("agg"),
-        ).collect()[0]
-        d5 = t5.read().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("document_id").cast("long").alias("agg"),
-        ).collect()[0]
-        column_map_export = int(
-            md["configuration"].get("delta.columnMapping.mode") == "name"
-            and proto5
-            == {"minReaderVersion": 2, "minWriterVersion": 5}
-            and sorted(f["name"] for f in sch5["fields"])
-            == ["document_id"]
-            and phys_of["document_id"] == "doc_id"
-            and (mapped.n, mapped.agg) == (d5.n, d5.agg)
-        )
-
-        # REVERSE direction: the mapped export imports back as a new
-        # SnapshotTable (zero-copy links, mapping folded into
-        # column_map) whose logical view matches the original exactly
-        from ..sources.delta_export import import_delta
-
-        import_delta(spark, dst6, os.path.join(tmp, "t6"))
-        t6 = SnapshotTable(spark, os.path.join(tmp, "t6"))
-        i6 = t6.read().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("document_id").cast("long").alias("agg"),
-        ).collect()[0]
-        delta_import_roundtrip = int(
-            t6.column_map == {"document_id": "doc_id"}
-            and t6.dropped_cols == ["source"]
-            and (i6.n, i6.agg) == (d5.n, d5.agg)
-        )
-
-        flags = spark.createDataFrame(
-            [
-                ("stats_exact", stats_exact, stats_exact),
-                ("zero_copy", zero_copy, zero_copy),
-                ("dv_refusal", dv_refusal, dv_refusal),
-                ("vacuum_survival", vacuum_survival, vacuum_survival),
-                ("compact_sync", compact_sync, compact_sync),
-                ("rollback_dv_refusal", rollback_dv_refusal, rollback_dv_refusal),
-                ("column_map_export", column_map_export, column_map_export),
-                ("delta_import_roundtrip", delta_import_roundtrip, delta_import_roundtrip),
-                ("checkpoint_fold", checkpoint_fold, checkpoint_fold),
-            ],
-            "probe string, n long, agg long",
-        )
-        return (
-            out.unionByName(rollback_head)
-            .unionByName(flags)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    flags = spark.createDataFrame(
+        [
+            ("stats_exact", stats_exact, stats_exact),
+            ("zero_copy", zero_copy, zero_copy),
+            ("dv_refusal", dv_refusal, dv_refusal),
+            ("vacuum_survival", vacuum_survival, vacuum_survival),
+            ("compact_sync", compact_sync, compact_sync),
+            ("rollback_dv_refusal", rollback_dv_refusal, rollback_dv_refusal),
+            ("column_map_export", column_map_export, column_map_export),
+            ("delta_import_roundtrip", delta_import_roundtrip, delta_import_roundtrip),
+            ("checkpoint_fold", checkpoint_fold, checkpoint_fold),
+        ],
+        "probe string, n long, agg long",
+    )
+    return (
+        out.unionByName(rollback_head)
+        .unionByName(flags)
+    )

@@ -2580,16 +2580,10 @@ def containment_near_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring expression differs (divide by the smaller size instead of
     the union).
     """
-    from ..operators.dedup import hash_shingle_keys_enabled, shingle_table
+    from ..operators.dedup import shingle_table
 
     docs = _t(spark, sf_dir, "documents")
-    # flagged 8-byte join keys (§2.3): hashed BEFORE the distinct, so
-    # both the distinct's exchange and the persisted table narrow
-    sh = registered_persist(
-        shingle_table(
-            docs, "doc_id", "text", n=3, hash_keys=hash_shingle_keys_enabled()
-        )
-    )
+    sh = registered_persist(shingle_table(docs, "doc_id", "text", n=3))
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")

@@ -31,8 +31,8 @@ The arrival sequences are built to exercise every drop path:
   them — whichever side that is, engine and oracle agree or the hash
   breaks.
 
-Results are ``localCheckpoint(eager=True)``-ed so the temp dirs can be
-deleted before returning. Reference analog: the T1/T3 continuous ingest
+Each is registered with ``queries.audit``, which owns the temp dir and
+pins the result. Reference analog: the T1/T3 continuous ingest
 path (``code/ingest/snowpipe_streaming/snowflake_sink_connector.json:15-20``,
 ``docker-compose.yml``), upgraded with dedup-on-ingest semantics.
 """
@@ -42,13 +42,12 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _t, query
+from .queries import _t, audit
 
 #: semantic-dedup gate threshold: natural sf0.01 embedding pairs top out
 #: near cosine 0.51, constructed copies sit at 1.0, and parent blends
@@ -183,8 +182,10 @@ def _exact_version_rows(table) -> DataFrame:
     return out
 
 
-@query("streaming_ingest_exact_audit", oracle=_exact_audit_oracle())
-def streaming_ingest_exact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("streaming_ingest_exact_audit", oracle=_exact_audit_oracle())
+def streaming_ingest_exact_audit(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """The exact-dedup streaming ingest sink under the driver gate: a
     real ``availableNow`` run of :func:`..streaming.lakehouse_sink.
     dedup_ingest_stream` over three file-source micro-batches with
@@ -205,30 +206,28 @@ def streaming_ingest_exact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     batches = _exact_arrival_batches(docs)
-    tmp = tempfile.mkdtemp(prefix="stream_exact_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        _write_batch_files(batches, src)
-        table = SnapshotTable(spark, os.path.join(tmp, "corpus"))
-        with _small_shuffle(spark):
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_batch_files(batches, src)
+    table = SnapshotTable(spark, os.path.join(tmp, "corpus"))
+    with _small_shuffle(spark):
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        _drain(
+            dedup_ingest_stream(
+                stream, table, "gate_audit", os.path.join(tmp, "ckpt")
             )
-            _drain(
-                dedup_ingest_stream(
-                    stream, table, "gate_audit", os.path.join(tmp, "ckpt")
-                )
-            )
-        return _exact_version_rows(table).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
+    return _exact_version_rows(table)
 
 
-@query("streaming_ingest_resume_audit", oracle=_exact_audit_oracle())
-def streaming_ingest_resume_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("streaming_ingest_resume_audit", oracle=_exact_audit_oracle())
+def streaming_ingest_resume_audit(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """Checkpoint RESUME under the driver gate — the restart property
     the other audits don't reach: the SAME arrival sequence as
     ``streaming_ingest_exact_audit`` (hence the identical oracle — a
@@ -251,33 +250,29 @@ def streaming_ingest_resume_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = _t(spark, sf_dir, "documents")
     batches = _exact_arrival_batches(docs)
-    tmp = tempfile.mkdtemp(prefix="stream_resume_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        table = SnapshotTable(spark, os.path.join(tmp, "corpus"))
-        ckpt = os.path.join(tmp, "ckpt")
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    table = SnapshotTable(spark, os.path.join(tmp, "corpus"))
+    ckpt = os.path.join(tmp, "ckpt")
 
-        def run_once():
-            with _small_shuffle(spark):
-                stream = (
-                    spark.readStream.schema(docs.schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(src)
-                )
-                _drain(
-                    dedup_ingest_stream(stream, table, "gate_audit", ckpt)
-                )
+    def run_once():
+        with _small_shuffle(spark):
+            stream = (
+                spark.readStream.schema(docs.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src)
+            )
+            _drain(
+                dedup_ingest_stream(stream, table, "gate_audit", ckpt)
+            )
 
-        _write_batch_files(batches[:2], src)
-        run_once()                      # drains batches 0-1, stops
-        _write_batch_files(batches, src)  # batch 2 appears (0-1 rewritten
-        # in place with identical content; the source tracks them as seen)
-        run_once()                      # resume: processes ONLY batch 2
-        run_once()                      # pure replay: must commit nothing
-        return _exact_version_rows(table).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    _write_batch_files(batches[:2], src)
+    run_once()                      # drains batches 0-1, stops
+    _write_batch_files(batches, src)  # batch 2 appears (0-1 rewritten
+    # in place with identical content; the source tracks them as seen)
+    run_once()                      # resume: processes ONLY batch 2
+    run_once()                      # pure replay: must commit nothing
+    return _exact_version_rows(table)
 
 
 #: quality gate for the near-dup audit: every natural sf document is
@@ -398,9 +393,9 @@ landed AS (
     return head + " UNION ALL ".join(parts)
 
 
-@query("streaming_ingest_neardup_audit", oracle=_neardup_audit_oracle())
+@audit("streaming_ingest_neardup_audit", oracle=_neardup_audit_oracle())
 def streaming_ingest_neardup_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """The NEAR-dup streaming ingest sink under the driver gate — the
     third of the ingest-tier audits (exact / near / semantic): a real
@@ -454,57 +449,53 @@ def streaming_ingest_neardup_audit(
         docs.filter(res == 2).unionByName(ghosts(0, 200000)).unionByName(junk),
         docs.filter(res == 3).unionByName(ghosts(2, 400000)),
     ]
-    tmp = tempfile.mkdtemp(prefix="stream_near_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        _write_batch_files(batches, src)
-        table = SnapshotTable(spark, os.path.join(tmp, "corpus"))
-        index = SnapshotTable(spark, os.path.join(tmp, "index"))
-        metrics = SnapshotTable(spark, os.path.join(tmp, "metrics"))
-        with _small_shuffle(spark):
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-            )
-            _drain(
-                near_dedup_ingest_stream(
-                    stream, table, index, "gate_audit",
-                    os.path.join(tmp, "ckpt"),
-                    quality_pred=F.length("text") >= _QUALITY_MIN_CHARS,
-                    metrics=metrics,
-                )
-            )
-        out = None
-        for snap in table.history():
-            r = table.read(version=snap.version).agg(
-                F.count(F.lit(1)).alias("a"),
-                F.sum("doc_id").alias("b"),
-                F.sum("n_chars").alias("c"),
-            ).select(
-                F.lit("docs").alias("side"),
-                F.lit(snap.version).alias("version"),
-                F.lit(snap.txn["batch_id"]).alias("batch_id"),
-                "a",
-                "b",
-                "c",
-                F.lit(0).cast("long").alias("d"),
-            )
-            out = r if out is None else out.unionByName(r)
-        mrows = metrics.read().select(
-            F.lit("metrics").alias("side"),
-            F.lit(0).alias("version"),
-            F.col("batch_id").cast("int").alias("batch_id"),
-            F.col("n_arrived").alias("a"),
-            F.col("n_quality_rejected").alias("b"),
-            F.col("n_dedup_dropped").alias("c"),
-            F.col("n_landed").alias("d"),
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_batch_files(batches, src)
+    table = SnapshotTable(spark, os.path.join(tmp, "corpus"))
+    index = SnapshotTable(spark, os.path.join(tmp, "index"))
+    metrics = SnapshotTable(spark, os.path.join(tmp, "metrics"))
+    with _small_shuffle(spark):
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
         )
-        out = out.unionByName(mrows)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        _drain(
+            near_dedup_ingest_stream(
+                stream, table, index, "gate_audit",
+                os.path.join(tmp, "ckpt"),
+                quality_pred=F.length("text") >= _QUALITY_MIN_CHARS,
+                metrics=metrics,
+            )
+        )
+    out = None
+    for snap in table.history():
+        r = table.read(version=snap.version).agg(
+            F.count(F.lit(1)).alias("a"),
+            F.sum("doc_id").alias("b"),
+            F.sum("n_chars").alias("c"),
+        ).select(
+            F.lit("docs").alias("side"),
+            F.lit(snap.version).alias("version"),
+            F.lit(snap.txn["batch_id"]).alias("batch_id"),
+            "a",
+            "b",
+            "c",
+            F.lit(0).cast("long").alias("d"),
+        )
+        out = r if out is None else out.unionByName(r)
+    mrows = metrics.read().select(
+        F.lit("metrics").alias("side"),
+        F.lit(0).alias("version"),
+        F.col("batch_id").cast("int").alias("batch_id"),
+        F.col("n_arrived").alias("a"),
+        F.col("n_quality_rejected").alias("b"),
+        F.col("n_dedup_dropped").alias("c"),
+        F.col("n_landed").alias("d"),
+    )
+    out = out.unionByName(mrows)
+    return out
 
 
 def _cdc_merge_oracle() -> str:
@@ -548,8 +539,8 @@ def _cdc_merge_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@query("streaming_cdc_merge_audit", oracle=_cdc_merge_oracle())
-def streaming_cdc_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@audit("streaming_cdc_merge_audit", oracle=_cdc_merge_oracle())
+def streaming_cdc_merge_audit(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """The CDC upsert sink under the driver gate — the fourth streaming
     sink audit (append / exact / near / semantic dedup are gated; this
     gates :func:`..streaming.lakehouse_sink.
@@ -589,46 +580,42 @@ def streaming_cdc_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(bump(cust.filter((k % 3 == 1) & (k % 7 == 0)), 2000))
         .unionByName(bump(cust.filter((k % 3 == 0) & (k % 14 == 0)), 3000)),
     ]
-    tmp = tempfile.mkdtemp(prefix="stream_cdc_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        _write_batch_files(batches, src)
-        table = SnapshotTable(spark, os.path.join(tmp, "customers"))
-        table.create(cust.filter(k % 3 == 0))
-        with _small_shuffle(spark):
-            stream = (
-                spark.readStream.schema(batches[0].schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_batch_files(batches, src)
+    table = SnapshotTable(spark, os.path.join(tmp, "customers"))
+    table.create(cust.filter(k % 3 == 0))
+    with _small_shuffle(spark):
+        stream = (
+            spark.readStream.schema(batches[0].schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        _drain(
+            merge_stream_into_snapshot_table(
+                stream, table, ["c_custkey"], "gate_audit",
+                os.path.join(tmp, "ckpt"),
             )
-            _drain(
-                merge_stream_into_snapshot_table(
-                    stream, table, ["c_custkey"], "gate_audit",
-                    os.path.join(tmp, "ckpt"),
-                )
-            )
-        from .queries import _money_sum
+        )
+    from .queries import _money_sum
 
-        out = None
-        for snap in table.history():
-            r = table.read(version=snap.version).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("c_custkey").alias("sum_key"),
-                _money_sum(F.col("c_acctbal")).alias("sum_acctbal"),
-            ).select(
-                F.lit(snap.version).alias("version"),
-                F.lit(
-                    snap.txn["batch_id"] if snap.txn else -1
-                ).alias("batch_id"),
-                "n_rows",
-                "sum_key",
-                "sum_acctbal",
-            )
-            out = r if out is None else out.unionByName(r)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    out = None
+    for snap in table.history():
+        r = table.read(version=snap.version).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("c_custkey").alias("sum_key"),
+            _money_sum(F.col("c_acctbal")).alias("sum_acctbal"),
+        ).select(
+            F.lit(snap.version).alias("version"),
+            F.lit(
+                snap.txn["batch_id"] if snap.txn else -1
+            ).alias("batch_id"),
+            "n_rows",
+            "sum_key",
+            "sum_acctbal",
+        )
+        out = r if out is None else out.unionByName(r)
+    return out
 
 
 def _semantic_audit_oracle() -> str:
@@ -759,9 +746,9 @@ landed AS (
     return head + " UNION ALL ".join(parts)
 
 
-@query("streaming_ingest_semantic_audit", oracle=_semantic_audit_oracle())
+@audit("streaming_ingest_semantic_audit", oracle=_semantic_audit_oracle())
 def streaming_ingest_semantic_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """The SEMANTIC dedup streaming ingest sink under the driver gate:
     a real ``availableNow`` run of :func:`..streaming.lakehouse_sink.
@@ -812,69 +799,65 @@ def streaming_ingest_semantic_audit(
         emb.filter(m3 == 1).unionByName(copies).unionByName(redeliver),
         emb.filter(m3 == 2).unionByName(blends),
     ]
-    tmp = tempfile.mkdtemp(prefix="stream_sem_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        _write_batch_files(batches, src)
-        table = SnapshotTable(spark, os.path.join(tmp, "vectors"))
-        centroids = SnapshotTable(spark, os.path.join(tmp, "centroids"))
-        cells = SnapshotTable(spark, os.path.join(tmp, "cells"))
-        with _small_shuffle(spark):
-            stream = (
-                spark.readStream.schema(b0.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_batch_files(batches, src)
+    table = SnapshotTable(spark, os.path.join(tmp, "vectors"))
+    centroids = SnapshotTable(spark, os.path.join(tmp, "centroids"))
+    cells = SnapshotTable(spark, os.path.join(tmp, "cells"))
+    with _small_shuffle(spark):
+        stream = (
+            spark.readStream.schema(b0.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        _drain(
+            semantic_dedup_ingest_stream(
+                stream, table, centroids, cells, "gate_audit",
+                os.path.join(tmp, "ckpt"), min_cos=_SEM_TAU,
             )
-            _drain(
-                semantic_dedup_ingest_stream(
-                    stream, table, centroids, cells, "gate_audit",
-                    os.path.join(tmp, "ckpt"), min_cos=_SEM_TAU,
-                )
-            )
-        out = None
-        for snap in table.history():
-            r = table.read(version=snap.version).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("vec_id").alias("sum_id"),
-            ).select(
-                F.lit("docs").alias("side"),
-                F.lit(snap.version).alias("version"),
-                F.lit(snap.txn["batch_id"]).alias("batch_id"),
-                "n_rows",
-                "sum_id",
-                F.lit(0).cast("long").alias("sum_extra"),
-            )
-            out = r if out is None else out.unionByName(r)
-        for snap in cells.history():
-            r = cells.read(version=snap.version).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("vec_id").alias("sum_id"),
-                F.sum("cell").alias("sum_extra"),
-            ).select(
-                F.lit("cells").alias("side"),
-                F.lit(snap.version).alias("version"),
-                F.lit(snap.txn["batch_id"]).alias("batch_id"),
-                "n_rows",
-                "sum_id",
-                "sum_extra",
-            )
-            out = out.unionByName(r)
-        cent = centroids.read().agg(
+        )
+    out = None
+    for snap in table.history():
+        r = table.read(version=snap.version).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum("cent_id").alias("sum_id"),
+            F.sum("vec_id").alias("sum_id"),
         ).select(
-            F.lit("centroids").alias("side"),
-            F.lit(1).alias("version"),
-            F.lit(0).alias("batch_id"),
+            F.lit("docs").alias("side"),
+            F.lit(snap.version).alias("version"),
+            F.lit(snap.txn["batch_id"]).alias("batch_id"),
             "n_rows",
             "sum_id",
             F.lit(0).cast("long").alias("sum_extra"),
         )
-        out = out.unionByName(cent)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    for snap in cells.history():
+        r = cells.read(version=snap.version).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("vec_id").alias("sum_id"),
+            F.sum("cell").alias("sum_extra"),
+        ).select(
+            F.lit("cells").alias("side"),
+            F.lit(snap.version).alias("version"),
+            F.lit(snap.txn["batch_id"]).alias("batch_id"),
+            "n_rows",
+            "sum_id",
+            "sum_extra",
+        )
+        out = out.unionByName(r)
+    cent = centroids.read().agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("cent_id").alias("sum_id"),
+    ).select(
+        F.lit("centroids").alias("side"),
+        F.lit(1).alias("version"),
+        F.lit(0).alias("batch_id"),
+        "n_rows",
+        "sum_id",
+        F.lit(0).cast("long").alias("sum_extra"),
+    )
+    out = out.unionByName(cent)
+    return out
 
 
 def _semantic_intra_oracle() -> str:
@@ -998,12 +981,12 @@ UNION ALL
     """
 
 
-@query(
+@audit(
     "streaming_ingest_semantic_intra_audit",
     oracle=_semantic_intra_oracle(),
 )
 def streaming_ingest_semantic_intra_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """The semantic ingest sink with the INTRA-batch SemDeDup pass
     enabled (``intra_batch=True``) under the driver gate — closing the
@@ -1064,70 +1047,66 @@ def streaming_ingest_semantic_intra_audit(
         b0,
         b1.unionByName(twins).unionByName(blends).unionByName(copies),
     ]
-    tmp = tempfile.mkdtemp(prefix="stream_sem_intra_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        _write_batch_files(batches, src)
-        table = SnapshotTable(spark, os.path.join(tmp, "vectors"))
-        centroids = SnapshotTable(spark, os.path.join(tmp, "centroids"))
-        cells = SnapshotTable(spark, os.path.join(tmp, "cells"))
-        with _small_shuffle(spark):
-            stream = (
-                spark.readStream.schema(b0.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_batch_files(batches, src)
+    table = SnapshotTable(spark, os.path.join(tmp, "vectors"))
+    centroids = SnapshotTable(spark, os.path.join(tmp, "centroids"))
+    cells = SnapshotTable(spark, os.path.join(tmp, "cells"))
+    with _small_shuffle(spark):
+        stream = (
+            spark.readStream.schema(b0.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        _drain(
+            semantic_dedup_ingest_stream(
+                stream, table, centroids, cells, "gate_audit",
+                os.path.join(tmp, "ckpt"), min_cos=_SEM_TAU,
+                intra_batch=True,
             )
-            _drain(
-                semantic_dedup_ingest_stream(
-                    stream, table, centroids, cells, "gate_audit",
-                    os.path.join(tmp, "ckpt"), min_cos=_SEM_TAU,
-                    intra_batch=True,
-                )
-            )
-        out = None
-        for snap in table.history():
-            r = table.read(version=snap.version).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("vec_id").alias("sum_id"),
-            ).select(
-                F.lit("docs").alias("side"),
-                F.lit(snap.version).alias("version"),
-                F.lit(snap.txn["batch_id"]).alias("batch_id"),
-                "n_rows",
-                "sum_id",
-                F.lit(0).cast("long").alias("sum_extra"),
-            )
-            out = r if out is None else out.unionByName(r)
-        for snap in cells.history():
-            r = cells.read(version=snap.version).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("vec_id").alias("sum_id"),
-                F.sum("cell").alias("sum_extra"),
-            ).select(
-                F.lit("cells").alias("side"),
-                F.lit(snap.version).alias("version"),
-                F.lit(snap.txn["batch_id"]).alias("batch_id"),
-                "n_rows",
-                "sum_id",
-                "sum_extra",
-            )
-            out = out.unionByName(r)
-        cent = centroids.read().agg(
+        )
+    out = None
+    for snap in table.history():
+        r = table.read(version=snap.version).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum("cent_id").alias("sum_id"),
+            F.sum("vec_id").alias("sum_id"),
         ).select(
-            F.lit("centroids").alias("side"),
-            F.lit(1).alias("version"),
-            F.lit(0).alias("batch_id"),
+            F.lit("docs").alias("side"),
+            F.lit(snap.version).alias("version"),
+            F.lit(snap.txn["batch_id"]).alias("batch_id"),
             "n_rows",
             "sum_id",
             F.lit(0).cast("long").alias("sum_extra"),
         )
-        out = out.unionByName(cent)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out = r if out is None else out.unionByName(r)
+    for snap in cells.history():
+        r = cells.read(version=snap.version).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("vec_id").alias("sum_id"),
+            F.sum("cell").alias("sum_extra"),
+        ).select(
+            F.lit("cells").alias("side"),
+            F.lit(snap.version).alias("version"),
+            F.lit(snap.txn["batch_id"]).alias("batch_id"),
+            "n_rows",
+            "sum_id",
+            "sum_extra",
+        )
+        out = out.unionByName(r)
+    cent = centroids.read().agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("cent_id").alias("sum_id"),
+    ).select(
+        F.lit("centroids").alias("side"),
+        F.lit(1).alias("version"),
+        F.lit(0).alias("batch_id"),
+        "n_rows",
+        "sum_id",
+        F.lit(0).cast("long").alias("sum_extra"),
+    )
+    out = out.unionByName(cent)
+    return out
 
 
 def _partitioned_fact_oracle() -> str:
@@ -1161,12 +1140,12 @@ def _partitioned_fact_oracle() -> str:
     return "\nUNION ALL\n".join(sels)
 
 
-@query(
+@audit(
     "streaming_partitioned_fact_audit",
     oracle=_partitioned_fact_oracle(),
 )
 def streaming_partitioned_fact_audit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, tmp: str
 ) -> DataFrame:
     """Streaming ingestion INTO the canonical 100 TB fact layout — a
     real ``availableNow`` run of ``write_stream_to_snapshot_table``
@@ -1193,83 +1172,79 @@ def streaming_partitioned_fact_audit(
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    tmp = tempfile.mkdtemp(prefix="stream_pfact_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        _write_batch_files(batches, src)
-        table = SnapshotTable(
-            spark, os.path.join(tmp, "fact"), partition_by=["day(ts)"]
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_batch_files(batches, src)
+    table = SnapshotTable(
+        spark, os.path.join(tmp, "fact"), partition_by=["day(ts)"]
+    )
+    table.shard_checkpoint_files = 8
+    with _small_shuffle(spark):
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
         )
-        table.shard_checkpoint_files = 8
-        with _small_shuffle(spark):
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
+        _drain(
+            write_stream_to_snapshot_table(
+                stream, table, "gate_audit", os.path.join(tmp, "ckpt")
             )
-            _drain(
-                write_stream_to_snapshot_table(
-                    stream, table, "gate_audit", os.path.join(tmp, "ckpt")
-                )
+        )
+        v_after_first = len(table._versions())
+        stream2 = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        _drain(
+            write_stream_to_snapshot_table(
+                stream2, table, "gate_audit", os.path.join(tmp, "ckpt")
             )
-            v_after_first = len(table._versions())
-            stream2 = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-            )
-            _drain(
-                write_stream_to_snapshot_table(
-                    stream2, table, "gate_audit", os.path.join(tmp, "ckpt")
-                )
-            )
-        rerun_ok = 1 if len(table._versions()) == v_after_first == 3 else 0
+        )
+    rerun_ok = 1 if len(table._versions()) == v_after_first == 3 else 0
 
-        rng_lit = "2024-01-27 12:00:00"
-        out = None
-        for v in (1, 2, 3):
-            day_where = [("ts_day", "=", "2024-01-10")]
-            n_meta = table.row_count(version=v, partition_where=day_where)
-            day_r = table.read(version=v, partition_where=day_where).agg(
+    rng_lit = "2024-01-27 12:00:00"
+    out = None
+    for v in (1, 2, 3):
+        day_where = [("ts_day", "=", "2024-01-10")]
+        n_meta = table.row_count(version=v, partition_where=day_where)
+        day_r = table.read(version=v, partition_where=day_where).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.coalesce(F.sum("event_id"), F.lit(0))
+            .cast("long")
+            .alias("sum_event_id"),
+        ).select(
+            F.lit(v).cast("long").alias("version"),
+            F.lit("day_eq").alias("probe"),
+            "n_rows",
+            F.lit(n_meta).cast("long").alias("n_meta"),
+            "sum_event_id",
+        )
+        rng_r = (
+            table.read(version=v, partition_where=[("ts", ">=", rng_lit)])
+            .filter(F.col("ts") >= rng_lit)
+            .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.coalesce(F.sum("event_id"), F.lit(0))
                 .cast("long")
                 .alias("sum_event_id"),
-            ).select(
+            )
+            .select(
                 F.lit(v).cast("long").alias("version"),
-                F.lit("day_eq").alias("probe"),
+                F.lit("ts_range").alias("probe"),
                 "n_rows",
-                F.lit(n_meta).cast("long").alias("n_meta"),
+                F.lit(-1).cast("long").alias("n_meta"),
                 "sum_event_id",
             )
-            rng_r = (
-                table.read(version=v, partition_where=[("ts", ">=", rng_lit)])
-                .filter(F.col("ts") >= rng_lit)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.coalesce(F.sum("event_id"), F.lit(0))
-                    .cast("long")
-                    .alias("sum_event_id"),
-                )
-                .select(
-                    F.lit(v).cast("long").alias("version"),
-                    F.lit("ts_range").alias("probe"),
-                    "n_rows",
-                    F.lit(-1).cast("long").alias("n_meta"),
-                    "sum_event_id",
-                )
-            )
-            both = day_r.unionByName(rng_r)
-            out = both if out is None else out.unionByName(both)
-        flag = spark.createDataFrame(
-            [(0, "rerun_no_reappend", rerun_ok, -1, 0)],
-            "version long, probe string, n_rows long, n_meta long,"
-            " sum_event_id long",
         )
-        return out.unionByName(flag).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        both = day_r.unionByName(rng_r)
+        out = both if out is None else out.unionByName(both)
+    flag = spark.createDataFrame(
+        [(0, "rerun_no_reappend", rerun_ok, -1, 0)],
+        "version long, probe string, n_rows long, n_meta long,"
+        " sum_event_id long",
+    )
+    return out.unionByName(flag)
 
 
 def _medallion_incremental_oracle() -> str:
@@ -1308,11 +1283,13 @@ def _medallion_incremental_oracle() -> str:
     """
 
 
-@query(
+@audit(
     "medallion_incremental_audit",
     oracle=_medallion_incremental_oracle(),
 )
-def medallion_incremental_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def medallion_incremental_audit(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """The reference's medallion loop END TO END, composed from the
     gated pieces and itself hash-gated: RAW event files stream through
     a real checkpointed ``availableNow`` sink into a
@@ -1351,81 +1328,77 @@ def medallion_incremental_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("decimal(28,9)").alias("value"),
         )
 
-    tmp = tempfile.mkdtemp(prefix="medallion_inc_audit_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        _write_batch_files(first, src)
-        bronze = SnapshotTable(
-            spark, os.path.join(tmp, "bronze"), partition_by=["day(ts)"]
-        )
-        silver = SnapshotTable(
-            spark, os.path.join(tmp, "silver"), partition_by=["day"]
-        )
-        out = None
-        with _small_shuffle(spark):
-            for refresh_no, arriving, gdpr in (
-                (1, None, None),
-                (2, late, None),
-                (3, None, F.col("event_id") % 9 == 0),
-            ):
-                if arriving is not None:
-                    _write_batch_files([arriving], src, start_at=3)
-                    stream = (
-                        spark.readStream.schema(ev.schema)
-                        .option("maxFilesPerTrigger", "1")
-                        .parquet(src)
-                    )
-                    _drain(
-                        write_stream_to_snapshot_table(
-                            stream, bronze, "medallion",
-                            os.path.join(tmp, "ckpt"),
-                        )
-                    )
-                elif gdpr is not None:
-                    bronze.delete(gdpr)
-                else:
-                    stream = (
-                        spark.readStream.schema(ev.schema)
-                        .option("maxFilesPerTrigger", "1")
-                        .parquet(src)
-                    )
-                    _drain(
-                        write_stream_to_snapshot_table(
-                            stream, bronze, "medallion",
-                            os.path.join(tmp, "ckpt"),
-                        )
-                    )
-                mode = refresh_rollup(
-                    bronze, silver, prepare, ["day"], ["value"],
-                    app_id="silver",
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_batch_files(first, src)
+    bronze = SnapshotTable(
+        spark, os.path.join(tmp, "bronze"), partition_by=["day(ts)"]
+    )
+    silver = SnapshotTable(
+        spark, os.path.join(tmp, "silver"), partition_by=["day"]
+    )
+    out = None
+    with _small_shuffle(spark):
+        for refresh_no, arriving, gdpr in (
+            (1, None, None),
+            (2, late, None),
+            (3, None, F.col("event_id") % 9 == 0),
+        ):
+            if arriving is not None:
+                _write_batch_files([arriving], src, start_at=3)
+                stream = (
+                    spark.readStream.schema(ev.schema)
+                    .option("maxFilesPerTrigger", "1")
+                    .parquet(src)
                 )
-                r = silver.read().select(
-                    F.lit("silver").alias("tier"),
-                    F.lit(refresh_no).cast("long").alias("refresh"),
-                    "day",
-                    "n_rows",
-                    F.round(F.col("sum_value").cast("double"), 4).alias(
-                        "sum_value"
-                    ),
-                    F.lit(mode).alias("mode"),
+                _drain(
+                    write_stream_to_snapshot_table(
+                        stream, bronze, "medallion",
+                        os.path.join(tmp, "ckpt"),
+                    )
                 )
-                out = r if out is None else out.unionByName(r)
-        gold = (
-            silver.read()
-            .select(
-                F.lit("gold").alias("tier"),
-                F.lit(3).cast("long").alias("refresh"),
+            elif gdpr is not None:
+                bronze.delete(gdpr)
+            else:
+                stream = (
+                    spark.readStream.schema(ev.schema)
+                    .option("maxFilesPerTrigger", "1")
+                    .parquet(src)
+                )
+                _drain(
+                    write_stream_to_snapshot_table(
+                        stream, bronze, "medallion",
+                        os.path.join(tmp, "ckpt"),
+                    )
+                )
+            mode = refresh_rollup(
+                bronze, silver, prepare, ["day"], ["value"],
+                app_id="silver",
+            )
+            r = silver.read().select(
+                F.lit("silver").alias("tier"),
+                F.lit(refresh_no).cast("long").alias("refresh"),
                 "day",
                 "n_rows",
                 F.round(F.col("sum_value").cast("double"), 4).alias(
                     "sum_value"
                 ),
-                F.lit("top3").alias("mode"),
+                F.lit(mode).alias("mode"),
             )
-            .orderBy(F.col("sum_value").desc(), "day")
-            .limit(3)
+            out = r if out is None else out.unionByName(r)
+    gold = (
+        silver.read()
+        .select(
+            F.lit("gold").alias("tier"),
+            F.lit(3).cast("long").alias("refresh"),
+            "day",
+            "n_rows",
+            F.round(F.col("sum_value").cast("double"), 4).alias(
+                "sum_value"
+            ),
+            F.lit("top3").alias("mode"),
         )
-        return out.unionByName(gold).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        .orderBy(F.col("sum_value").desc(), "day")
+        .limit(3)
+    )
+    return out.unionByName(gold)

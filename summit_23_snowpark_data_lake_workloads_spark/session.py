@@ -35,6 +35,13 @@ def _export_package_to_workers() -> None:
         )
 
 
+def _half_physical_memory() -> str:
+    """Default driver heap: half the host's physical memory, so a test or
+    tool JVM never asks for more heap than the machine has."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{phys // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "summit23_spark",
     shuffle_partitions: int | None = None,
@@ -70,7 +77,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _half_physical_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.caseSensitive", "false")

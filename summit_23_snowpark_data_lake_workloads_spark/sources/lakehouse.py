@@ -2301,7 +2301,7 @@ class SnapshotTable:
             "delete",
             prev,
             touched,
-            lambda t: t.join(kdf, key_cols, "left_anti"),
+            lambda t: t.join(F.broadcast(kdf), key_cols, "left_anti"),
             txn=txn,
             skip_empty=True,
         )

@@ -127,6 +127,37 @@ def test_delete_keys_rewrites_only_touched_files(spark, tmp_path):
     assert before & set(after.files)
 
 
+def test_delete_keys_job_count(spark, tmp_path):
+    """The survivor anti-join broadcasts the key side, like the matching
+    step: on a 3-file, 30-row table a 2-key ``delete_keys`` launched 14
+    Spark jobs with a shuffled anti-join and launches 10 with the hint
+    (``delete`` on the same table launches 7)."""
+    t = SnapshotTable(spark, str(tmp_path / "dk"))
+    files = [
+        spark.range(lo, lo + 10, numPartitions=1).select(
+            F.col("id").cast("int").alias("id"),
+            (F.col("id") * 2).cast("double").alias("v"),
+        )
+        for lo in (0, 10, 20)
+    ]
+    t.create(files[0])
+    for f in files[1:]:
+        t.append(f)
+    assert len(t.snapshot().files) == 3
+    keys = spark.createDataFrame([(3,), (17,)], "id int")
+    sc = spark.sparkContext
+    sc.setJobGroup("delete_keys_job_count", "delete_keys")
+    try:
+        t.delete_keys(keys, ["id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("delete_keys_job_count")
+    assert len(jobs) <= 10
+    assert sorted(r.id for r in t.read().collect()) == [
+        i for i in range(30) if i not in (3, 17)
+    ]
+
+
 def test_net_changes_priority_insert_beats_delete_same_version(spark):
     chg = spark.createDataFrame(
         [

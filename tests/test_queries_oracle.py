@@ -26,6 +26,46 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     assert_matches_oracle(df, duck, ORACLES[name])
 
 
+def test_audit_removes_scratch_dir_and_pins_result(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """``@audit`` owns each lifecycle audit's scratch directory: it is
+    gone once the audit returns, the returned frame still collects (it
+    is pinned, not lazy over deleted files), and it is gone too when
+    the audit body raises."""
+    import tempfile
+
+    from summit_23_snowpark_data_lake_workloads_spark.sources.lakehouse import (
+        SnapshotTable,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    create = SnapshotTable.create
+    paths = []
+
+    def spy(self, *args, **kwargs):
+        paths.append(self.path)
+        return create(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "create", spy)
+    df = QUERIES["lakehouse_constraints_audit"](spark, sf_dir)
+    assert paths and paths[0].startswith(
+        str(tmp_path / "lakehouse_constraints_audit_")
+    )
+    assert list(tmp_path.iterdir()) == []
+    assert len(df.collect()) > 0
+
+    def boom(self, *args, **kwargs):
+        paths.append(self.path)
+        raise RuntimeError("create failed")
+
+    monkeypatch.setattr(SnapshotTable, "create", boom)
+    with pytest.raises(RuntimeError, match="create failed"):
+        QUERIES["lakehouse_constraints_audit"](spark, sf_dir)
+    assert paths[-1].startswith(str(tmp_path))
+    assert list(tmp_path.iterdir()) == []
+
+
 @pytest.mark.slow  # r16: 5.5 min; redundant with the per-query oracle
 # differentials below (192/192 coverage, each asserting rows vs DuckDB)
 def test_every_query_has_nonzero_result(spark, sf_dir):

@@ -1,8 +1,8 @@
 """Pins for the r16 optimization changes (OPTIMIZATION_r16.md).
 
 Like tests/test_r15_optimizations.py: each change altered an operator's
-internals (or added a non-default scale flag) while keeping the default
-output byte-identical; these tests pin that equivalence.
+internals while keeping the output byte-identical; these tests pin
+that equivalence.
 """
 
 from __future__ import annotations
@@ -18,50 +18,6 @@ def _docs(spark):
     )
 
     return read_table(spark, SF, "documents")
-
-
-def test_hash_shingle_keys_flag_default_off(monkeypatch):
-    from summit_23_snowpark_data_lake_workloads_spark.operators.dedup import (
-        hash_shingle_keys_enabled,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_HASH_SHINGLE_KEYS", raising=False)
-    assert hash_shingle_keys_enabled() is False
-
-
-def test_hash_shingle_keys_flag_matches_exact(spark, monkeypatch):
-    """The flagged 8-byte-key plan computes pair-identical results to
-    the exact string-key plan whenever the corpus has zero 64-bit
-    shingle-hash collisions (which the audit proves for this corpus)."""
-    from summit_23_snowpark_data_lake_workloads_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        shingle_hash_collision_audit,
-    )
-
-    docs = _docs(spark)
-    audit = shingle_hash_collision_audit(docs, "doc_id", "text", n=3).collect()[0]
-    assert audit["collisions"] == 0
-    assert audit["n_distinct_shingles"] == audit["n_distinct_hashes"]
-
-    exact = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    monkeypatch.setenv("SPARK_GRAFT_HASH_SHINGLE_KEYS", "1")
-    hashed = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    assert hashed.exceptAll(exact).count() == 0
-    assert exact.exceptAll(hashed).count() == 0
-
-
-def test_hash_shingle_keys_flag_narrows_join_key(spark, monkeypatch):
-    """With the flag on, the shuffle key flowing into the intersection
-    self-join is an 8-byte long, not the shingle string."""
-    from summit_23_snowpark_data_lake_workloads_spark.operators.dedup import (
-        _narrow_shingle_keys,
-        shingle_table,
-    )
-
-    sh = shingle_table(_docs(spark), "doc_id", "text", n=3)
-    assert dict(_narrow_shingle_keys(sh).dtypes)["shingle"] == "string"
-    monkeypatch.setenv("SPARK_GRAFT_HASH_SHINGLE_KEYS", "1")
-    assert dict(_narrow_shingle_keys(sh).dtypes)["shingle"] == "bigint"
 
 
 def test_bpe_fused_loop_merge_table_unchanged(spark):

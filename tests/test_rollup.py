@@ -109,11 +109,21 @@ def test_incremental_touches_only_changed_partitions(spark, tables):
     assert _state(rollup) == _full(spark, fact)
 
 
-def test_delete_commit_refreshes_incremental_cdf(spark, tables):
+@pytest.mark.parametrize(
+    "partition_by", [["day"], None], ids=["partitioned", "unpartitioned"]
+)
+def test_delete_commit_refreshes_incremental_cdf(
+    spark, tables, tmp_path, partition_by
+):
     """A row DELETE in the range no longer forces a full recompute: the
     change feed's retractions fold the deleted rows OUT of the existing
-    groups (r10 — the Delta-CDF materialized-view loop)."""
-    fact, rollup = tables
+    groups (r10 — the Delta-CDF materialized-view loop). Both layouts:
+    a partitioned rollup pins the delta before its partition-local
+    rewrite, an unpartitioned one reads it inside a single write."""
+    fact, _ = tables
+    rollup = SnapshotTable(
+        spark, str(tmp_path / "cdf_roll"), partition_by=partition_by
+    )
     refresh_rollup(fact, rollup, _prepare, ["day"], ["v"])
     fact.append(_events(spark, 20, 24))
     fact.delete(F.col("id") % 5 == 0)
