@@ -738,17 +738,25 @@ def _footer_stats(abs_path: str) -> dict:
     return out
 
 
-_BLOOM_BITS = 8192  # 1 KiB/column/file; ~1% FP at ~850 distinct values
+#: Bloom sizing: 8192 bits (1 KiB) per 850 distinct values, ~9.64 bits
+#: per value, with k = 4 hashes: (1 - e^(-4/9.64))^4 ~ 1.33% false
+#: positives per file at ANY file size. A column's bitset grows with the
+#: file's distinct non-null count above the 1 KiB floor, so a file of
+#: <= 850 distinct values keeps the fixed 1 KiB bloom older manifests
+#: hold. Manifest cost above the floor: ~2.4 hex characters per distinct
+#: value per indexed column.
+_BLOOM_BITS = 8192
+_BLOOM_VALUES = 850
 _BLOOM_K = 4
 
 
-def _bloom_hashes(value) -> list[int]:
+def _bloom_hashes(value, nbits: int) -> list[int]:
     import hashlib
 
     out = []
     for salt in range(_BLOOM_K):
         h = hashlib.md5(f"{salt}:{value!r}".encode()).digest()
-        out.append(int.from_bytes(h[:8], "big") % _BLOOM_BITS)
+        out.append(int.from_bytes(h[:8], "big") % nbits)
     return out
 
 
@@ -756,17 +764,26 @@ def _file_bloom(abs_path: str, cols: list[str]) -> dict:
     """Per-column bloom filter over a file's values (hex-packed bitset).
     Unlike footer stats this READS the indexed columns — a write-time
     one-off, amortized over every point-lookup read after it (the
-    Delta/Iceberg bloom-index trade)."""
+    Delta/Iceberg bloom-index trade).
+
+    Each bitset holds ``ceil(n * 9.64)`` bits for the column's ``n``
+    distinct non-null values (k = 4 hashes), rounded up to whole bytes
+    and at least 1 KiB: ~1.33% false positives per file whatever its
+    size, for ~2.4 manifest hex characters per distinct value."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(abs_path, columns=[c for c in cols])
     out = {}
     for c in tbl.column_names:
-        bits = bytearray(_BLOOM_BITS // 8)
-        for v in tbl[c].to_pylist():
-            if v is None:
-                continue
-            for h in _bloom_hashes(v):
+        values = pc.unique(tbl[c].drop_null()).to_pylist()
+        nbytes = max(
+            _BLOOM_BITS // 8,
+            -(-len(values) * _BLOOM_BITS // (_BLOOM_VALUES * 8)),
+        )
+        bits = bytearray(nbytes)
+        for v in values:
+            for h in _bloom_hashes(v, nbytes * 8):
                 bits[h >> 3] |= 1 << (h & 7)
         out[c] = bits.hex()
     return out
@@ -774,7 +791,10 @@ def _file_bloom(abs_path: str, cols: list[str]) -> dict:
 
 def _bloom_may_contain(bloom_hex: str, value) -> bool:
     bits = bytes.fromhex(bloom_hex)
-    return all(bits[h >> 3] & (1 << (h & 7)) for h in _bloom_hashes(value))
+    return all(
+        bits[h >> 3] & (1 << (h & 7))
+        for h in _bloom_hashes(value, len(bits) * 8)
+    )
 
 
 def _file_may_match(
