@@ -228,15 +228,17 @@ def refresh_rollup(
     # parquet: files store physical (creation-time) names, so after a
     # rename_column a raw read would miss the renamed column — or, on
     # a name-swap chain, silently aggregate the WRONG one. _scan also
-    # merges footers, so a mid-range schema evolution cannot drop a
-    # late-added sum column. Appended files carry no DVs at add time
-    # (this is the no-removals branch), hence dvs=None.
+    # merges the files' schemas, so a mid-range schema evolution cannot
+    # drop a late-added sum column. Appended files carry no DVs at add
+    # time (this is the no-removals branch), hence dvs=None; for the
+    # same reason every added file is live at v_hi, so that snapshot's
+    # recorded schemas cover them.
     # localCheckpoint (r16, guide §1.2): _apply_delta's partitioned path
     # consumes the delta from three actions; a lazy delta re-scanned the
     # added files per action (three passes over the commit footprint
     # instead of one). Unpartitioned rollups skip it — see the CDF
     # branch's note.
-    delta = aggregate(fact._scan(added, dvs=None))
+    delta = aggregate(fact._scan(added, None, fact.snapshot(v_hi).schemas))
     if rollup.partition_by:
         delta = delta.localCheckpoint(eager=True)
     _apply_delta(rollup, delta, group_cols, sum_cols, txn, signed=False)

@@ -77,6 +77,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # lakehouse scans pass their live data files as explicit local
+        # paths; past the default threshold (32 paths) Spark lists them
+        # with a distributed job, one extra job before every such read
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY", _half_physical_memory()),

@@ -301,6 +301,14 @@ class Snapshot:
     #: Iceberg v2 position deletes). Readers subtract them; compaction
     #: and COW rewrites purge them (a rewritten file's DV dies with it)
     dvs: dict = None  # type: ignore[assignment]
+    #: per-batch Spark schemas {batch dir: schema JSON} of the live files
+    #: (:func:`_batch_of`), read from each added file's footer at commit
+    #: — Delta's ``metaData`` schema, kept per batch so it stays exact
+    #: under remove, rewrite, compaction and rollback. A scan folds them
+    #: instead of running a footer-merge job; a file whose batch has no
+    #: entry (older manifests, linked foreign files) plans through the
+    #: footer merge
+    schemas: dict = None  # type: ignore[assignment]
 
 
 # ----------------------------------------------------- deletion vectors
@@ -704,16 +712,158 @@ def _partition_match(vals: dict, conjuncts: list[tuple]) -> bool:
     return True
 
 
-def _footer_stats(abs_path: str) -> dict:
+#: footer key under which Spark stores the schema of the frame that
+#: wrote a parquet file: the string Spark's own schema inference reads
+#: back (it converts the parquet types only when the key is absent)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_BATCH_DIR_RE = re.compile(r"b-[0-9a-f]+")
+
+
+def _footer_facts(abs_path: str) -> tuple[dict, str | None]:
+    """``(stats, schema)`` from one driver-side footer read:
+    :func:`_footer_stats` and the Spark schema JSON the file carries
+    (canonical key order; None for a file Spark did not write)."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(abs_path).metadata
+    raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    schema = json.dumps(json.loads(raw), sort_keys=True) if raw else None
+    return _footer_stats(md), schema
+
+
+def _batch_of(f: str) -> str | None:
+    """The batch dir of a data file this format wrote (``data/b-<id>``,
+    with the ``_pk_<field>=<value>`` levels of a partitioned write
+    stripped): all its files come from ONE Spark write, so they share
+    one schema. None for any other layout (linked foreign files)."""
+    d = os.path.dirname(f)
+    while os.path.basename(d).startswith("_pk_"):
+        d = os.path.dirname(d)
+    return d if _BATCH_DIR_RE.fullmatch(os.path.basename(d)) else None
+
+
+class _SchemaConflict(ValueError):
+    """Two recorded schemas that :func:`_merge_type` does not resolve."""
+
+
+def _nullable(t):
+    """Spark's ``DataType.asNullable`` over the JSON form: a parquet scan
+    surfaces every field, array element and map value as nullable."""
+    if isinstance(t, dict):
+        if t["type"] == "struct":
+            return {
+                **t,
+                "fields": [
+                    {**f, "type": _nullable(f["type"]), "nullable": True}
+                    for f in t["fields"]
+                ],
+            }
+        if t["type"] == "array":
+            return {
+                **t, "elementType": _nullable(t["elementType"]),
+                "containsNull": True,
+            }
+        if t["type"] == "map":
+            return {
+                **t,
+                "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"]),
+                "valueContainsNull": True,
+            }
+    return t
+
+
+def _merge_type(a, b):
+    """Spark's parquet schema merge (``StructType.merge``) over the JSON
+    form, for the cases it resolves without widening: structs union
+    their fields in order (left fields first, the left field's metadata
+    kept), arrays and maps merge element-wise, equal types stay. Any
+    other pair — a type change, decimal widening, or two names equal
+    only up to case (how those merge is a session setting) — raises
+    :class:`_SchemaConflict`, and the caller plans through Spark's own
+    footer merge instead."""
+    if a == b:
+        return a
+    kind = a.get("type") if isinstance(a, dict) else None
+    if kind is None or not isinstance(b, dict) or b.get("type") != kind:
+        raise _SchemaConflict(f"{a!r} vs {b!r}")
+    if kind == "array":
+        return {
+            **a,
+            "elementType": _merge_type(a["elementType"], b["elementType"]),
+            "containsNull": a["containsNull"] or b["containsNull"],
+        }
+    if kind == "map":
+        return {
+            **a,
+            "keyType": _merge_type(a["keyType"], b["keyType"]),
+            "valueType": _merge_type(a["valueType"], b["valueType"]),
+            "valueContainsNull": (
+                a["valueContainsNull"] or b["valueContainsNull"]
+            ),
+        }
+    if kind != "struct":
+        raise _SchemaConflict(f"{a!r} vs {b!r}")
+    right = {f["name"]: f for f in b["fields"]}
+    left = {f["name"] for f in a["fields"]}
+    if len({n.lower() for n in left | set(right)}) != len(left | set(right)):
+        raise _SchemaConflict("field names equal up to case")
+    out = [
+        f
+        if f["name"] not in right
+        else {
+            **f,
+            "type": _merge_type(f["type"], right[f["name"]]["type"]),
+            "nullable": f["nullable"] or right[f["name"]]["nullable"],
+        }
+        for f in a["fields"]
+    ]
+    out += [g for g in b["fields"] if g["name"] not in left]
+    return {**a, "fields": out}
+
+
+def _recorded_schema(
+    files: list[str], paths: list[str], schemas: dict | None
+):
+    """The schema a mergeSchema scan of ``paths`` (``files`` as manifest
+    keys) would infer, folded from the recorded per-batch ``schemas``
+    in sorted absolute-path order — the order Spark merges footers in.
+    None when a file's batch has no entry or the fold conflicts."""
+    if not schemas:
+        return None
+    order: list[str] = []
+    for _p, f in sorted(zip(paths, files)):
+        sch = schemas.get(_batch_of(f))
+        if sch is None:
+            return None
+        if sch not in order:
+            order.append(sch)
+    return _merged_schema(order)
+
+
+def _merged_schema(schemas: list[str]):
+    """The StructType a mergeSchema scan infers from files carrying
+    ``schemas`` (in the scan's sorted-path order), or None on a
+    :class:`_SchemaConflict`."""
+    from pyspark.sql.types import StructType
+
+    try:
+        merged = reduce(
+            _merge_type, [_nullable(json.loads(s)) for s in schemas]
+        )
+    except _SchemaConflict:
+        return None
+    return StructType.fromJson(merged)
+
+
+def _footer_stats(md) -> dict:
     """Column [min, max] from a parquet file's row-group footers — pure
     metadata (no data pages read), the same stats Delta stores in its
     transaction log. Only JSON-stable scalar types are kept. The file's
     row count rides along under the reserved key ``_nrows`` (Delta's
     ``numRecords``): it is what makes ``COUNT(*)`` — the most common
-    query against a 100 TB table — a manifest read instead of a scan."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(abs_path).metadata
+    query against a 100 TB table — a manifest read instead of a scan.
+    ``md`` is the file's pyarrow ``FileMetaData``."""
     mins: dict = {}
     maxs: dict = {}
     for rg in range(md.num_row_groups):
@@ -826,9 +976,43 @@ def _file_may_match(
     raise ValueError(f"unsupported skip op {op!r} (use = < <= > >=)")
 
 
+def _schema_refs(schemas: dict | None, key: str) -> dict:
+    """Manifest form of a ``{batch: schema}`` map: each distinct schema
+    stored once under ``schema_defs`` and referenced by index per batch
+    under ``key`` (a table of 10^4 batches and one schema stores it
+    once). Empty when there is nothing to record."""
+    if not schemas:
+        return {}
+    defs: list = []
+    index: dict = {}
+    refs: dict = {}
+    for b, sch in sorted(schemas.items()):
+        if sch not in index:
+            index[sch] = len(defs)
+            defs.append(json.loads(sch))
+        refs[b] = index[sch]
+    return {key: refs, "schema_defs": defs}
+
+
+def _schemas_from(body: dict, key: str) -> dict:
+    """Inverse of :func:`_schema_refs` over a manifest (or shard) body."""
+    defs = [
+        json.dumps(d, sort_keys=True) for d in body.get("schema_defs", [])
+    ]
+    return {b: defs[i] for b, i in body.get(key, {}).items()}
+
+
+def _live_schemas(schemas: dict | None, files: list[str]) -> dict:
+    """The entries of ``schemas`` whose batch still holds a live file."""
+    if not schemas:
+        return {}
+    batches = {_batch_of(f) for f in files}
+    return {b: sch for b, sch in schemas.items() if b in batches}
+
+
 def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Give two frames the same column set (missing columns become
-    typed NULLs — the read path's ``mergeSchema`` contract) so a
+    typed NULLs — the read path's schema-merge contract) so a
     multiset ``exceptAll`` across a schema-evolution boundary compares
     rows the way a merged read would surface them."""
     for fld in b.schema.fields:
@@ -1203,11 +1387,11 @@ class SnapshotTable:
         mapping, expressed as a uuid-suffixed physical name): old
         files' bytes stay hidden behind the old physical name, new
         writes land under the fresh one, and the logical schema regains
-        ``name`` with the first evolving write (schemas derive from
-        file footers here, so the column surfaces — NULL on old rows —
-        once data arrives; Delta, which records types in its log, shows
-        it immediately). This closes the drop-then-recreate gap the
-        one-level map refused:
+        ``name`` with the first evolving write (schemas are recorded per
+        written batch here, so the column surfaces — NULL on old rows —
+        once data arrives; Delta, which records a type with the column
+        itself, shows it immediately). This closes the
+        drop-then-recreate gap the one-level map refused:
         ``drop_column('v')`` then ``readd_column('v')`` then an
         evolving append with ``v`` never resurrects the dropped bytes.
 
@@ -1430,6 +1614,7 @@ class SnapshotTable:
             blooms: dict = {}
             parts: dict = {}
             dvs: dict = {}
+            schemas: dict = {}
             loaded = []
             for shard, vals in sorted(m["shard_index"].items()):
                 if partition_where and not _partition_match(
@@ -1444,10 +1629,11 @@ class SnapshotTable:
                 blooms.update(s.get("blooms", {}))
                 parts.update(s.get("parts", {}))
                 dvs.update(s.get("dvs", {}))
+                schemas.update(_schemas_from(s, "schemas"))
             self.last_shards_loaded = loaded
             return Snapshot(
                 m["version"], m["timestamp_ms"], m["operation"], sorted(files),
-                stats, m.get("txn"), blooms, parts, dvs,
+                stats, m.get("txn"), blooms, parts, dvs, schemas,
             )
         if "files" in m:
             files = m["files"]
@@ -1461,10 +1647,13 @@ class SnapshotTable:
                 ]
                 parts = {f: parts[f] for f in files if f in parts}
                 dvs = {f: dvs[f] for f in files if f in dvs}
+            schemas = _schemas_from(m, "schemas")
+            if partition_where:
+                schemas = _live_schemas(schemas, files)
             return Snapshot(
                 m["version"], m["timestamp_ms"], m["operation"], files,
                 m.get("stats", {}), m.get("txn"), m.get("blooms", {}),
-                parts, dvs,
+                parts, dvs, schemas,
             )
         base = self._load(m["base_version"], partition_where)
         removed = set(m.get("remove", []))
@@ -1504,14 +1693,17 @@ class SnapshotTable:
         for f, r in m.get("add_dvs", {}).items():
             if f in live:
                 dvs[f] = _ranges_union(dvs.get(f, []), r)
+        schemas = _live_schemas(
+            {**(base.schemas or {}), **_schemas_from(m, "add_schemas")}, files
+        )
         return Snapshot(
             m["version"], m["timestamp_ms"], m["operation"], files,
-            stats, m.get("txn"), blooms, parts, dvs,
+            stats, m.get("txn"), blooms, parts, dvs, schemas,
         )
 
     def _full_manifest_body(self, snap: Snapshot) -> dict:
         """The FULL-manifest JSON body for ``snap`` — inline
-        (files/stats/blooms/parts) normally; past
+        (files/stats/blooms/parts/dvs/schemas) normally; past
         ``shard_checkpoint_files`` on a partitioned table, written as
         per-partition SHARD sidecars under ``_manifests/shards/`` with
         the body carrying only a ``shard_index`` (shard → partition
@@ -1533,6 +1725,7 @@ class SnapshotTable:
                 **({"blooms": snap.blooms} if snap.blooms else {}),
                 **({"parts": snap.parts} if snap.parts else {}),
                 **({"dvs": snap.dvs} if snap.dvs else {}),
+                **_schema_refs(snap.schemas, "schemas"),
             }
         groups: dict = {}
         for f in snap.files:
@@ -1568,6 +1761,9 @@ class SnapshotTable:
                                 for f in files
                                 if f in (snap.dvs or {})
                             },
+                            **_schema_refs(
+                                _live_schemas(snap.schemas, files), "schemas"
+                            ),
                         }
                     )
                 )
@@ -1631,6 +1827,13 @@ class SnapshotTable:
         is unrecoverable from file diffs alone)."""
         remove = remove or frozenset()
         dv_add = dv_add or {}
+        # one driver-side footer read per added file, outside the retry
+        # loop: its stats, and the Spark schema its batch carries
+        facts = {f: _footer_facts(os.path.join(self.path, f)) for f in add}
+        add_schemas: dict = {}
+        for f, (_stats, sch) in facts.items():
+            if sch is not None and _batch_of(f) is not None:
+                add_schemas.setdefault(_batch_of(f), sch)
         if (
             self.cdf
             and change_files is None
@@ -1646,7 +1849,7 @@ class SnapshotTable:
             # added files); replace-all persists nothing (table-sized
             # by definition — consumers full-recompute those).
             change_files = self._persist_changes(
-                base_version, add, remove, dv_add
+                base_version, add, remove, dv_add, add_schemas
             )
         # partition tuples are recoverable from the paths themselves
         add_parts = (
@@ -1699,6 +1902,7 @@ class SnapshotTable:
                 base_files, base_stats, base_blooms = [], {}, {}
                 base_parts = {}
                 base_dvs = {}
+                base_schemas = {}
             else:
                 base = self._load(latest)
                 base_files = base.files
@@ -1706,6 +1910,7 @@ class SnapshotTable:
                 base_blooms = base.blooms or {}
                 base_parts = base.parts or {}
                 base_dvs = base.dvs or {}
+                base_schemas = base.schemas or {}
             files = [f for f in base_files if f not in remove] + add
             # stats/blooms carry over with their file; new files get fresh
             stats = {f: base_stats[f] for f in base_files if f in base_stats}
@@ -1713,7 +1918,7 @@ class SnapshotTable:
             parts = {f: base_parts[f] for f in base_files if f in base_parts}
             parts.update(add_parts)
             for f in add:
-                stats[f] = _footer_stats(os.path.join(self.path, f))
+                stats[f] = facts[f][0]
                 if self.bloom_cols:
                     blooms[f] = _file_bloom(
                         os.path.join(self.path, f), self.bloom_cols
@@ -1725,6 +1930,7 @@ class SnapshotTable:
             dvs = {f: r for f, r in base_dvs.items() if f in live}
             for f, r in dv_add.items():
                 dvs[f] = _ranges_union(dvs.get(f, []), r)
+            schemas = _live_schemas({**base_schemas, **add_schemas}, files)
             if txn is not None:
                 # re-check idempotency inside the commit loop: a replayed
                 # micro-batch racing its twin must not double-append
@@ -1734,7 +1940,7 @@ class SnapshotTable:
             next_v = latest + 1
             snap = Snapshot(
                 next_v, int(time.time() * 1000), operation, sorted(files),
-                stats, txn, blooms, parts, dvs,
+                stats, txn, blooms, parts, dvs, schemas,
             )
             # DELTA manifest for incremental commits: metadata written is
             # proportional to the commit (add/remove lists + their stats),
@@ -1796,6 +2002,7 @@ class SnapshotTable:
                     **({"add_blooms": add_blooms} if add_blooms else {}),
                     **({"add_parts": add_parts} if add_parts else {}),
                     **({"add_dvs": dv_add} if dv_add else {}),
+                    **_schema_refs(add_schemas, "add_schemas"),
                 }
             if self.partition_by:
                 body_d["partition_by"] = self.partition_by
@@ -1839,6 +2046,29 @@ class SnapshotTable:
             for f in os.listdir(out)
             if f.endswith(".parquet")
         ]
+
+    def _rows_in(self, files: list[str]) -> int:
+        """Total row count of already-written data files, from their
+        footers only (driver-local metadata read, no Spark job)."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.ParquetFile(os.path.join(self.path, f)).metadata.num_rows
+            for f in files
+        )
+
+    def _write_nonempty(self, df: DataFrame) -> list[str]:
+        """:meth:`_write_batch`, but a write whose files hold no rows adds
+        nothing: its batch dir is removed at once and ``[]`` returned.
+        The frame's plan runs once — a ``limit(1).count()`` probe
+        before the write would run it twice — and the footers answer
+        emptiness on the driver."""
+        files = self._write_batch(df)
+        if self._rows_in(files):
+            return files
+        for b in {_batch_of(f) for f in files} - {None}:
+            shutil.rmtree(os.path.join(self.path, b), ignore_errors=True)
+        return []
 
     def _write_batch_parts(self, df: DataFrame) -> dict:
         """Partition-aligned batch write: every output file holds rows of
@@ -1894,8 +2124,13 @@ class SnapshotTable:
         tag: str | None = None,
         branch: str | None = None,
     ) -> DataFrame:
-        """The table at a version (default latest). ``mergeSchema`` makes
-        added-column evolution transparent: old files surface NULLs.
+        """The table at a version (default latest), with the merged
+        schema of its live files — added-column evolution is transparent:
+        old files surface NULLs. The schema is folded from the batch
+        schemas the manifests record (:attr:`Snapshot.schemas`), so the
+        read plans without launching a Spark job; only a live file with
+        no recorded schema (or a merge conflict) sends it through
+        Spark's footer-merge inference (:meth:`_read_files`).
 
         ``tag`` — read the version a named ref (:meth:`create_tag`)
         pins; mutually exclusive with ``version``/``as_of_ms``. Tagged
@@ -1970,9 +2205,11 @@ class SnapshotTable:
                 return self.read(version, as_of_ms).limit(0)  # empty, right schema
         if not files:
             raise ValueError(f"version {snap.version} is empty")
-        return self._scan(files, snap.dvs)
+        return self._scan(files, snap.dvs, snap.schemas)
 
-    def _scan(self, files: list[str], dvs: dict | None) -> DataFrame:
+    def _scan(
+        self, files: list[str], dvs: dict | None, schemas: dict | None
+    ) -> DataFrame:
         """Plan a scan over ``files`` with DELETION VECTORS applied: a
         codegen predicate over the scan's hidden ``_metadata``
         (file_path + row_index) — no join, so ``_metadata`` stays
@@ -1980,10 +2217,14 @@ class SnapshotTable:
         through it) and whole-stage codegen keeps the scan fused. Every
         internal file-scoped read MUST route here: a raw
         ``spark.read.parquet`` of a DV-carrying file would resurrect
-        its soft-deleted rows."""
+        its soft-deleted rows.
+
+        ``dvs`` and ``schemas`` are the maps of the snapshot the files
+        come from (:class:`Snapshot`); the scan's schema is folded from
+        ``schemas`` on the driver, so planning launches no Spark job
+        (:meth:`_read_files`)."""
         live = set(files)
-        paths = [os.path.join(self.path, f) for f in files]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self._read_files(files, schemas)
         dvs_abs = {
             os.path.join(self.path, f): r
             for f, r in (dvs or {}).items()
@@ -2044,17 +2285,16 @@ class SnapshotTable:
         }
 
     def table_schema(self, version: int | None = None):
-        """The table's (merged) Spark schema at a version — footer-only
-        work, no data scan. After an evolved append, the merged schema
-        includes the new columns; a time-travel read of an older
-        version sees the pre-evolution schema.
+        """The table's (merged) Spark schema at a version — manifest-only
+        work, no data scan and no Spark job. After an evolved append, the
+        merged schema includes the new columns; a time-travel read of an
+        older version sees the pre-evolution schema.
 
-        Derived from the live files' footers (correct under every
-        operation incl. rollback, which can REVERT an evolution), and
-        bounded by compaction's file-count ceiling. At 10^6-file scale
-        the production move is Delta's: record the schema in each
-        schema-changing manifest — that lands in the same seam as the
-        partition-sharded checkpoints (ROADMAP)."""
+        Defined as the merge of the LIVE files' schemas, which each
+        commit records per written batch (Delta's ``metaData`` schema,
+        kept per batch): exact under every operation incl. rollback,
+        which can REVERT an evolution, with no special case. Files with
+        no recorded schema fall back to Spark's footer merge."""
         return self.read(version).schema
 
     def _validate_write_schema(self, df: DataFrame, schema_evolution: bool) -> None:
@@ -2062,7 +2302,7 @@ class SnapshotTable:
         their exact type (a type flip makes old and new files
         unreadable together); NEW columns require the explicit
         ``schema_evolution=True`` opt-in (old rows surface NULLs via the
-        read path's ``mergeSchema``); a write MISSING table columns is
+        read path's schema merge); a write MISSING table columns is
         always fine (its rows read as NULLs there — the Delta
         missing-column contract)."""
         current = {f.name: f.dataType for f in self.table_schema().fields}
@@ -2202,16 +2442,16 @@ class SnapshotTable:
         vectors (survivors come from the DV-filtered scan, and the
         removed file's DV dies with it). With nothing touched
         ``untouched`` is written instead, and with nothing to write the
-        commit is empty. ``skip_empty`` skips the write of an empty
-        rewrite (one ``limit(1).count()``)."""
+        commit is empty. ``skip_empty`` adds nothing for a rewrite that
+        holds no rows (:meth:`_write_nonempty`)."""
         out = (
-            transform(self._scan(sorted(touched), prev.dvs))
+            transform(self._scan(sorted(touched), prev.dvs, prev.schemas))
             if touched
             else untouched
         )
         if out is None:
             return self._commit(op, prev.version, [], txn=txn)
-        add = self._write_batch(out) if not skip_empty or out.limit(1).count() else []
+        add = self._write_nonempty(out) if skip_empty else self._write_batch(out)
         return self._commit(
             op, prev.version, add, remove=touched, txn=txn, merge_keys=merge_keys
         )
@@ -2365,7 +2605,7 @@ class SnapshotTable:
         insert. Only files holding matched keys are rewritten. A source
         with NEW columns needs ``schema_evolution=True`` (rewritten
         survivors carry NULLs there; untouched files surface NULLs via
-        the read path's ``mergeSchema``)."""
+        the read path's schema merge)."""
         prev = self.snapshot()
         self._validate_write_schema(source, schema_evolution)
         keys = source.select(*key_cols)
@@ -2580,7 +2820,7 @@ class SnapshotTable:
             )
 
         if strategy == "mor" and touched:
-            t = self._scan(sorted(touched), prev.dvs)
+            t = self._scan(sorted(touched), prev.dvs, prev.schemas)
             affected = self._locate(
                 t,
                 lambda d: clause_join(d).filter(
@@ -2600,7 +2840,7 @@ class SnapshotTable:
                 return self._commit(
                     "merge_mor",
                     prev.version,
-                    self._write_batch(adds) if adds.limit(1).count() else [],
+                    self._write_nonempty(adds),
                     remove=gone,
                     dv_add=dv_add,
                     txn=txn,
@@ -2615,7 +2855,7 @@ class SnapshotTable:
                 ~has_match | upd_cond | ~del_cond
             ).select(*updated)
             matched_keys = _key_match(keys, key_cols)(
-                self._scan(sorted(touched), prev.dvs)
+                self._scan(sorted(touched), prev.dvs, prev.schemas)
             ).select(*key_cols)
             return with_inserts(survivors, matched_keys)
 
@@ -2767,6 +3007,7 @@ class SnapshotTable:
             {ab(f): b for f, b in (snap.blooms or {}).items()},
             {ab(f): p for f, p in (snap.parts or {}).items()},
             {ab(f): r for f, r in (snap.dvs or {}).items()},
+            {ab(b): sch for b, sch in (snap.schemas or {}).items()},
         )
         os.makedirs(os.path.join(dst.path, _MANIFEST_DIR), exist_ok=True)
         body = {
@@ -3177,7 +3418,7 @@ class SnapshotTable:
                 return prev  # nothing worth packing: no empty commit
             # DV-aware: packing re-materializes only LIVE rows, and the
             # removed files' deletion vectors die with them (the purge)
-            packed_src = self._scan(small, prev.dvs)
+            packed_src = self._scan(small, prev.dvs, prev.schemas)
             remove, replace_all = frozenset(small), False
         packed = (
             packed_src.coalesce(target_files)
@@ -3349,10 +3590,21 @@ class SnapshotTable:
             out.append((v, op, added, removed, dv_delta))
         return out
 
-    def _read_files(self, relpaths: list[str]) -> DataFrame:
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, f) for f in relpaths]
-        )
+    def _read_files(
+        self, relpaths: list[str], schemas: dict | None = None
+    ) -> DataFrame:
+        """Physical-name frame over ``relpaths`` (manifest keys), no
+        deletion vectors applied. When ``schemas`` covers every file's
+        batch, the reader is given the folded schema
+        (:func:`_recorded_schema`) and plans without a Spark job.
+        Otherwise — a file with no recorded schema, or a fold conflict —
+        Spark merges the footers itself: one inference job, which also
+        raises Spark's own error on a type conflict."""
+        paths = [os.path.join(self.path, f) for f in relpaths]
+        schema = _recorded_schema(relpaths, paths, schemas)
+        if schema is None:
+            return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _persist_changes(
         self,
@@ -3360,6 +3612,7 @@ class SnapshotTable:
         add: list[str],
         remove: frozenset[str],
         dv_add: dict,
+        add_schemas: dict,
     ) -> list[str] | None:
         """Materialize one commit's change rows as parquet sidecars
         under ``_changes/`` (persisted CDF — Delta's ``_change_data``):
@@ -3378,6 +3631,7 @@ class SnapshotTable:
             dv_add,
             (base.dvs if base else None),
             {},  # freshly-added files never carry DVs
+            {**((base.schemas or {}) if base else {}), **add_schemas},
         )
         if delta is None:
             return None
@@ -3397,6 +3651,7 @@ class SnapshotTable:
         dv_delta: dict,
         dvs_prev: dict | None,
         dvs_cur: dict | None,
+        schemas: dict,
     ) -> DataFrame | None:
         """LOGICAL change rows (with ``_change_type``) of ONE commit —
         the multiset diff of its pre-image (removed files under the
@@ -3404,9 +3659,11 @@ class SnapshotTable:
         files under the commit's own), plus the rows its ``dv_delta``
         newly soft-deleted. Shared by :meth:`changes` (compute-on-read)
         and the persisted-CDF write path (:meth:`_persist_changes`),
-        so the two modes are the same arithmetic by construction."""
-        post = self._scan(added, dvs_cur) if added else None
-        pre = self._scan(removed, dvs_prev) if removed else None
+        so the two modes are the same arithmetic by construction.
+        ``schemas`` covers the batches of both sides (batch dirs are
+        written once, so the prior and current maps never disagree)."""
+        post = self._scan(added, dvs_cur, schemas) if added else None
+        pre = self._scan(removed, dvs_prev, schemas) if removed else None
         if pre is None and post is not None:
             delta = post.withColumn("_change_type", F.lit("insert"))
         elif post is None and pre is not None:
@@ -3429,7 +3686,7 @@ class SnapshotTable:
             # rows (read scoped to those files, filtered to the new
             # runs — rows live at the prior version by construction;
             # metadata fields extracted once, same as _scan)
-            raw_rows = self._read_files(sorted(dv_delta))
+            raw_rows = self._read_files(sorted(dv_delta), schemas)
             cols = raw_rows.columns
             sel = ~_dv_not_deleted_expr(
                 {
@@ -3604,13 +3861,20 @@ class SnapshotTable:
                     )
                 # pre-images apply the PRIOR version's deletion vectors
                 # (already-dead rows are not deleted again); post-images
-                # apply this version's (a rollback re-adds files WITH DVs)
+                # apply this version's (a rollback re-adds files WITH DVs);
+                # DV'd files stay live, so version v covers their schemas
+                pre = self._load(v - 1) if removed else None
+                post = self._load(v) if added or dv_delta else None
                 delta = self._delta_rows(
                     added,
                     removed,
                     dv_delta,
-                    self._load(v - 1).dvs if removed else None,
-                    self._load(v).dvs if added else None,
+                    pre.dvs if pre else None,
+                    post.dvs if added else None,
+                    {
+                        **((pre.schemas or {}) if pre else {}),
+                        **((post.schemas or {}) if post else {}),
+                    },
                 )
             if delta is None:
                 continue
@@ -3630,10 +3894,12 @@ class SnapshotTable:
             return out
         # nothing changed in range: empty frame with the right schema
         for v in range(v_hi, v_lo - 1, -1):
-            files = self._load(v).files
-            if files:
+            snap = self._load(v)
+            if snap.files:
                 return (
-                    self._to_logical(self._read_files(files).limit(0))
+                    self._to_logical(
+                        self._read_files(snap.files, snap.schemas).limit(0)
+                    )
                     .withColumn("_change_type", F.lit("insert"))
                     .withColumn("_commit_version", F.lit(0).cast("long"))
                 )
@@ -4113,7 +4379,7 @@ class SnapshotTable:
         versions_before = self._versions()
         # RAW scan: deletion vectors ignored, so DV-hidden pre-images
         # of the subject locate their files too
-        raw = self._scan(sorted(prev.files), None)
+        raw = self._scan(sorted(prev.files), None, prev.schemas)
         touched_rel = self._touched_files(raw, lambda d: d.filter(predicate))
         if touched_rel:
             # survivors: live (DV-respected) non-subject rows of the

@@ -12,7 +12,7 @@ pair gives (offset log + idempotent sink), rebuilt on the table's own
 commit log because Spark has no DataSource V2 hook for a custom
 manifest format without a JVM plugin.
 :func:`cdf_foreach_batch_stream` is the facade over that boundary: a
-REAL StreamingQuery (rate-source clock + ``foreachBatch``) drives the
+REAL StreamingQuery (micro-batch clock + ``foreachBatch``) drives the
 drain, so consumers get the Structured Streaming lifecycle without the
 drain-loop cadence being theirs to schedule.
 
@@ -132,7 +132,6 @@ def cdf_foreach_batch_stream(
     process,
     trigger: dict | None = None,
     max_commits_per_batch: int = 1,
-    rows_per_second: int = 1,
 ):
     """Run a :class:`ChangeFeedStream` consumer under a REAL Structured
     Streaming query — the ``readStream`` facade the drain-loop API
@@ -144,15 +143,19 @@ def cdf_foreach_batch_stream(
     Honest boundary, same as the module docstring: Spark exposes no
     DataSource V2 hook for a custom manifest format without a JVM
     plugin, so the change rows CANNOT be the streaming DataFrame
-    itself. The streaming DataFrame here is a ``rate`` source acting
-    as the CLOCK; each micro-batch's ``foreachBatch`` callback drains
-    the table's change feed and hands every pending commit range to
-    ``process(chg_df, v_lo, v_hi)`` — exactly the shape Spark users
+    itself. The streaming DataFrame here is a ``rate-micro-batch``
+    source acting as the CLOCK; each micro-batch's ``foreachBatch``
+    callback drains the table's change feed and hands every pending
+    commit range to ``process(chg_df, v_lo, v_hi)`` — exactly the shape Spark users
     consume Delta CDF with in practice (``foreachBatch`` + merge),
     with the same two-layer exactly-once story (checkpointed offset +
-    idempotent txn-stamped sink). The rate source's own checkpoint
-    lives under ``<checkpoint_dir>/clock``, beside the feed offset —
-    one directory owns the stream's whole resumable state.
+    idempotent txn-stamped sink). The clock's offset advances by one
+    per micro-batch, so every start runs a batch — a ``rate`` clock
+    counts whole seconds since its creation, and an ``availableNow``
+    restart within a second of the previous tick ran no batch and
+    drained nothing. Its checkpoint lives under
+    ``<checkpoint_dir>/clock``, beside the feed offset — one directory
+    owns the stream's whole resumable state.
 
     ``trigger`` kwargs pass to ``DataStreamWriter.trigger`` (default
     ``{"availableNow": True}``: drain the backlog once and stop — the
@@ -166,8 +169,8 @@ def cdf_foreach_batch_stream(
         stream.drain(process)
 
     return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 1)
         .option("numPartitions", 1)
         .load()
         .writeStream.foreachBatch(_tick)

@@ -215,19 +215,6 @@ def _maybe_compact(
             t.vacuum(retain_last=vacuum_retain_last)
 
 
-def _rows_in_files(table: SnapshotTable, files: list[str]) -> int:
-    """Total row count of already-written parquet files, from footers
-    only (driver-local metadata read, no Spark job)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(os.path.join(table.path, f)).metadata.num_rows
-        for f in files
-    )
-
-
 def _dedup_ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -278,7 +265,7 @@ def _dedup_ingest_batch(
         return
     prev = table.snapshot()
     files = table._write_batch(fresh)  # the ONE execution of the plan
-    if _rows_in_files(table, files) == 0:
+    if table._rows_in(files) == 0:
         return  # nothing new: no empty commit; orphan dir left to vacuum
     table._commit("append", prev.version, files, txn=txn)
 
@@ -479,7 +466,7 @@ def _near_dedup_ingest_batch(
         else:
             prev = table.snapshot()
             files = table._write_batch(fresh)  # ONE execution of the plan
-            if _rows_in_files(table, files) == 0:
+            if table._rows_in(files) == 0:
                 _record_ingest_metrics(
                     metrics, spark, txn, n_arrived, n_quality_ok, 0
                 )
@@ -487,7 +474,7 @@ def _near_dedup_ingest_batch(
             table._commit("append", prev.version, files, txn=txn)
         _record_ingest_metrics(
             metrics, spark, txn, n_arrived, n_quality_ok,
-            _rows_in_files(table, files),
+            table._rows_in(files),
         )
         survivors = spark.read.parquet(
             *[os.path.join(table.path, f) for f in files]
@@ -725,7 +712,7 @@ def _semantic_dedup_ingest_batch(
         else:
             prev = table.snapshot()
             files = table._write_batch(fresh)  # ONE execution of the plan
-            if _rows_in_files(table, files) == 0:
+            if table._rows_in(files) == 0:
                 _record_ingest_metrics(
                     metrics, spark, txn, n_arrived, n_quality_ok, 0
                 )
@@ -733,7 +720,7 @@ def _semantic_dedup_ingest_batch(
             table._commit("append", prev.version, files, txn=txn)
         _record_ingest_metrics(
             metrics, spark, txn, n_arrived, n_quality_ok,
-            _rows_in_files(table, files),
+            table._rows_in(files),
         )
         survivors = spark.read.parquet(
             *[os.path.join(table.path, f) for f in files]

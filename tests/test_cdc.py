@@ -127,12 +127,10 @@ def test_delete_keys_rewrites_only_touched_files(spark, tmp_path):
     assert before & set(after.files)
 
 
-def test_delete_keys_job_count(spark, tmp_path):
-    """The survivor anti-join broadcasts the key side, like the matching
-    step: on a 3-file, 30-row table a 2-key ``delete_keys`` launched 14
-    Spark jobs with a shuffled anti-join and launches 10 with the hint
-    (``delete`` on the same table launches 7)."""
-    t = SnapshotTable(spark, str(tmp_path / "dk"))
+def _three_file_table(spark, path):
+    """The 3-file, 30-row table (ids 0..29, one file per 10 ids) the
+    job-count pins below share."""
+    t = SnapshotTable(spark, path)
     files = [
         spark.range(lo, lo + 10, numPartitions=1).select(
             F.col("id").cast("int").alias("id"),
@@ -144,18 +142,74 @@ def test_delete_keys_job_count(spark, tmp_path):
     for f in files[1:]:
         t.append(f)
     assert len(t.snapshot().files) == 3
-    keys = spark.createDataFrame([(3,), (17,)], "id int")
+    return t
+
+
+def _jobs(spark, name, fn):
+    """Spark jobs ``fn()`` launches, counted under a job group."""
     sc = spark.sparkContext
-    sc.setJobGroup("delete_keys_job_count", "delete_keys")
+    sc.setJobGroup(name, name)
     try:
-        t.delete_keys(keys, ["id"])
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("delete_keys_job_count")
-    assert len(jobs) <= 10
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_delete_keys_job_count(spark, tmp_path):
+    """A 2-key ``delete_keys`` on the 3-file table: 14 jobs with a
+    shuffled survivor anti-join, 10 with the broadcast hint, 5 once
+    scans are planned from the recorded schemas and the emptiness probe
+    is gone. Its 2 jobs over ``delete`` are the key frame's two
+    broadcast builds (the locate semi-join and the survivor anti-join)."""
+    t = _three_file_table(spark, str(tmp_path / "dk"))
+    keys = spark.createDataFrame([(3,), (17,)], "id int")
+    n = _jobs(spark, "delete_keys_job_count", lambda: t.delete_keys(keys, ["id"]))
+    assert n <= 5
     assert sorted(r.id for r in t.read().collect()) == [
         i for i in range(30) if i not in (3, 17)
     ]
+
+
+def test_dml_job_counts(spark, tmp_path):
+    """Sibling pins on the same table. No scan runs a schema-inference
+    job (the schema is folded from the manifest), and no write runs its
+    plan twice to probe emptiness: ``read()`` plans with no job at all,
+    ``append`` is its one write job, ``delete`` locates (2) and writes
+    (1). ``merge_when(strategy="mor")`` launched 24 jobs before (26 at
+    32 cores); it launches 12 at 3 or 4 cores and 14 at 32."""
+    t = _three_file_table(spark, str(tmp_path / "t"))
+    assert _jobs(spark, "read_job_count", t.read) == 0
+    one = spark.range(1).select(
+        F.lit(50).alias("id"), F.lit(1.0).alias("v")
+    )
+    assert _jobs(spark, "append_job_count", lambda: t.append(one)) == 1
+    t = _three_file_table(spark, str(tmp_path / "d"))
+    pred = F.col("id").isin(3, 17)
+    assert _jobs(spark, "delete_job_count", lambda: t.delete(pred)) <= 3
+    assert t.read().count() == 28
+    t = _three_file_table(spark, str(tmp_path / "m"))
+    src = spark.createDataFrame(
+        [(3, 1.0), (17, 2.0), (99, 3.0)], "id int, v double"
+    )
+    n = _jobs(
+        spark,
+        "merge_when_mor_job_count",
+        lambda: t.merge_when(src, ["id"], matched_update="all", strategy="mor"),
+    )
+    assert n <= 14
+    got = {r.id: r.v for r in t.read().collect()}
+    assert len(got) == 31 and got[3] == 1.0 and got[17] == 2.0 and got[99] == 3.0
+
+
+def test_wide_read_plans_without_a_listing_job(spark, tmp_path):
+    """A read over more than 32 files (Spark's default parallel-listing
+    threshold, raised by ``get_spark``) still plans with no job."""
+    t = SnapshotTable(spark, str(tmp_path / "wide"))
+    t.create(spark.range(0, 400, numPartitions=40).select(F.col("id").cast("int")))
+    assert len(t.snapshot().files) == 40
+    assert _jobs(spark, "wide_read_job_count", t.read) == 0
+    assert t.read().count() == 400
 
 
 def test_net_changes_priority_insert_beats_delete_same_version(spark):
