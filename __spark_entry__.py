@@ -49,17 +49,20 @@ FORCE_REGATE: dict[str, int] = {
     # minhash_index_probe_audit, tfidf_topk, doc_chunk_windows) all
     # expired automatically — green rows exist in CORRECTNESS_r15 —
     # and were pruned.
-    # r16 (optimization round 2): refresh_rollup now materializes each
-    # refresh's per-group delta ONCE (localCheckpoint) before
-    # _apply_delta's several consuming actions — identical rollup
-    # states, different executed lifecycle, so every gated composition
-    # over the refresh loop re-gates:
-    "lakehouse_incremental_rollup_audit": 16,
-    "lakehouse_dedup_retention_audit": 16,
-    "lakehouse_txn_medallion_audit": 16,
-    "streaming_txn_chain_audit": 16,
-    "lakehouse_catalog_branch_audit": 16,
-    "medallion_incremental_audit": 16,
+    # r17: an unpartitioned rollup refresh is one aggregate over the
+    # stored rollup and the delta's per-row measures (no key broadcast,
+    # no pre-aggregated delta); every audit that reaches that branch
+    # re-gates. The two partitioned-rollup audits keep their
+    # partition-local fold, but their full refresh and delta
+    # pre-aggregate now sum per-row measures (sum(1) where count(1)
+    # was), so they re-gate too.
+    "streaming_cdf_silver_audit": 17,
+    "lakehouse_dedup_retention_audit": 17,
+    "lakehouse_txn_medallion_audit": 17,
+    "streaming_txn_chain_audit": 17,
+    "lakehouse_catalog_branch_audit": 17,
+    "lakehouse_incremental_rollup_audit": 17,
+    "medallion_incremental_audit": 17,
     # r16: the BPE trainer fused cache materialization into the argmax
     # job (one job per iteration, byte-identical merge table — pinned
     # in tests/test_r16_optimizations.py).

@@ -15,10 +15,14 @@ touched) and rewrite only the rollup partitions the delta touches
 reference). Refresh cost is O(changed data + touched partitions),
 never O(fact table) — a nightly 1 TB append (or a GDPR delete of one
 user's rows) against a 100 TB fact refreshes from the commit's own
-footprint. This is exactly the Delta-CDF materialized-view
-maintenance loop; the reference's dynamic table
-(``04_sales_enrich_sp.sql:22``) incrementally maintains through
-updates the same way.
+footprint. An unpartitioned rollup is rewritten whole, in ONE
+aggregate over the stored rollup and the delta's per-row measures
+(the summary-delta refresh of Mumick, Quass & Mumick, SIGMOD 1997):
+the delta is never pre-aggregated and no key set is broadcast, so a
+tick of a few hundred rows costs one shuffle and one write. This is
+exactly the Delta-CDF materialized-view maintenance loop; the
+reference's dynamic table (``04_sales_enrich_sp.sql:22``)
+incrementally maintains through updates the same way.
 
 Soundness boundary, stated not hidden: incremental paths are valid
 for ADDITIVE aggregates (count, sum — retractable with ``-``). A
@@ -69,16 +73,6 @@ def files_added_between(
     return added, removed_any
 
 
-def _null_safe_on(cols: list[str], right_prefix: str):
-    """AND-of-``eqNullSafe`` join condition ``col <=> <prefix>col`` —
-    NULL group keys (a day derived from a NULL ts) must match their
-    own rollup row, not silently fall out of the join."""
-    return reduce(
-        lambda a, b: a & b,
-        [F.col(c).eqNullSafe(F.col(f"{right_prefix}{c}")) for c in cols],
-    )
-
-
 def refresh_rollup(
     fact: SnapshotTable,
     rollup: SnapshotTable,
@@ -92,8 +86,8 @@ def refresh_rollup(
     """Bring ``rollup`` up to date with ``fact``. Returns how:
 
     - ``"noop"`` — already current;
-    - ``"incremental"`` — append-only range: aggregated the added
-      files, rewrote touched partitions;
+    - ``"incremental"`` — append-only range: folded the added files
+      in, rewrote touched partitions;
     - ``"incremental_cdf"`` — the range contained row-level removals
       (delete / merge / partition overwrite): folded the change feed's
       inserts (+) and deletes (−) into the existing groups;
@@ -111,8 +105,9 @@ def refresh_rollup(
     groups) — to get touched-partitions-only rewrites: the combine
     carries every existing group of a touched partition, so sibling
     groups the delta never mentioned survive the partition overwrite.
-    Unpartitioned rollups fall back to a whole-table overwrite (they
-    are aggregate-sized — still cheap, just not partition-local).
+    Unpartitioned rollups fall back to a whole-table overwrite, one
+    aggregate over the stored rollup and the delta's rows (they are
+    aggregate-sized — still cheap, just not partition-local).
 
     ``since`` — where the refresh's high-water mark comes from.
     ``"auto"`` (default): the rollup table's own txn stamps, correct
@@ -161,23 +156,32 @@ def refresh_rollup(
     # point (the catalog CAS) is the only stamp that may exist.
     txn = {"app_id": app_id, "batch_id": v_hi} if since == "auto" else None
 
-    def aggregate(df: DataFrame) -> DataFrame:
-        return (
-            prepare(df)
-            .groupBy(*group_cols)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias(N_ROWS),
-                *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],
-            )
-        )
-
     def full_refresh() -> str:
-        full = aggregate(fact.read(version=v_hi))
+        full = _combine(
+            _measures(prepare(fact.read(version=v_hi)), group_cols, sum_cols),
+            group_cols,
+            sum_cols,
+        )
         if rollup._versions():
             rollup.overwrite(full, txn=txn)
         else:
             rollup.create(full, txn=txn)
         return "full"
+
+    def fold(rows: DataFrame, signed: bool) -> None:
+        # Unpartitioned rollups fold the per-row measures straight into
+        # the one combine (the delta is read once, inside the write).
+        # Partitioned rollups aggregate the delta and materialize it
+        # ONCE: _apply_delta's partitioned path consumes it from three
+        # actions, each of which would otherwise re-scan the commit's
+        # files (and a change feed twice, through _signed_rows' union).
+        # Aggregate-sized (the groups the commits touched), so the
+        # checkpoint is cheap.
+        if rollup.partition_by:
+            rows = _combine(rows, group_cols, sum_cols).localCheckpoint(
+                eager=True
+            )
+        _apply_delta(rollup, rows, group_cols, sum_cols, txn, signed)
 
     if seen is None:
         return full_refresh()
@@ -199,20 +203,7 @@ def refresh_rollup(
         except FileNotFoundError:
             # pre-image files vacuumed: the CDF retention boundary
             return full_refresh()
-        # materialize the delta ONCE (r16, guide §1.2): _apply_delta's
-        # partitioned path consumes it from three actions, and each
-        # lazy computation would scan the change feed twice
-        # (_signed_delta's two-sided union) — six feed scans per
-        # refresh. Aggregate-sized (the groups the commits touched), so
-        # the checkpoint is cheap; at 100 TB this is one pass over the
-        # commit footprint, not six. Partitioned rollups only: the
-        # unpartitioned path reads the delta twice inside its single
-        # write action, and the extra checkpoint job measured as a NET
-        # LOSS at gate scale (+0.6s on lakehouse_dedup_retention_audit).
-        delta = _signed_delta(chg, prepare, group_cols, sum_cols)
-        if rollup.partition_by:
-            delta = delta.localCheckpoint(eager=True)
-        _apply_delta(rollup, delta, group_cols, sum_cols, txn, signed=True)
+        fold(_signed_rows(chg, prepare, group_cols, sum_cols), signed=True)
         return "incremental_cdf"
 
     added = [f for _v, _op, a, _r, _d in per_commit for f in a]
@@ -233,22 +224,50 @@ def refresh_rollup(
     # time (this is the no-removals branch), hence dvs=None; for the
     # same reason every added file is live at v_hi, so that snapshot's
     # recorded schemas cover them.
-    # localCheckpoint (r16, guide §1.2): _apply_delta's partitioned path
-    # consumes the delta from three actions; a lazy delta re-scanned the
-    # added files per action (three passes over the commit footprint
-    # instead of one). Unpartitioned rollups skip it — see the CDF
-    # branch's note.
-    delta = aggregate(fact._scan(added, None, fact.snapshot(v_hi).schemas))
-    if rollup.partition_by:
-        delta = delta.localCheckpoint(eager=True)
-    _apply_delta(rollup, delta, group_cols, sum_cols, txn, signed=False)
+    added_rows = fact._scan(added, None, fact.snapshot(v_hi).schemas)
+    fold(_measures(prepare(added_rows), group_cols, sum_cols), signed=False)
     return "incremental"
 
 
-def _signed_delta(
+def _measures(
+    prepared: DataFrame, group_cols: list[str], sum_cols: list[str],
+    sign: int = 1,
+) -> DataFrame:
+    """Per-row measures of prepared fact rows: the group columns, then
+    ``n_rows`` = ``sign`` and ``sum_<c>`` = ``sign * c``. Summed per
+    group (:func:`_combine`) they are the rollup itself; unioned with
+    the stored rollup and summed, they fold a delta into it."""
+    return prepared.select(
+        *group_cols,
+        F.lit(sign).alias(N_ROWS),
+        *[
+            (F.col(c) if sign > 0 else -F.col(c)).alias(f"sum_{c}")
+            for c in sum_cols
+        ],
+    )
+
+
+def _combine(
+    rows: DataFrame, group_cols: list[str], sum_cols: list[str]
+) -> DataFrame:
+    """The one group-by: sum every measure per group. Its input may mix
+    per-row measures and already-summed rollup rows — both add."""
+    measure_cols = [N_ROWS] + [f"sum_{c}" for c in sum_cols]
+    return (
+        rows.groupBy(*group_cols)
+        .agg(*[F.sum(c).alias(c) for c in measure_cols])
+        .select(
+            *group_cols,
+            F.col(N_ROWS).cast("long").alias(N_ROWS),
+            *[F.col(f"sum_{c}") for c in sum_cols],
+        )
+    )
+
+
+def _signed_rows(
     chg: DataFrame, prepare, group_cols: list[str], sum_cols: list[str]
 ) -> DataFrame:
-    """Per-group NET change from a change feed: inserts contribute
+    """Per-row SIGNED measures of a change feed: inserts contribute
     ``+1``/``+value``, deletes ``-1``/``-value`` — the retraction form
     that makes a DELETE commit's refresh exact for additive
     aggregates. ``prepare`` runs on the raw rows of each side (it sees
@@ -265,17 +284,17 @@ def _signed_delta(
         rows = chg.filter(F.col("_change_type").isin(*ctypes)).drop(
             "_change_type", "_commit_version"
         )
-        sides.append(prepare(rows).withColumn("_sign", F.lit(sgn)))
-    both = sides[0].unionByName(sides[1])
-    return both.groupBy(*group_cols).agg(
-        F.sum("_sign").cast("long").alias(N_ROWS),
-        *[
-            F.sum(
-                F.when(F.col("_sign") > 0, F.col(c)).otherwise(-F.col(c))
-            ).alias(f"sum_{c}")
-            for c in sum_cols
-        ],
-    )
+        sides.append(_measures(prepare(rows), group_cols, sum_cols, sgn))
+    return sides[0].unionByName(sides[1])
+
+
+def _signed_delta(
+    chg: DataFrame, prepare, group_cols: list[str], sum_cols: list[str]
+) -> DataFrame:
+    """Per-group NET change from a change feed: :func:`_signed_rows`
+    summed per group."""
+    rows = _signed_rows(chg, prepare, group_cols, sum_cols)
+    return _combine(rows, group_cols, sum_cols)
 
 
 def _apply_delta(
@@ -286,8 +305,18 @@ def _apply_delta(
     txn: dict,
     signed: bool,
 ) -> None:
-    """Fold a per-group delta (positive-only for append ranges; signed
-    for CDF ranges) into ``rollup``.
+    """Fold a delta (positive-only for append ranges; signed for CDF
+    ranges) into ``rollup``. ``delta`` has the rollup's columns; its
+    rows may be per-row measures (:func:`_measures`) or per-group sums,
+    since :func:`_combine` adds both alike.
+
+    Unpartitioned rollups fold in ONE aggregate (the summary-delta
+    refresh of Mumick, Quass & Mumick, SIGMOD 1997): the stored rollup
+    unioned with the delta, grouped and summed, then overwritten.
+    Groups the delta never mentions sum to their own values, and
+    ``groupBy`` puts NULL keys in one group, as ``eqNullSafe`` would
+    match them. The delta is read once, inside the write, so a lazy
+    frame is fine.
 
     Partitioned rollups carry existing rows at PARTITION granularity:
     every existing group of a delta-touched partition rides into the
@@ -297,41 +326,21 @@ def _apply_delta(
     count nets to zero drop out; a partition whose groups ALL vanish
     is dropped explicitly (drop first, then overwrite — a crash
     between the two re-runs the refresh, which is idempotent)."""
-    # For PARTITIONED rollups ``delta`` must arrive MATERIALIZED
-    # (localCheckpoint'd): that path consumes it from several actions
-    # (the broadcast touched-partitions subquery, the combine's union
-    # side, the vanished-partition collect) — a lazy delta would
-    # re-scan the commit's files per action (and per _signed_delta's
-    # two-sided union, the change feed twice per scan). refresh_rollup
-    # and the streaming twin both checkpoint before calling. The
-    # unpartitioned branch reads the delta only within its single write
-    # action and accepts a lazy frame.
-    measure_cols = [N_ROWS] + [f"sum_{c}" for c in sum_cols]
-    combine = lambda df: (
-        df.groupBy(*group_cols)
-        .agg(*[F.sum(c).alias(c) for c in measure_cols])
-        .select(
-            *group_cols,
-            F.col(N_ROWS).cast("long").alias(N_ROWS),
-            *[F.col(f"sum_{c}") for c in sum_cols],
-        )
-    )
     if not rollup.partition_by:
-        keys = delta.select(
-            *[F.col(c).alias(f"_k_{c}") for c in group_cols]
-        ).distinct()
-        on = _null_safe_on(group_cols, "_k_")
-        existing = rollup.read()
-        touched = existing.join(F.broadcast(keys), on, "inner").drop(
-            *[f"_k_{c}" for c in group_cols]
+        combined = _combine(
+            rollup.read().unionByName(delta), group_cols, sum_cols
         )
-        untouched = existing.join(F.broadcast(keys), on, "left_anti")
-        combined = combine(touched.unionByName(delta))
         if signed:
             combined = combined.filter(F.col(N_ROWS) > 0)
-        rollup.overwrite(untouched.unionByName(combined), txn=txn)
+        rollup.overwrite(combined, txn=txn)
         return
 
+    # For PARTITIONED rollups ``delta`` must arrive MATERIALIZED
+    # (localCheckpoint'd): this path consumes it from several actions
+    # (the broadcast touched-partitions subquery, the combine's union
+    # side, the vanished-partition collect) — a lazy delta would
+    # re-scan the commit's files per action. refresh_rollup and the
+    # streaming twin both checkpoint before calling.
     pfields = rollup._pfields
     names = [f.name for f in pfields]
 
@@ -357,7 +366,7 @@ def _apply_delta(
         .join(F.broadcast(touched_parts), on, "inner")
         .drop(*[f"_pt_{n}" for n in names], *[f"_tp_{n}" for n in names])
     )
-    combined = combine(existing.unionByName(delta))
+    combined = _combine(existing.unionByName(delta), group_cols, sum_cols)
     if signed:
         combined = combined.filter(F.col(N_ROWS) > 0)
     # materialize once: three actions consume combined (vanished-

@@ -872,7 +872,10 @@ def _footer_stats(md) -> dict:
             st = col.statistics
             if st is None or not st.has_min_max:
                 continue
-            lo, hi = st.min, st.max
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:
+                continue  # pyarrow cannot extract it (decimal(p <= 18))
             if isinstance(lo, bytes):
                 try:
                     lo, hi = lo.decode(), hi.decode()
@@ -2304,12 +2307,16 @@ class SnapshotTable:
         ``schema_evolution=True`` opt-in (old rows surface NULLs via the
         read path's schema merge); a write MISSING table columns is
         always fine (its rows read as NULLs there — the Delta
-        missing-column contract)."""
+        missing-column contract). Nested nullability is not compared: a
+        scan reports every element, map value and struct field nullable,
+        so a frame the table was created from must append back."""
         current = {f.name: f.dataType for f in self.table_schema().fields}
         flipped = [
             (f.name, str(current[f.name]), str(f.dataType))
             for f in df.schema.fields
-            if f.name in current and f.dataType != current[f.name]
+            if f.name in current
+            and _nullable(f.dataType.jsonValue())
+            != _nullable(current[f.name].jsonValue())
         ]
         if flipped:
             raise SchemaMismatchError(

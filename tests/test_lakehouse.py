@@ -783,6 +783,55 @@ class TestSchemaEvolution:
                                       "id long, name string, score double")
             )
 
+    def test_nested_non_nullable_frame_appends_back(self, spark, tmp_path):
+        """A frame whose array elements, map values or struct fields are
+        non-nullable appends to the table it created (the scan reports
+        them nullable); a nested TYPE change is still refused."""
+        import pytest as _pytest
+
+        from summit_23_snowpark_data_lake_workloads_spark.sources.lakehouse import (
+            SchemaMismatchError,
+        )
+
+        df = spark.range(3).select(
+            "id",
+            F.array(F.col("id")).alias("arr"),
+            F.create_map(F.lit("a"), F.col("id")).alias("mp"),
+            F.struct(F.col("id").alias("x")).alias("st"),
+        )
+        flips = {
+            "arr": F.array(F.col("id").cast("string")),
+            "mp": F.create_map(F.lit("a"), F.col("id").cast("int")),
+            "st": F.struct(F.col("id").cast("double").alias("x")),
+        }
+        for c, flipped in flips.items():
+            frame = df.select("id", c)
+            t = SnapshotTable(spark, str(tmp_path / c))
+            t.create(frame)
+            t.append(frame)
+            assert t.read().count() == 6
+            with _pytest.raises(SchemaMismatchError, match="type change"):
+                t.append(df.select("id", flipped.alias(c)))
+
+
+def test_small_decimal_table_commits(spark, tmp_path):
+    """Spark stores a decimal(p <= 18) as a parquet integer whose
+    footer min/max pyarrow cannot extract: the commit skips that
+    column's stats instead of failing, and reads stay exact."""
+    from decimal import Decimal
+
+    t = SnapshotTable(spark, str(tmp_path / "dec"))
+    df = spark.createDataFrame(
+        [(1, Decimal("1.25")), (2, Decimal("-3.50"))], "id int, m decimal(10,2)"
+    )
+    t.create(df)
+    t.append(df)
+    assert t.table_schema()["m"].dataType.simpleString() == "decimal(10,2)"
+    assert sorted(r.m for r in t.read().collect()) == [
+        Decimal("-3.50"), Decimal("-3.50"), Decimal("1.25"), Decimal("1.25")
+    ]
+    assert t.read().filter(F.col("m") > 0).count() == 2
+
 
 def test_threshold_compaction_packs_only_small_files(spark, tmp_path):
     """compact(small_file_bytes=...): full-sized files carry over

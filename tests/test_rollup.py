@@ -487,3 +487,122 @@ def test_signed_delta_folds_four_way_labels(spark):
     delta = _signed_delta(chg, lambda df: df, ["k"], ["v"])
     got = {(r.k, r.n_rows, r.sum_v) for r in delta.collect()}
     assert got == {("a", 1, 25), ("b", -1, -7)}
+
+
+# Stored rollup schemas, as the parent of the one-aggregate fold wrote
+# them for an ``int``, ``long``, ``double`` and ``decimal(20,2)`` sum
+# column. A full refresh stores ``sum(decimal(20,2))`` as
+# ``decimal(30,2)``; every fold re-sums it to ``decimal(38,2)``.
+def _schema_json(decimal_sum: str) -> str:
+    fields = [
+        ("k", "string"), ("n_rows", "long"), ("sum_vi", "long"),
+        ("sum_vl", "long"), ("sum_vd", "double"), ("sum_vm", decimal_sum),
+    ]
+    return (
+        '{"fields":['
+        + ",".join(
+            f'{{"metadata":{{}},"name":"{n}","nullable":true,"type":"{t}"}}'
+            for n, t in fields
+        )
+        + '],"type":"struct"}'
+    )
+
+
+_FULL_SCHEMA = _schema_json("decimal(30,2)")
+_FOLD_SCHEMA = _schema_json("decimal(38,2)")
+_SUMS = ["vi", "vl", "vd", "vm"]
+_TYPED_ROWS = (
+    "id int, k string, vi int, vl long, vd double, vm decimal(20,2)"
+)
+
+
+def _typed(spark, ids, shift=0):
+    """Rows keyed ``id``; ``x = id + shift`` sets the group (NULL when
+    ``x`` is a multiple of 5) and the measures. Every double and
+    decimal is exact, so any summation order gives the same value."""
+    from decimal import Decimal
+
+    return spark.createDataFrame(
+        [
+            (
+                i,
+                None if x % 5 == 0 else f"k{x % 3}",
+                x,
+                x * 10**10,
+                x * 0.25,
+                Decimal(x) * Decimal("1.25"),
+            )
+            for i, x in ((i, i + shift) for i in ids)
+        ],
+        _TYPED_ROWS,
+    )
+
+
+def _typed_prepare(df):
+    return df.select("k", *_SUMS)
+
+
+def _typed_state(rows):
+    return sorted(
+        (tuple(r) for r in rows), key=lambda t: (str(t[0]), t[1:])
+    )
+
+
+def _typed_full(fact):
+    return _typed_state(
+        _typed_prepare(fact.read())
+        .groupBy("k")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            *[F.sum(c).alias(f"sum_{c}") for c in _SUMS],
+        )
+        .collect()
+    )
+
+
+def test_unpartitioned_fold_equals_full_recompute(spark, tmp_path):
+    """The unpartitioned one-aggregate fold over append, delete, merge
+    and delete_mor ranges equals a full recompute at every step, NULL
+    group key included, and stores the same schema as before the fold
+    became one aggregate. The streaming twin, which folds aggregated
+    per-range deltas into the same branch, ends equal as well."""
+    from summit_23_snowpark_data_lake_workloads_spark.streaming.cdf_source import (
+        maintain_rollup_stream,
+    )
+
+    fact = SnapshotTable(spark, str(tmp_path / "fact"))
+    rollup = SnapshotTable(spark, str(tmp_path / "roll"))
+    fact.create(_typed(spark, range(0, 20)))
+
+    def refresh():
+        return refresh_rollup(fact, rollup, _typed_prepare, ["k"], _SUMS)
+
+    assert refresh() == "full"
+    assert rollup.read().schema.json() == _FULL_SCHEMA
+    assert _typed_state(rollup.read().collect()) == _typed_full(fact)
+    steps = [
+        ("incremental", lambda: fact.append(_typed(spark, range(20, 32)))),
+        ("incremental_cdf", lambda: fact.delete(F.col("id") % 4 == 1)),
+        (
+            "incremental_cdf",
+            # id 4 moves into the NULL group and id 5 out of it; 40
+            # and 41 are new rows
+            lambda: fact.merge(_typed(spark, [2, 4, 5, 40, 41], 101), ["id"]),
+        ),
+        ("incremental_cdf", lambda: fact.delete_mor(F.col("id") % 6 == 0)),
+    ]
+    for mode, commit in steps:
+        commit()
+        assert refresh() == mode
+        assert rollup.read().schema.json() == _FOLD_SCHEMA
+        assert _typed_state(rollup.read().collect()) == _typed_full(fact)
+    assert any(r.k is None for r in rollup.read().collect())
+
+    silver = SnapshotTable(spark, str(tmp_path / "silver"))
+    ranges = maintain_rollup_stream(
+        fact, silver, _typed_prepare, ["k"], _SUMS, str(tmp_path / "ckpt")
+    )
+    assert len(ranges) == len(steps) + 1
+    assert silver.read().schema.json() == _FOLD_SCHEMA
+    assert _typed_state(silver.read().collect()) == _typed_full(fact)
+

@@ -29,9 +29,9 @@ from summit_23_snowpark_data_lake_workloads_spark.sources.txn_catalog import (
 # profile fits the grading driver's verify window (judge item #1). The
 # same machinery stays default-covered by the gated audit queries'
 # oracle differentials (lakehouse_txn_medallion/streaming_txn_chain/
-# dv_merge/cdc audits in test_queries_oracle.py).
-pytestmark = pytest.mark.slow
-
+# dv_merge/cdc audits in test_queries_oracle.py). The job-count pins at
+# the end run in the default profile.
+slow = pytest.mark.slow
 
 
 def _rows(spark, pairs):
@@ -69,6 +69,7 @@ def _gold_total(cat):
     return cat.read("gold").collect()[0].sum_sv
 
 
+@slow
 def test_first_tick_full_then_incremental_then_noop(spark, env):
     cat, bronze = env
     r1 = refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
@@ -89,6 +90,7 @@ def test_first_tick_full_then_incremental_then_noop(spark, env):
     assert cat.state()["version"] == v  # no CAS spent on a no-op tick
 
 
+@slow
 def test_delete_flows_as_cdf_and_pair_stays_consistent(spark, env):
     cat, bronze = env
     refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
@@ -99,6 +101,7 @@ def test_delete_flows_as_cdf_and_pair_stays_consistent(spark, env):
     assert _gold_total(cat) == 10
 
 
+@slow
 def test_staged_pair_invisible_until_cas(spark, env):
     """Mid-transaction, catalog reads serve the OLD consistent pair —
     the never-torn guarantee the module exists for."""
@@ -125,6 +128,7 @@ def test_staged_pair_invisible_until_cas(spark, env):
     assert _gold_total(cat) == 113
 
 
+@slow
 def test_orphans_wedge_without_repair(spark, env):
     cat, bronze = env
     refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
@@ -156,6 +160,7 @@ def test_orphans_wedge_without_repair(spark, env):
     assert r["catalog_version"] is not None
 
 
+@slow
 def test_through_pins_fold_and_stamp_together(spark, tmp_path):
     """refresh_rollup(through=v) folds exactly (since, v] — the racing
     bronze commit belongs to the next tick."""
@@ -175,6 +180,7 @@ def test_through_pins_fold_and_stamp_together(spark, tmp_path):
     assert {r.k for r in silver.read().collect()} == {"a", "b"}
 
 
+@slow
 def test_three_layer_chain_never_tears(spark, tmp_path):
     """bronze -> silver (per-key) -> gold (per-parity of key count) ->
     platinum (grand total): one CAS moves all three layers; a no-op
@@ -227,6 +233,7 @@ def test_three_layer_chain_never_tears(spark, tmp_path):
 # ---------------------------------------------- streaming chain twin
 
 
+@slow
 def test_chain_stream_ticks_per_commit_and_replays_noop(
     spark, env, tmp_path
 ):
@@ -269,6 +276,7 @@ def test_chain_stream_ticks_per_commit_and_replays_noop(
     assert _gold_total(cat) == 25
 
 
+@slow
 def test_chain_stream_row_deletes_flow_and_never_tear(spark, env, tmp_path):
     """A MoR delete drains as incremental_cdf through BOTH layers in
     one CAS; every catalog version ever committed pairs a silver with
@@ -304,6 +312,7 @@ def test_chain_stream_row_deletes_flow_and_never_tear(spark, env, tmp_path):
         assert sv == gv, f"torn state at catalog v{v}: {sv} != {gv}"
 
 
+@slow
 def test_chain_stream_batched_commits_amortize_cas(spark, env, tmp_path):
     from summit_23_snowpark_data_lake_workloads_spark.plans.txn_refresh import (
         maintain_chain_stream,
@@ -322,3 +331,55 @@ def test_chain_stream_batched_commits_amortize_cas(spark, env, tmp_path):
     assert [x["catalog_version"] for x in r] == [v0 + 1]
     assert _silver_map(cat) == {"a": (2, 3), "b": (2, 15), "c": (1, 7)}
     assert _gold_total(cat) == 25
+
+
+# ---------------------------------------------- job-count pins
+
+
+def test_append_tick_job_count(spark, env):
+    """One append-only tick with unpartitioned silver and gold: silver
+    folds the appended rows into one aggregate (a shuffle stage and a
+    write), gold recomputes in full (the same two), so at most 4 Spark
+    jobs. Pre-aggregating silver's delta and broadcasting its key set
+    took 7."""
+    from .test_cdc import _jobs
+
+    cat, bronze = env
+    refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
+    bronze.append(_rows(spark, [("b", 5), ("c", 7)]))
+    ticks = []
+    n = _jobs(
+        spark,
+        "append_tick_job_count",
+        lambda: ticks.append(
+            refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
+        ),
+    )
+    assert (ticks[0]["silver"], ticks[0]["gold"]) == ("incremental", "full")
+    assert n <= 4
+    assert _silver_map(cat) == {"a": (2, 3), "b": (2, 15), "c": (1, 7)}
+    assert _gold_total(cat) == 25
+
+
+def test_unpartitioned_refresh_job_count(spark, tmp_path):
+    """An incremental refresh of an unpartitioned rollup is one
+    aggregate and one write: at most 2 Spark jobs. It took 5."""
+    from .test_cdc import _jobs
+
+    bronze = SnapshotTable(spark, str(tmp_path / "b"))
+    bronze.create(_rows(spark, [("a", 1), ("b", 2)]))
+    silver = SnapshotTable(spark, str(tmp_path / "s"))
+    refresh_rollup(bronze, silver, lambda df: df, ["k"], ["v"])
+    bronze.append(_rows(spark, [("a", 3), (None, 4)]))
+    modes = []
+    n = _jobs(
+        spark,
+        "unpartitioned_refresh_job_count",
+        lambda: modes.append(
+            refresh_rollup(bronze, silver, lambda df: df, ["k"], ["v"])
+        ),
+    )
+    assert modes == ["incremental"]
+    assert n <= 2
+    got = {r.k: (r.n_rows, r.sum_v) for r in silver.read().collect()}
+    assert got == {"a": (2, 4), "b": (1, 2), None: (1, 4)}
