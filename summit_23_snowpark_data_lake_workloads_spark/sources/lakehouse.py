@@ -28,6 +28,16 @@ written, is logically immutable (``vacuum`` may rewrite the oldest
 retained delta as its equivalent full form before dropping its base —
 same resolved snapshot, byte layout only).
 
+Data files are written one of two ways, to the same layout. Since the
+manifest publish is the commit, a batch needs no Hadoop committer: a
+small unpartitioned batch — allow-listed column types, no
+row-multiplying plan node, a size estimate within
+``spark.sql.files.openCostInBytes`` — is collected once as Arrow and
+written from the driver, one file per Spark partition as Spark would
+write it (the Snowpipe Streaming client writes its small chunks
+straight to storage the same way). Every other batch, and every
+partitioned one, is a Spark parquet write job.
+
 Scale posture: a snapshot READ is O(#files) driver-side JSON — the
 identical cost model Delta/Iceberg accept (at 100 TB with 128 MB files
 that is ~10^6 manifest entries; shard manifests per partition before
@@ -1027,6 +1037,171 @@ def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     return a, b.select(*a.columns)
 
 
+#: column types whose pyarrow parquet encoding (physical type and
+#: logical annotation) equals Spark's own, with the Arrow type a
+#: pyarrow read infers back from a Spark-written file (the footer's
+#: ``ARROW:schema`` then changes nothing a pyarrow read returns).
+#: Timestamps qualify while Spark writes them as INT96. Decimals do
+#: not: pyarrow writes p <= 18 as FIXED_LEN_BYTE_ARRAY, Spark as
+#: INT32/INT64.
+_ARROW_WRITE_TYPES = {
+    "boolean": "bool",
+    "byte": "int8",
+    "short": "int16",
+    "integer": "int32",
+    "long": "int64",
+    "float": "float",
+    "double": "double",
+    "string": "string",
+    "binary": "binary",
+    "date": "date32",
+    "timestamp": "timestamp[ns]",
+}
+#: optimized-plan nodes that may emit more rows than they read, so the
+#: plan's size estimate does not bound the batch
+_ROW_MULTIPLYING_NODES = frozenset(
+    {
+        "Generate", "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+        "FlatMapCoGroupsInPandas", "FlatMapGroupsInArrow",
+        "FlatMapCoGroupsInArrow", "FlatMapGroupsInPandasWithState",
+        "BatchEvalPythonUDTF", "ArrowEvalPythonUDTF",
+    }
+)
+#: ``spark.sql.parquet.compression.codec`` -> (pyarrow codec, the
+#: infix Spark puts in the file name)
+_ARROW_CODECS = {
+    "snappy": ("snappy", ".snappy"),
+    "gzip": ("gzip", ".gz"),
+    "zstd": ("zstd", ".zstd"),
+    "none": ("none", ""),
+    "uncompressed": ("none", ""),
+}
+
+
+def _write_small_batch(df: DataFrame, out: str) -> list[str] | None:
+    """Write ``df`` to the new dir ``out`` from the driver when it is
+    small: ONE collect job (``toArrow``) and a pyarrow write per Spark
+    partition, instead of a Spark write job with its task setup and
+    two-phase committer. The manifest publish is the commit either way,
+    so the committer's rename and ``_SUCCESS`` marker buy nothing here.
+    Returns the file names written, or None — and writes nothing — when
+    the batch is not provably small and Spark-encodable, in which case
+    the caller writes it through Spark.
+
+    The gate: every column's type is in :data:`_ARROW_WRITE_TYPES` (and
+    carries no field metadata), no optimized-plan node multiplies rows
+    (:data:`_ROW_MULTIPLYING_NODES`), and the plan's ``sizeInBytes``
+    estimate is at most ``spark.sql.files.openCostInBytes`` — Spark's
+    own size of a file whose cost is all fixed overhead.
+
+    The files match ``df.write.parquet``: one ``part-<pid>-<uuid>-c000``
+    file per non-empty partition, plus partition 0 even when empty (a
+    Spark write task always opens partition 0's file), rows in
+    partition order; the footer carries the schema of the JVM plan's
+    output (the optimizer may tighten nullability) under Spark's
+    row-metadata key and the Spark version (so reads apply no datetime
+    rebase); the codec is ``spark.sql.parquet.compression.codec``.
+    A float column holding NaN gets no min/max statistics in that file:
+    pyarrow's would leave the NaN out, and a skip on them could drop
+    NaN rows, which Spark orders above every number."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    spark = df.sparkSession
+    codec = _ARROW_CODECS.get(
+        spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    )
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    if codec is None or sql_conf.maxRecordsPerFile() > 0:
+        return None
+    plan = df._jdf.queryExecution().optimizedPlan()
+    row_meta = plan.schema().json()
+    fields = json.loads(row_meta)["fields"]
+    kinds = {f["type"] if isinstance(f["type"], str) else "" for f in fields}
+    allowed = set(_ARROW_WRITE_TYPES)
+    if kinds & {"date", "timestamp"}:
+        if any(
+            spark.conf.get(f"spark.sql.parquet.{k}RebaseModeInWrite")
+            != "CORRECTED"
+            for k in ("datetime", "int96")
+        ):
+            return None
+        if spark.conf.get("spark.sql.parquet.outputTimestampType") != "INT96":
+            allowed.discard("timestamp")
+    names = [f["name"].lower() for f in fields]
+    if (
+        not kinds <= allowed
+        or any(f["metadata"] for f in fields)
+        or len(set(names)) != len(names)
+        or plan.stats().sizeInBytes() > sql_conf.filesOpenCostInBytes()
+    ):
+        return None
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() in _ROW_MULTIPLYING_NODES:
+            return None
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+
+    pid = "_lh_pid"
+    while pid in names:
+        pid = "_" + pid
+    table = df.withColumn(pid, F.spark_partition_id()).toArrow()
+    ids = table.column(pid).to_numpy()
+    table = table.drop_columns([pid])
+    if (np.diff(ids) < 0).any():
+        order = np.argsort(ids, kind="stable")
+        table, ids = table.take(order), ids[order]
+    version = re.match(r"\d+\.\d+\.\d+", spark.version).group()
+    schema = pa.schema(
+        [
+            pa.field(
+                f["name"],
+                pa.type_for_alias(_ARROW_WRITE_TYPES[f["type"]]),
+                f["nullable"],
+            )
+            for f in fields
+        ],
+        metadata={
+            _SPARK_SCHEMA_KEY: row_meta,
+            b"org.apache.spark.version": version,
+        },
+    )
+    try:
+        table = table.cast(schema)
+    except pa.ArrowInvalid:
+        return None  # a timestamp outside the nanosecond range
+    floats = [
+        f["name"] for f in fields if f["type"] in ("float", "double")
+    ]
+    pids, starts = (a.tolist() for a in np.unique(ids, return_index=True))
+    ranges = dict(zip(pids, zip(starts, [*starts[1:], len(ids)])))
+    ranges.setdefault(0, (0, 0))  # a Spark write task always opens it
+    job = uuid.uuid4()
+    os.makedirs(out)  # the batch dir must be new, as ``mode("error")``
+    written = []
+    for p, (s, e) in sorted(ranges.items()):
+        part = table.slice(s, e - s)
+        nan_cols = {
+            c for c in floats if pc.any(pc.is_nan(part.column(c))).as_py()
+        }
+        name = f"part-{p:05d}-{job}-c000{codec[1]}.parquet"
+        pq.write_table(
+            part,
+            os.path.join(out, name),
+            compression=codec[0],
+            use_deprecated_int96_timestamps=True,
+            write_statistics=[
+                f["name"] for f in fields if f["name"] not in nan_cols
+            ],
+        )
+        written.append(name)
+    return written
+
+
 class SnapshotTable:
     """A versioned parquet table rooted at ``path``.
 
@@ -1250,15 +1425,20 @@ class SnapshotTable:
         column name and fail (or worse, mis-bind)."""
         if not self.column_map and not self.dropped_cols:
             return df
-        inv = {p: l for l, p in self.column_map.items()}
-        dropped = set(self.dropped_cols)
         return df.select(
             *[
-                F.col(c).alias(inv[c]) if c in inv else F.col(c)
-                for c in df.columns
-                if c not in dropped
+                F.col(p).alias(l) if p != l else F.col(p)
+                for p, l in self._logical_names(df.columns)
             ]
         )
+
+    def _logical_names(self, physical: list[str]) -> list[tuple[str, str]]:
+        """``(physical, logical)`` for every physical column the logical
+        view keeps: dropped columns go, renamed ones take their logical
+        name."""
+        inv = {p: l for l, p in self.column_map.items()}
+        dropped = set(self.dropped_cols)
+        return [(c, inv.get(c, c)) for c in physical if c not in dropped]
 
     def _to_physical(self, df: DataFrame) -> DataFrame:
         """Logical write frame -> the physical names files store (the
@@ -2036,19 +2216,26 @@ class SnapshotTable:
         user appends and internal COW rewrites alike — proves them
         before any file lands. Frames arrive in LOGICAL names
         (constraints and partition sources speak logical) and are
-        translated to the files' PHYSICAL names last."""
+        translated to the files' PHYSICAL names last.
+
+        Two write paths, one layout: an unpartitioned batch that is
+        small and Spark-encodable (:func:`_write_small_batch`'s gate:
+        allow-listed column types, no row-multiplying plan node, a size
+        estimate within ``spark.sql.files.openCostInBytes``) is
+        collected once as Arrow and written from the driver, file for
+        file as Spark would write it; every other batch is a Spark
+        parquet write job."""
         self._enforce_constraints(df)
         df = self._to_physical(df)
         if self.partition_by:
             return list(self._write_batch_parts(df))
         batch = os.path.join(_DATA_DIR, f"b-{uuid.uuid4().hex[:12]}")
         out = os.path.join(self.path, batch)
-        df.write.mode("error").parquet(out)
-        return [
-            os.path.join(batch, f)
-            for f in os.listdir(out)
-            if f.endswith(".parquet")
-        ]
+        files = _write_small_batch(df, out)
+        if files is None:
+            df.write.mode("error").parquet(out)
+            files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        return [os.path.join(batch, f) for f in files]
 
     def _rows_in(self, files: list[str]) -> int:
         """Total row count of already-written data files, from their
@@ -2296,9 +2483,30 @@ class SnapshotTable:
         Defined as the merge of the LIVE files' schemas, which each
         commit records per written batch (Delta's ``metaData`` schema,
         kept per batch): exact under every operation incl. rollback,
-        which can REVERT an evolution, with no special case. Files with
-        no recorded schema fall back to Spark's footer merge."""
-        return self.read(version).schema
+        which can REVERT an evolution, with no special case. When every
+        live file has a recorded schema, the fold (:func:`_recorded_schema`)
+        is mapped to the logical view on the driver, with no DataFrame
+        planned; otherwise this is ``read(version).schema``, whose scan
+        falls back to Spark's footer merge."""
+        from pyspark.sql.types import StructField, StructType
+
+        snap = self.snapshot(version)
+        schema = _recorded_schema(
+            snap.files,
+            [os.path.join(self.path, f) for f in snap.files],
+            snap.schemas,
+        )
+        if not snap.files or schema is None:
+            return self.read(version).schema
+        phys = {f.name: f for f in schema.fields}
+        return StructType(
+            [
+                StructField(
+                    l, phys[p].dataType, phys[p].nullable, phys[p].metadata
+                )
+                for p, l in self._logical_names(schema.fieldNames())
+            ]
+        )
 
     def _validate_write_schema(self, df: DataFrame, schema_evolution: bool) -> None:
         """Delta-style write-side enforcement: shared columns must keep

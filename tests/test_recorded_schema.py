@@ -74,6 +74,7 @@ def _check(spark, t: SnapshotTable, recorded: bool = True) -> None:
         assert folded is None
     fast, slow = t.read(), t._scan(snap.files, snap.dvs, None)
     assert fast.schema.json() == slow.schema.json()
+    assert t.table_schema().json() == fast.schema.json()
     assert sorted(map(str, fast.collect())) == sorted(map(str, slow.collect()))
 
 
@@ -156,6 +157,36 @@ def test_recorded_schema_matches_footer_merge(
         elif op == "clone":
             t = t.clone_to(str(root / f"t{step + 1}"))
         _check(spark, t)
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_table_schema_equals_read_schema(spark, tmp_path, partitioned):
+    """``table_schema`` folds the recorded schemas on the driver; at
+    every version it must be the schema ``read`` plans, through
+    evolution, a rename, a drop, a re-add, a rollback and time travel
+    (which reads an old version through today's column map)."""
+    kinds = {c: c for c in ("id", "p", "v", "st", "str")}
+    t = SnapshotTable(
+        spark, str(tmp_path / "t"), partition_by=["p"] if partitioned else None
+    )
+    t.create(_frame(spark, kinds, ["id", "p", "v", "st"], 0))
+    t.append(
+        _frame(spark, kinds, ["id", "p", "v", "st", "str"], 10),
+        schema_evolution=True,
+    )
+    t.rename_column("v", "price")
+    t.drop_column("st")
+    t.readd_column("st")
+    kinds.update(price="v", st="str")
+    t.append(
+        _frame(spark, kinds, ["id", "p", "price", "str", "st"], 20),
+        schema_evolution=True,
+    )
+    t.rollback(2)
+    for v in t._versions():
+        want = t.read(version=v).schema
+        assert t.table_schema(version=v).json() == want.json(), v
+    assert t.table_schema() == t.read().schema
 
 
 def test_merge_rules_follow_sparks_footer_merge():
