@@ -28,15 +28,17 @@ written, is logically immutable (``vacuum`` may rewrite the oldest
 retained delta as its equivalent full form before dropping its base —
 same resolved snapshot, byte layout only).
 
-Data files are written one of two ways, to the same layout. Since the
-manifest publish is the commit, a batch needs no Hadoop committer: a
-small unpartitioned batch — allow-listed column types, no
-row-multiplying plan node, a size estimate within
+Data files are written one of two ways, to the same files and rows
+per file. Since the manifest publish is the commit, a batch needs no
+Hadoop committer: a small unpartitioned batch — allow-listed column
+types, a plan with no row-multiplying node, a size estimate within
 ``spark.sql.files.openCostInBytes`` — is collected once as Arrow and
 written from the driver, one file per Spark partition as Spark would
 write it (the Snowpipe Streaming client writes its small chunks
-straight to storage the same way). Every other batch, and every
-partitioned one, is a Spark parquet write job.
+straight to storage the same way). Every other batch, every
+partitioned one and every ``compact``/``cluster_zorder`` rewrite is a
+Spark parquet write job; the driver's files differ from parquet-mr's
+only in byte size.
 
 Scale posture: a snapshot READ is O(#files) driver-side JSON — the
 identical cost model Delta/Iceberg accept (at 100 TB with 128 MB files
@@ -59,6 +61,7 @@ import re
 import shutil
 import time
 import uuid
+from contextvars import ContextVar
 from dataclasses import dataclass
 from functools import reduce
 
@@ -1067,15 +1070,55 @@ _ROW_MULTIPLYING_NODES = frozenset(
         "BatchEvalPythonUDTF", "ArrowEvalPythonUDTF",
     }
 )
-#: ``spark.sql.parquet.compression.codec`` -> (pyarrow codec, the
-#: infix Spark puts in the file name)
-_ARROW_CODECS = {
-    "snappy": ("snappy", ".snappy"),
-    "gzip": ("gzip", ".gz"),
-    "zstd": ("zstd", ".zstd"),
-    "none": ("none", ""),
-    "uncompressed": ("none", ""),
-}
+#: ids of the RDDs under ``LogicalRDD`` leaves whose origin plan the
+#: caller has checked with :func:`_plan_bounded` (see
+#: :func:`_checked_origin`)
+_CHECKED_RDDS: ContextVar[frozenset] = ContextVar(
+    "_CHECKED_RDDS", default=frozenset()
+)
+
+
+def _plan_bounded(plan) -> bool:
+    """True when no node of ``plan`` (a JVM logical or physical plan)
+    may emit more rows than it reads, so the plan's size estimate
+    bounds its output. A ``LogicalRDD`` leaf — a ``foreachBatch``
+    micro-batch, a checkpointed frame — carries stats estimated from
+    an origin plan this walk cannot see, so it counts as bounded only
+    when its RDD is in :data:`_CHECKED_RDDS`; a cached relation is
+    walked through the plan it caches."""
+    checked = _CHECKED_RDDS.get()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name in _ROW_MULTIPLYING_NODES:
+            return False
+        if name == "LogicalRDD" and node.rdd().id() not in checked:
+            return False
+        if name == "InMemoryRelation":
+            todo.append(node.cachedPlan())
+        elif name == "AdaptiveSparkPlan":
+            todo.append(node.inputPlan())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return True
+
+
+@contextlib.contextmanager
+def _checked_origin(df: DataFrame):
+    """Within the block, count ``df``'s own ``LogicalRDD`` leaf as
+    bounded by its stats. For a ``foreachBatch`` micro-batch whose
+    stream plan the caller found bounded with :func:`_plan_bounded`:
+    the micro-batch plan is that plan over one batch of source rows."""
+    root = df._jdf.logicalPlan()
+    if root.nodeName() != "LogicalRDD":
+        yield
+        return
+    token = _CHECKED_RDDS.set(_CHECKED_RDDS.get() | {root.rdd().id()})
+    try:
+        yield
+    finally:
+        _CHECKED_RDDS.reset(token)
 
 
 def _write_small_batch(df: DataFrame, out: str) -> list[str] | None:
@@ -1089,19 +1132,20 @@ def _write_small_batch(df: DataFrame, out: str) -> list[str] | None:
     the caller writes it through Spark.
 
     The gate: every column's type is in :data:`_ARROW_WRITE_TYPES` (and
-    carries no field metadata), no optimized-plan node multiplies rows
-    (:data:`_ROW_MULTIPLYING_NODES`), and the plan's ``sizeInBytes``
+    carries no field metadata), the codec is Spark's default snappy,
+    the optimized plan is :func:`_plan_bounded` (no row-multiplying
+    node, no unchecked ``LogicalRDD``), and its ``sizeInBytes``
     estimate is at most ``spark.sql.files.openCostInBytes`` — Spark's
     own size of a file whose cost is all fixed overhead.
 
-    The files match ``df.write.parquet``: one ``part-<pid>-<uuid>-c000``
-    file per non-empty partition, plus partition 0 even when empty (a
-    Spark write task always opens partition 0's file), rows in
-    partition order; the footer carries the schema of the JVM plan's
-    output (the optimizer may tighten nullability) under Spark's
-    row-metadata key and the Spark version (so reads apply no datetime
-    rebase); the codec is ``spark.sql.parquet.compression.codec``.
-    A float column holding NaN gets no min/max statistics in that file:
+    The files are ``df.write.parquet``'s files and rows per file: one
+    ``part-<pid>-<uuid>-c000.snappy`` file per non-empty partition,
+    plus partition 0 even when empty (a Spark write task always opens
+    partition 0's file), rows in partition order; the footer carries
+    the schema of the JVM plan's output (the optimizer may tighten
+    nullability) under Spark's row-metadata key and the Spark version
+    (so reads apply no datetime rebase). Their byte sizes differ from
+    parquet-mr's. A float column holding NaN gets no min/max statistics in that file:
     pyarrow's would leave the NaN out, and a skip on them could drop
     NaN rows, which Spark orders above every number."""
     import numpy as np
@@ -1110,11 +1154,12 @@ def _write_small_batch(df: DataFrame, out: str) -> list[str] | None:
     import pyarrow.parquet as pq
 
     spark = df.sparkSession
-    codec = _ARROW_CODECS.get(
-        spark.conf.get("spark.sql.parquet.compression.codec").lower()
-    )
     sql_conf = spark._jsparkSession.sessionState().conf()
-    if codec is None or sql_conf.maxRecordsPerFile() > 0:
+    if (
+        spark.conf.get("spark.sql.parquet.compression.codec").lower()
+        != "snappy"
+        or sql_conf.maxRecordsPerFile() > 0
+    ):
         return None
     plan = df._jdf.queryExecution().optimizedPlan()
     row_meta = plan.schema().json()
@@ -1136,15 +1181,9 @@ def _write_small_batch(df: DataFrame, out: str) -> list[str] | None:
         or any(f["metadata"] for f in fields)
         or len(set(names)) != len(names)
         or plan.stats().sizeInBytes() > sql_conf.filesOpenCostInBytes()
+        or not _plan_bounded(plan)
     ):
         return None
-    todo = [plan]
-    while todo:
-        node = todo.pop()
-        if node.nodeName() in _ROW_MULTIPLYING_NODES:
-            return None
-        kids = node.children()
-        todo += [kids.apply(i) for i in range(kids.size())]
 
     pid = "_lh_pid"
     while pid in names:
@@ -1188,11 +1227,11 @@ def _write_small_batch(df: DataFrame, out: str) -> list[str] | None:
         nan_cols = {
             c for c in floats if pc.any(pc.is_nan(part.column(c))).as_py()
         }
-        name = f"part-{p:05d}-{job}-c000{codec[1]}.parquet"
+        name = f"part-{p:05d}-{job}-c000.snappy.parquet"
         pq.write_table(
             part,
             os.path.join(out, name),
-            compression=codec[0],
+            compression="snappy",
             use_deprecated_int96_timestamps=True,
             write_statistics=[
                 f["name"] for f in fields if f["name"] not in nan_cols
@@ -2208,7 +2247,7 @@ class SnapshotTable:
                 return snap
             continue  # lost the race; retry against the new latest
 
-    def _write_batch(self, df: DataFrame) -> list[str]:
+    def _write_batch(self, df: DataFrame, spark_only: bool = False) -> list[str]:
         """Write ``df`` as a new immutable batch dir; return the parquet
         files created (relative paths). Partitioned tables route through
         :meth:`_write_batch_parts` (alignment is a write-path invariant);
@@ -2218,20 +2257,25 @@ class SnapshotTable:
         (constraints and partition sources speak logical) and are
         translated to the files' PHYSICAL names last.
 
-        Two write paths, one layout: an unpartitioned batch that is
-        small and Spark-encodable (:func:`_write_small_batch`'s gate:
-        allow-listed column types, no row-multiplying plan node, a size
-        estimate within ``spark.sql.files.openCostInBytes``) is
-        collected once as Arrow and written from the driver, file for
-        file as Spark would write it; every other batch is a Spark
-        parquet write job."""
+        Two write paths, the same files and rows per file: an
+        unpartitioned batch that is small and Spark-encodable
+        (:func:`_write_small_batch`'s gate: allow-listed column types,
+        a bounded plan, a size estimate within
+        ``spark.sql.files.openCostInBytes``) is collected once as Arrow
+        and written from the driver; every other batch is a Spark
+        parquet write job. The two paths' files differ in byte size,
+        and a scan packs its splits by file size, so the layout
+        rewrites (:meth:`compact`, :meth:`cluster_zorder`) pass
+        ``spark_only`` and keep parquet-mr's files: a later
+        order-preserving compaction then packs them as it always
+        has."""
         self._enforce_constraints(df)
         df = self._to_physical(df)
         if self.partition_by:
             return list(self._write_batch_parts(df))
         batch = os.path.join(_DATA_DIR, f"b-{uuid.uuid4().hex[:12]}")
         out = os.path.join(self.path, batch)
-        files = _write_small_batch(df, out)
+        files = None if spark_only else _write_small_batch(df, out)
         if files is None:
             df.write.mode("error").parquet(out)
             files = [f for f in os.listdir(out) if f.endswith(".parquet")]
@@ -3662,7 +3706,7 @@ class SnapshotTable:
         return self._commit(
             "compact",
             prev.version,
-            self._write_batch(packed),
+            self._write_batch(packed, spark_only=True),
             remove=remove,
             replace_all=replace_all,
             commute_ok=None if replace_all else _pack_commutes,
@@ -3730,11 +3774,14 @@ class SnapshotTable:
             return self._commit(
                 "zorder",
                 prev.version,
-                self._write_batch(clustered),
+                self._write_batch(clustered, spark_only=True),
                 remove=frozenset(scoped.files),
             )
         return self._commit(
-            "zorder", prev.version, self._write_batch(clustered), replace_all=True
+            "zorder",
+            prev.version,
+            self._write_batch(clustered, spark_only=True),
+            replace_all=True,
         )
 
     # ------------------------------------------------------- change feed
@@ -5130,7 +5177,7 @@ class BucketedTable(SnapshotTable):
         h = int(hashlib.md5(str(value).encode()).hexdigest()[:15], 16)
         return h % self.n_buckets
 
-    def _write_batch(self, df: DataFrame):
+    def _write_batch(self, df: DataFrame, spark_only: bool = False):
         # ALWAYS (re)derive the bucket: it is pure derived state, and
         # internal rewrite paths build frames where only PART of the
         # rows carry it (merge unions file-read survivors, which have
@@ -5139,7 +5186,7 @@ class BucketedTable(SnapshotTable):
         # partition). Recomputation is idempotent by construction.
         df = df.withColumn(_BUCKET_COL, self.bucket_expr())
         self._publish_spec()
-        return super()._write_batch(df)
+        return super()._write_batch(df, spark_only)
 
     # ----------------------------------------------------------- reads
 

@@ -13,9 +13,11 @@ late (after its data files were written) leaves only orphan files, which
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame
 
-from ..sources.lakehouse import SnapshotTable
+from ..sources.lakehouse import SnapshotTable, _checked_origin, _plan_bounded
 
 
 def _start(
@@ -71,20 +73,26 @@ def write_stream_to_snapshot_table(
     the dedup-ingest sinks which are replay-safe by construction).
     """
 
+    # A micro-batch reaches foreachBatch as a LogicalRDD whose size
+    # estimate comes from the stream's plan over that batch's source
+    # rows; it bounds the batch only if the stream multiplies no rows.
+    bounded = _plan_bounded(stream_df._jdf.queryExecution().analyzed())
+
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         seen = (
             table.last_committed_batch(app_id) if table._versions() else None
         )
         if seen is not None and batch_id <= seen:
             return  # checkpoint replay: already durable
-        if transform is not None:
-            batch_df = transform(batch_df)
-        txn = {"app_id": app_id, "batch_id": batch_id}
-        if not table._versions():
-            files = table._write_batch(batch_df)
-            table._commit("create", 0, files, replace_all=True, txn=txn)
-        else:
-            table.append(batch_df, txn=txn)
+        with _checked_origin(batch_df) if bounded else nullcontext():
+            if transform is not None:
+                batch_df = transform(batch_df)
+            txn = {"app_id": app_id, "batch_id": batch_id}
+            if not table._versions():
+                files = table._write_batch(batch_df)
+                table._commit("create", 0, files, replace_all=True, txn=txn)
+            else:
+                table.append(batch_df, txn=txn)
 
     return _start(stream_df, _write, checkpoint, processing_time)
 

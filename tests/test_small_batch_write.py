@@ -148,6 +148,64 @@ def test_unsupported_batches_write_through_spark(spark, tmp_path, shape):
     assert t.read().count() == (40 if shape == "explode" else 20)
 
 
+def test_checkpointed_frames_write_through_spark(spark, tmp_path):
+    # a LogicalRDD's stats come from an origin plan the gate cannot see
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.create(_typed(spark, 20).localCheckpoint())
+    assert os.path.exists(os.path.join(_batch_dir(t), "_SUCCESS"))
+    assert t.read().count() == 20
+
+
+def test_other_codecs_write_through_spark(spark, tmp_path):
+    key = "spark.sql.parquet.compression.codec"
+    before = spark.conf.get(key)
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    spark.conf.set(key, "zstd")
+    try:
+        t.create(_typed(spark, 20))
+    finally:
+        spark.conf.set(key, before)
+    assert os.path.exists(os.path.join(_batch_dir(t), "_SUCCESS"))
+    assert all(".zstd." in f for f in _files(_batch_dir(t)))
+
+
+def test_layout_rewrites_write_through_spark(spark, tmp_path):
+    # compaction packs scan splits by file byte size: z-order and
+    # compaction output keeps parquet-mr's files
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.create(_typed(spark, 200).repartition(4))
+    assert not os.path.exists(os.path.join(_batch_dir(t), "_SUCCESS"))
+    t.cluster_zorder(["i", "s"], n_files=4)
+    assert os.path.exists(os.path.join(_batch_dir(t), "_SUCCESS"))
+    t.compact(target_files=2)
+    assert os.path.exists(os.path.join(_batch_dir(t), "_SUCCESS"))
+    assert t.read().count() == 200
+
+
+@pytest.mark.parametrize("explode", [False, True])
+def test_streamed_batches_gate_on_the_stream_plan(spark, tmp_path, explode):
+    """A foreachBatch micro-batch is a LogicalRDD whose size estimate
+    ignores an explode upstream of it: the sink checks the stream's
+    own plan, and only a bounded stream's batches take the driver
+    path."""
+    from summit_23_snowpark_data_lake_workloads_spark.streaming.lakehouse_sink import (
+        write_stream_to_snapshot_table,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.json").write_text('{"k": 1, "v": "a"}\n{"k": 2, "v": "b"}\n')
+    stream = spark.readStream.schema("k long, v string").json(str(src))
+    if explode:
+        stream = stream.select(F.explode(F.array("k", "k")).alias("k"), "v")
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    write_stream_to_snapshot_table(
+        stream, t, "app", str(tmp_path / "ck")
+    ).awaitTermination()
+    assert os.path.exists(os.path.join(_batch_dir(t), "_SUCCESS")) == explode
+    assert t.read().count() == (4 if explode else 2)
+
+
 def test_batches_above_open_cost_write_through_spark(spark, tmp_path):
     key = "spark.sql.files.openCostInBytes"
     before = spark.conf.get(key)
