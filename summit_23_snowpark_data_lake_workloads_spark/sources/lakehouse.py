@@ -1145,9 +1145,9 @@ def _write_small_batch(df: DataFrame, out: str) -> list[str] | None:
     the schema of the JVM plan's output (the optimizer may tighten
     nullability) under Spark's row-metadata key and the Spark version
     (so reads apply no datetime rebase). Their byte sizes differ from
-    parquet-mr's. A float column holding NaN gets no min/max statistics in that file:
-    pyarrow's would leave the NaN out, and a skip on them could drop
-    NaN rows, which Spark orders above every number."""
+    parquet-mr's. A float column holding NaN gets no min/max statistics
+    in that file: pyarrow's would leave the NaN out, and a skip on them
+    could drop NaN rows, which Spark orders above every number."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
