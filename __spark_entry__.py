@@ -63,6 +63,12 @@ FORCE_REGATE: dict[str, int] = {
     "lakehouse_catalog_branch_audit": 17,
     "lakehouse_incremental_rollup_audit": 17,
     "medallion_incremental_audit": 17,
+    # r17: the change-feed streams run the batch refreshes per drained
+    # range (the replica stream's first range is now a pinned full
+    # resync, not a netted create), and a compact-only range is a
+    # stamp with no feed read.
+    "streaming_cdc_replica_audit": 17,
+    "lakehouse_cdc_replication_audit": 17,
     # r16: the BPE trainer fused cache materialization into the argmax
     # job (one job per iteration, byte-identical merge table — pinned
     # in tests/test_r16_optimizations.py).

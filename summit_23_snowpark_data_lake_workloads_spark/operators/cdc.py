@@ -31,10 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.lakehouse import SnapshotTable
-
-#: upstream operations whose change set is table-sized by definition
-_REPLACE_ALL_OPS = frozenset({"create", "overwrite", "rollback"})
+from ..sources.lakehouse import _LAYOUT_OPS, _REPLACE_ALL_OPS, SnapshotTable
 
 #: metadata-only schema surgery: emits NO change rows, yet changes what
 #: every existing row READS as — row-level apply cannot express it.
@@ -155,7 +152,9 @@ def replicate_changes(
     change feed: netted per-key, applied as key-scoped delete+merge),
     or ``"full"`` (first sync, replace-all commit in range, or the
     range expired under vacuum — resync pinned to the stamped
-    version).
+    version). A range of layout-only (compact / Z-order) and
+    metadata-only commits is ``"incremental"`` too: a ``sync_noop``
+    commit advances the stamp and no feed is read.
 
     ``strategy="mor"`` applies the net effect through
     ``delete_keys_mor`` + ``merge_mor`` (deletion vectors + append,
@@ -167,10 +166,27 @@ def replicate_changes(
     an insert-only sync never scans the replica for key matches at
     all. Sound under the feed's key-uniqueness contract; turn off for
     upstreams that append duplicate keys outside MERGE discipline."""
+    return _replicate(
+        src, dst, key_cols, src.snapshot().version, app_id, strategy,
+        route_inserts,
+    )
+
+
+def _replicate(
+    src: SnapshotTable,
+    dst: SnapshotTable,
+    key_cols: list[str],
+    v_hi: int,
+    app_id: str,
+    strategy: str,
+    route_inserts: bool,
+) -> str:
+    """:func:`replicate_changes` through upstream version ``v_hi``
+    instead of the head: the stream form pins each drained range's
+    upper version here."""
     if strategy not in ("cow", "mor"):
         raise ValueError(f"unknown apply strategy {strategy!r}")
-    v_hi = src.snapshot().version
-    seen = dst.last_committed_batch(app_id) if dst._versions() else None
+    seen = dst.last_committed_batch(app_id)
     if seen is not None and v_hi <= seen:
         return "noop"
     txn = {"app_id": app_id, "batch_id": v_hi}
@@ -204,8 +220,12 @@ def replicate_changes(
         # instead of silently diverging. (New upstream columns need no
         # resync: the apply steps evolve, old rows NULL on both sides.)
         return full_resync()
-    if not any(a or r or d for _v, _op, a, r, d in per_commit):
-        # metadata-only range: advance the high-water mark and stop
+    if all(
+        op in _LAYOUT_OPS or not (a or r or d)
+        for _v, op, a, r, d in per_commit
+    ):
+        # layout-/metadata-only range: advance the high-water mark and
+        # stop — no row changed, so the feed is not read
         dst._commit("sync_noop", dst.snapshot().version, [], txn=txn)
         return "incremental"
     try:

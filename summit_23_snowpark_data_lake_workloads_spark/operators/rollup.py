@@ -1,8 +1,11 @@
 """Incrementally-maintained rollup tables over the lakehouse — the
-BATCH twin of the reference's Processed-layer dynamic table (the
-architecture diagram's declarative incremental materialization;
-``streaming/incremental.py`` is the Structured-Streaming form, this is
-the manifest-driven form a scheduled task DAG runs).
+reference's Processed-layer dynamic table (the architecture diagram's
+declarative incremental materialization) as the manifest-driven refresh
+a scheduled task DAG runs. It is the one implementation: the
+change-feed stream (``streaming/cdf_source.py``) runs this same refresh
+once per drained commit range, pinned ``through`` the range's upper
+version; ``streaming/incremental.py`` is the Structured-Streaming form
+over a source stream.
 
 The 100 TB shape: a refresh reads ONLY what changed since the last
 refresh. For an append-only range that is the appended files
@@ -49,13 +52,15 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.lakehouse import SnapshotTable, _transform_expr
+from ..sources.lakehouse import (
+    _LAYOUT_OPS,
+    _REPLACE_ALL_OPS,
+    SnapshotTable,
+    _transform_expr,
+)
 
 #: rollup column holding COUNT(*) per group
 N_ROWS = "n_rows"
-#: fact operations whose change set is table-sized by definition —
-#: incremental consumption of these is a full recompute in disguise
-_REPLACE_ALL_OPS = frozenset({"create", "overwrite", "rollback"})
 
 
 def files_added_between(
@@ -87,7 +92,10 @@ def refresh_rollup(
 
     - ``"noop"`` — already current;
     - ``"incremental"`` — append-only range: folded the added files
-      in, rewrote touched partitions;
+      in, rewrote touched partitions; or a range of layout-only
+      (compact / Z-order) and metadata-only commits: no row changed,
+      so only the high-water mark advanced (a ``refresh_noop`` commit)
+      and nothing was read;
     - ``"incremental_cdf"`` — the range contained row-level removals
       (delete / merge / partition overwrite): folded the change feed's
       inserts (+) and deletes (−) into the existing groups;
@@ -137,14 +145,7 @@ def refresh_rollup(
                 "derive the touched partitions"
             )
     v_hi = fact.snapshot().version if through is None else through
-    if since == "auto":
-        seen = (
-            rollup.last_committed_batch(app_id)
-            if rollup._versions()
-            else None
-        )
-    else:
-        seen = since
+    seen = rollup.last_committed_batch(app_id) if since == "auto" else since
     if seen is not None and v_hi <= seen:
         return "noop"
     # table-log txn stamps only in "auto" mode. Under an external
@@ -194,6 +195,20 @@ def refresh_rollup(
         return full_refresh()
     if any(op in _REPLACE_ALL_OPS for _v, op, _a, _r, _d in per_commit):
         return full_refresh()
+    if all(
+        op in _LAYOUT_OPS or not (a or r or d)
+        for _v, op, a, r, d in per_commit
+    ):
+        # layout-/metadata-only range (compact, Z-order, spec
+        # evolution): no row changed, so advance the high-water mark
+        # without reading the feed or rewriting a rollup file. A range
+        # mixing an append with a later compaction takes the feed: the
+        # appended file may no longer be live to scan.
+        if txn is not None:  # external-stamp mode advances at ITS commit
+            rollup._commit(
+                "refresh_noop", rollup.snapshot().version, [], txn=txn
+            )
+        return "incremental"
     # removed files OR deletion-vector rows: either way rows retracted
     removed_any = any(r or d for _v, _op, _a, r, d in per_commit)
 
@@ -207,14 +222,6 @@ def refresh_rollup(
         return "incremental_cdf"
 
     added = [f for _v, _op, a, _r, _d in per_commit for f in a]
-    if not added:
-        # metadata-only fact commits (e.g. spec evolution): advance the
-        # high-water mark without touching data
-        if txn is not None:  # external-stamp mode advances at ITS commit
-            rollup._commit(
-                "refresh_noop", rollup.snapshot().version, [], txn=txn
-            )
-        return "incremental"
     # read the delta through the fact's LOGICAL scan, never raw
     # parquet: files store physical (creation-time) names, so after a
     # rename_column a raw read would miss the renamed column — or, on
@@ -288,15 +295,6 @@ def _signed_rows(
     return sides[0].unionByName(sides[1])
 
 
-def _signed_delta(
-    chg: DataFrame, prepare, group_cols: list[str], sum_cols: list[str]
-) -> DataFrame:
-    """Per-group NET change from a change feed: :func:`_signed_rows`
-    summed per group."""
-    rows = _signed_rows(chg, prepare, group_cols, sum_cols)
-    return _combine(rows, group_cols, sum_cols)
-
-
 def _apply_delta(
     rollup: SnapshotTable,
     delta: DataFrame,
@@ -339,8 +337,8 @@ def _apply_delta(
     # (localCheckpoint'd): this path consumes it from several actions
     # (the broadcast touched-partitions subquery, the combine's union
     # side, the vanished-partition collect) — a lazy delta would
-    # re-scan the commit's files per action. refresh_rollup and the
-    # streaming twin both checkpoint before calling.
+    # re-scan the commit's files per action. refresh_rollup
+    # checkpoints it before calling.
     pfields = rollup._pfields
     names = [f.name for f in pfields]
 

@@ -67,7 +67,7 @@ import time
 import uuid
 from urllib.parse import quote, unquote
 
-from .lakehouse import _DATA_DIR, _META_OPS, Snapshot, SnapshotTable
+from .lakehouse import _DATA_DIR, _LAYOUT_OPS, _META_OPS, Snapshot, SnapshotTable
 
 _LOG_DIR = "_delta_log"
 #: sidecar at the EXPORT root (outside _delta_log, which readers
@@ -190,14 +190,6 @@ def _delta_stats(snap: Snapshot, f: str) -> str | None:
     if maxs:
         out["maxValues"] = maxs
     return json.dumps(out) if out else None
-
-
-#: rewrite-only source operations — same rows, new layout. Delta's
-#: OPTIMIZE convention marks their add/remove actions
-#: ``dataChange: false`` so a Delta STREAMING consumer of the exported
-#: log does not reprocess every compacted row as new data (batch reads
-#: ignore the flag either way).
-_REWRITE_OPS = frozenset({"compact", "zorder"})
 
 
 def _require_source(table: SnapshotTable, f: str) -> str:
@@ -472,7 +464,11 @@ def sync_delta(table: SnapshotTable, dst: str) -> dict:
     now_ms = int(time.time() * 1000)
     for v, op, added, removed, _dv_delta in changes:
         snap_v = snaps[v]
-        data_change = op not in _REWRITE_OPS
+        # layout-only rewrites: Delta's OPTIMIZE convention marks their
+        # add/remove actions ``dataChange: false`` so a Delta STREAMING
+        # consumer of the exported log does not reprocess every
+        # compacted row as new data (batch reads ignore the flag)
+        data_change = op not in _LAYOUT_OPS
         actions: list[dict] = [
             {
                 "commitInfo": {

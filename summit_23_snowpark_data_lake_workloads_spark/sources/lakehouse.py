@@ -117,6 +117,12 @@ _META_OPS = frozenset(
         "enable_cdf",
     }
 )
+#: operations whose change set is table-sized by definition (the whole
+#: file set is replaced): an incremental consumer recomputes instead of
+#: reading their feed
+_REPLACE_ALL_OPS = frozenset({"create", "overwrite", "rollback"})
+#: layout-only rewrites: the same rows in new files, so no change rows
+_LAYOUT_OPS = frozenset({"compact", "zorder"})
 
 
 class SchemaMismatchError(ValueError):
@@ -968,14 +974,18 @@ def _file_may_match(
 ) -> bool:
     """Conservative skip test: False ONLY when the file's [min, max]
     range (or, for ``=``, its bloom filter) proves no row can satisfy
-    ``col op value``. Missing stats keep the file (never an incorrect
-    skip)."""
+    ``col op value``. Missing stats or a NaN bound keep the file (never
+    an incorrect skip)."""
     if op == "=" and bloom and col in bloom:
         if not _bloom_may_contain(bloom[col], value):
             return False
     if not stats or col not in stats:
         return True
     lo, hi = stats[col]
+    if lo != lo or hi != hi:
+        # parquet-mr records a NaN bound for a column holding NaN, and
+        # Spark orders NaN above every number: the range proves nothing
+        return True
     try:
         if op == "=":
             return lo <= value <= hi
@@ -2060,7 +2070,7 @@ class SnapshotTable:
             self.cdf
             and change_files is None
             and not replace_all
-            and operation not in ("compact", "zorder")
+            and operation not in _LAYOUT_OPS
             and (remove or dv_add)
         ):
             # persisted-CDF mode: write this commit's change rows as
@@ -4081,7 +4091,7 @@ class SnapshotTable:
         per_commit = self.file_changes(v_lo, v_hi)
         out: DataFrame | None = None
         for v, op, added, removed, dv_delta in per_commit:
-            if op in ("compact", "zorder") or (
+            if op in _LAYOUT_OPS or (
                 not added and not removed and not dv_delta
             ):
                 continue  # layout-only / metadata-only: no row changes

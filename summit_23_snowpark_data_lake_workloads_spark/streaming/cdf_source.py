@@ -16,15 +16,18 @@ REAL StreamingQuery (micro-batch clock + ``foreachBatch``) drives the
 drain, so consumers get the Structured Streaming lifecycle without the
 drain-loop cadence being theirs to schedule.
 
-The 100 TB shape: a drain reads O(files the pending commits touched)
-— per-commit cost is the change feed's cost model
-(``SnapshotTable.changes``), never O(table) except replace-all
-commits, whose change set is table-sized by definition and which the
-signed fold still applies CORRECTLY (the feed of an overwrite is the
-exact old->new multiset diff, so retraction folding survives even
-that; it is merely not cheap — schedule compaction-sized maintenance
-around replace-alls, or let the batch ``refresh_rollup`` take them
-with its pinned full recompute).
+The maintained forms (:func:`maintain_rollup_stream`,
+:func:`maintain_replica_stream`, and ``plans/txn_refresh.py``'s
+``maintain_chain_stream``) hold no maintenance logic of their own:
+each drains commit RANGES and runs the batch function
+(``refresh_rollup`` / ``replicate_changes`` / ``refresh_chain_txn``)
+pinned ``through`` the range's upper version, so a stream's result is
+the batch result over each prefix by construction, and every rule the
+batch form has (replace-all and vacuumed ranges recompute, layout-only
+ranges only advance the stamp) holds for the stream too. Ranges end
+on LIVE versions: after a vacuum expired versions the drain has not
+reached, the next range spans the gap and the batch function resyncs
+in full where it can no longer prove the increment.
 
 Crash story, stated not hidden: the offset advances AFTER the
 processor returns, so a crash in between replays the micro-batch —
@@ -39,10 +42,8 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..operators.rollup import N_ROWS, _apply_delta, _signed_delta
+from ..operators.cdc import _replicate
+from ..operators.rollup import refresh_rollup
 from ..sources.lakehouse import SnapshotTable
 
 _OFFSET_FILE = "offset.json"
@@ -100,26 +101,34 @@ class ChangeFeedStream:
     def drain_ranges(self, process) -> list[tuple[int, int]]:
         """Like :meth:`drain`, but delivers only the ``(v_lo, v_hi)``
         range — for consumers that re-derive the range from the table
-        log themselves (the transactional chain: ``refresh_rollup``
-        reads the feed under its own ``since``/``through`` pins), so
-        building the change DataFrame here would be wasted metadata
-        work. Offset semantics identical."""
-        lo, hi = self.pending()
+        log themselves (the batch refreshes read the feed under their
+        own ``through`` pin), so building the change DataFrame here
+        would be wasted metadata work. Offset semantics identical.
+
+        Every ``v_hi`` is a live version: the ranges step through the
+        table's versions above the offset, ``max_commits_per_batch``
+        at a time, so a range spans any versions vacuum expired (with
+        no gaps, each range is ``max_commits_per_batch`` commits, the
+        last one possibly fewer)."""
+        lo = self.last_version()
+        live = [v for v in self.table._versions() if v > lo]
+        step = self.max_commits_per_batch
         out: list[tuple[int, int]] = []
-        v = lo
-        while v < hi:
-            w_hi = min(v + self.max_commits_per_batch, hi)
-            process(v, w_hi)
-            self._store(w_hi)
-            out.append((v, w_hi))
-            v = w_hi
+        for i in range(0, len(live), step):
+            hi = live[min(i + step, len(live)) - 1]
+            process(lo, hi)
+            self._store(hi)
+            out.append((lo, hi))
+            lo = hi
         return out
 
     def drain(self, process) -> list[tuple[int, int]]:
         """Deliver all pending commits as micro-batches; return the
         ``(v_lo, v_hi]`` ranges processed. The offset advances after
         each ``process`` call returns (at-least-once here; see the
-        module docstring for the exactly-once composition)."""
+        module docstring for the exactly-once composition). A raw feed
+        cannot be recomputed: a range vacuum expired raises
+        ``changes()``'s ``FileNotFoundError``."""
         return self.drain_ranges(
             lambda lo, hi: process(self.table.changes(lo, hi), lo, hi)
         )
@@ -193,48 +202,24 @@ def maintain_rollup_stream(
     max_commits_per_batch: int = 1,
 ) -> list[tuple[int, int]]:
     """Continuously-maintained silver rollup over ``fact``'s change
-    stream — the streaming twin of
-    :func:`..operators.rollup.refresh_rollup`: each drained
-    micro-batch folds its SIGNED per-group delta (inserts ``+``,
-    deletes ``-``) into ``silver``, stamped with the range's upper
-    fact version, so a crash-replayed batch is a metadata no-op
-    (exactly-once through the at-least-once stream layer). Returns the
-    ranges this drain processed.
+    stream: each drained range runs
+    :func:`..operators.rollup.refresh_rollup` pinned ``through`` the
+    range's upper fact version, which is also the range's txn stamp,
+    so a crash-replayed range is a metadata no-op (exactly-once
+    through the at-least-once stream layer). Returns the ranges this
+    drain processed.
 
-    ``prepare``/``group_cols``/``sum_cols`` contract is
-    ``refresh_rollup``'s. Additive aggregates only — the same
-    soundness boundary, because it is the same arithmetic."""
-    stream = ChangeFeedStream(
+    ``prepare``/``group_cols``/``sum_cols`` and every refresh mode are
+    ``refresh_rollup``'s: a replace-all commit or a vacuumed range
+    recomputes in full, a layout-only range only advances the stamp."""
+    return ChangeFeedStream(
         fact, checkpoint_dir, max_commits_per_batch=max_commits_per_batch
-    )
-
-    def process(chg: DataFrame, _v_lo: int, v_hi: int) -> None:
-        seen = (
-            silver.last_committed_batch(app_id)
-            if silver._versions()
-            else None
+    ).drain_ranges(
+        lambda _lo, hi: refresh_rollup(
+            fact, silver, prepare, group_cols, sum_cols,
+            app_id=app_id, through=hi,
         )
-        if seen is not None and v_hi <= seen:
-            return  # crash-replayed micro-batch: already folded
-        txn = {"app_id": app_id, "batch_id": v_hi}
-        delta = _signed_delta(
-            chg, prepare, group_cols, sum_cols
-        ).localCheckpoint(eager=True)
-        if not delta.limit(1).count():
-            # layout-/metadata-only range: advance the stamp without
-            # rewriting a single silver row
-            if silver._versions():
-                silver._commit(
-                    "refresh_noop", silver.snapshot().version, [], txn=txn
-                )
-            return
-        if not silver._versions():
-            # a multi-commit first batch can net a group to zero
-            silver.create(delta.filter(F.col(N_ROWS) > 0), txn=txn)
-            return
-        _apply_delta(silver, delta, group_cols, sum_cols, txn, signed=True)
-
-    return stream.drain(process)
+    )
 
 
 def maintain_replica_stream(
@@ -248,77 +233,23 @@ def maintain_replica_stream(
     route_inserts: bool = True,
 ) -> list[tuple[int, int]]:
     """Continuously-maintained ROW-LEVEL replica over ``src``'s change
-    stream — the streaming twin of
-    :func:`..operators.cdc.replicate_changes` the same way
-    :func:`maintain_rollup_stream` is the streaming twin of the batch
-    rollup refresh: each drained micro-batch is netted per key (one
-    ``max(struct)`` aggregate — insert-then-delete inside the batch
-    applies as nothing, the last image wins) and landed as at most a
-    key-scoped delete + key-scoped merge + fresh-insert append, the
-    txn stamp riding the last step taken (the replay story of
-    ``operators.cdc._apply_netted``). A crash-replayed batch is a
-    metadata no-op.
+    stream: each drained range runs
+    :func:`..operators.cdc.replicate_changes` pinned through the
+    range's upper source version (its txn stamp), so a crash-replayed
+    range is a metadata no-op. Returns the ranges this drain
+    processed.
 
-    ``route_inserts`` (default on) — the churn-skip: keys with no
-    retraction event in the micro-batch land as ONE plain append, so
-    the append-mostly phases of a feed never key-probe the replica at
-    all (``net_changes_routed``). ``strategy="mor"`` applies
-    retractions through deletion vectors instead of copy-on-write.
-
-    Same contract as the batch form: key-unique upstream rows; a
-    replace-all source commit's feed is table-sized (correct, not
-    cheap); a vacuumed range raises unless the source persists its CDF
-    (``cdf=True``) — the composition that makes an always-on replica
-    survive source retention."""
-    from ..operators.cdc import (
-        _SCHEMA_OPS,
-        _apply_netted,
-        _schema_drifted,
-        net_changes,
-        net_changes_routed,
-    )
-
-    stream = ChangeFeedStream(
+    ``strategy``, ``route_inserts`` and every sync rule are
+    ``replicate_changes``'s: per-key netting landed as key-scoped
+    delete + merge + fresh-insert append; a full resync pinned to the
+    range for a replace-all commit, upstream schema surgery (rename /
+    drop / readd) or a range vacuumed past recovery; a layout-only
+    range only advances the stamp. Same contract as the batch form:
+    key-unique upstream rows."""
+    return ChangeFeedStream(
         src, checkpoint_dir, max_commits_per_batch=max_commits_per_batch
+    ).drain_ranges(
+        lambda _lo, hi: _replicate(
+            src, dst, key_cols, hi, app_id, strategy, route_inserts
+        )
     )
-
-    def process(chg: DataFrame, _v_lo: int, v_hi: int) -> None:
-        seen = (
-            dst.last_committed_batch(app_id) if dst._versions() else None
-        )
-        if seen is not None and v_hi <= seen:
-            return  # crash-replayed micro-batch: already applied
-        txn = {"app_id": app_id, "batch_id": v_hi}
-        schema_surgery = any(
-            op in _SCHEMA_OPS
-            for _v, op, _a, _r, _d in src.file_changes(_v_lo, v_hi)
-        )
-        if schema_surgery or _schema_drifted(src, dst):
-            # upstream DROP/RENAME/READD: metadata-only, no change rows
-            # — row-level apply would serve the stale column forever,
-            # and a drop+readd pair inside one batch leaves the schemas
-            # EQUAL while the data diverges (hence the op check). Same
-            # reconciliation as the batch form: full resync pinned to
-            # this batch's upper version, stamp attached.
-            if dst._versions():
-                dst.overwrite(src.read(version=v_hi), txn=txn)
-            else:
-                dst.create(src.read(version=v_hi), txn=txn)
-            return
-        if route_inserts:
-            fresh, upserts, deleted = net_changes_routed(chg, key_cols)
-        else:
-            upserts, deleted = net_changes(chg, key_cols)
-            fresh = upserts.limit(0)
-        # materialize once: each frame feeds multiple actions
-        fresh = fresh.localCheckpoint(eager=True)
-        upserts = upserts.localCheckpoint(eager=True)
-        deleted = deleted.localCheckpoint(eager=True)
-        if not dst._versions():
-            first = upserts.unionByName(fresh)
-            if first.limit(1).count():
-                dst.create(first, txn=txn)
-            return  # nothing to create yet; replay re-derives this batch
-        _apply_netted(dst, fresh, upserts, deleted, key_cols, strategy, txn)
-
-    return stream.drain(process)

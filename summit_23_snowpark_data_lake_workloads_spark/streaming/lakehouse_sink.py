@@ -79,9 +79,7 @@ def write_stream_to_snapshot_table(
     bounded = _plan_bounded(stream_df._jdf.queryExecution().analyzed())
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        seen = (
-            table.last_committed_batch(app_id) if table._versions() else None
-        )
+        seen = table.last_committed_batch(app_id)
         if seen is not None and batch_id <= seen:
             return  # checkpoint replay: already durable
         with _checked_origin(batch_df) if bounded else nullcontext():
@@ -89,8 +87,7 @@ def write_stream_to_snapshot_table(
                 batch_df = transform(batch_df)
             txn = {"app_id": app_id, "batch_id": batch_id}
             if not table._versions():
-                files = table._write_batch(batch_df)
-                table._commit("create", 0, files, replace_all=True, txn=txn)
+                table.create(batch_df, txn=txn)
             else:
                 table.append(batch_df, txn=txn)
 
@@ -239,14 +236,13 @@ def _dedup_ingest_batch(
     to a batch dir, then the commit is decided from the written files'
     parquet footers (a driver-local metadata read) — no ``isEmpty``
     pre-probe, which would run the whole corpus-projection plan a
-    second time. An all-duplicate batch commits nothing; its empty
-    orphan dir is unreferenced by any manifest and ``vacuum`` collects
-    it, same as a late-detected replay's files.
+    second time. An all-duplicate batch commits nothing, and its empty
+    batch dir is removed at once (``_write_nonempty``).
     """
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    seen = table.last_committed_batch(app_id) if table._versions() else None
+    seen = table.last_committed_batch(app_id)
     if seen is not None and batch_id <= seen:
         return
     h = F.md5(F.col(text_col))
@@ -268,13 +264,12 @@ def _dedup_ingest_batch(
     fresh = fresh.drop("_h")
     txn = {"app_id": app_id, "batch_id": batch_id}
     if not table._versions():
-        files = table._write_batch(fresh)
-        table._commit("create", 0, files, replace_all=True, txn=txn)
+        table.create(fresh, txn=txn)
         return
     prev = table.snapshot()
-    files = table._write_batch(fresh)  # the ONE execution of the plan
-    if table._rows_in(files) == 0:
-        return  # nothing new: no empty commit; orphan dir left to vacuum
+    files = table._write_nonempty(fresh)  # the ONE execution of the plan
+    if not files:
+        return  # nothing new: no empty commit
     table._commit("append", prev.version, files, txn=txn)
 
 
@@ -370,9 +365,7 @@ def _record_ingest_metrics(
         "n_dedup_dropped long, n_landed long",
     )
     if not metrics._versions():
-        metrics._commit(
-            "create", 0, metrics._write_batch(row), replace_all=True, txn=txn
-        )
+        metrics.create(row, txn=txn)
     else:
         metrics.append(row, txn=txn)
 
@@ -428,9 +421,9 @@ def _near_dedup_ingest_batch(
     from ..operators.dedup import minhash_signatures
     from ..operators.minhash_index import probe_minhash_index
 
-    seen_docs = table.last_committed_batch(app_id) if table._versions() else None
+    seen_docs = table.last_committed_batch(app_id)
     docs_done = seen_docs is not None and batch_id <= seen_docs
-    seen_idx = index.last_committed_batch(app_id) if index._versions() else None
+    seen_idx = index.last_committed_batch(app_id)
     idx_done = seen_idx is not None and batch_id <= seen_idx
     if docs_done and idx_done:
         return
@@ -469,12 +462,11 @@ def _near_dedup_ingest_batch(
                 "left_anti",
             )
         if not table._versions():
-            files = table._write_batch(fresh)
-            table._commit("create", 0, files, replace_all=True, txn=txn)
+            files = table.create(fresh, txn=txn).files
         else:
             prev = table.snapshot()
-            files = table._write_batch(fresh)  # ONE execution of the plan
-            if table._rows_in(files) == 0:
+            files = table._write_nonempty(fresh)  # ONE execution of the plan
+            if not files:
                 _record_ingest_metrics(
                     metrics, spark, txn, n_arrived, n_quality_ok, 0
                 )
@@ -490,7 +482,7 @@ def _near_dedup_ingest_batch(
 
     sig = minhash_signatures(survivors, id_col, text_col, num_hashes, n)
     if not index._versions():
-        index._commit("create", 0, index._write_batch(sig), replace_all=True, txn=txn)
+        index.create(sig, txn=txn)
     else:
         index.append(sig, txn=txn)
 
@@ -651,9 +643,9 @@ def _semantic_dedup_ingest_batch(
 
     from ..operators.ivf_index import IvfIndex, extend_ivf_index, probe_ivf_index
 
-    seen_docs = table.last_committed_batch(app_id) if table._versions() else None
+    seen_docs = table.last_committed_batch(app_id)
     docs_done = seen_docs is not None and batch_id <= seen_docs
-    seen_idx = cells.last_committed_batch(app_id) if cells._versions() else None
+    seen_idx = cells.last_committed_batch(app_id)
     idx_done = seen_idx is not None and batch_id <= seen_idx
     if docs_done and idx_done:
         return
@@ -715,12 +707,11 @@ def _semantic_dedup_ingest_batch(
                 "left_anti",
             )
         if not table._versions():
-            files = table._write_batch(fresh)
-            table._commit("create", 0, files, replace_all=True, txn=txn)
+            files = table.create(fresh, txn=txn).files
         else:
             prev = table.snapshot()
-            files = table._write_batch(fresh)  # ONE execution of the plan
-            if table._rows_in(files) == 0:
+            files = table._write_nonempty(fresh)  # ONE execution of the plan
+            if not files:
                 _record_ingest_metrics(
                     metrics, spark, txn, n_arrived, n_quality_ok, 0
                 )
@@ -775,7 +766,7 @@ def _semantic_dedup_ingest_batch(
                 "cell_rank",
             )
         )
-        cells._commit("create", 0, cells._write_batch(rows), replace_all=True, txn=txn)
+        cells.create(rows, txn=txn)
     else:
         extend_ivf_index(
             idx, survivors, n_assign=n_assign, id_col=id_col,

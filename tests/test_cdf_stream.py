@@ -236,3 +236,58 @@ def test_foreach_batch_facade_drains_and_resumes(spark, tmp_path):
     q = cdf_foreach_batch_stream(spark, fact, ckpt, process)
     q.awaitTermination()
     assert got == []
+
+
+def test_streams_converge_after_vacuum_expires_undrained_range(
+    spark, tmp_path
+):
+    """A vacuum that expires versions no drain has reached leaves the
+    next range ending on a live version: the rollup, replica and chain
+    stream forms each recompute in full and equal the batch answer."""
+    from summit_23_snowpark_data_lake_workloads_spark.plans.txn_refresh import (
+        RollupSpec,
+        maintain_chain_stream,
+    )
+    from summit_23_snowpark_data_lake_workloads_spark.sources.txn_catalog import (
+        PinnedCatalog,
+    )
+    from summit_23_snowpark_data_lake_workloads_spark.streaming.cdf_source import (
+        maintain_replica_stream,
+    )
+
+    fact = SnapshotTable(spark, str(tmp_path / "fact"))
+    silver = SnapshotTable(spark, str(tmp_path / "silver"))
+    replica = SnapshotTable(spark, str(tmp_path / "replica"))
+    cat = PinnedCatalog(spark, str(tmp_path / "cat"))
+    cat.register("chain_silver", str(tmp_path / "chain_silver"))
+    layers = [("chain_silver", RollupSpec(_PREP, ["grp"], ["v"]))]
+
+    def drain():
+        return (
+            maintain_rollup_stream(
+                fact, silver, _PREP, ["grp"], ["v"], str(tmp_path / "c1")
+            ),
+            maintain_replica_stream(
+                fact, replica, ["id"], str(tmp_path / "c2")
+            ),
+            [
+                r["modes"]["chain_silver"]
+                for r in maintain_chain_stream(
+                    cat, fact, layers, str(tmp_path / "c3")
+                )
+            ],
+        )
+
+    fact.create(_df(spark, 0, 20))
+    assert drain() == ([(0, 1)], [(0, 1)], ["full"])
+    fact.delete(F.col("id") % 3 == 0)  # v2: expired before any drain
+    fact.append(_df(spark, 20, 25, grp=1))  # v3
+    fact.vacuum(retain_last=1, orphan_grace_ms=0)
+    assert fact._versions() == [3]
+    assert drain() == ([(1, 3)], [(1, 3)], ["full"])
+    rows = lambda t: sorted((r.id, r.grp, r.v) for r in t.read().collect())
+    assert _silver_state(silver) == _batch_state(fact)
+    assert rows(replica) == rows(fact)
+    assert sorted(
+        (r.grp, r.n_rows, r.sum_v) for r in cat.read("chain_silver").collect()
+    ) == _batch_state(fact)

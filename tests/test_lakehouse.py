@@ -251,6 +251,27 @@ def test_data_skipping_string_and_miss(spark, tmp_path):
     assert none.count() == 0 and set(none.columns) == {"id", "name"}
 
 
+def test_data_skipping_keeps_files_with_nan(spark, tmp_path):
+    """parquet-mr records a NaN max for a double column holding NaN;
+    Spark orders NaN above every number, so a range skip must keep
+    such a file and return the rows the filter returns."""
+    t = SnapshotTable(spark, str(tmp_path / "nan"))
+    t.create(
+        spark.createDataFrame(
+            [(i, float("nan") if i == 3 else float(i)) for i in range(6)],
+            "id long, d double",
+        )
+    )
+    t.compact(target_files=1)  # a Spark-written (parquet-mr) file
+    [f] = t.snapshot().files
+    assert os.path.exists(os.path.join(t.path, os.path.dirname(f), "_SUCCESS"))
+    _lo, hi = t.snapshot().stats[f]["d"]
+    assert hi != hi  # the NaN bound this test is about
+    for op, v in ((">", 10.0), (">=", 10.0), ("<", 1.0), ("=", 2.0)):
+        ids = lambda df: sorted(r.id for r in df.filter(f"d {op} {v}").collect())
+        assert ids(t.read(skip_where=[("d", op, v)])) == ids(t.read()), op
+
+
 def test_stats_carry_over_cow(spark, table):
     """A COW delete must keep the carried-over files' stats (no silent
     loss of the skipping index on untouched data)."""

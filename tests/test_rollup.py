@@ -194,6 +194,30 @@ def test_compact_in_range_stays_incremental(spark, tables):
     assert _state(rollup) == _full(spark, fact)
 
 
+@pytest.mark.parametrize("partition_by", [None, ["day"]])
+def test_compact_only_range_is_a_stamp(spark, tmp_path, partition_by):
+    """A range of layout-only commits changes no row: the refresh
+    commits only a ``refresh_noop`` stamp and rewrites no rollup file,
+    partitioned or not."""
+    fact = SnapshotTable(spark, str(tmp_path / "fact"))
+    rollup = SnapshotTable(
+        spark, str(tmp_path / "roll"), partition_by=partition_by
+    )
+    fact.create(_events(spark, 0, 20).repartition(3))
+    refresh_rollup(fact, rollup, _prepare, ["day"], ["v"])
+    files = set(rollup.snapshot().files)
+    fact.compact(target_files=1)
+    assert fact.snapshot().operation == "compact"
+    assert (
+        refresh_rollup(fact, rollup, _prepare, ["day"], ["v"])
+        == "incremental"
+    )
+    assert rollup.snapshot().operation == "refresh_noop"
+    assert set(rollup.snapshot().files) == files
+    assert rollup.last_committed_batch("rollup") == fact.snapshot().version
+    assert _state(rollup) == _full(spark, fact)
+
+
 def test_null_group_key_survives_incremental(spark, tmp_path):
     """NULL group keys must match their own rollup row (null-safe
     carry): an incremental refresh over more NULL-day rows ADDS to the
@@ -472,7 +496,8 @@ def test_signed_delta_folds_four_way_labels(spark):
     exactly like its two-way form — dropping the update images would
     silently corrupt any rollup wired to a labeled stream."""
     from summit_23_snowpark_data_lake_workloads_spark.operators.rollup import (
-        _signed_delta,
+        _combine,
+        _signed_rows,
     )
 
     chg = spark.createDataFrame(
@@ -484,7 +509,9 @@ def test_signed_delta_folds_four_way_labels(spark):
         ],
         "k string, v long, _change_type string, _commit_version long",
     )
-    delta = _signed_delta(chg, lambda df: df, ["k"], ["v"])
+    delta = _combine(
+        _signed_rows(chg, lambda df: df, ["k"], ["v"]), ["k"], ["v"]
+    )
     got = {(r.k, r.n_rows, r.sum_v) for r in delta.collect()}
     assert got == {("a", 1, 25), ("b", -1, -7)}
 
@@ -564,8 +591,8 @@ def test_unpartitioned_fold_equals_full_recompute(spark, tmp_path):
     """The unpartitioned one-aggregate fold over append, delete, merge
     and delete_mor ranges equals a full recompute at every step, NULL
     group key included, and stores the same schema as before the fold
-    became one aggregate. The streaming twin, which folds aggregated
-    per-range deltas into the same branch, ends equal as well."""
+    became one aggregate. The stream form, which runs the same refresh
+    once per drained range, ends equal as well."""
     from summit_23_snowpark_data_lake_workloads_spark.streaming.cdf_source import (
         maintain_rollup_stream,
     )

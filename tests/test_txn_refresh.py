@@ -361,6 +361,35 @@ def test_append_tick_job_count(spark, env):
     assert _gold_total(cat) == 25
 
 
+def test_compaction_tick_reads_nothing(spark, env):
+    """A tick over a bronze compaction changes no row: silver only
+    advances its stamp and gold has nothing new to read, with no Spark
+    job. Folding the compaction's empty feed took a full silver
+    rewrite and a full gold recompute."""
+    from .test_cdc import _jobs
+
+    cat, bronze = env
+    bronze.append(_rows(spark, [("b", 5), ("c", 7)]))
+    refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
+    bronze.compact(target_files=1)
+    assert bronze.snapshot().operation == "compact"
+    ticks = []
+    n = _jobs(
+        spark,
+        "compaction_tick_reads_nothing",
+        lambda: ticks.append(
+            refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
+        ),
+    )
+    assert (ticks[0]["silver"], ticks[0]["gold"]) == ("incremental", "noop")
+    assert n == 0
+    assert _silver_map(cat) == {"a": (2, 3), "b": (2, 15), "c": (1, 7)}
+    assert _gold_total(cat) == 25
+    # the stamp advanced: the next tick is a noop
+    r = refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
+    assert (r["silver"], r["gold"]) == ("noop", "noop")
+
+
 def test_unpartitioned_refresh_job_count(spark, tmp_path):
     """An incremental refresh of an unpartitioned rollup is one
     aggregate and one write: at most 2 Spark jobs. It took 5."""
